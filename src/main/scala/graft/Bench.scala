@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{CorpusOps, GridOps, SpatialOps}
+import graft.dggs.Z7
+import graft.ops.{CorpusOps, GridOps, JtsCache, SpatialOps}
 import graft.spark.{DggsFunctions => F}
 
 /** Driver-contract benchmark: runs every SparkEntry query on
@@ -37,35 +38,37 @@ object Bench {
     geo
   }
 
-  /** the timed flagship: ONE res-`res` cell assignment (narrow map),
-    * parent rollup via bit-math ancestor (partial-aggregated), and the
-    * cell-indexed point-in-polygon join with the join key derived from
-    * the same assignment by `z7AncestorAt` (no second projection pass).
-    * Returns (geo points processed, result rows).
+  /** the timed flagship, ONE pass over the points: res-`res` cell
+    * assignment (narrow map, evaluated once), a LEFT broadcast join of
+    * the spread res-4 ancestor (`F.z7SpreadKey`) against the polygon
+    * cover grouped per key (one row per cover cell: its polygons' WKTs),
+    * then one `groupBy` on the res-3 ancestor that sums the JTS contains
+    * hits. Result rows = rollup cells + refined (point, polygon) pairs,
+    * as for a rollup plus an inner PIP join. LEFT, not inner: an inner
+    * join's inferred `isnotnull(key4)` filter would evaluate
+    * `cellForPoint` a second time (`DggsFunctions.cellForPoint`).
+    * Returns (resultRows, resultRows); callers take the geo point count
+    * from the untimed input materialization.
     */
   def flagship(spark: SparkSession, geo: DataFrame, res: Int): (Long, Long) = {
-    // (returns (resultRows, resultRows); callers take geo row count from
-    // the untimed input materialization)
-    val joinRes = 4
-    // NOT cached: recomputing the narrow assignment map is cheaper than
-    // the columnar cache write+read of the full row set (measured)
-    val cells = geo.withColumn("cell_id",
-      F.cellForPoint(col("lon"), col("lat"), lit(res)))
-    val rolled = cells
-      .groupBy(F.z7AncestorAt(col("cell_id"), lit(3)).as("cell3"))
-      .agg(count(lit(1)).as("n"))
-    val covers = FlagshipPolys.flatMap { case (id, wkt) =>
-      SpatialOps.coverCells(wkt, joinRes).map(c => (id, wkt, c))
-    }
     import spark.implicits._
-    val coverDf = covers.toDF("poly_id", "poly_wkt", "cell4")
-    val refine = udf((wkt: String, lon: Double, lat: Double) =>
-      graft.ops.JtsCache.contains(wkt, lon, lat))
-    val joined = cells
-      .withColumn("cell4", F.z7AncestorAt(col("cell_id"), lit(joinRes)))
-      .join(broadcast(coverDf), Seq("cell4"))
-      .where(refine(col("poly_wkt"), col("lon"), col("lat")))
-    val rows = rolled.count() + joined.count()
+    val joinRes = 4
+    val coverDf = FlagshipPolys
+      .flatMap { case (_, wkt) => SpatialOps.coverCells(wkt, joinRes).map(c => (c, wkt)) }
+      .groupMap(c => Z7.spreadKey(c._1))(_._2).toSeq
+      .toDF("key4", "wkts")
+    val hits = udf { (wkts: Seq[String], lon: Double, lat: Double) =>
+      if (wkts == null) 0L else wkts.count(JtsCache.contains(_, lon, lat)).toLong
+    }.withName("pipHits")
+    val perCell = geo
+      .select(col("lon"), col("lat"),
+        F.cellForPoint(col("lon"), col("lat"), lit(res)).as("cell_id"))
+      .withColumn("key4", F.z7SpreadKey(F.z7AncestorAtExpr(col("cell_id"), lit(joinRes))))
+      .join(broadcast(coverDf), Seq("key4"), "left")
+      .groupBy(F.z7AncestorAtExpr(col("cell_id"), lit(3)).as("cell3"))
+      .agg(sum(hits(col("wkts"), col("lon"), col("lat"))).as("hits"))
+    val totals = perCell.agg(count(lit(1)), coalesce(sum("hits"), lit(0L))).head()
+    val rows = totals.getLong(0) + totals.getLong(1)
     (rows, rows)
   }
 

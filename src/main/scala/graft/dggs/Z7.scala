@@ -150,4 +150,18 @@ object Z7 {
     z & ~((1L << keepBits) - 1) // deeper digits → 0
   }
   def rangeMax(z: Long): Long = ancestorAt(z, resolution(z)) // deeper digits → 7
+
+  /** Hash-join key for a cell id: `z ^ (z >>> 32)`. Bijective (it is its
+    * own inverse: the high half passes through unchanged), so equality on
+    * spread keys is equality on cell ids.
+    *
+    * Why: a res-r id ends in 60 − 3r pad bits that are all ones, and
+    * Spark's long-keyed hash relation (`LongToUnsafeRowMap.firstSlot`:
+    * `h = k · 0x9E3779B9; slot = (h ^ h >> 32) & mask`) takes the slot
+    * from the low bits of k — every coarse cell of a cover lands in ONE
+    * slot and each probe walks the whole cluster. Folding the high half
+    * (base + leading digits) into the low half spreads them. Spark's
+    * `DggsFunctions.z7SpreadKey` is the same function as a Column.
+    */
+  def spreadKey(z: Long): Long = z ^ (z >>> 32)
 }

@@ -156,10 +156,24 @@ object SpatialOps {
     }
 
   /** shared PIP plumbing: exact JTS contains refine */
-  private lazy val pipRefine =
+  private[ops] lazy val pipRefine =
     udf { (wkt: String, lon: Double, lat: Double) =>
       JtsCache.contains(wkt, lon, lat)
-    }
+    }.withName("pipRefine")
+
+  /** shared PIP plumbing: `points.join(covers, Seq("cell_id"))` — same
+    * rows, same output columns in the same order — hashed on
+    * `F.z7SpreadKey(cell_id)` instead of the raw id, which collapses
+    * Spark's hash-relation slots (`Z7.spreadKey`). The spread sits in
+    * the join condition, not in a projected column: Catalyst then infers
+    * only `isnotnull(cell_id)`, which folds to a null test on the UDF's
+    * inputs, where an `isnotnull` on a projected key column would inline
+    * `cellForPoint` into a pushed-down `Filter` (PlanAuditSpec).
+    */
+  private[ops] def joinOnCell(points: DataFrame, covers: DataFrame): DataFrame =
+    points.join(covers, F.z7SpreadKey(points("cell_id")) === F.z7SpreadKey(covers("cell_id")))
+      .select((points("cell_id") +: points.columns.filter(_ != "cell_id").map(points(_))) ++
+        covers.columns.filter(_ != "cell_id").map(covers(_)): _*)
 
   /** point-in-polygon join: points(lonCol, latCol, …) × polygons(idCol,
     * wktCol) — polygon side assumed broadcastable (dim table). Returns
@@ -174,7 +188,7 @@ object SpatialOps {
       coverCells(wkt, res).map(c => (id, wkt, c))
     }.toDF("poly_id", "poly_wkt", "cell_id")
     val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res)
-    pts.join(broadcast(covers), Seq("cell_id"))
+    joinOnCell(pts, broadcast(covers))
       .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt")
   }
@@ -226,10 +240,8 @@ object SpatialOps {
                               lat0: Double = Grids.DefaultLat,
                               lon0: Double = Grids.DefaultLon,
                               az: Double = Grids.DefaultAz): DataFrame = {
-    val hinted = hintCovers(
-      covers.withColumnRenamed("wkt", "poly_wkt"), broadcastCovers)
     val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
-    pts.join(hinted, Seq("cell_id"))
+    joinOnCell(pts, hintCovers(covers.withColumnRenamed("wkt", "poly_wkt"), broadcastCovers))
       .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt")
   }
@@ -277,12 +289,14 @@ object SpatialOps {
     require(resList.nonEmpty, "empty cover relation")
     require(resList.last <= res,
       s"cover has res-${resList.last} cells finer than point res $res")
+    // the key is the SPREAD ancestor on both sides (Z7.spreadKey)
     val hinted = hintCovers(
       covers.withColumnRenamed("wkt", "poly_wkt")
-        .withColumnRenamed("cell_id", "__cov"), broadcastCovers)
+        .withColumn("__cov", F.z7SpreadKey(col("cell_id"))).drop("cell_id"),
+      broadcastCovers)
     GridOps.cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
-      .withColumn("__cov", explode(array(
-        resList.map(rr => F.z7AncestorAtExpr(col("cell_id"), lit(rr))).toIndexedSeq: _*)))
+      .withColumn("__cov", explode(array(resList.map(rr =>
+        F.z7SpreadKey(F.z7AncestorAtExpr(col("cell_id"), lit(rr)))).toIndexedSeq: _*)))
       .join(hinted, Seq("__cov"))
       .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt", "__cov")

@@ -49,13 +49,9 @@ object StreamingOps {
   def zonalCountsWindowed(stream: DataFrame, tsCol: String, lonCol: String,
                           latCol: String, covers: DataFrame, res: Int,
                           windowDur: String, watermarkDur: String): DataFrame = {
-    val refine = udf { (wkt: String, lon: Double, lat: Double) =>
-      JtsCache.contains(wkt, lon, lat)
-    }
-    assignCells(stream, lonCol, latCol, res)
-      .join(broadcast(covers.withColumnRenamed("wkt", "poly_wkt")),
-        Seq("cell_id"))
-      .where(refine(col("poly_wkt"), col(lonCol), col(latCol)))
+    SpatialOps.joinOnCell(assignCells(stream, lonCol, latCol, res),
+        broadcast(covers.withColumnRenamed("wkt", "poly_wkt")))
+      .where(SpatialOps.pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .withWatermark(tsCol, watermarkDur)
       .groupBy(window(col(tsCol), windowDur), col("poly_id"))
       .agg(count(lit(1)).as("n"))

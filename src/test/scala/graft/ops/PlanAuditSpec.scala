@@ -12,7 +12,9 @@ import org.scalatest.BeforeAndAfterAll
   *    pattern: dggs_knn (escalation fallback — broadcast of the
   *    provably-rare incomplete queries); emb_cosine_topk left the list
   *    in round 4 (now a broadcast-queries mapPartitions scan);
-  *  - the flagship point-in-polygon join broadcasts its cover side.
+  *  - the flagship point-in-polygon join broadcasts its cover side;
+  *  - `Bench.flagship` and the PIP joins evaluate `cellForPoint` once,
+  *    never inside a pushed-down `Filter`.
   */
 class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -53,6 +55,59 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"))
+  }
+
+  test("Bench.flagship: one pass, cellForPoint evaluated once, cover broadcast") {
+    val geo = graft.Bench.flagshipInput(spark, 2000)
+    val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(ql)
+    try {
+      graft.Bench.flagship(spark, geo, 9)
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(ql)
+      geo.unpersist()
+    }
+    assert(plans.size == 1, s"expected one action, got ${plans.size}")
+    // the AQE rendering repeats the tree under "Initial Plan": audit the
+    // final plan only
+    val plan = plans.iterator.next().split("== Initial Plan ==").head
+    assert("cellForPoint\\(".r.findAllIn(plan).size == 1, plan.take(4000))
+    assert(plan.contains("BroadcastExchange") && plan.contains("BroadcastHashJoin"),
+      plan.take(4000))
+    assert(!plan.contains("SortMergeJoin"), plan.take(4000))
+  }
+
+  test("PIP joins keep cellForPoint out of Filters and evaluate it once") {
+    import spark.implicits._
+    val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(spark, sfDir, "documents")))
+    val polys = Seq(("e", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"))
+    val cover = SpatialOps.coverCellsDf(polys.toDF("poly_id", "wkt"), 4)
+    val joins = Seq(
+      "pointInPolygonJoin" -> SpatialOps.pointInPolygonJoin(geo, "lon", "lat", polys, 4),
+      "pointInPolygonJoinCover broadcast" ->
+        SpatialOps.pointInPolygonJoinCover(geo, "lon", "lat", cover, 4, Some(true)),
+      "pointInPolygonJoinCover shuffle" ->
+        SpatialOps.pointInPolygonJoinCover(geo, "lon", "lat", cover, 4, Some(false)))
+    for ((name, df) <- joins) {
+      val plan = df.queryExecution.executedPlan.toString
+      // plan lines whose operator is a Filter (tree prefix and codegen
+      // stage marker stripped) that evaluate the kernel UDF
+      val bad = plan.linesIterator
+        .map(_.replaceAll("^[\\s:+|-]*(\\*\\(\\d+\\) )?", ""))
+        .filter(l => l.startsWith("Filter ") && l.contains("cellForPoint(")).toSeq
+      assert(bad.isEmpty, s"$name: ${bad.mkString("\n").take(2000)}")
+      assert("cellForPoint\\(".r.findAllIn(plan).size == 1, s"$name: ${plan.take(3000)}")
+    }
   }
 
   test("shingle DF cap plans as a broadcast anti-join, not a keep-set join") {

@@ -80,4 +80,31 @@ class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t4plan = t4df.queryExecution.executedPlan.toString
     assert(!t4plan.contains("ScalaUDF"), t4plan.take(2000))
   }
+
+  test("z7SpreadKey: Column form == Z7.spreadKey; round-trips at res 0..15") {
+    // the 12 base cells and their all-zero-digit pentagon descendants at
+    // every res, plus random child walks (valid ids: a walk never takes
+    // a pentagon's missing digit-2 child)
+    val rnd = new scala.util.Random(11)
+    val pentagons = for (b <- 0 until 12; r <- 0 to 15) yield Z7.pack(b, Seq.fill(r)(0))
+    val walks = for (r <- 0 to 15; _ <- 0 until 40) yield {
+      var z = Z7.pack(rnd.nextInt(12), Seq.empty)
+      for (_ <- 0 until r) { val cs = Z7.children(z); z = cs(rnd.nextInt(cs.size)) }
+      z
+    }
+    val cells = (pentagons ++ walks).distinct
+    assert((0 to 15).forall(r => cells.exists(Z7.resolution(_) == r)))
+    assert(cells.forall(z => Z7.spreadKey(Z7.spreadKey(z)) == z), "Scala round-trip")
+    assert(cells.map(Z7.spreadKey).distinct.size == cells.size, "injective on the sample")
+    val rows = cellsDf(cells)
+      .select(col("cell_id"), DggsFunctions.z7SpreadKey(col("cell_id")).as("k"),
+        DggsFunctions.z7SpreadKey(DggsFunctions.z7SpreadKey(col("cell_id"))).as("back"))
+      .collect()
+    assert(rows.length == cells.size)
+    for (r <- rows) {
+      val z = r.getLong(0)
+      assert(r.getLong(1) == Z7.spreadKey(z), f"Column vs Scala form at $z%016x")
+      assert(r.getLong(2) == z, f"Column round-trip at $z%016x")
+    }
+  }
 }
