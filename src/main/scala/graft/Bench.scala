@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dggs.Z7
 import graft.ops.{CorpusOps, GridOps, JtsCache, SpatialOps}
-import graft.spark.{DggsFunctions => F}
+import graft.spark.{DggsFunctions => F, Grids}
 
 /** Driver-contract benchmark: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR plus the flagship DGGS pipeline on a larger
@@ -409,7 +409,7 @@ object BenchGen {
     spark.sparkContext.setLogLevel("WARN")
     val clip = (24.0, 58.0, 24.0 + boxDeg, 58.0 + boxDeg)
     def gen(r: Int) = grid match {
-      case "4T" => GridOps.gridCellIdsForExtent4T(spark, r, Some(clip))
+      case "4T" => GridOps.gridCellIdsForExtent(spark, r, Some(clip), Grids.isea4t)
       case _ => GridOps.gridCellIdsForExtent(spark, r, Some(clip))
     }
     // warmup at a shallow res (JIT the kernel + codegen the plan shape)
@@ -758,9 +758,9 @@ object BenchHexExtentBig {
     val box = Some((-30.0, 30.0, 60.0, 70.0))
     def chk1 = sum(col("cell_id") % lit(97L))
     def chk2 = sum(shiftrightunsigned(col("cell_id"), 40))
-    GridOps.gridCellIdsForExtent3H(spark, 8, box).agg(chk1).collect() // warmup
+    GridOps.gridCellIdsForExtent(spark, 8, box, Grids.isea3h).agg(chk1).collect() // warmup
     val t0 = System.nanoTime()
-    val r0 = GridOps.gridCellIdsForExtent3H(spark, 14, box)
+    val r0 = GridOps.gridCellIdsForExtent(spark, 14, box, Grids.isea3h)
       .agg(chk1.as("s1"), chk2.as("s2"), count(lit(1)).as("c")).collect()(0)
     val wall = (System.nanoTime() - t0) / 1e9
     println(s"""{"bench":"hex_extent_big","leg":"isea3h_res14_90x40","cpus":$cpus,""" +
@@ -809,18 +809,18 @@ object BenchHexKernels {
         s""""wall_sec":$wall,"cells_per_sec":${(n / wall).toLong},""" +
         s""""checksum":${chk.getLong(0)},"rows":${chk.getLong(1)}}""")
     }
-    leg("isea3h", df => GridOps.cellsForGeoPoints3H(df, "lon", "lat", res))
-    leg("isea4h", df => GridOps.cellsForGeoPoints4H(df, "lon", "lat", res))
-    leg("isea43h", df => GridOps.cellsForGeoPoints43H(df, "lon", "lat", res, 3))
+    leg("isea3h", df => GridOps.cellsForGeoPoints(df, "lon", "lat", res, Grids.isea3h))
+    leg("isea4h", df => GridOps.cellsForGeoPoints(df, "lon", "lat", res, Grids.isea4h))
+    leg("isea43h", df => GridOps.cellsForGeoPoints(df, "lon", "lat", res, Grids.isea43h(3)))
     // region-extent leg: the round-8 sample-assign-refine operator over a
     // country-scale box at fine res (~230k result cells at res 15 —
     // ~9M samples through the kernel, one range map + one distinct)
     locally {
       val box = Some((10.0, 45.0, 20.0, 55.0))
       def chk = sum(pmod(col("cell_id"), lit(1000000007L)))
-      GridOps.gridCellIdsForExtent3H(spark, 8, box).agg(chk).collect() // warmup
+      GridOps.gridCellIdsForExtent(spark, 8, box, Grids.isea3h).agg(chk).collect() // warmup
       val t0 = System.nanoTime()
-      val r0 = GridOps.gridCellIdsForExtent3H(spark, 15, box)
+      val r0 = GridOps.gridCellIdsForExtent(spark, 15, box, Grids.isea3h)
         .agg(chk.as("s"), count(lit(1)).as("c")).collect()(0)
       val wall = (System.nanoTime() - t0) / 1e9
       println(s"""{"bench":"hex_extent","leg":"isea3h_res15","cpus":$cpus,""" +
@@ -838,9 +838,9 @@ object BenchHexKernels {
     locally {
       def chk1 = sum(col("cell_id") % lit(97L))
       def chk2 = sum(shiftrightunsigned(col("cell_id"), 40))
-      GridOps.gridCellIdsForExtent3H(spark, 8).agg(chk1).collect() // warmup
+      GridOps.gridCellIdsForExtent(spark, 8, None, Grids.isea3h).agg(chk1).collect() // warmup
       val t0 = System.nanoTime()
-      val r0 = GridOps.gridCellIdsForExtent3H(spark, 15)
+      val r0 = GridOps.gridCellIdsForExtent(spark, 15, None, Grids.isea3h)
         .agg(chk1.as("s1"), chk2.as("s2"), count(lit(1)).as("c")).collect()(0)
       val wall = (System.nanoTime() - t0) / 1e9
       println(s"""{"bench":"hex_whole_earth","leg":"isea3h_res15","cpus":$cpus,""" +

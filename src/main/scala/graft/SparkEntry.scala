@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops._
+import graft.spark.{DggsFunctions => F, Grids}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -15,6 +16,16 @@ import graft.ops._
 object SparkEntry {
 
   private def cents(c: Column): Column = round(c * 100).cast("long")
+
+  /** the `dggs_*_stats` projection: resolutions 0..15 of
+    * [[GridOps.gridStatsTable]] with lower-case names and CLS rounded to
+    * 6 decimals
+    */
+  private def gridStats(s: SparkSession, aperture: Int = 7, topology: String = "HEXAGON",
+                        mixedN4: Int = 3): DataFrame =
+    GridOps.gridStatsTable(s, 15, aperture, topology, mixedN4)
+      .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
+        col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
 
   /** geoSpans RESTRICTED to the frozen fixture's key set (round-6
     * verdict #1): every query whose oracle inner-joins
@@ -599,9 +610,7 @@ object SparkEntry {
     // closed-form oracle; the rest are rows-only checks here and golden
     // DGGRID-parity checks in the ScalaTest suite) ----
     "dggs_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15)
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
+      gridStats(s)
     }),
     "dggs_cell_assign" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
@@ -610,9 +619,8 @@ object SparkEntry {
     }),
     "dggs_parent_rollup" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      import graft.spark.{DggsFunctions => F}
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6)
-        .groupBy(F.z7String(F.z7AncestorAtExpr(col("cell_id"), lit(3))).as("name3"))
+        .groupBy(F.cellString(F.z7AncestorAtExpr(col("cell_id"), lit(3))).as("name3"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_pyramid" -> ((s, dir) => {
@@ -634,9 +642,8 @@ object SparkEntry {
       // the numeric id parsed from "doc-%012d" (offset < 8 by corpus
       // construction, so the key is unique)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      import graft.spark.{DggsFunctions => F}
       val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 3)
-        .withColumn("name1", F.z7String(F.z7AncestorAtExpr(col("cell_id"), lit(1))))
+        .withColumn("name1", F.cellString(F.z7AncestorAtExpr(col("cell_id"), lit(1))))
       TextOps.sampleCapPerKey(cells, col("name1"),
           substring(col("doc_id"), 5, 12).cast("long") * 8 + col("offset"), 4)
         .select(col("doc_id"), col("offset"), col("name1"),
@@ -670,15 +677,15 @@ object SparkEntry {
       // recomputes the sketch BIT-FOR-BIT (k smallest 12-hex-char md5
       // prefixes per group, same (k−1)/kth·2^48 formula)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      import graft.spark.{DggsFunctions => F, SketchFunctions}
+      import graft.spark.SketchFunctions
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 5)
-        .groupBy(F.z7String(F.z7AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+        .groupBy(F.cellString(F.z7AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
         .agg(SketchFunctions.kmvDistinct(col("doc_id"), 32).as("kmv_est"),
           countDistinct(col("doc_id")).as("n_exact"))
     }),
     "dggs_extent_ids" -> ((s, _) => {
       GridOps.gridCellIdsForExtent(s, 4, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
+        .select(F.cellString(col("cell_id")).as("name"))
     }),
     "dggs_wrap_extent_ids" -> ((s, _) => {
       // ANTIMERIDIAN-CROSSING extent (lonMin > lonMax spans
@@ -687,13 +694,13 @@ object SparkEntry {
       // computed by the ordinary non-wrapped path — the wrapped
       // implementation is checked against the unwrapped one.
       GridOps.gridCellIdsForExtent(s, 4, Some((175.0, -20.0, -175.0, -10.0)))
-        .select(graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
+        .select(F.cellString(col("cell_id")).as("name"))
     }),
     "dggs_wkt_extent_ids" -> ((s, _) => {
       // arbitrary-geometry clip (reference clip_subset_type GDAL):
       // distributed cover expansion, no driver-side cell materialization
       SpatialOps.gridCellIdsForWkt(s, OracleFixtures.wktClip, 5)
-        .select(graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
+        .select(F.cellString(col("cell_id")).as("name"))
     }),
     "dggs_polar_cover" -> ((s, _) => {
       // pole-enclosing clip boxes (round-4: the antimeridian unwrap used
@@ -706,23 +713,21 @@ object SparkEntry {
         ("south", OracleFixtures.polarSouthWkt)).toDF("poly_id", "wkt")
       SpatialOps.coverCellsDf(polys, 3)
         .select(col("poly_id"),
-          graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
+          F.cellString(col("cell_id")).as("name"))
     }),
     "dggs_coarse_children" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{DggsFunctions => F}
       // the FIXTURES.md §1.4 parent/children cases: "023" res1→res5,
       // "000125023" res7→res9
       val parents = Seq(("023", 5), ("000125023", 9)).toDF("parent", "to_res")
       parents
         .withColumn("cell_id",
-          explode(F.z7DescendantsAt(F.z7FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), F.z7String(col("cell_id")).as("name"))
+          explode(F.descendantsAt(F.cellFromString(col("parent")), col("to_res"))))
+        .select(col("parent"), F.cellString(col("cell_id")).as("name"))
     }),
 
     "dggs_compact" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{DggsFunctions => F}
       // minimal-cover compaction over a constructed mixed set: the full
       // res-3 cover under hexagon "023" (cascades to the parent), the
       // same under "045" minus one cell (6 complete res-2 families
@@ -737,9 +742,9 @@ object SparkEntry {
         "0000", "0001", "0003", "0004", "0005", "0006").toDF("name")
       val scatter = Seq("06612", "06646", "06600").toDF("name")
       val cells = full.unionByName(pent).unionByName(scatter)
-        .select(F.z7FromString(col("name")).as("cell_id"))
+        .select(F.cellFromString(col("name")).as("cell_id"))
       GridOps.compactCells(cells)
-        .select(F.z7String(col("cell_id")).as("name"))
+        .select(F.cellString(col("cell_id")).as("name"))
     }),
     "dggs_spatial_join" -> ((s, dir) => {
       val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents")))
@@ -786,24 +791,24 @@ object SparkEntry {
         .select(col("doc_id"), col("offset"), col("poly_id"))
     }),
     "dggs_4t_compact" -> ((s, _) => {
+      val g = Grids.isea4t
       // compaction on the aperture-4 TRIANGLE grid (family size 4, no
       // pentagon case): the full res-3 cover under base "05" cascades to
       // the base cell; res-6 descendants of "172031" minus one leaf
       // compact 3 of 4 res-5 families and keep the punctured family's 3
       // survivors; a 2-cell scatter passes through
       import s.implicits._
-      import graft.spark.{T4Functions => T}
       val full = Seq("05").toDF("p")
-        .select(explode(T.t4DescendantsAt(T.t4FromString(col("p")), lit(3)))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
           .as("cell_id"))
       val punct = Seq("172031").toDF("p")
-        .select(explode(T.t4DescendantsAt(T.t4FromString(col("p")), lit(6)))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(6), g))
           .as("cell_id"))
-        .where(T.t4String(col("cell_id")) =!= "17203111")
+        .where(F.cellString(col("cell_id"), g) =!= "17203111")
       val scatter = Seq("0311", "0322").toDF("n")
-        .select(T.t4FromString(col("n")).as("cell_id"))
-      GridOps.compactCells4T(full.unionByName(punct).unionByName(scatter))
-        .select(T.t4String(col("cell_id")).as("name"))
+        .select(F.cellFromString(col("n"), g).as("cell_id"))
+      GridOps.compactCells(full.unionByName(punct).unionByName(scatter), kernel = g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_zonal_stats" -> ((s, dir) => {
       // ZONAL STATISTICS: per-polygon aggregates of a per-span weight
@@ -896,112 +901,107 @@ object SparkEntry {
       val ranges = CheckpointedRun.planRanges(cells, "cell_id", 1, target)
       val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       CheckpointedRun.run(cells, "cell_id", ranges, outDir) { df =>
-        df.groupBy(graft.spark.DggsFunctions.z7AncestorAt(col("cell_id"), lit(2)).as("cell2"))
+        df.groupBy(F.z7AncestorAt(col("cell_id"), lit(2)).as("cell2"))
           .agg(count(lit(1)).as("n"))
       }
       CheckpointedRun.readOutput(s, outDir)
         .groupBy("cell2").agg(sum("n").as("n"))
-        .select(graft.spark.DggsFunctions.z7String(col("cell2")).as("name2"), col("n"))
+        .select(F.cellString(col("cell2")).as("name2"), col("n"))
     }),
     // ---- ISEA4T (aperture-4 triangle kernel) ----
     "dggs_4t_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 4, "TRIANGLE")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
+      gridStats(s, 4, "TRIANGLE")
     }),
     "dggs_4t_cell_assign" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4T(geo, "lon", "lat", 5)
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 5, Grids.isea4t)
         .select(col("doc_id"), col("offset"), col("name"))
     }),
     "dggs_4t_parent_rollup" -> ((s, dir) => {
-      import graft.spark.{T4Functions => T}
+      val g = Grids.isea4t
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4T(geo, "lon", "lat", 6)
-        .groupBy(T.t4String(T.t4AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
+        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_4t_children" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{T4Functions => T}
+      val g = Grids.isea4t
       val parents = Seq(("05", 4), ("172031", 8)).toDF("parent", "to_res")
       parents
         .withColumn("cell_id",
-          explode(T.t4DescendantsAt(T.t4FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), T.t4String(col("cell_id")).as("name"))
+          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
+        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
     }),
 
     // ---- ISEA4D (aperture-4 diamond kernel) ----
     "dggs_4d_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 4, "DIAMOND")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
+      gridStats(s, 4, "DIAMOND")
     }),
     "dggs_4d_cell_assign" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4D(geo, "lon", "lat", 5)
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 5, Grids.isea4d)
         .select(col("doc_id"), col("offset"), col("name"))
     }),
     "dggs_4d_parent_rollup" -> ((s, dir) => {
-      import graft.spark.{D4Functions => D}
+      val g = Grids.isea4d
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4D(geo, "lon", "lat", 6)
-        .groupBy(D.d4String(D.d4AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
+        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
 
     // ---- ISEA3H (aperture-3 hexagon kernel, round 8) ----
     "dggs_3h_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 3, "HEXAGON")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
+      gridStats(s, 3, "HEXAGON")
     }),
     "dggs_3h_cell_assign" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints3H(geo, "lon", "lat", 6)
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea3h)
         .select(col("doc_id"), col("offset"), col("name"))
     }),
     "dggs_3h_parent_rollup" -> ((s, dir) => {
+      val g = Grids.isea3h
       // index-space rollup: Z3 paths are prefix-hierarchical even though
       // aperture-3 hexagons don't nest geometrically, so the oracle's
       // substr over the frozen res-6 column is the exact semantics
-      import graft.spark.{Z3Functions => H}
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints3H(geo, "lon", "lat", 6)
-        .groupBy(H.z3String(H.z3AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
+        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_3h_children" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{Z3Functions => H}
+      val g = Grids.isea3h
       // a quad subtree, a deep quad subtree, and a cap subtree (caps
       // have exactly one child per level — the engine contract)
       val parents = Seq(("05", 2), ("070210", 8), ("00", 3)).toDF("parent", "to_res")
       parents
         .withColumn("cell_id",
-          explode(H.z3DescendantsAt(H.z3FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), H.z3String(col("cell_id")).as("name"))
+          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
+        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_3h_addr_transform" -> ((s, dir) => {
+      val g = Grids.isea3h
       // hop chain Z3_STRING → ZORDER → Q2DI → Z3 → Z3_STRING: the middle
       // hops exercise the bit-interleaved and (quad,i,j) frames both
       // directions end-to-end; the round-trip identity keeps the frozen
       // h6 oracle valid (the VERTEX2DD pattern of dggs_addr_transform)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints3H(geo, "lon", "lat", 6)
+      val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
         .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform3H(cells, "name", "Z3_STRING", "ZORDER", 6)
+      val zo = GridOps.addressTransform(cells, "name", "Z3_STRING", "ZORDER", 6, g)
         .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform3H(zo, "zo", "ZORDER", "Q2DI", 6)
+      val qij = GridOps.addressTransform(zo, "zo", "ZORDER", "Q2DI", 6, g)
         .withColumnRenamed("out_addr", "qij")
-      val z3 = GridOps.addressTransform3H(qij, "qij", "Q2DI", "Z3", 6)
+      val z3 = GridOps.addressTransform(qij, "qij", "Q2DI", "Z3", 6, g)
         .withColumnRenamed("out_addr", "z3")
-      GridOps.addressTransform3H(z3, "z3", "Z3", "Z3_STRING", 6)
+      GridOps.addressTransform(z3, "z3", "Z3", "Z3_STRING", 6, g)
         .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
     }),
     "dggs_3h_compact" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{Z3Functions => H}
+      val g = Grids.isea3h
       // compaction on the aperture-3 hex INDEX hierarchy (family size 3
       // on quad bases, 1 on the caps): the full res-3 cover under quad
       // base "05" cascades to the base cell; res-6 descendants of
@@ -1010,192 +1010,190 @@ object SparkEntry {
       // ("000000") cascades through the family-1 cap rule to "00"; a
       // 2-cell scatter passes through
       val full = Seq("05").toDF("p")
-        .select(explode(H.z3DescendantsAt(H.z3FromString(col("p")), lit(3)))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
           .as("cell_id"))
       val punct = Seq("072012").toDF("p")
-        .select(explode(H.z3DescendantsAt(H.z3FromString(col("p")), lit(6)))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(6), g))
           .as("cell_id"))
-        .where(H.z3String(col("cell_id")) =!= "07201211")
+        .where(F.cellString(col("cell_id"), g) =!= "07201211")
       val capAndScatter = Seq("000000", "0311", "0322").toDF("n")
-        .select(H.z3FromString(col("n")).as("cell_id"))
-      GridOps.compactCells3H(full.unionByName(punct).unionByName(capAndScatter))
-        .select(H.z3String(col("cell_id")).as("name"))
+        .select(F.cellFromString(col("n"), g).as("cell_id"))
+      GridOps.compactCells(full.unionByName(punct).unionByName(capAndScatter), kernel = g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_3h_extent_ids" -> ((s, _) => {
+      val g = Grids.isea3h
       // clipped hex extent via sample-assign-refine (levelwise pruning
       // is unsound on the hex index hierarchies — seam re-homing; the
       // exactness property vs brute force is SparkOpsSpec "hex extent
       // ids", the frozen fixture pins regression)
-      import graft.spark.{Z3Functions => H}
-      GridOps.gridCellIdsForExtent3H(s, 8, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z3String(col("cell_id")).as("name"))
+      GridOps.gridCellIdsForExtent(s, 8, Some((20.2, 57.0, 28.4, 60.0)), g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_3h_cell_geom" -> ((s, _) => {
+      val g = Grids.isea3h
       // H1/H2 analog on the hex grid: centroid (µdeg floor) + vertex
       // count per extent cell via the SPARK column path; the oracle is
       // frozen from the DRIVER-side pure kernel — the two paths
       // cross-check (the polar_cover pattern)
-      import graft.spark.{Z3Functions => H}
-      val c = H.cellCenter(col("cell_id"))
-      GridOps.gridCellIdsForExtent3H(s, 8, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z3String(col("cell_id")).as("name"),
+      val c = F.cellCenter(col("cell_id"), g)
+      GridOps.gridCellIdsForExtent(s, 8, Some((20.2, 57.0, 28.4, 60.0)), g)
+        .select(F.cellString(col("cell_id"), g).as("name"),
           floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
           floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(H.cellBoundary(col("cell_id"))).cast("long").as("n_vertices"))
+          size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
     }),
 
     // ---- ISEA4H (aperture-4 hexagon kernel, round 8) ----
     "dggs_4h_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 4, "HEXAGON")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
+      gridStats(s, 4, "HEXAGON")
     }),
     "dggs_4h_cell_assign" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4H(geo, "lon", "lat", 6)
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea4h)
         .select(col("doc_id"), col("offset"), col("name"))
     }),
     "dggs_4h_parent_rollup" -> ((s, dir) => {
+      val g = Grids.isea4h
       // index-space rollup: Z4 paths are prefix-hierarchical (aperture-4
       // hexagons don't nest geometrically either, though all 4 child
       // centers sit inside the parent), so the oracle's substr over the
       // frozen res-6 column is the exact semantics
-      import graft.spark.{Z4Functions => H}
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4H(geo, "lon", "lat", 6)
-        .groupBy(H.z4String(H.z4AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
+        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_4h_children" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{Z4Functions => H}
+      val g = Grids.isea4h
       // a quad subtree, a deep quad subtree, and a cap subtree (caps
       // have exactly one child per level — the engine contract)
       val parents = Seq(("05", 2), ("070310", 8), ("00", 3)).toDF("parent", "to_res")
       parents
         .withColumn("cell_id",
-          explode(H.z4DescendantsAt(H.z4FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), H.z4String(col("cell_id")).as("name"))
+          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
+        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_4h_addr_transform" -> ((s, dir) => {
+      val g = Grids.isea4h
       // hop chain Z4_STRING → ZORDER → Q2DI → Z4 → Z4_STRING: the middle
       // hops exercise the bit-interleaved and (quad,i,j) frames both
       // directions end-to-end; the round-trip identity keeps the frozen
       // f6 oracle valid (the 3H/VERTEX2DD pattern)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints4H(geo, "lon", "lat", 6)
+      val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
         .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform4H(cells, "name", "Z4_STRING", "ZORDER", 6)
+      val zo = GridOps.addressTransform(cells, "name", "Z4_STRING", "ZORDER", 6, g)
         .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform4H(zo, "zo", "ZORDER", "Q2DI", 6)
+      val qij = GridOps.addressTransform(zo, "zo", "ZORDER", "Q2DI", 6, g)
         .withColumnRenamed("out_addr", "qij")
-      val z4 = GridOps.addressTransform4H(qij, "qij", "Q2DI", "Z4", 6)
+      val z4 = GridOps.addressTransform(qij, "qij", "Q2DI", "Z4", 6, g)
         .withColumnRenamed("out_addr", "z4")
-      GridOps.addressTransform4H(z4, "z4", "Z4", "Z4_STRING", 6)
+      GridOps.addressTransform(z4, "z4", "Z4", "Z4_STRING", 6, g)
         .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
     }),
     "dggs_4h_compact" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{Z4Functions => H}
+      val g = Grids.isea4h
       // the 3H compact scenario on the aperture-4 hierarchy (family 4 on
       // quad bases, 1 on the caps) — this time the cap chain runs under
       // base 11 so both caps are covered across the two hex compact
       // queries
       val full = Seq("05").toDF("p")
-        .select(explode(H.z4DescendantsAt(H.z4FromString(col("p")), lit(3)))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
           .as("cell_id"))
       val punct = Seq("072013").toDF("p")
-        .select(explode(H.z4DescendantsAt(H.z4FromString(col("p")), lit(6)))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(6), g))
           .as("cell_id"))
-        .where(H.z4String(col("cell_id")) =!= "07201311")
+        .where(F.cellString(col("cell_id"), g) =!= "07201311")
       val capAndScatter = Seq("110000", "0311", "0322").toDF("n")
-        .select(H.z4FromString(col("n")).as("cell_id"))
-      GridOps.compactCells4H(full.unionByName(punct).unionByName(capAndScatter))
-        .select(H.z4String(col("cell_id")).as("name"))
+        .select(F.cellFromString(col("n"), g).as("cell_id"))
+      GridOps.compactCells(full.unionByName(punct).unionByName(capAndScatter), kernel = g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_4h_extent_ids" -> ((s, _) => {
-      import graft.spark.{Z4Functions => H}
-      GridOps.gridCellIdsForExtent4H(s, 6, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z4String(col("cell_id")).as("name"))
+      val g = Grids.isea4h
+      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_4h_cell_geom" -> ((s, _) => {
-      import graft.spark.{Z4Functions => H}
-      val c = H.cellCenter(col("cell_id"))
-      GridOps.gridCellIdsForExtent4H(s, 6, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z4String(col("cell_id")).as("name"),
+      val g = Grids.isea4h
+      val c = F.cellCenter(col("cell_id"), g)
+      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
+        .select(F.cellString(col("cell_id"), g).as("name"),
           floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
           floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(H.cellBoundary(col("cell_id"))).cast("long").as("n_vertices"))
+          size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
     }),
 
     // ---- ISEA43H (MIXED-aperture hexagon kernel, round 8; gate config
     // mixed_aperture_level = 3: levels 1-3 aperture 4, 4+ aperture 3) ----
     "dggs_43h_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 43, "HEXAGON", mixedN4 = 3)
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
+      gridStats(s, 43, "HEXAGON", mixedN4 = 3)
     }),
     "dggs_43h_cell_assign" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints43H(geo, "lon", "lat", 6, 3)
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea43h(3))
         .select(col("doc_id"), col("offset"), col("name"))
     }),
     "dggs_43h_parent_rollup" -> ((s, dir) => {
+      val g = Grids.isea43h(3)
       // rollup to res 2 — INSIDE the aperture-4 prefix of the gate
       // config, so the substr oracle crosses the 4→3 boundary between
       // the frozen res-6 digits and the res-2 ancestor
-      import graft.spark.{Z43Functions => H}
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints43H(geo, "lon", "lat", 6, 3)
-        .groupBy(H.z43String(H.z43AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
+        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_43h_children" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{Z43Functions => H}
+      val g = Grids.isea43h(3)
       // "0531" res-2 → res-4 CROSSES the aperture boundary (level 3 is
       // aperture 4: digits 0-3; level 4 is aperture 3: digits 0-2), plus
       // a cap subtree (one child per level)
       val parents = Seq(("0531", 4), ("00", 3)).toDF("parent", "to_res")
       parents
         .withColumn("cell_id",
-          explode(H.z43DescendantsAt(H.z43FromString(col("parent")), col("to_res"), 3)))
-        .select(col("parent"), H.z43String(col("cell_id")).as("name"))
+          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
+        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_43h_addr_transform" -> ((s, dir) => {
+      val g = Grids.isea43h(3)
       // hop chain Z43_STRING → ZORDER_STRING → Q2DI → Z43 → Z43_STRING:
       // the middle hops exercise the mixed-radix interleave and the
       // reduced (quad,i,j) frame both directions end-to-end; the
       // round-trip identity keeps the frozen m6 oracle valid
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints43H(geo, "lon", "lat", 6, 3)
+      val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
         .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform43H(cells, "name", "Z43_STRING", "ZORDER_STRING", 6, 3)
+      val zo = GridOps.addressTransform(cells, "name", "Z43_STRING", "ZORDER_STRING", 6, g)
         .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform43H(zo, "zo", "ZORDER_STRING", "Q2DI", 6, 3)
+      val qij = GridOps.addressTransform(zo, "zo", "ZORDER_STRING", "Q2DI", 6, g)
         .withColumnRenamed("out_addr", "qij")
-      val z43 = GridOps.addressTransform43H(qij, "qij", "Q2DI", "Z43", 6, 3)
+      val z43 = GridOps.addressTransform(qij, "qij", "Q2DI", "Z43", 6, g)
         .withColumnRenamed("out_addr", "z43")
-      GridOps.addressTransform43H(z43, "z43", "Z43", "Z43_STRING", 6, 3)
+      GridOps.addressTransform(z43, "z43", "Z43", "Z43_STRING", 6, g)
         .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
     }),
     "dggs_43h_extent_ids" -> ((s, _) => {
-      import graft.spark.{Z43Functions => H}
-      GridOps.gridCellIdsForExtent43H(s, 6, 3, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z43String(col("cell_id")).as("name"))
+      val g = Grids.isea43h(3)
+      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
     "dggs_43h_cell_geom" -> ((s, _) => {
-      import graft.spark.{Z43Functions => H}
-      val c = H.cellCenter(col("cell_id"), 3)
-      GridOps.gridCellIdsForExtent43H(s, 6, 3, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z43String(col("cell_id")).as("name"),
+      val g = Grids.isea43h(3)
+      val c = F.cellCenter(col("cell_id"), g)
+      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
+        .select(F.cellString(col("cell_id"), g).as("name"),
           floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
           floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(H.cellBoundary(col("cell_id"), 3)).cast("long").as("n_vertices"))
+          size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
     }),
     "dggs_43h_compact" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{Z43Functions => H}
+      val g = Grids.isea43h(3)
       // mixed-aperture compaction ACROSS the 4→3 boundary (n4=3): the
       // full res-3 cover under "05" compacts through three aperture-4
       // levels; the res-4 descendants of "0720" minus one leaf compact
@@ -1203,17 +1201,16 @@ object SparkEntry {
       // aperture 3) but the level-3 family of 4 stays incomplete; cap
       // chain + scatter as in the pure-aperture queries
       val full = Seq("05").toDF("p")
-        .select(explode(H.z43DescendantsAt(H.z43FromString(col("p")), lit(3), 3))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
           .as("cell_id"))
       val punct = Seq("0720").toDF("p")
-        .select(explode(H.z43DescendantsAt(H.z43FromString(col("p")), lit(4), 3))
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(4), g))
           .as("cell_id"))
-        .where(H.z43String(col("cell_id")) =!= "072032")
+        .where(F.cellString(col("cell_id"), g) =!= "072032")
       val capAndScatter = Seq("00000", "0311", "0322").toDF("n")
-        .select(H.z43FromString(col("n")).as("cell_id"))
-      GridOps.compactCells43H(
-          full.unionByName(punct).unionByName(capAndScatter), 3)
-        .select(H.z43String(col("cell_id")).as("name"))
+        .select(F.cellFromString(col("n"), g).as("cell_id"))
+      GridOps.compactCells(full.unionByName(punct).unionByName(capAndScatter), kernel = g)
+        .select(F.cellString(col("cell_id"), g).as("name"))
     }),
 
     "dggs_addr_transform" -> ((s, dir) => {

@@ -29,7 +29,7 @@ import Lattice._
   */
 final class IGeo7(vert0LatDeg: Double = 58.28252559,
                   vert0LonDeg: Double = 11.25,
-                  azimuthDeg: Double = 0.0) extends HexWalkerCore {
+                  azimuthDeg: Double = 0.0) extends HexWalkerCore with DggsKernel {
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -37,7 +37,20 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
 
   import quads.s
 
-  private val maxRes = 20
+  val spec: KernelSpec = KernelSpec("IGEO7", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def idName: String = "Z7"
+  def resolution(z: Long): Int = Z7.resolution(z)
+  def parent(z: Long): Long = Z7.parent(z)
+  def ancestorAt(z: Long, r: Int): Long = Z7.ancestorAt(z, r)
+  def children(z: Long): Seq[Long] = Z7.children(z)
+  def descendants(z: Long, toRes: Int): Seq[Long] = Z7.descendants(z, toRes)
+  def toCellString(z: Long): String = Z7.toZ7String(z)
+  def fromCellString(s: String): Long = Z7.fromZ7String(s)
+  def slotBits: Int = 3
+  def radixAt(level: Int): Int = 7
+  override def pentagonsLoseAChild: Boolean = true
+
+  val maxRes: Int = Z7.MaxRes
   private val factorEis: Array[Eis] = {
     val arr = new Array[Eis](maxRes + 1)
     var f = Eis(1, 0)

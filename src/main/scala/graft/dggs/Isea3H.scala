@@ -65,7 +65,7 @@ import Lattice._
   */
 final class Isea3H(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable with HexWalker {
+                   azimuthDeg: Double = 0.0) extends HexWalker with HexAddressing {
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -73,7 +73,22 @@ final class Isea3H(vert0LatDeg: Double = 58.28252559,
 
   import quads.s
 
-  val maxRes = 20
+  val spec: KernelSpec = KernelSpec("ISEA3H", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def idName: String = "Z3"
+  def resolution(z: Long): Int = Z3.resolution(z)
+  def parent(z: Long): Long = Z3.parent(z)
+  def ancestorAt(z: Long, r: Int): Long = Z3.ancestorAt(z, r)
+  def children(z: Long): Seq[Long] = Z3.children(z)
+  def descendants(z: Long, toRes: Int): Seq[Long] = Z3.descendants(z, toRes)
+  def toCellString(z: Long): String = Z3.toZ3String(z)
+  def fromCellString(s: String): Long = Z3.fromZ3String(s)
+  def slotBits: Int = 2
+  def radixAt(level: Int): Int = 3
+  override def capBases: Seq[Int] = Seq(0, 11)
+  def maxRes: Int = Z3.MaxRes
+
+  /** deepest resolution of the lattice tables (the Z3 codec goes deeper) */
+  private val latticeMaxRes = 20
 
   /** norm-3 level factors: odd levels 2−ω (−30°, class II), even levels
     * 1+ω (+30°, restoring class-I alignment).
@@ -83,19 +98,19 @@ final class Isea3H(vert0LatDeg: Double = 58.28252559,
   def levelFactor3(k: Int): Eis = if (k % 2 == 1) ThreeCCW else ThreeCW
 
   private val factorEis: Array[Eis] = {
-    val arr = new Array[Eis](maxRes + 1)
+    val arr = new Array[Eis](latticeMaxRes + 1)
     var f = Eis(1, 0)
     arr(0) = f
-    for (k <- 1 to maxRes) { f = f * levelFactor3(k); arr(k) = f }
+    for (k <- 1 to latticeMaxRes) { f = f * levelFactor3(k); arr(k) = f }
     arr
   }
   private val factorC: Array[(Double, Double)] = factorEis.map(_.toXY)
   /** the res-r factor product F_r (spec access: class alternation) */
   def factorProductAt(r: Int): Eis = factorEis(r)
   private val pow3: Array[Long] = {
-    val arr = new Array[Long](maxRes + 1)
+    val arr = new Array[Long](latticeMaxRes + 1)
     arr(0) = 1L
-    for (k <- 1 to maxRes) arr(k) = arr(k - 1) * 3L
+    for (k <- 1 to latticeMaxRes) arr(k) = arr(k - 1) * 3L
     arr
   }
 
@@ -198,7 +213,7 @@ final class Isea3H(vert0LatDeg: Double = 58.28252559,
 
   /** point -> Z3 cell id at res r */
   def cellForPoint(p: GeoRad, r: Int): Long = {
-    require(r >= 0 && r <= maxRes, s"res $r out of [0,$maxRes]")
+    require(r >= 0 && r <= latticeMaxRes, s"res $r out of [0,$latticeMaxRes]")
     val fix = foldToRhombus(fixForPoint(p, r))
     cellForFix(fix)
   }
@@ -453,21 +468,4 @@ final class Isea3H(vert0LatDeg: Double = 58.28252559,
     fromQ2di(base, i, j, r)
   }
 
-  /** INTERLEAVE: the reference marks it output-only
-    * (dggrid_runner.py:124 'only supported for parameter
-    * output_address_type; only available for hexagonal aperture 3 and 4
-    * grids'). For the aperture-3 grid it is the interleaved-digit string
-    * (= ZORDER_STRING here); there is no input direction, matching the
-    * reference contract.
-    */
-  def toInterleave(z: Long): String = toZorderString(z)
-}
-
-/** per-JVM kernel cache (mirrors spark.Grids / Isea4TGrids) */
-object Isea3HGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea3H]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea3H =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea3H(k._1, k._2, k._3))
-  def default: Isea3H = get(58.28252559, 11.25, 0.0)
 }

@@ -52,7 +52,7 @@ import Lattice._
 final class Isea43H(val n4: Int,
                     vert0LatDeg: Double = 58.28252559,
                     vert0LonDeg: Double = 11.25,
-                    azimuthDeg: Double = 0.0) extends Serializable with HexWalker {
+                    azimuthDeg: Double = 0.0) extends HexWalker with HexAddressing {
   require(n4 >= 0 && n4 <= Z4.MaxRes, s"mixed_aperture_level $n4 out of [0,${Z4.MaxRes}]")
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
@@ -60,6 +60,17 @@ final class Isea43H(val n4: Int,
   val quads = new QuadLayout(ico, snyder)
 
   import quads.s
+
+  val spec: KernelSpec = KernelSpec("ISEA43H", n4, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def idName: String = "Z43"
+  def toCellString(z: Long): String = Z4.toZ4String(z)
+  def fromCellString(s: String): Long = Z4.fromZ4String(s)
+  def slotBits: Int = 3
+  def radixAt(level: Int): Int = apertureAt(level)
+  override def capBases: Seq[Int] = Seq(0, 11)
+  def resolution(z: Long): Int = Z4.resolution(z)
+  def parent(z: Long): Long = Z4.parent(z)
+  def ancestorAt(z: Long, r: Int): Long = Z4.ancestorAt(z, r)
 
   val maxRes: Int = Z4.MaxRes
 
@@ -411,7 +422,7 @@ final class Isea43H(val n4: Int,
   /** per-level mixed radix of the (i, j) digit streams: 2 for aperture-4
     * levels, 3 for aperture-3 (radix product = M_r).
     */
-  @inline private def radixAt(k: Int): Long = if (k <= n4) 2L else 3L
+  @inline private def ijRadixAt(k: Int): Long = if (k <= n4) 2L else 3L
 
   /** mixed-radix digits of x over levels 1..r, most significant first
     * (level 1 is the most significant — its radix divides M_r/radix(1)
@@ -422,7 +433,7 @@ final class Isea43H(val n4: Int,
     var rem = x
     var k = r
     while (k >= 1) {
-      val b = radixAt(k)
+      val b = ijRadixAt(k)
       out(k - 1) = (rem % b).toInt
       rem /= b
       k -= 1
@@ -432,7 +443,7 @@ final class Isea43H(val n4: Int,
   private def fromMixedDigits(ds: Array[Int]): Long = {
     var x = 0L
     var k = 1
-    while (k <= ds.length) { x = x * radixAt(k) + ds(k - 1); k += 1 }
+    while (k <= ds.length) { x = x * ijRadixAt(k) + ds(k - 1); k += 1 }
     x
   }
 
@@ -465,7 +476,7 @@ final class Isea43H(val n4: Int,
     var bits = 0L
     var k = 1
     while (k <= r) {
-      val b = radixAt(k)
+      val b = ijRadixAt(k)
       bits = bits * (b * b) + di(k - 1) * b + dj(k - 1)
       k += 1
     }
@@ -481,7 +492,7 @@ final class Isea43H(val n4: Int,
     val dj = new Array[Int](r)
     var k = r
     while (k >= 1) {
-      val b = radixAt(k)
+      val b = ijRadixAt(k)
       dj(k - 1) = (bits % b).toInt; bits /= b
       di(k - 1) = (bits % b).toInt; bits /= b
       k -= 1
@@ -522,7 +533,7 @@ final class Isea43H(val n4: Int,
       // per-digit radix check against the LEVEL's radix (2 through n4,
       // 3 after) — an out-of-radix char must raise, not alias another
       // cell (see Isea4H.fromZorderString)
-      val rad = radixAt(k + 1).toInt
+      val rad = ijRadixAt(k + 1).toInt
       di(k) = sx.charAt(2 + 2 * k) - '0'
       dj(k) = sx.charAt(3 + 2 * k) - '0'
       require(di(k) >= 0 && di(k) < rad && dj(k) >= 0 && dj(k) < rad,
@@ -532,16 +543,4 @@ final class Isea43H(val n4: Int,
     fromQ2di(base, fromMixedDigits(di), fromMixedDigits(dj), r)
   }
 
-  /** INTERLEAVE: output-only (dggrid_runner.py:124), = ZORDER_STRING */
-  def toInterleave(z: Long): String = toZorderString(z)
-}
-
-/** per-JVM kernel cache keyed by (n4, orientation) */
-object Isea43HGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Double, Double, Double), Isea43H]()
-  def get(n4: Int, lat0: Double, lon0: Double, az: Double): Isea43H =
-    cache.computeIfAbsent((n4, lat0, lon0, az), k => new Isea43H(k._1, k._2, k._3, k._4))
-  /** the gate configuration: 3 leading aperture-4 resolutions */
-  def default(n4: Int = 3): Isea43H = get(n4, 58.28252559, 11.25, 0.0)
 }

@@ -53,11 +53,24 @@ object D4 extends Quat2Codec(1, 10, "quad") {
   */
 final class Isea4D(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable {
+                   azimuthDeg: Double = 0.0) extends DggsKernel {
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
   val quads = new QuadLayout(ico, snyder)
+
+  val spec: KernelSpec = KernelSpec("ISEA4D", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def idName: String = "D4"
+  def resolution(z: Long): Int = D4.resolution(z)
+  def parent(z: Long): Long = D4.parent(z)
+  def ancestorAt(z: Long, r: Int): Long = D4.ancestorAt(z, r)
+  def children(z: Long): Seq[Long] = D4.children(z)
+  def descendants(z: Long, toRes: Int): Seq[Long] = D4.descendants(z, toRes)
+  def toCellString(z: Long): String = D4.toD4String(z)
+  def fromCellString(s: String): Long = D4.fromD4String(s)
+  def slotBits: Int = 0
+  def radixAt(level: Int): Int = 4
+  def maxRes: Int = D4.MaxRes
 
   private def uvToChart(u: Double, v: Double): (Double, Double) =
     (u * quads.s + v * quads.Bx._1, v * quads.Bx._2)
@@ -79,22 +92,14 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
   }
 
   /** the 4 rhombus corners on the sphere (u-then-v winding) */
-  def cellBoundary(id: Long): Seq[GeoRad] = {
+  def cellBoundary(id: Long): Array[GeoRad] = {
     val (i, j) = D4.toIj(id)
     val n = (1L << D4.resolution(id)).toDouble
     val q = D4.quad(id)
-    Seq((i / n, j / n), ((i + 1) / n, j / n), ((i + 1) / n, (j + 1) / n), (i / n, (j + 1) / n))
+    Array((i / n, j / n), ((i + 1) / n, j / n), ((i + 1) / n, (j + 1) / n), (i / n, (j + 1) / n))
       .map { case (u, v) =>
         val (x, y) = uvToChart(u, v)
         quads.quadToSphere(q, x, y)
       }
   }
-}
-
-object Isea4DGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea4D]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea4D =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea4D(k._1, k._2, k._3))
-  def default: Isea4D = get(58.28252559, 11.25, 0.0)
 }

@@ -50,13 +50,26 @@ import Lattice._
   */
 final class Isea4H(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable with HexWalker {
+                   azimuthDeg: Double = 0.0) extends HexWalker with HexAddressing {
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
   val quads = new QuadLayout(ico, snyder)
 
   import quads.s
+
+  val spec: KernelSpec = KernelSpec("ISEA4H", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def idName: String = "Z4"
+  def resolution(z: Long): Int = Z4.resolution(z)
+  def parent(z: Long): Long = Z4.parent(z)
+  def ancestorAt(z: Long, r: Int): Long = Z4.ancestorAt(z, r)
+  def children(z: Long): Seq[Long] = Z4.children(z)
+  def descendants(z: Long, toRes: Int): Seq[Long] = Z4.descendants(z, toRes)
+  def toCellString(z: Long): String = Z4.toZ4String(z)
+  def fromCellString(s: String): Long = Z4.fromZ4String(s)
+  def slotBits: Int = 3
+  def radixAt(level: Int): Int = 4
+  override def capBases: Seq[Int] = Seq(0, 11)
 
   val maxRes: Int = Z4.MaxRes
 
@@ -416,21 +429,4 @@ final class Isea4H(vert0LatDeg: Double = 58.28252559,
     fromQ2di(base, i, j, r)
   }
 
-  /** INTERLEAVE: the reference marks it output-only
-    * (dggrid_runner.py:124 'only supported for parameter
-    * output_address_type; only available for hexagonal aperture 3 and 4
-    * grids'). For the aperture-4 grid it is the interleaved-digit string
-    * (= ZORDER_STRING here); there is no input direction, matching the
-    * reference contract.
-    */
-  def toInterleave(z: Long): String = toZorderString(z)
-}
-
-/** per-JVM kernel cache (mirrors spark.Grids / Isea3HGrids) */
-object Isea4HGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea4H]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea4H =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea4H(k._1, k._2, k._3))
-  def default: Isea4H = get(58.28252559, 11.25, 0.0)
 }

@@ -38,11 +38,24 @@ object T4 extends Quat2Codec(0, 19, "face") {
   */
 final class Isea4T(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable {
+                   azimuthDeg: Double = 0.0) extends DggsKernel {
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
   private val rc = snyder.rc
+
+  val spec: KernelSpec = KernelSpec("ISEA4T", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def idName: String = "T4"
+  def resolution(z: Long): Int = T4.resolution(z)
+  def parent(z: Long): Long = T4.parent(z)
+  def ancestorAt(z: Long, r: Int): Long = T4.ancestorAt(z, r)
+  def children(z: Long): Seq[Long] = T4.children(z)
+  def descendants(z: Long, toRes: Int): Seq[Long] = T4.descendants(z, toRes)
+  def toCellString(z: Long): String = T4.toT4String(z)
+  def fromCellString(s: String): Long = T4.fromT4String(s)
+  def slotBits: Int = 0
+  def radixAt(level: Int): Int = 4
+  def maxRes: Int = T4.MaxRes
 
   // face triangle corners in the face-local plane (azimuth clockwise
   // from +y; x = ρ sin α, y = ρ cos α)
@@ -104,9 +117,9 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
   }
 
   /** cell boundary: the 3 triangle corners on the sphere */
-  def cellBoundary(id: Long): Seq[GeoRad] = {
+  def cellBoundary(id: Long): Array[GeoRad] = {
     val f = T4.face(id)
-    planeCorners(id).toSeq.map { case (x, y) =>
+    planeCorners(id).map { case (x, y) =>
       snyder.inverse(snyder.FacePoint(f, x, y))
     }
   }
@@ -116,7 +129,7 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
     * `densification` param — dggrid_runner.py:295)
     */
   def cellBoundaryDensified(id: Long, densify: Int): Seq[GeoRad] = {
-    if (densify <= 0) return cellBoundary(id)
+    if (densify <= 0) return cellBoundary(id).toSeq
     val f = T4.face(id)
     val cs = planeCorners(id)
     val out = scala.collection.mutable.ArrayBuffer[GeoRad]()
@@ -131,13 +144,4 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
     }
     out.toSeq
   }
-}
-
-/** per-JVM kernel cache (mirrors spark.Grids for IGeo7) */
-object Isea4TGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea4T]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea4T =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea4T(k._1, k._2, k._3))
-  def default: Isea4T = get(58.28252559, 11.25, 0.0)
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dggs.{Sphere, Z7}
+import graft.dggs.{DggsKernel, HexAddressing, IGeo7, Isea4T, Sphere, T4, Z7}
 import graft.spark.{DggsFunctions => F, Grids}
 
 /** The dggrid4py-equivalent high-level API (SURVEY.md §2.2), re-expressed
@@ -59,13 +59,6 @@ object GridOps {
     rows.toDF("Resolution", "Cells", "Area (km^2)", "CLS (km)")
   }
 
-  /** grid generation for an extent: all cells at `res` whose center or
-    * boundary touches the lon/lat box (whole earth when no clip).
-    * Levelwise children expansion with per-level pruning: a cell is kept
-    * while its center is within the box expanded by its circumradius —
-    * the clip-pushdown the reference delegates to DGGRID
-    * (clip_subset_type, dggrid_runner.py:1332-1340).
-    */
   /** Truncation stop for the deep levelwise expansions — ONE canonical
     * definition (Z7, ISEA4T, and polygon-cover paths all call it, so a
     * cadence/partitioning tune cannot silently miss one). Two jobs in
@@ -87,11 +80,19 @@ object GridOps {
   private[ops] def lineageStopAt(k: Int, res: Int): Boolean =
     k % 4 == 0 && res - k > 1
 
+  /** grid generation for an extent: all cells at `res` whose center or
+    * boundary touches the lon/lat box (whole earth when no clip). The
+    * kernel picks the path. IGEO7 and ISEA4T expand levelwise from the
+    * base cells, keeping a cell while its center is within the box
+    * expanded by its circumradius — the clip-pushdown the reference
+    * delegates to DGGRID (clip_subset_type, dggrid_runner.py:1332-1340);
+    * IGEO7 then refines to the center-or-vertex contract, ISEA4T keeps
+    * the pruned set. The ISEA3H/4H/43H hex grids enumerate whole-earth
+    * by rank and sample-assign-refine clips.
+    */
   def gridCellIdsForExtent(spark: SparkSession, res: Int,
                            clip: Option[(Double, Double, Double, Double)] = None,
-                           lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                           az: Double = Grids.DefaultAz): DataFrame = {
-    import spark.implicits._
+                           kernel: DggsKernel = Grids.default): DataFrame = kernel match {
     // clip boxes with lonMin > lonMax are ANTIMERIDIAN-CROSSING (the box
     // spans [lonMin, 180] ∪ [−180, lonMax] — Fiji/NZ/Bering extents):
     // the levelwise pruning and the final refine both branch on the
@@ -100,7 +101,7 @@ object GridOps {
     // dggs_wrap_extent_ids — frozen as the union of the two split
     // halves, each computed by the ordinary non-wrapped path, so the
     // wrapped implementation is checked against the unwrapped one.
-    if (clip.isEmpty) {
+    case _: IGeo7 if clip.isEmpty =>
       // whole-earth fast path: enumerate via the dense SEQNUM bijection —
       // spark.range gives even partitioning with no explode chain and no
       // driver-side level iteration (the right shape for N(9) = 4×10⁸
@@ -108,33 +109,69 @@ object GridOps {
       // where per-level pruning is the point). N computed in exact Long
       // math: math.pow loses integers past 2^53 (res ≥ 19).
       val n = 10L * graft.spark.Seqnum.pow7(res) + 2L
-      return spark.range(1L, n + 1L)
+      spark.range(1L, n + 1L)
         .select(F.seqnumToZ7(col("id"), lit(res)).as("cell_id"))
+    case _: IGeo7 =>
+      levelwiseExtent(spark, res, clip, kernel, (0 to 11).map(Z7.pack(_, Seq.empty)),
+        clipMarginDeg, refine = true)
+    case _: Isea4T =>
+      // triangle circumradius at res k ≈ rc/2^k rad, 2× safety
+      levelwiseExtent(spark, res, clip, kernel, (0 to 19).map(T4.pack(_, Seq.empty)),
+        k => math.toDegrees(0.8047 / math.pow(2.0, k)) * 2.0, refine = false)
+    // the hex index hierarchies can NOT be clip-pruned levelwise like
+    // Z7/T4, because seam re-homing makes an index ancestor's center
+    // physically unrelated to its subtree (measured: up to 115° of
+    // parent→child center drift at every level, on all three hex
+    // kernels — the Isea3HSpec drift test documents the seam exception):
+    // whole-earth is the exact rank bijection, clipped extents are
+    // SAMPLE-ASSIGN-REFINE
+    case h: HexAddressing => clip match {
+      case None => hexWholeEarth(spark, res, h.slotBits, h.radixAt)
+      case Some(box) =>
+        val perQuad = (1 to res).map(h.radixAt(_).toDouble).product
+        hexExtentClipped(spark, box, math.toDegrees(0.64 / math.sqrt(perQuad)),
+          (lon, lat) => F.cellForPoint(lon, lat, lit(res), h),
+          c => F.cellCenter(c, h), c => F.cellBoundary(c, h))
     }
-    var df = (0 to 11).map(b => Z7.pack(b, Seq.empty)).toDF("cell_id")
+    case k => throw new IllegalArgumentException(
+      s"gridCellIdsForExtent is not implemented for ${k.spec.kind}")
+  }
+
+  /** Levelwise children expansion from the base cells with per-level
+    * pruning: a cell is kept while its center is within the clip box
+    * expanded by `marginDeg(level)` (its circumradius with a safety
+    * factor), the lon margin scaled by 1/cos(center lat). `refine` then
+    * keeps cells whose center or a boundary vertex is in the box.
+    */
+  private def levelwiseExtent(spark: SparkSession, res: Int,
+                              clip: Option[(Double, Double, Double, Double)],
+                              kernel: DggsKernel, bases: Seq[Long],
+                              marginDeg: Int => Double, refine: Boolean): DataFrame = {
+    import spark.implicits._
+    var df = bases.toDF("cell_id")
     for (k <- 1 to res) {
-      df = df.select(explode(F.z7Children(col("cell_id"))).as("cell_id"))
+      df = df.select(explode(F.children(col("cell_id"), kernel)).as("cell_id"))
       clip.foreach { case (lonMin, latMin, lonMax, latMax) =>
-        // circumradius at res k in degrees; the lon margin is scaled by
-        // 1/cos(center lat) (clamped at 85°) because a degree of
-        // longitude shrinks poleward — without it, levelwise pruning
-        // silently drops cells above ~60° lat (round-1 ADVICE)
-        val marginDeg = clipMarginDeg(k)
-        val c = F.cellCenter(col("cell_id"), lat0, lon0, az)
-        val lonMargin = lit(marginDeg) /
+        // the lon margin is scaled by 1/cos(center lat) (clamped at 85°)
+        // because a degree of longitude shrinks poleward — without it,
+        // levelwise pruning silently drops cells above ~60° lat (round-1
+        // ADVICE)
+        val m = marginDeg(k)
+        val c = F.cellCenter(col("cell_id"), kernel)
+        val lonMargin = lit(m) /
           cos(radians(least(lit(85.0), abs(c.getField("lat")))))
         df = df.where(
           lonDistToBox(c.getField("lon"), lonMin, lonMax) <= lonMargin &&
-            c.getField("lat") >= lit(latMin - marginDeg) &&
-            c.getField("lat") <= lit(latMax + marginDeg))
+            c.getField("lat") >= lit(latMin - m) &&
+            c.getField("lat") <= lit(latMax + m))
       }
       if (lineageStopAt(k, res)) df = lineageStop(df)
     }
-    clip.foreach { case (lonMin, latMin, lonMax, latMax) =>
+    clip.filter(_ => refine).foreach { case (lonMin, latMin, lonMax, latMax) =>
       // final refine: keep cells whose center is in the box OR any
       // boundary vertex is in the box (vertex test covers partial overlap)
-      val c = F.cellCenter(col("cell_id"), lat0, lon0, az)
-      val bnd = F.cellBoundary(col("cell_id"), lat0, lon0, az)
+      val c = F.cellCenter(col("cell_id"), kernel)
+      val bnd = F.cellBoundary(col("cell_id"), kernel)
       val inBox = boxContains(c, lonMin, latMin, lonMax, latMax) ||
         exists(bnd, v => boxContains(v, lonMin, latMin, lonMax, latMax))
       df = df.where(inBox)
@@ -195,14 +232,15 @@ object GridOps {
                                 lon0: Double = Grids.DefaultLon,
                                 az: Double = Grids.DefaultAz,
                                 densify: Int = 0): DataFrame = {
+    val grid = Grids.get(lat0, lon0, az)
     val boundary =
-      if (densify <= 0) F.cellBoundary(col("cell_id"), lat0, lon0, az)
-      else F.cellBoundaryDensified(col("cell_id"), lit(densify), lat0, lon0, az)
+      if (densify <= 0) F.cellBoundary(col("cell_id"), grid)
+      else F.cellBoundaryDensified(col("cell_id"), lit(densify), grid)
     val wkt =
-      if (densify <= 0) F.cellBoundaryWkt(col("cell_id"), lat0, lon0, az)
-      else F.cellBoundaryWktDensified(col("cell_id"), lit(densify), lat0, lon0, az)
-    gridCellIdsForExtent(spark, res, clip, lat0, lon0, az)
-      .withColumn("name", F.z7String(col("cell_id")))
+      if (densify <= 0) F.cellBoundaryWkt(col("cell_id"), grid)
+      else F.cellBoundaryWktDensified(col("cell_id"), lit(densify), grid)
+    gridCellIdsForExtent(spark, res, clip, grid)
+      .withColumn("name", F.cellString(col("cell_id")))
       .withColumn("boundary", boundary)
       .withColumn("wkt", wkt)
   }
@@ -213,9 +251,9 @@ object GridOps {
                                  lat0: Double = Grids.DefaultLat,
                                  lon0: Double = Grids.DefaultLon,
                                  az: Double = Grids.DefaultAz): DataFrame =
-    gridCellIdsForExtent(spark, res, clip, lat0, lon0, az)
-      .withColumn("name", F.z7String(col("cell_id")))
-      .withColumn("center", F.cellCenter(col("cell_id"), lat0, lon0, az))
+    gridCellIdsForExtent(spark, res, clip, Grids.get(lat0, lon0, az))
+      .withColumn("name", F.cellString(col("cell_id")))
+      .withColumn("center", F.cellCenter(col("cell_id"), Grids.get(lat0, lon0, az)))
 
   /** H3/H4 COARSE_CELLS mode: descendants of given parents at `res`
     * (the parent/child rollup primitive; reference
@@ -224,13 +262,17 @@ object GridOps {
   def gridCellsFromCoarseCells(parents: DataFrame, idCol: String, res: Int): DataFrame =
     parents
       .withColumn("cell_id",
-        explode(F.z7DescendantsAt(F.z7FromString(col(idCol)), lit(res))))
-      .withColumn("name", F.z7String(col("cell_id")))
+        explode(F.descendantsAt(F.cellFromString(col(idCol)), lit(res))))
+      .withColumn("name", F.cellString(col("cell_id")))
 
   /** H3-`compactCells`-equivalent MINIMAL multi-resolution cover:
     * bottom-up, a parent replaces its children iff ALL of them are
-    * present — 7 for hexagon parents, 6 for pentagon parents (pentagons
-    * have no direction-2 child, Z7.childDigits). Input may be
+    * present. The family size comes from the kernel: the level's
+    * aperture (`radixAt` — 7 on IGEO7, 3/4 on the hex grids, 4 on
+    * ISEA4T/4D, ISEA43H 4 through level n4 then 3), 6 for the IGEO7
+    * pentagons (no direction-2 child, Z7.childDigits) and 1 on the
+    * ISEA3H/4H/43H polar caps (they own only their center child chain,
+    * so a cap's lone child always compacts upward). Input may be
     * mixed-resolution; duplicates collapse first. Overlapping input (a
     * cell AND its ancestor both present) is a caller contract breach
     * and is not detected — the same contract as H3. Inverse:
@@ -253,108 +295,37 @@ object GridOps {
     * `spark.catalog.clearCache()` (TextOps header note).
     */
   def compactCells(cells: DataFrame, cellCol: String = "cell_id",
-                   keyCols: Seq[String] = Nil): DataFrame = {
-    val pent = (cell: Column, r: Column) =>
-      cell.bitwiseAND(lit((1L << 60) - 1L)) === get(typedLit(z7PadMasks), r)
-    compactCellsOnePass(cells, cellCol, keyCols, F.z7Resolution,
-      hexAncestorAt(3), (cell, r) =>
-        when(pent(cell, r), get(typedLit(z7PentSizes), r))
-          .otherwise(get(typedLit(z7HexSizes), r)),
-      Z7.MaxRes)
+                   keyCols: Seq[String] = Nil,
+                   kernel: DggsKernel = Grids.default): DataFrame = {
+    val maxRes = kernel.maxRes
+    // sizes(r) = number of res-maxRes descendants of a res-r quad cell
+    // (exact Long products: 7^20 ≈ 8·10^16, 3^30 ≈ 2·10^14, 4^24 ≈ 2.8·10^14)
+    val sizes = new Array[Long](maxRes + 1)
+    sizes(maxRes) = 1L
+    for (r <- maxRes - 1 to 0 by -1) sizes(r) = sizes(r + 1) * kernel.radixAt(r + 1)
+    val quadSize = (r: Column) => get(typedLit(sizes), r)
+    val sizeOf: (Column, Column) => Column =
+      if (kernel.pentagonsLoseAChild) {
+        // pentagon subtree: S(d) = 1 + 5·(7^d − 1)/6 = (5·7^d + 1)/6
+        // leaves at depth d (center chain stays pentagonal, the other 5
+        // children root full 7-ary subtrees); a pentagon is an all-zero
+        // digit path followed by the pad
+        val pentSizes = sizes.map(n => (5L * n + 1L) / 6L)
+        val padMasks = Array.tabulate(maxRes + 1)(r => (1L << (60 - kernel.slotBits * r)) - 1L)
+        (cell, r) =>
+          when(cell.bitwiseAND(lit((1L << 60) - 1L)) === get(typedLit(padMasks), r),
+            get(typedLit(pentSizes), r)).otherwise(quadSize(r))
+      } else if (kernel.capBases.nonEmpty) {
+        val base = (cell: Column) => shiftrightunsigned(cell, 60).bitwiseAND(lit(0xFL))
+        (cell, r) => when(base(cell).isin(kernel.capBases: _*), lit(1L)).otherwise(quadSize(r))
+      } else (_, r) => quadSize(r)
+    val (resOf, ancestorAt): (Column => Column, (Column, Int) => Column) =
+      if (kernel.slotBits > 0)
+        (F.resolution(_, kernel), hexAncestorAt(kernel.slotBits))
+      else // res rides the Quat2 layout's explicit high-bits field — native
+        (c => shiftrightunsigned(c, 48).bitwiseAND(lit(31L)).cast("int"), quat2AncestorAt)
+    compactCellsOnePass(cells, cellCol, keyCols, resOf, ancestorAt, sizeOf, maxRes)
   }
-
-  /** [[compactCells]] for the aperture-4 TRIANGLE grid (ISEA4T): family
-    * size is ALWAYS 4 (triangles have no pentagon special case) — the
-    * identical bottom-up loop over T4's hierarchy functions.
-    */
-  def compactCells4T(cells: DataFrame, cellCol: String = "cell_id",
-                     keyCols: Seq[String] = Nil): DataFrame =
-    compactCellsOnePass(cells, cellCol, keyCols,
-      // res rides the Quat2 layout's explicit high-bits field — native
-      c => shiftrightunsigned(c, 48).bitwiseAND(lit(31L)).cast("int"),
-      quat2AncestorAt, (_, r) => get(typedLit(t4Sizes), r),
-      graft.dggs.T4.MaxRes)
-
-  /** Z3/Z4 base-cell extraction as NATIVE column arithmetic (top nibble
-    * of the 64-bit id — both codecs put the base there) so the family
-    * test below stays inside whole-stage codegen.
-    */
-  private def hexBaseCell(c: Column): Column =
-    shiftrightunsigned(c, 60).bitwiseAND(lit(0xFL))
-
-  /** [[compactCells]] for the engine-canonical ISEA3H aperture-3
-    * hexagon hierarchy (Z3 index nesting): family size 3 on quad bases,
-    * 1 on the polar caps 0/11 (caps own only their center child chain —
-    * Z3.childDigits), so a cap's lone child always compacts upward.
-    */
-  def compactCells3H(cells: DataFrame, cellCol: String = "cell_id",
-                     keyCols: Seq[String] = Nil): DataFrame = {
-    import graft.spark.{Z3Functions => H}
-    compactCellsOnePass(cells, cellCol, keyCols, H.z3Resolution,
-      hexAncestorAt(2), hexCapSizeOf(z3QuadSizes), graft.dggs.Z3.MaxRes)
-  }
-
-  /** [[compactCells]] for the engine-canonical ISEA4H aperture-4
-    * hexagon hierarchy (Z4 index nesting): family size 4 on quad bases,
-    * 1 on the caps (same ownership rule as Z3 — Z4.childDigits).
-    */
-  def compactCells4H(cells: DataFrame, cellCol: String = "cell_id",
-                     keyCols: Seq[String] = Nil): DataFrame = {
-    import graft.spark.{Z4Functions => H}
-    compactCellsOnePass(cells, cellCol, keyCols, H.z4Resolution,
-      hexAncestorAt(3), hexCapSizeOf(z4QuadSizes), graft.dggs.Z4.MaxRes)
-  }
-
-  /** [[compactCells]] for the MIXED-aperture ISEA43H hierarchy: the
-    * family size of a parent's children follows the aperture at the
-    * CHILD level — 4 for child levels ≤ n4, 3 after — and 1 on the caps
-    * (ids share the Z4 3-bit layout, so Z4 resolution/parent apply).
-    */
-  def compactCells43H(cells: DataFrame, n4: Int, cellCol: String = "cell_id",
-                      keyCols: Seq[String] = Nil): DataFrame = {
-    import graft.spark.{Z4Functions => H}
-    val sizes = subtreeSizes(graft.dggs.Z4.MaxRes)(l => if (l <= n4) 4L else 3L)
-    compactCellsOnePass(cells, cellCol, keyCols, H.z4Resolution,
-      hexAncestorAt(3), hexCapSizeOf(sizes), graft.dggs.Z4.MaxRes)
-  }
-
-  /** Inverse of [[compactCells3H]]/[[compactCells4H]] — expand a mixed
-    * cover to uniform `res` over the hex index hierarchies (loud on
-    * finer-than-res inputs, like [[uncompactCells]]).
-    */
-  def uncompactCells3H(cells: DataFrame, res: Int,
-                       cellCol: String = "cell_id"): DataFrame =
-    cells.select(explode(
-      graft.spark.Z3Functions.z3DescendantsAt(col(cellCol), lit(res))).as("cell_id"))
-
-  def uncompactCells4H(cells: DataFrame, res: Int,
-                       cellCol: String = "cell_id"): DataFrame =
-    cells.select(explode(
-      graft.spark.Z4Functions.z4DescendantsAt(col(cellCol), lit(res))).as("cell_id"))
-
-  /** per-level subtree-leaf counts: sizes(r) = number of res-`maxRes`
-    * descendants of a res-r cell whose every level ℓ ∈ (r, maxRes] has
-    * `radixAt(ℓ)` children — exact Long products (all codec maxima fit:
-    * 7^20 ≈ 8·10^16, 3^30 ≈ 2·10^14, 4^24 ≈ 2.8·10^14).
-    */
-  private def subtreeSizes(maxRes: Int)(radixAt: Int => Long): Array[Long] = {
-    val a = new Array[Long](maxRes + 1)
-    a(maxRes) = 1L
-    for (r <- maxRes - 1 to 0 by -1) a(r) = a(r + 1) * radixAt(r + 1)
-    a
-  }
-
-  private lazy val z7HexSizes = subtreeSizes(Z7.MaxRes)(_ => 7L)
-  // pentagon subtree: S(d) = 1 + 5·(7^d − 1)/6 = (5·7^d + 1)/6 leaves at
-  // depth d (center chain stays pentagonal, the other 5 children root
-  // full 7-ary subtrees)
-  private lazy val z7PentSizes =
-    Array.tabulate(Z7.MaxRes + 1)(r => (5L * z7HexSizes(r) + 1L) / 6L)
-  private lazy val z7PadMasks =
-    Array.tabulate(Z7.MaxRes + 1)(r => (1L << (60 - 3 * r)) - 1L)
-  private lazy val z3QuadSizes = subtreeSizes(graft.dggs.Z3.MaxRes)(_ => 3L)
-  private lazy val z4QuadSizes = subtreeSizes(graft.dggs.Z4.MaxRes)(_ => 4L)
-  private lazy val t4Sizes = subtreeSizes(graft.dggs.T4.MaxRes)(_ => 4L)
 
   /** native ancestor-at-k for the hex codecs (base<<60, `slotBits` per
     * digit, all-ones pad): pad every level deeper than the PLAN-TIME
@@ -375,14 +346,6 @@ object GridOps {
         .bitwiseOR(lit(k.toLong)), 48)
       .bitwiseOR(cell.bitwiseAND(lit(mask)))
   }
-
-  /** subtree size for the cap-vs-quad hex hierarchies (Z3/Z4/Z43): the
-    * polar caps 0/11 own only their center child chain (1 leaf at any
-    * depth); quad cells root full radix trees.
-    */
-  private def hexCapSizeOf(sizes: Array[Long])(cell: Column, r: Column): Column =
-    when(hexBaseCell(cell) === 0L || hexBaseCell(cell) === 11L, lit(1L))
-      .otherwise(get(typedLit(sizes), r))
 
   /** Single-pass compaction engine shared by every grid codec (round 9 —
     * replaces the former bottom-up loop of ≤ maxRes driver-materialized
@@ -482,7 +445,7 @@ object GridOps {
         // inline uniformity enforcement — no extra pass, and pure
         // native bit math (a cell is at exactly res r0 ⟺ digit r0 is
         // a real digit and digit r0+1 is the 7-pad): two shifts + two
-        // compares per row, codegen, no UDF (a z7Resolution-UDF check
+        // compares per row, codegen, no UDF (a resolution-UDF check
         // here cost a measured 25% of the whole pyramid wall)
         def digitIsPad(i: Int) =
           shiftrightunsigned(col(cellCol), 60 - 3 * i)
@@ -495,8 +458,8 @@ object GridOps {
             col(cellCol).cast("string"), lit(" is not at that res")))))
       case None =>
         val bounds = cells.agg(
-          min(F.z7Resolution(col(cellCol))),
-          max(F.z7Resolution(col(cellCol)))).head()
+          min(F.resolution(col(cellCol))),
+          max(F.resolution(col(cellCol)))).head()
         require(!bounds.isNullAt(0), "empty cell relation")
         val (rMin, rMx) = (bounds.getInt(0), bounds.getInt(1))
         require(rMin == rMx,
@@ -515,40 +478,41 @@ object GridOps {
       .withColumn("__c", checked)
       .select(explode(array(levels: _*)).as("cell_id"), w.as("__w"))
       .groupBy("cell_id").agg(sum(col("__w")).as("n"))
-      .withColumn("res", F.z7Resolution(col("cell_id")))
-      .withColumn("name", F.z7String(col("cell_id")))
+      .withColumn("res", F.resolution(col("cell_id")))
+      .withColumn("name", F.cellString(col("cell_id")))
       .select("cell_id", "name", "res", "n")
   }
 
   /** Inverse of [[compactCells]]: expand a (possibly mixed-resolution)
     * cover to uniform-`res` cells. Raises if any input cell is finer
-    * than `res` (Z7.descendants contract — loud, not silent drop).
+    * than `res` (the codecs' descendants contract — loud, not silent
+    * drop).
     */
-  def uncompactCells(cells: DataFrame, res: Int,
-                     cellCol: String = "cell_id"): DataFrame =
+  def uncompactCells(cells: DataFrame, res: Int, cellCol: String = "cell_id",
+                     kernel: DggsKernel = Grids.default): DataFrame =
     cells.select(
-      explode(F.z7DescendantsAt(col(cellCol), lit(res))).as("cell_id"))
+      explode(F.descendantsAt(col(cellCol), lit(res), kernel)).as("cell_id"))
 
   /** H3: polygons for explicit cell id list (z7 strings). */
   def gridCellPolygonsFromCellIds(cells: DataFrame, idCol: String,
                                   lat0: Double = Grids.DefaultLat,
                                   lon0: Double = Grids.DefaultLon,
                                   az: Double = Grids.DefaultAz): DataFrame =
-    cells.withColumn("cell_id", F.z7FromString(col(idCol)))
-      .withColumn("boundary", F.cellBoundary(col("cell_id"), lat0, lon0, az))
-      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), lat0, lon0, az))
+    cells.withColumn("cell_id", F.cellFromString(col(idCol)))
+      .withColumn("boundary", F.cellBoundary(col("cell_id"), Grids.get(lat0, lon0, az)))
+      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), Grids.get(lat0, lon0, az)))
 
-  /** H6: point→cell assignment (the flagship op). Adds `cell_id` (Z7
-    * int64) + `name` (Z7_STRING) to any df with lon/lat columns —
-    * the reference's cells_for_geo_points with cell_ids_only=True
-    * (dggrid_runner.py:1859-1959). Narrow map, no shuffle.
+  /** H6: point→cell assignment (the flagship op). Adds `cell_id` (int64)
+    * + `name` (the kernel's string form, Z7_STRING by default) to any df
+    * with lon/lat columns — the reference's cells_for_geo_points with
+    * cell_ids_only=True (dggrid_runner.py:1859-1959). Narrow map, no
+    * shuffle.
     */
   def cellsForGeoPoints(points: DataFrame, lonCol: String, latCol: String, res: Int,
-                        lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                        az: Double = Grids.DefaultAz): DataFrame =
+                        kernel: DggsKernel = Grids.default): DataFrame =
     points
-      .withColumn("cell_id", F.cellForPoint(col(lonCol), col(latCol), lit(res), lat0, lon0, az))
-      .withColumn("name", F.z7String(col("cell_id")))
+      .withColumn("cell_id", F.cellForPoint(col(lonCol), col(latCol), lit(res), kernel))
+      .withColumn("name", F.cellString(col("cell_id"), kernel))
 
   /** O3 BIN_POINT_VALS: per-cell arithmetic mean of point values
     * (+ count) — occupied cells only (OUTPUT_OCCUPIED), like the
@@ -572,7 +536,7 @@ object GridOps {
       .select("cell_id", "value_mean", "value_count")
     gridCellIdsForExtent(points.sparkSession, res, clip)
       .join(occupied, Seq("cell_id"), "left")
-      .select(col("cell_id"), F.z7String(col("cell_id")).as("name"),
+      .select(col("cell_id"), F.cellString(col("cell_id")).as("name"),
         col("value_mean"),
         coalesce(col("value_count"), lit(0L)).as("value_count"))
   }
@@ -588,18 +552,18 @@ object GridOps {
                                 lat0: Double = Grids.DefaultLat,
                                 lon0: Double = Grids.DefaultLon,
                                 az: Double = Grids.DefaultAz): DataFrame =
-    cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
+    cellsForGeoPoints(points, lonCol, latCol, res, Grids.get(lat0, lon0, az))
       .withColumnRenamed("name", "zone")
-      .withColumn("boundary", F.cellBoundary(col("cell_id"), lat0, lon0, az))
-      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), lat0, lon0, az))
+      .withColumn("boundary", F.cellBoundary(col("cell_id"), Grids.get(lat0, lon0, az)))
+      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), Grids.get(lat0, lon0, az)))
 
   /** H4: centroids for an explicit cell-id list (z7 strings). */
   def gridCellCentroidsFromCellIds(cells: DataFrame, idCol: String,
                                    lat0: Double = Grids.DefaultLat,
                                    lon0: Double = Grids.DefaultLon,
                                    az: Double = Grids.DefaultAz): DataFrame =
-    cells.withColumn("cell_id", F.z7FromString(col(idCol)))
-      .withColumn("center", F.cellCenter(col("cell_id"), lat0, lon0, az))
+    cells.withColumn("cell_id", F.cellFromString(col(idCol)))
+      .withColumn("center", F.cellCenter(col("cell_id"), Grids.get(lat0, lon0, az)))
 
   /** O4 BIN_POINT_PRESENCE: per-cell presence bit-vector over classes
     * + number of classes present (dggrid_runner.py:1121-1202).
@@ -613,104 +577,6 @@ object GridOps {
       when(array_contains(col("cls"), c), lit("1")).otherwise(lit("0"))): _*)
     present.select(col("cell_id"), col("name"), vector.as("presence"),
       size(col("cls")).cast("long").as("num_classes"))
-  }
-
-  // ------------------------------------------------------------------
-  // ISEA4T (aperture-4 triangle) variants — T4 kernel, same API shapes
-  // ------------------------------------------------------------------
-
-  /** H6 for ISEA4T: point→triangle-cell assignment (`cell_id` T4 int64 +
-    * `name` T4 string). Narrow map, no shuffle.
-    */
-  def cellsForGeoPoints4T(points: DataFrame, lonCol: String, latCol: String, res: Int,
-                          lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                          az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{T4Functions => T}
-    points
-      .withColumn("cell_id", T.cellForPoint(col(lonCol), col(latCol), lit(res), lat0, lon0, az))
-      .withColumn("name", T.t4String(col("cell_id")))
-  }
-
-  /** whole-earth / box-clipped T4 cell generation at `res` (kept-while-
-    * center-in-expanded-box levelwise pruning like the Z7 variant).
-    */
-  def gridCellIdsForExtent4T(spark: SparkSession, res: Int,
-                             clip: Option[(Double, Double, Double, Double)] = None,
-                             lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                             az: Double = Grids.DefaultAz): DataFrame = {
-    import spark.implicits._
-    import graft.spark.{T4Functions => T}
-    var df = (0 to 19).map(f => graft.dggs.T4.pack(f, Seq.empty)).toDF("cell_id")
-    for (k <- 1 to res) {
-      df = df.select(explode(T.t4Children(col("cell_id"))).as("cell_id"))
-      clip.foreach { case (lonMin, latMin, lonMax, latMax) =>
-        // triangle circumradius at res k ≈ rc/2^k rad, 2× safety; lon
-        // margin scaled by 1/cos(lat) like the hex path
-        val marginDeg = math.toDegrees(0.8047 / math.pow(2.0, k)) * 2.0
-        val c = T.cellCenter(col("cell_id"), lat0, lon0, az)
-        val lonMargin = lit(marginDeg) /
-          cos(radians(least(lit(85.0), abs(c.getField("lat")))))
-        df = df.where(
-          lonDistToBox(c.getField("lon"), lonMin, lonMax) <= lonMargin &&
-            c.getField("lat") >= lit(latMin - marginDeg) &&
-            c.getField("lat") <= lit(latMax + marginDeg))
-      }
-      if (lineageStopAt(k, res)) df = lineageStop(df)
-    }
-    df
-  }
-
-  /** H6 for ISEA4D: point→diamond-cell assignment (`cell_id` D4 int64 +
-    * `name` D4 string). Narrow map, no shuffle.
-    */
-  def cellsForGeoPoints4D(points: DataFrame, lonCol: String, latCol: String, res: Int,
-                          lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                          az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{D4Functions => D}
-    points
-      .withColumn("cell_id", D.cellForPoint(col(lonCol), col(latCol), lit(res), lat0, lon0, az))
-      .withColumn("name", D.d4String(col("cell_id")))
-  }
-
-  // ------------------------------------------------------------------
-  // ISEA3H (aperture-3 hexagon) variants — Isea3H kernel / Z3 ids
-  // ------------------------------------------------------------------
-
-  /** H6 for ISEA3H: point→hex-cell assignment (`cell_id` Z3 int64 +
-    * `name` Z3 string). Narrow map, no shuffle.
-    */
-  def cellsForGeoPoints3H(points: DataFrame, lonCol: String, latCol: String, res: Int,
-                          lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                          az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{Z3Functions => H}
-    points
-      .withColumn("cell_id", H.cellForPoint(col(lonCol), col(latCol), lit(res), lat0, lon0, az))
-      .withColumn("name", H.z3String(col("cell_id")))
-  }
-
-  /** whole-earth / box-clipped ISEA3H cell generation at `res`
-    * — whole-earth via exact levelwise Z3 index expansion (bijective);
-    * clipped extents via SAMPLE-ASSIGN-REFINE ([[hexExtentClipped]]):
-    * the hex index hierarchies can NOT be clip-pruned levelwise like
-    * Z7/T4, because seam re-homing makes an index ancestor's center
-    * physically unrelated to its subtree (measured: up to 115° of
-    * parent→child center drift at every level, on all three hex
-    * kernels — the Isea3HSpec drift test documents the seam exception).
-    */
-  def gridCellIdsForExtent3H(spark: SparkSession, res: Int,
-                             clip: Option[(Double, Double, Double, Double)] = None,
-                             lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                             az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{Z3Functions => H}
-    clip match {
-      case None => hexWholeEarth(spark, res, 2, _ => 3)
-      case Some(box) =>
-        hexExtentClipped(spark, box,
-          math.toDegrees(0.64 / math.pow(3.0, res / 2.0)),
-          (lon, lat) => H.cellForPoint(lon, lat, lit(res), lat0, lon0, az),
-          c => H.cellCenter(c, lat0, lon0, az),
-          c => H.cellBoundary(c, lat0, lon0, az))
-    }
   }
 
   /** Whole-earth hex-grid enumeration via the dense rank bijection —
@@ -867,201 +733,58 @@ object GridOps {
       .select("cell_id")
   }
 
-  /** address transform on the ISEA3H grid: Z3 int64, Z3_STRING, ZORDER,
-    * ZORDER_STRING, Q2DI, GEO in/out + INTERLEAVE out-only (the
+  /** H7: address transform (dggrid_runner.py:1962-2025). The kernel
+    * picks the form set: on IGEO7, Z7 int64, Z7_STRING, SEQNUM (engine
+    * canonical), Q2DI, Q2DD, PROJTRI, PLANE, VERTEX2DD, AIGEN and GEO;
+    * on the aperture-3/4 hexagon grids (ISEA3H/4H/43H), the int64 id
+    * (Z3, Z4, Z43), its string form (Z3_STRING, …), ZORDER,
+    * ZORDER_STRING, Q2DI and GEO in/out, plus INTERLEAVE out-only (the
     * reference marks INTERLEAVE output-only, dggrid_runner.py:124).
     */
-  def addressTransform3H(cells: DataFrame, idCol: String,
-                         from: String, to: String, res: Int): DataFrame = {
-    import graft.spark.{Z3Functions => H}
-    val c = col(idCol)
-    val asZ3: Column = from match {
-      case "Z3" => c
-      case "Z3_STRING" => H.z3FromString(c)
-      case "ZORDER" => H.zorderToZ3(c)
-      case "ZORDER_STRING" => H.zorderStringToZ3(c)
-      case "Q2DI" => H.q2diToZ3(c.getField("q"), c.getField("i"), c.getField("j"), lit(res))
-      case "GEO" => H.cellForPoint(c.getField("lon"), c.getField("lat"), lit(res))
-      case "INTERLEAVE" =>
-        // reference contract: INTERLEAVE is output-only (dggrid_runner.py:124)
-        throw new IllegalArgumentException(
-          "INTERLEAVE is only supported as an output_address_type " +
-            "(reference dggrid_runner.py:124)")
-      case other => throw new IllegalArgumentException(s"unsupported 3H input $other")
-    }
-    val out: Column = to match {
-      case "Z3" => asZ3
-      case "Z3_STRING" => H.z3String(asZ3)
-      case "ZORDER" => H.z3ToZorder(asZ3)
-      case "ZORDER_STRING" => H.z3ToZorderString(asZ3)
-      case "INTERLEAVE" => H.z3ToZorderString(asZ3)
-      case "Q2DI" => H.z3ToQ2di(asZ3)
-      case "GEO" => H.cellCenter(asZ3)
-      case other => throw new IllegalArgumentException(s"unsupported 3H output $other")
+  def addressTransform(cells: DataFrame, idCol: String, from: String, to: String,
+                       res: Int, kernel: DggsKernel = Grids.default): DataFrame = {
+    val out = kernel match {
+      case g: IGeo7 => z7Address(col(idCol), from, to, res, g)
+      case h: HexAddressing => hexAddress(col(idCol), from, to, res, h)
+      case k => throw new IllegalArgumentException(
+        s"addressTransform: no address forms for ${k.spec.kind}")
     }
     cells.withColumn("out_addr", out)
   }
 
-  // ------------------------------------------------------------------
-  // ISEA4H (aperture-4 hexagon) variants — Isea4H kernel / Z4 ids
-  // ------------------------------------------------------------------
-
-  /** H6 for ISEA4H: point→hex-cell assignment (`cell_id` Z4 int64 +
-    * `name` Z4 string). Narrow map, no shuffle.
-    */
-  def cellsForGeoPoints4H(points: DataFrame, lonCol: String, latCol: String, res: Int,
-                          lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                          az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{Z4Functions => H}
-    points
-      .withColumn("cell_id", H.cellForPoint(col(lonCol), col(latCol), lit(res), lat0, lon0, az))
-      .withColumn("name", H.z4String(col("cell_id")))
-  }
-
-  /** whole-earth / box-clipped ISEA4H cell generation at `res` — exact
-    * levelwise Z4 index expansion for whole-earth; sample-assign-refine
-    * ([[hexExtentClipped]]) for clips (seam re-homing rules out
-    * levelwise pruning — see [[gridCellIdsForExtent3H]]).
-    */
-  def gridCellIdsForExtent4H(spark: SparkSession, res: Int,
-                             clip: Option[(Double, Double, Double, Double)] = None,
-                             lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                             az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{Z4Functions => H}
-    clip match {
-      case None => hexWholeEarth(spark, res, 3, _ => 4)
-      case Some(box) =>
-        hexExtentClipped(spark, box,
-          math.toDegrees(0.64 / math.pow(2.0, res)),
-          (lon, lat) => H.cellForPoint(lon, lat, lit(res), lat0, lon0, az),
-          c => H.cellCenter(c, lat0, lon0, az),
-          c => H.cellBoundary(c, lat0, lon0, az))
-    }
-  }
-
-  /** address transform on the ISEA4H grid: Z4 int64, Z4_STRING, ZORDER,
-    * ZORDER_STRING, Q2DI, GEO in/out + INTERLEAVE out-only (the
-    * reference marks INTERLEAVE output-only, dggrid_runner.py:124).
-    */
-  def addressTransform4H(cells: DataFrame, idCol: String,
-                         from: String, to: String, res: Int): DataFrame = {
-    import graft.spark.{Z4Functions => H}
-    val c = col(idCol)
-    val asZ4: Column = from match {
-      case "Z4" => c
-      case "Z4_STRING" => H.z4FromString(c)
-      case "ZORDER" => H.zorderToZ4(c)
-      case "ZORDER_STRING" => H.zorderStringToZ4(c)
-      case "Q2DI" => H.q2diToZ4(c.getField("q"), c.getField("i"), c.getField("j"), lit(res))
-      case "GEO" => H.cellForPoint(c.getField("lon"), c.getField("lat"), lit(res))
-      case "INTERLEAVE" =>
-        // reference contract: INTERLEAVE is output-only (dggrid_runner.py:124)
-        throw new IllegalArgumentException(
-          "INTERLEAVE is only supported as an output_address_type " +
-            "(reference dggrid_runner.py:124)")
-      case other => throw new IllegalArgumentException(s"unsupported 4H input $other")
-    }
-    val out: Column = to match {
-      case "Z4" => asZ4
-      case "Z4_STRING" => H.z4String(asZ4)
-      case "ZORDER" => H.z4ToZorder(asZ4)
-      case "ZORDER_STRING" => H.z4ToZorderString(asZ4)
-      case "INTERLEAVE" => H.z4ToZorderString(asZ4)
-      case "Q2DI" => H.z4ToQ2di(asZ4)
-      case "GEO" => H.cellCenter(asZ4)
-      case other => throw new IllegalArgumentException(s"unsupported 4H output $other")
-    }
-    cells.withColumn("out_addr", out)
-  }
-
-  // ------------------------------------------------------------------
-  // ISEA43H (MIXED-aperture hexagon) variants — Isea43H kernel,
-  // 3-bit-digit Z4 layout; `n4` = mixed_aperture_level
-  // ------------------------------------------------------------------
-
-  /** H6 for ISEA43H: point→hex-cell assignment (`cell_id` int64 +
-    * `name` digit string). Narrow map, no shuffle.
-    */
-  def cellsForGeoPoints43H(points: DataFrame, lonCol: String, latCol: String,
-                           res: Int, n4: Int,
-                           lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                           az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{Z43Functions => H}
-    points
-      .withColumn("cell_id", H.cellForPoint(col(lonCol), col(latCol), lit(res), n4, lat0, lon0, az))
-      .withColumn("name", H.z43String(col("cell_id")))
-  }
-
-  /** whole-earth / box-clipped ISEA43H cell generation at `res` — exact
-    * levelwise index expansion for whole-earth; sample-assign-refine
-    * ([[hexExtentClipped]]) for clips (seam re-homing rules out
-    * levelwise pruning — see [[gridCellIdsForExtent3H]]).
-    */
-  def gridCellIdsForExtent43H(spark: SparkSession, res: Int, n4: Int,
-                              clip: Option[(Double, Double, Double, Double)] = None,
-                              lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                              az: Double = Grids.DefaultAz): DataFrame = {
-    import graft.spark.{Z43Functions => H}
-    clip match {
-      case None =>
-        hexWholeEarth(spark, res, 3, level => if (level <= n4) 4 else 3)
-      case Some(box) =>
-        hexExtentClipped(spark, box,
-          math.toDegrees(0.64 / math.sqrt(
-            math.pow(4.0, math.min(res, n4)) * math.pow(3.0, math.max(0, res - n4)))),
-          (lon, lat) => H.cellForPoint(lon, lat, lit(res), n4, lat0, lon0, az),
-          c => H.cellCenter(c, n4, lat0, lon0, az),
-          c => H.cellBoundary(c, n4, lat0, lon0, az))
-    }
-  }
-
-  /** address transform on the ISEA43H grid: Z43 int64 (the packed
-    * 3-bit-digit layout), Z43_STRING, ZORDER, ZORDER_STRING (mixed
-    * radix), Q2DI, GEO in/out + INTERLEAVE out-only (the reference
-    * marks INTERLEAVE output-only, dggrid_runner.py:124).
-    */
-  def addressTransform43H(cells: DataFrame, idCol: String,
-                          from: String, to: String, res: Int, n4: Int): DataFrame = {
-    import graft.spark.{Z43Functions => H}
-    val c = col(idCol)
+  private def hexAddress(c: Column, from: String, to: String, res: Int,
+                         h: HexAddressing): Column = {
+    val idForm = h.idName
     val asId: Column = from match {
-      case "Z43" => c
-      case "Z43_STRING" => H.z43FromString(c)
-      case "ZORDER" => H.zorderToZ43(c, n4)
-      case "ZORDER_STRING" => H.zorderStringToZ43(c, n4)
-      case "Q2DI" =>
-        H.q2diToZ43(c.getField("q"), c.getField("i"), c.getField("j"), lit(res), n4)
-      case "GEO" => H.cellForPoint(c.getField("lon"), c.getField("lat"), lit(res), n4)
+      case `idForm` => c
+      case f if f == idForm + "_STRING" => F.cellFromString(c, h)
+      case "ZORDER" => F.fromZorder(c, h)
+      case "ZORDER_STRING" => F.fromZorderString(c, h)
+      case "Q2DI" => F.fromQ2di(c.getField("q"), c.getField("i"), c.getField("j"), lit(res), h)
+      case "GEO" => F.cellForPoint(c.getField("lon"), c.getField("lat"), lit(res), h)
       case "INTERLEAVE" =>
         // reference contract: INTERLEAVE is output-only (dggrid_runner.py:124)
         throw new IllegalArgumentException(
           "INTERLEAVE is only supported as an output_address_type " +
             "(reference dggrid_runner.py:124)")
-      case other => throw new IllegalArgumentException(s"unsupported 43H input $other")
+      case other => throw new IllegalArgumentException(s"unsupported ${h.spec.kind} input $other")
     }
-    val out: Column = to match {
-      case "Z43" => asId
-      case "Z43_STRING" => H.z43String(asId)
-      case "ZORDER" => H.z43ToZorder(asId, n4)
-      case "ZORDER_STRING" => H.z43ToZorderString(asId, n4)
-      case "INTERLEAVE" => H.z43ToZorderString(asId, n4)
-      case "Q2DI" => H.z43ToQ2di(asId, n4)
-      case "GEO" => H.cellCenter(asId, n4)
-      case other => throw new IllegalArgumentException(s"unsupported 43H output $other")
+    to match {
+      case `idForm` => asId
+      case t if t == idForm + "_STRING" => F.cellString(asId, h)
+      case "ZORDER" => F.toZorder(asId, h)
+      case "ZORDER_STRING" | "INTERLEAVE" => F.toZorderString(asId, h)
+      case "Q2DI" => F.toQ2di(asId, h)
+      case "GEO" => F.cellCenter(asId, h)
+      case other => throw new IllegalArgumentException(s"unsupported ${h.spec.kind} output $other")
     }
-    cells.withColumn("out_addr", out)
   }
 
-  /** H7: address transform between Z7 int64, Z7_STRING, SEQNUM (engine
-    * canonical), and GEO center (dggrid_runner.py:1962-2025).
-    */
-  def addressTransform(cells: DataFrame, idCol: String,
-                       from: String, to: String, res: Int): DataFrame = {
+  private def z7Address(c: Column, from: String, to: String, res: Int, g: IGeo7): Column = {
     import graft.spark.{AddrFunctions => A, Q2diFunctions => Q}
-    val c = col(idCol)
     val asZ7: Column = from match {
       case "Z7" => c
-      case "Z7_STRING" => F.z7FromString(c)
+      case "Z7_STRING" => F.cellFromString(c)
       case "SEQNUM" => F.seqnumToZ7(c, lit(res))
       case "Q2DI" => Q.q2diToZ7(c.getField("q"), c.getField("i"), c.getField("j"), lit(res))
       case "Q2DD" => A.q2ddToZ7(c.getField("q"), c.getField("x"), c.getField("y"), lit(res))
@@ -1070,7 +793,7 @@ object GridOps {
       case "PLANE" => A.planeToZ7(c.getField("x"), c.getField("y"), lit(res))
       case "VERTEX2DD" =>
         A.vertex2ddToZ7(c.getField("t"), c.getField("x"), c.getField("y"), lit(res))
-      case "GEO" => F.cellForPoint(c.getField("lon"), c.getField("lat"), lit(res))
+      case "GEO" => F.cellForPoint(c.getField("lon"), c.getField("lat"), lit(res), g)
       case "AIGEN" | "AIGEN_SEQNUM" =>
         // the reference admits AIGEN on the INPUT side too
         // (dggrid_runner.py:199, 218 — round-3 ADVICE; an earlier comment
@@ -1100,11 +823,11 @@ object GridOps {
         else validated
       case other => throw new IllegalArgumentException(s"unsupported input $other")
     }
-    val out: Column = to match {
+    to match {
       case "Z7" => asZ7
-      case "Z7_STRING" => F.z7String(asZ7)
+      case "Z7_STRING" => F.cellString(asZ7)
       case "SEQNUM" => F.z7ToSeqnum(asZ7)
-      case "GEO" => F.cellCenter(asZ7)
+      case "GEO" => F.cellCenter(asZ7, g)
       case "Q2DI" => Q.z7ToQ2di(asZ7)
       case "Q2DD" => A.z7ToQ2dd(asZ7)
       case "PROJTRI" => A.z7ToProjtri(asZ7)
@@ -1115,14 +838,12 @@ object GridOps {
         // parity with the reference's own constraint: these exist only
         // for aperture-3/4 hex grids (dggrid_runner.py:125, 121-236) —
         // on the aperture-7 grid they are invalid; the aperture-3/4
-        // grids support them via addressTransform3H / addressTransform4H
+        // grids support them through their kernels
         throw new IllegalArgumentException(
           s"$to is defined for aperture-3/4 hexagon grids only " +
             "(reference dggrid_runner.py:125); this is the aperture-7 " +
-            "grid — use addressTransform3H (ISEA3H) or addressTransform4H " +
-            "(ISEA4H) for Z3/Z4/ZORDER forms")
+            "grid — pass an ISEA3H/ISEA4H/ISEA43H kernel for Z3/Z4/ZORDER forms")
       case other => throw new IllegalArgumentException(s"unsupported output $other")
     }
-    cells.withColumn("out_addr", out)
   }
 }

@@ -17,7 +17,7 @@ import graft.spark.{DggsFunctions => F, Grids}
   * object is derived from the Z7 kernel (`coverCells*`, `F.z7Disk`,
   * `diskSafeKm`/KnnSafeRadiusSpec). Ids from the ISEA3H/4H/43H/4T/4D
   * kernels are NOT accepted — join those datasets by round-tripping
-  * through GEO (`Z3Functions.cellCenter` → `pointInPolygonJoin*` /
+  * through GEO (`DggsFunctions.cellCenter(cell, kernel)` → `pointInPolygonJoin*` /
   * `knnJoin` / `distanceJoin` on lon/lat), which is exact because the
   * joins here take raw coordinates, not foreign cell ids. Extending
   * the disk/safe-radius certificates to the other kernels requires a
@@ -110,11 +110,11 @@ object SpatialOps {
     var df = seed
     for (k <- 1 to res) {
       val margin = math.toDegrees(0.6954709 / math.pow(7.0, k / 2.0)) * 2.0
-      val c = F.cellCenter(col("cell_id"), lat0, lon0, az)
+      val c = F.cellCenter(col("cell_id"), Grids.get(lat0, lon0, az))
       val lonMargin = lit(margin) /
         cos(radians(least(lit(85.0), abs(c.getField("lat")))))
       df = df.select(col("poly_id"), col("wkt"), col("__env"),
-          explode(F.z7Children(col("cell_id"))).as("cell_id"))
+          explode(F.children(col("cell_id"))).as("cell_id"))
         .where(
           GridOps.lonDistToRange(c.getField("lon"),
             col("__env.minx"), col("__env.maxx")) <= lonMargin &&
@@ -129,7 +129,7 @@ object SpatialOps {
       JtsCache.intersectsRing(wkt,
         ring.map(r => (r.getDouble(0), r.getDouble(1))))
     }
-    df.where(refine(col("wkt"), F.cellBoundary(col("cell_id"), lat0, lon0, az)))
+    df.where(refine(col("wkt"), F.cellBoundary(col("cell_id"), Grids.get(lat0, lon0, az))))
       .select("poly_id", "wkt", "cell_id")
   }
 
@@ -240,7 +240,7 @@ object SpatialOps {
                               lat0: Double = Grids.DefaultLat,
                               lon0: Double = Grids.DefaultLon,
                               az: Double = Grids.DefaultAz): DataFrame = {
-    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
+    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res, Grids.get(lat0, lon0, az))
     joinOnCell(pts, hintCovers(covers.withColumnRenamed("wkt", "poly_wkt"), broadcastCovers))
       .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt")
@@ -284,7 +284,7 @@ object SpatialOps {
                                 lat0: Double = Grids.DefaultLat,
                                 lon0: Double = Grids.DefaultLon,
                                 az: Double = Grids.DefaultAz): DataFrame = {
-    val resList = covers.select(F.z7Resolution(col("cell_id")).as("r"))
+    val resList = covers.select(F.resolution(col("cell_id")).as("r"))
       .distinct().collect().map(_.getInt(0)).sorted
     require(resList.nonEmpty, "empty cover relation")
     require(resList.last <= res,
@@ -294,7 +294,7 @@ object SpatialOps {
       covers.withColumnRenamed("wkt", "poly_wkt")
         .withColumn("__cov", F.z7SpreadKey(col("cell_id"))).drop("cell_id"),
       broadcastCovers)
-    GridOps.cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
+    GridOps.cellsForGeoPoints(points, lonCol, latCol, res, Grids.get(lat0, lon0, az))
       .withColumn("__cov", explode(array(resList.map(rr =>
         F.z7SpreadKey(F.z7AncestorAtExpr(col("cell_id"), lit(rr)))).toIndexedSeq: _*)))
       .join(hinted, Seq("__cov"))
@@ -328,7 +328,8 @@ object SpatialOps {
       .select(col("poly_id").as("a_id"), col("cell_id"))
     val cb = coverCellsDf(polysB, res, lat0, lon0, az)
       .select(col("poly_id").as("b_id"), col("cell_id"))
-    val cand = ca.join(cb, "cell_id").select("a_id", "b_id").distinct()
+    val cand = ca.join(cb, F.z7SpreadKey(ca("cell_id")) === F.z7SpreadKey(cb("cell_id")))
+      .select("a_id", "b_id").distinct()
     val refine = udf { (wa: String, wb: String) => JtsCache.intersectsWkt(wa, wb) }
     cand
       .join(polysA.select(col("poly_id").as("a_id"), col("wkt").as("__wa")), "a_id")
@@ -426,10 +427,12 @@ object SpatialOps {
     // coalescing — the same discipline as the banding engine and
     // distanceJoin (windows have no map-side combine to lose).
     val nPart = queries.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = qc
+    val probes = qc
       .withColumn("probe_cell", explode(F.z7Disk(col("cell_id"), probeDisk)))
       .drop("cell_id")
-      .join(tCell, "probe_cell").drop("probe_cell")
+    val cand = probes
+      .join(tCell, F.z7SpreadKey(probes("probe_cell")) === F.z7SpreadKey(tCell("probe_cell")))
+      .drop(probes("probe_cell")).drop(tCell("probe_cell"))
       .where(keep)
       .withColumn("dist_km", dist)
       .repartition(nPart, col("__qid"))
@@ -547,12 +550,19 @@ object SpatialOps {
           .select(col("probe_cell"))
           .collect().map(_.getLong(0)).toSet
     }
+    // the hash relation is keyed on the spread id (DggsFunctions.cellForPoint
+    // scaladoc: raw ids collapse into one slot); both sides are
+    // partitioned on it so the join needs no further exchange
+    val spread = F.z7SpreadKey(col("probe_cell"))
+    def spreadJoin(l: DataFrame, r: DataFrame, more: Seq[String]): DataFrame = {
+      val on = more.foldLeft(F.z7SpreadKey(l("probe_cell")) === F.z7SpreadKey(r("probe_cell")))(
+        (c, m) => c && l(m) === r(m))
+      ("probe_cell" +: more).flatMap(m => Seq(l(m), r(m)))
+        .foldLeft(l.join(r.hint("shuffle_hash"), on))(_.drop(_))
+    }
     val joined =
       if (hotKeys.isEmpty)
-        lExp.repartition(nPart, col("probe_cell"))
-          .join(rCell.repartition(nPart, col("probe_cell")).hint("shuffle_hash"),
-            Seq("probe_cell"))
-          .drop("probe_cell")
+        spreadJoin(lExp.repartition(nPart, spread), rCell.repartition(nPart, spread), Nil)
       else {
         val isHot = udf((k: Long) => hotKeys.contains(k))
         val lS = lExp.withColumn("__salt",
@@ -561,11 +571,8 @@ object SpatialOps {
         val rS = rCell.withColumn("__salt",
           explode(when(isHot(col("probe_cell")),
             sequence(lit(0), lit(nSalts - 1))).otherwise(array(lit(0)))))
-        lS.repartition(nPart, col("probe_cell"), col("__salt"))
-          .join(rS.repartition(nPart, col("probe_cell"), col("__salt"))
-            .hint("shuffle_hash"),
-            Seq("probe_cell", "__salt"))
-          .drop("probe_cell", "__salt")
+        spreadJoin(lS.repartition(nPart, spread, col("__salt")),
+          rS.repartition(nPart, spread, col("__salt")), Seq("__salt"))
       }
     joined
       .withColumn("dist_km",

@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
-import graft.dggs.{Addr, Authalic, D4, Sphere, T4, Z7}
+import graft.dggs.{Addr, Authalic, DggsKernel, Sphere, Z7}
 import Sphere.GeoRad
 
 /** SQL-name registration: makes the DGGS surface usable from
@@ -33,13 +33,24 @@ object GraftSql {
 
   def register(spark: SparkSession): Unit = {
     val r = spark.udf
+    // the <id>_cell / <id>_string / <id>_ancestor trio of every kernel
+    // (z7_, t4_, d4_, z3_, z4_); the closures capture the kernel, which
+    // ships as its spec and resolves to the executor's cached instance
+    for (k <- Seq[DggsKernel](Grids.default, Grids.isea4t, Grids.isea4d,
+                              Grids.isea3h, Grids.isea4h)) {
+      val p = k.idName.toLowerCase
+      r.register(s"${p}_cell", (lon: Double, lat: Double, res: Int) =>
+        k.cellForPoint(GeoRad.fromDeg(lat, lon), res))
+      r.register(s"${p}_string", (z: Long) => k.toCellString(z))
+      r.register(s"${p}_ancestor", (z: Long, res: Int) => k.ancestorAt(z, res))
+    }
+    // z43_cell takes the mixed_aperture_level as an argument (a grid
+    // CONFIG the reference passes the same way)
+    r.register("z43_cell", (lon: Double, lat: Double, res: Int, n4: Int) =>
+      Grids.isea43h(n4).cellForPoint(GeoRad.fromDeg(lat, lon), res))
     // Z7 / ISEA7H
-    r.register("z7_cell", (lon: Double, lat: Double, res: Int) =>
-      Grids.default.cellForPoint(GeoRad.fromDeg(lat, lon), res))
-    r.register("z7_string", (z: Long) => Z7.toZ7String(z))
     r.register("z7_from_string", (s: String) => Z7.fromZ7String(s))
     r.register("z7_parent", (z: Long) => Z7.parent(z))
-    r.register("z7_ancestor", (z: Long, res: Int) => Z7.ancestorAt(z, res))
     r.register("z7_resolution", (z: Long) => Z7.resolution(z))
     r.register("z7_is_pentagon", (z: Long) => Z7.isPentagon(z))
     r.register("z7_children", (z: Long) => Z7.children(z))
@@ -56,28 +67,6 @@ object GraftSql {
       (ring :+ ring.head).map(g => f"${g.lonDeg}%.12f ${g.latDeg}%.12f")
         .mkString("POLYGON ((", ", ", "))")
     })
-    // T4 / ISEA4T and D4 / ISEA4D
-    r.register("t4_cell", (lon: Double, lat: Double, res: Int) =>
-      graft.dggs.Isea4TGrids.default.cellForPoint(GeoRad.fromDeg(lat, lon), res))
-    r.register("t4_string", (id: Long) => T4.toT4String(id))
-    r.register("t4_ancestor", (id: Long, res: Int) => T4.ancestorAt(id, res))
-    r.register("d4_cell", (lon: Double, lat: Double, res: Int) =>
-      graft.dggs.Isea4DGrids.default.cellForPoint(GeoRad.fromDeg(lat, lon), res))
-    r.register("d4_string", (id: Long) => D4.toD4String(id))
-    r.register("d4_ancestor", (id: Long, res: Int) => D4.ancestorAt(id, res))
-    // hexagon kernels (round 8): the same cell/string/ancestor trio per
-    // grid; z43_cell takes the mixed_aperture_level as an argument (a
-    // grid CONFIG the reference passes the same way)
-    r.register("z3_cell", (lon: Double, lat: Double, res: Int) =>
-      graft.dggs.Isea3HGrids.default.cellForPoint(GeoRad.fromDeg(lat, lon), res))
-    r.register("z3_string", (id: Long) => graft.dggs.Z3.toZ3String(id))
-    r.register("z3_ancestor", (id: Long, res: Int) => graft.dggs.Z3.ancestorAt(id, res))
-    r.register("z4_cell", (lon: Double, lat: Double, res: Int) =>
-      graft.dggs.Isea4HGrids.default.cellForPoint(GeoRad.fromDeg(lat, lon), res))
-    r.register("z4_string", (id: Long) => graft.dggs.Z4.toZ4String(id))
-    r.register("z4_ancestor", (id: Long, res: Int) => graft.dggs.Z4.ancestorAt(id, res))
-    r.register("z43_cell", (lon: Double, lat: Double, res: Int, n4: Int) =>
-      graft.dggs.Isea43HGrids.default(n4).cellForPoint(GeoRad.fromDeg(lat, lon), res))
     // coordinate conversions
     r.register("to_authalic_lat", (lat: Double) => Authalic.toAuthalicDeg(lat))
     r.register("to_geodetic_lat", (lat: Double) => Authalic.toGeodeticDeg(lat))

@@ -41,11 +41,11 @@ object FreezeFixtures {
       .as[(Long, Long, Double, Double)].collect()
       .sortBy(t => (t._1, t._2))
     val g = Grids.default
-    val t4g = graft.dggs.Isea4TGrids.default
-    val d4g = graft.dggs.Isea4DGrids.default
-    val h3g = graft.dggs.Isea3HGrids.default
-    val h4g = graft.dggs.Isea4HGrids.default
-    val h43g = graft.dggs.Isea43HGrids.default(3)
+    val t4g = Grids.isea4t
+    val d4g = Grids.isea4d
+    val h3g = Grids.isea3h
+    val h4g = Grids.isea4h
+    val h43g = Grids.isea43h(3)
     val mapRows = geo.map { case (lonM, latM, lon, lat) =>
       val p = GeoRad.fromDeg(lat, lon)
       val cs = (3 to 6).map(r => Z7.toZ7String(g.cellForPoint(p, r)))
@@ -70,7 +70,7 @@ object FreezeFixtures {
     }
 
     val extent = GridOps.gridCellIdsForExtent(spark, 4, Some((20.2, 57.0, 28.4, 60.0)))
-      .select(F.z7String(col("cell_id"))).as[String].collect().sorted
+      .select(F.cellString(col("cell_id"))).as[String].collect().sorted
     val extentRows = extent.map(n => s"  ('$n')")
 
     // hex-kernel extents over the same box (regression pins: the
@@ -79,14 +79,14 @@ object FreezeFixtures {
     // exact against full driver-side enumeration for mid-lat and
     // antimeridian boxes on all three kernels)
     val hexBox = Some((20.2, 57.0, 28.4, 60.0))
-    val extent3hNames = GridOps.gridCellIdsForExtent3H(spark, 8, hexBox)
-      .select(graft.spark.Z3Functions.z3String(col("cell_id")))
+    val extent3hNames = GridOps.gridCellIdsForExtent(spark, 8, hexBox, h3g)
+      .select(F.cellString(col("cell_id"), h3g))
       .as[String].collect().sorted
-    val extent4hNames = GridOps.gridCellIdsForExtent4H(spark, 6, hexBox)
-      .select(graft.spark.Z4Functions.z4String(col("cell_id")))
+    val extent4hNames = GridOps.gridCellIdsForExtent(spark, 6, hexBox, h4g)
+      .select(F.cellString(col("cell_id"), h4g))
       .as[String].collect().sorted
-    val extent43hNames = GridOps.gridCellIdsForExtent43H(spark, 6, 3, hexBox)
-      .select(graft.spark.Z43Functions.z43String(col("cell_id")))
+    val extent43hNames = GridOps.gridCellIdsForExtent(spark, 6, hexBox, h43g)
+      .select(F.cellString(col("cell_id"), h43g))
       .as[String].collect().sorted
     val extent3hRows = extent3hNames.map(n => s"  ('$n')")
     val extent4hRows = extent4hNames.map(n => s"  ('$n')")
@@ -117,7 +117,7 @@ object FreezeFixtures {
     val wrapHalves = Seq((175.0, -20.0, 180.0, -10.0), (-180.0, -20.0, -175.0, -10.0))
     val wrapIds = wrapHalves.flatMap { h =>
       GridOps.gridCellIdsForExtent(spark, 4, Some(h))
-        .select(F.z7String(col("cell_id"))).as[String].collect()
+        .select(F.cellString(col("cell_id"))).as[String].collect()
     }.distinct.sorted
     val wrapRows = wrapIds.map(n => s"  ('$n')")
 
@@ -133,7 +133,7 @@ object FreezeFixtures {
     val wktClip =
       "POLYGON ((21.0 57.3, 28.0 57.8, 27.5 59.7, 24.0 60.4, 21.5 59.5, 21.0 57.3))"
     val wktIds = graft.ops.SpatialOps.gridCellIdsForWkt(spark, wktClip, 5)
-      .select(F.z7String(col("cell_id"))).as[String].collect().sorted
+      .select(F.cellString(col("cell_id"))).as[String].collect().sorted
     val wktRows = wktIds.map(n => s"  ('$n')")
 
     // raster sample: the 32×32 pixel corner of the synthetic 256×256

@@ -1,5 +1,6 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip properties of the Q2DD / PROJTRI / PLANE address frames
@@ -73,39 +74,39 @@ class AddrSpec extends AnyFunSuite {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
-    import graft.ops.GridOps.addressTransform3H
-    val g = graft.dggs.Isea3HGrids.default
+    import graft.ops.GridOps.addressTransform
+    val g = graft.spark.Grids.isea3h
     val names = (for (q <- 1 to 10; d1 <- 0 to 2; d2 <- 0 to 2)
       yield f"$q%02d$d1$d2${(d1 + d2) % 3}") ++ Seq("00000", "11000")
     val cells = names.toDF("name")
     // hop chain Z3_STRING -> ZORDER -> ZORDER_STRING -> Q2DI -> Z3 -> Z3_STRING
-    val h1 = addressTransform3H(cells, "name", "Z3_STRING", "ZORDER", 3)
+    val h1 = addressTransform(cells, "name", "Z3_STRING", "ZORDER", 3, Grids.isea3h)
       .withColumnRenamed("out_addr", "zo")
-    val h2 = addressTransform3H(h1, "zo", "ZORDER", "ZORDER_STRING", 3)
+    val h2 = addressTransform(h1, "zo", "ZORDER", "ZORDER_STRING", 3, Grids.isea3h)
       .withColumnRenamed("out_addr", "zs")
-    val h3 = addressTransform3H(h2, "zs", "ZORDER_STRING", "Q2DI", 3)
+    val h3 = addressTransform(h2, "zs", "ZORDER_STRING", "Q2DI", 3, Grids.isea3h)
       .withColumnRenamed("out_addr", "qij")
-    val h4 = addressTransform3H(h3, "qij", "Q2DI", "Z3", 3)
+    val h4 = addressTransform(h3, "qij", "Q2DI", "Z3", 3, Grids.isea3h)
       .withColumnRenamed("out_addr", "z3")
-    val h5 = addressTransform3H(h4, "z3", "Z3", "Z3_STRING", 3)
+    val h5 = addressTransform(h4, "z3", "Z3", "Z3_STRING", 3, Grids.isea3h)
     h5.select("name", "out_addr").collect().foreach { r =>
       assert(r.getString(0) == r.getString(1), r)
     }
     // GEO hop: center of each cell assigns back to the cell
-    val geo = addressTransform3H(cells, "name", "Z3_STRING", "GEO", 3)
+    val geo = addressTransform(cells, "name", "Z3_STRING", "GEO", 3, Grids.isea3h)
       .withColumnRenamed("out_addr", "geo")
-    val back = addressTransform3H(geo, "geo", "GEO", "Z3_STRING", 3)
+    val back = addressTransform(geo, "geo", "GEO", "Z3_STRING", 3, Grids.isea3h)
     back.select("name", "out_addr").collect().foreach { r =>
       assert(r.getString(0) == r.getString(1), r)
     }
     // INTERLEAVE = the interleaved-digit string, output-only
-    val il = addressTransform3H(cells, "name", "Z3_STRING", "INTERLEAVE", 3)
+    val il = addressTransform(cells, "name", "Z3_STRING", "INTERLEAVE", 3, Grids.isea3h)
       .withColumnRenamed("out_addr", "il")
-    val zs = addressTransform3H(cells, "name", "Z3_STRING", "ZORDER_STRING", 3)
+    val zs = addressTransform(cells, "name", "Z3_STRING", "ZORDER_STRING", 3, Grids.isea3h)
     assert(il.select("il").collect().map(_.getString(0)).toSeq ==
       zs.select("out_addr").collect().map(_.getString(0)).toSeq)
     val e = intercept[IllegalArgumentException] {
-      addressTransform3H(il, "il", "INTERLEAVE", "Z3", 3)
+      addressTransform(il, "il", "INTERLEAVE", "Z3", 3, Grids.isea3h)
     }
     assert(e.getMessage.contains("output_address_type"))
     // kernel-level deep round-trip: every sampled res-8 cell hops

@@ -1,5 +1,6 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 import Sphere._
 
@@ -14,7 +15,7 @@ import Sphere._
   */
 class Isea3HSpec extends AnyFunSuite {
 
-  private val g = Isea3HGrids.default
+  private val g = Grids.isea3h
 
   private def allQuadIds(r: Int): Seq[Long] = {
     def paths(k: Int): Seq[List[Int]] =

@@ -1,5 +1,6 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 import Sphere._
 
@@ -14,9 +15,9 @@ import Sphere._
   */
 class Isea43HSpec extends AnyFunSuite {
 
-  private val gm = Isea43HGrids.default(2) // mixed: 4,4,3,3,...
-  private val g0 = Isea43HGrids.default(0) // pure aperture 3
-  private val gp = Isea43HGrids.default(Z4.MaxRes) // pure aperture 4
+  private val gm = Grids.isea43h(2) // mixed: 4,4,3,3,...
+  private val g0 = Grids.isea43h(0) // pure aperture 3
+  private val gp = Grids.isea43h(Z4.MaxRes) // pure aperture 4
 
   /** enumerate all quad ids at res r for mixed level n4 */
   private def allQuadIds(g: Isea43H, r: Int): Seq[Long] = {
@@ -36,7 +37,7 @@ class Isea43HSpec extends AnyFunSuite {
   }
 
   test("PURE EQUIVALENCE n4=0: digit strings match Isea3H exactly (enumeration + points)") {
-    val h3 = Isea3HGrids.default
+    val h3 = Grids.isea3h
     // every res-3 cell: same center, same digit string
     allIds(g0, 3).foreach { id =>
       val z3 = Z3.pack(Z4.baseCell(id), Z4.digits(id))
@@ -62,7 +63,7 @@ class Isea43HSpec extends AnyFunSuite {
   }
 
   test("PURE EQUIVALENCE n4>=res: int64 ids match Isea4H exactly (enumeration + points)") {
-    val h4 = Isea4HGrids.default
+    val h4 = Grids.isea4h
     allIds(gp, 3).foreach { id =>
       assert(distance(gp.cellCenter(id), h4.cellCenter(id)) < 1e-12, Z4.toZ4String(id))
     }

@@ -1,5 +1,6 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 import Sphere._
 
@@ -9,7 +10,7 @@ import Sphere._
   */
 class Isea4DSpec extends AnyFunSuite {
 
-  private val g = Isea4DGrids.default
+  private val g = Grids.isea4d
 
   test("D4 codec: pack/digits/ij/string round-trips, parent/children") {
     val id = D4.pack(7, Seq(3, 0, 2, 1))

@@ -1,5 +1,6 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 import Sphere._
 
@@ -15,7 +16,7 @@ import Sphere._
   */
 class Isea4HSpec extends AnyFunSuite {
 
-  private val g = Isea4HGrids.default
+  private val g = Grids.isea4h
 
   private def allQuadIds(r: Int): Seq[Long] = {
     def paths(k: Int): Seq[List[Int]] =
@@ -200,7 +201,7 @@ class Isea4HSpec extends AnyFunSuite {
   }
 
   test("ownership convention is SHARED with the aperture-3 kernel (one QuadOwnership)") {
-    val h3 = Isea3HGrids.default
+    val h3 = Grids.isea3h
     assert(g.capVerts == h3.capVerts)
     assert(g.vertexBase.toSeq == h3.vertexBase.toSeq)
     assert(g.ownsOA.toSeq == h3.ownsOA.toSeq)

@@ -1,5 +1,6 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 import Sphere._
 
@@ -11,7 +12,7 @@ import Sphere._
   */
 class Isea4TSpec extends AnyFunSuite {
 
-  private val g = Isea4TGrids.default
+  private val g = Grids.isea4t
 
   test("T4 codec: pack/unpack/string round-trips, parent/children") {
     val id = T4.pack(17, Seq(0, 3, 1, 2))
@@ -94,7 +95,7 @@ class Isea4TSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val box = (20.2, 57.0, 28.4, 60.0)
-    val ext = graft.ops.GridOps.gridCellIdsForExtent4T(spark, 5, Some(box))
+    val ext = graft.ops.GridOps.gridCellIdsForExtent(spark, 5, Some(box), Grids.isea4t)
       .as[Long].collect().toSet
     // margin pruning keeps a superset of cells intersecting the box —
     // in particular every cell that CONTAINS an in-box point

@@ -1,18 +1,22 @@
 package graft.dggs
 
+import graft.spark.Grids
 import org.scalatest.funsuite.AnyFunSuite
 import Sphere._
 
-/** Randomized (seeded, reproducible) property blitz over all three
-  * kernels and the codecs — complements the deterministic golden suites
-  * with broad coverage of arbitrary points, resolutions, digit paths.
+/** Randomized (seeded, reproducible) property blitz over the six
+  * [[DggsKernel]]s and the codecs — complements the deterministic golden
+  * suites with broad coverage of arbitrary points, resolutions, digit
+  * paths.
   */
 class KernelPropertySpec extends AnyFunSuite {
 
   private val hex = new IGeo7()
-  private val tri = Isea4TGrids.default
-  private val dia = Isea4DGrids.default
+  private val tri = Grids.isea4t
+  private val dia = Grids.isea4d
   private val N = 300
+  private val kernels: Seq[DggsKernel] = Seq(Grids.default, Grids.isea3h, Grids.isea4h,
+    Grids.isea43h(3), Grids.isea4t, Grids.isea4d)
 
   private def cases(seed: Long): Seq[(Double, Double, Int)] = {
     val rnd = new scala.util.Random(seed)
@@ -20,13 +24,35 @@ class KernelPropertySpec extends AnyFunSuite {
       rnd.nextDouble() * 179.998 - 89.999, 1 + rnd.nextInt(8)))
   }
 
-  test("Z7: point assignment is ancestor-consistent under ancestorAt") {
-    cases(1).foreach { case (lon, lat, r) =>
-      val z = hex.cellForPoint(GeoRad.fromDeg(lat, lon), r)
-      assert(Z7.resolution(z) == r)
+  test("all kernels: ancestor-consistent point assignment + string round trip") {
+    // the string form is a 2-digit base plus one char per digit, so an
+    // ancestor's string is the cell's string cut after its digits
+    for (kern <- kernels) cases(1).foreach { case (lon, lat, r) =>
+      val z = kern.cellForPoint(GeoRad.fromDeg(lat, lon), r)
+      val name = kern.toCellString(z)
+      val label = s"${kern.spec.kind} $name"
+      assert(kern.resolution(z) == r, label)
+      assert(kern.fromCellString(name) == z, label)
       (0 until r).foreach { k =>
-        assert(Z7.digits(Z7.ancestorAt(z, k)) == Z7.digits(z).take(k))
+        val a = kern.ancestorAt(z, k)
+        assert(kern.resolution(a) == k, label)
+        assert(kern.toCellString(a) == name.take(2 + k), label)
       }
+      assert(kern.parent(z) == kern.ancestorAt(z, r - 1), label)
+      assert(kern.children(kern.parent(z)).contains(z), label)
+    }
+  }
+
+  test("a kernel serializes as its spec and resolves to the cached instance") {
+    for (kern <- kernels :+ new Isea43H(2)) {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(kern)
+      out.close()
+      assert(bytes.size < 1000, s"${kern.spec}: ${bytes.size} bytes")
+      val back = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+      assert(back eq DggsKernel(kern.spec), kern.spec)
     }
   }
 

@@ -95,7 +95,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       "z3_cell" -> (() => {
         // SQL path == column/kernel path (the frozen-mapping anchor)
         assert(one("z3_string(z3_cell(24.7D, 59.4D, 6))") ==
-          graft.dggs.Z3.toZ3String(graft.dggs.Isea3HGrids.default
+          graft.dggs.Z3.toZ3String(graft.spark.Grids.isea3h
             .cellForPoint(graft.dggs.Sphere.GeoRad.fromDeg(59.4, 24.7), 6)))
       }),
       "z3_string" -> (() =>
@@ -105,7 +105,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
           one("substr(z3_string(z3_cell(24.7D, 59.4D, 6)), 1, 4)"))),
       "z4_cell" -> (() => {
         assert(one("z4_string(z4_cell(24.7D, 59.4D, 6))") ==
-          graft.dggs.Z4.toZ4String(graft.dggs.Isea4HGrids.default
+          graft.dggs.Z4.toZ4String(graft.spark.Grids.isea4h
             .cellForPoint(graft.dggs.Sphere.GeoRad.fromDeg(59.4, 24.7), 6)))
       }),
       "z4_string" -> (() =>
@@ -117,7 +117,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
         // mixed level 3 in the shared Z4 layout; n4 = res reproduces the
         // pure aperture-4 id (the Isea43H pure-equivalence contract)
         assert(one("z4_string(z43_cell(24.7D, 59.4D, 6, 3))") ==
-          graft.dggs.Z4.toZ4String(graft.dggs.Isea43HGrids.default(3)
+          graft.dggs.Z4.toZ4String(graft.spark.Grids.isea43h(3)
             .cellForPoint(graft.dggs.Sphere.GeoRad.fromDeg(59.4, 24.7), 6)))
         assert(one("z43_cell(24.7D, 59.4D, 6, 6)") ==
           one("z4_cell(24.7D, 59.4D, 6)"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.spark.Grids
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -168,9 +169,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the rank-bijection path's 100 TB story: N(res) cells from ONE
     // evenly-partitioned Range + native bit arithmetic — a UDF, explode
     // chain, or exchange here voids the plan-shape claim
-    for (df <- Seq(GridOps.gridCellIdsForExtent3H(spark, 6),
-                   GridOps.gridCellIdsForExtent4H(spark, 6),
-                   GridOps.gridCellIdsForExtent43H(spark, 6, 3))) {
+    for (df <- Seq(GridOps.gridCellIdsForExtent(spark, 6, None, Grids.isea3h),
+                   GridOps.gridCellIdsForExtent(spark, 6, None, Grids.isea4h),
+                   GridOps.gridCellIdsForExtent(spark, 6, None, Grids.isea43h(3)))) {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan.take(2000))
       assert(!plan.contains("BatchEvalPython") && !plan.contains("Generate"),

@@ -784,16 +784,16 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compactCells: cascade, puncture, pentagon family-6, roundtrip") {
     import spark.implicits._
     def names(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(F.z7String(col("cell_id"))).as[String].collect().toSet
+      df.select(F.cellString(col("cell_id"))).as[String].collect().toSet
     def fromNames(s: Seq[String]) =
-      s.toDF("name").select(F.z7FromString(col("name")).as("cell_id"))
+      s.toDF("name").select(F.cellFromString(col("name")).as("cell_id"))
     // full two-level cover cascades to the single parent
     val full = GridOps.gridCellsFromCoarseCells(
       Seq("023").toDF("p"), "p", 3).select("cell_id")
     assert(names(GridOps.compactCells(full)) == Set("023"))
     // puncture one leaf: its family survives at res 3, the other six
     // families compact to res 2, nothing reaches res 1
-    val punctured = full.where(F.z7String(col("cell_id")) =!= "02340")
+    val punctured = full.where(F.cellString(col("cell_id")) =!= "02340")
     assert(names(GridOps.compactCells(punctured)) ==
       Set("0230", "0231", "0232", "0233", "0235", "0236",
         "02341", "02342", "02343", "02344", "02345", "02346"))
@@ -818,22 +818,22 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 4T variant: family size 4 (no pentagon case), same loop — a full
     // two-level triangle cover cascades to its base cell and a 3-of-4
     // family does NOT compact
-    import graft.spark.{T4Functions => T}
+    val t4 = Grids.isea4t
     val t4full = Seq("05").toDF("p")
-      .select(explode(T.t4DescendantsAt(T.t4FromString(col("p")), lit(2)))
+      .select(explode(F.descendantsAt(F.cellFromString(col("p"), t4), lit(2), t4))
         .as("cell_id"))
-    assert(GridOps.compactCells4T(t4full)
-      .select(T.t4String(col("cell_id"))).as[String].collect().toSet
+    assert(GridOps.compactCells(t4full, kernel = t4)
+      .select(F.cellString(col("cell_id"), t4)).as[String].collect().toSet
       == Set("05"))
-    val t4punct = t4full.where(T.t4String(col("cell_id")) =!= "0500")
-    assert(GridOps.compactCells4T(t4punct)
-      .select(T.t4String(col("cell_id"))).as[String].collect().toSet
+    val t4punct = t4full.where(F.cellString(col("cell_id"), t4) =!= "0500")
+    assert(GridOps.compactCells(t4punct, kernel = t4)
+      .select(F.cellString(col("cell_id"), t4)).as[String].collect().toSet
       == Set("051", "052", "053", "0501", "0502", "0503"))
     // keyed compaction: identical cell sets under two keys compact
     // independently (no cross-key family completion)
     val twoKeys = Seq("a", "b").toDF("k").crossJoin(full)
     val ck = GridOps.compactCells(twoKeys, keyCols = Seq("k"))
-    assert(ck.select(F.z7String(col("cell_id")), col("k"))
+    assert(ck.select(F.cellString(col("cell_id")), col("k"))
       .as[(String, String)].collect().toSet == Set("023" -> "a", "023" -> "b"))
     // a family split across keys must NOT compact
     val split7 = GridOps.gridCellsFromCoarseCells(Seq("023").toDF("p"), "p", 2)
@@ -843,58 +843,57 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.catalog.clearCache()
   }
 
-  test("compactCells3H/4H: cascade, cap family-1 chain, puncture, roundtrip") {
+  test("compactCells on ISEA3H/4H/43H: cascade, cap family-1, puncture, roundtrip") {
     import spark.implicits._
-    import graft.spark.{Z3Functions => H3, Z4Functions => H4}
+    val (h3, h4, h43) = (Grids.isea3h, Grids.isea4h, Grids.isea43h(3))
     def n3(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(H3.z3String(col("cell_id"))).as[String].collect().toSet
+      df.select(F.cellString(col("cell_id"), h3)).as[String].collect().toSet
     def n4h(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(H4.z4String(col("cell_id"))).as[String].collect().toSet
+      df.select(F.cellString(col("cell_id"), h4)).as[String].collect().toSet
     // aperture-3: full two-level quad cover cascades; 2-of-3 family stays
     val full3 = Seq("05").toDF("p")
-      .select(explode(H3.z3DescendantsAt(H3.z3FromString(col("p")), lit(2)))
+      .select(explode(F.descendantsAt(F.cellFromString(col("p"), h3), lit(2), h3))
         .as("cell_id"))
-    assert(n3(GridOps.compactCells3H(full3)) == Set("05"))
-    val punct3 = full3.where(H3.z3String(col("cell_id")) =!= "0500")
-    assert(n3(GridOps.compactCells3H(punct3)) ==
+    assert(n3(GridOps.compactCells(full3, kernel = h3)) == Set("05"))
+    val punct3 = full3.where(F.cellString(col("cell_id"), h3) =!= "0500")
+    assert(n3(GridOps.compactCells(punct3, kernel = h3)) ==
       Set("051", "052", "0501", "0502"))
     // cap rule: the lone descendant chain compacts to the base (family 1)
     val cap3 = Seq("000000").toDF("n")
-      .select(H3.z3FromString(col("n")).as("cell_id"))
-    assert(n3(GridOps.compactCells3H(cap3)) == Set("00"))
+      .select(F.cellFromString(col("n"), h3).as("cell_id"))
+    assert(n3(GridOps.compactCells(cap3, kernel = h3)) == Set("00"))
     // but a QUAD cell with a single child does NOT compact
     val lone3 = Seq("0500").toDF("n")
-      .select(H3.z3FromString(col("n")).as("cell_id"))
-    assert(n3(GridOps.compactCells3H(lone3)) == Set("0500"))
+      .select(F.cellFromString(col("n"), h3).as("cell_id"))
+    assert(n3(GridOps.compactCells(lone3, kernel = h3)) == Set("0500"))
     // roundtrip on the uniform-res punctured set
-    assert(n3(GridOps.uncompactCells3H(GridOps.compactCells3H(punct3), 2)) ==
+    assert(n3(GridOps.uncompactCells(GridOps.compactCells(punct3, kernel = h3), 2, kernel = h3)) ==
       n3(punct3))
     // aperture-4: family 4 on quads, cap 11 chain, 3-of-4 stays
     val full4 = Seq("05").toDF("p")
-      .select(explode(H4.z4DescendantsAt(H4.z4FromString(col("p")), lit(2)))
+      .select(explode(F.descendantsAt(F.cellFromString(col("p"), h4), lit(2), h4))
         .as("cell_id"))
-    assert(n4h(GridOps.compactCells4H(full4)) == Set("05"))
-    val punct4 = full4.where(H4.z4String(col("cell_id")) =!= "0500")
-    assert(n4h(GridOps.compactCells4H(punct4)) ==
+    assert(n4h(GridOps.compactCells(full4, kernel = h4)) == Set("05"))
+    val punct4 = full4.where(F.cellString(col("cell_id"), h4) =!= "0500")
+    assert(n4h(GridOps.compactCells(punct4, kernel = h4)) ==
       Set("051", "052", "053", "0501", "0502", "0503"))
     val cap4 = Seq("11000").toDF("n")
-      .select(H4.z4FromString(col("n")).as("cell_id"))
-    assert(n4h(GridOps.compactCells4H(cap4)) == Set("11"))
-    assert(n4h(GridOps.uncompactCells4H(GridOps.compactCells4H(punct4), 2)) ==
+      .select(F.cellFromString(col("n"), h4).as("cell_id"))
+    assert(n4h(GridOps.compactCells(cap4, kernel = h4)) == Set("11"))
+    assert(n4h(GridOps.uncompactCells(GridOps.compactCells(punct4, kernel = h4), 2, kernel = h4)) ==
       n4h(punct4))
     // mixed aperture (n4=3): a full res-4 cover under a res-3 parent
     // needs only 3 children per family at level 4 (aperture 3) but 4 at
     // level 3 (aperture 4) — compaction crosses the boundary exactly
-    import graft.spark.{Z43Functions => H43}
     def n43(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(H43.z43String(col("cell_id"))).as[String].collect().toSet
+      df.select(F.cellString(col("cell_id"), h43)).as[String].collect().toSet
     val full43 = Seq("0520").toDF("p")
-      .select(explode(H43.z43DescendantsAt(H43.z43FromString(col("p")), lit(4), 3))
+      .select(explode(F.descendantsAt(F.cellFromString(col("p"), h43), lit(4), h43))
         .as("cell_id"))
     assert(full43.count() == 12L) // 4 level-3 children x 3 level-4 children
-    assert(n43(GridOps.compactCells43H(full43, 3)) == Set("0520"))
-    val punct43 = full43.where(H43.z43String(col("cell_id")) =!= "052000")
-    assert(n43(GridOps.compactCells43H(punct43, 3)) ==
+    assert(n43(GridOps.compactCells(full43, kernel = h43)) == Set("0520"))
+    val punct43 = full43.where(F.cellString(col("cell_id"), h43) =!= "052000")
+    assert(n43(GridOps.compactCells(punct43, kernel = h43)) ==
       Set("05201", "05202", "05203", "052001", "052002"))
     spark.catalog.clearCache()
   }
@@ -909,27 +908,26 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       import graft.dggs.Z3
       val want = (0 to 11).flatMap(b => Z3.descendants(Z3.pack(b, Seq.empty), 4)).toSet
       assert(want.size == 10 * 81 + 2)
-      assert(got(GridOps.gridCellIdsForExtent3H(spark, 4)) == want)
+      assert(got(GridOps.gridCellIdsForExtent(spark, 4, None, Grids.isea3h)) == want)
     }
     locally {
       import graft.dggs.Z4
       val want = (0 to 11).flatMap(b => Z4.descendants(Z4.pack(b, Seq.empty), 4)).toSet
       assert(want.size == 10 * 256 + 2)
-      assert(got(GridOps.gridCellIdsForExtent4H(spark, 4)) == want)
+      assert(got(GridOps.gridCellIdsForExtent(spark, 4, None, Grids.isea4h)) == want)
     }
     locally {
-      import graft.dggs.{Isea43HGrids, Z4}
-      val g = Isea43HGrids.default(3)
+      import graft.dggs.Z4
+      val g = Grids.isea43h(3)
       // res 4 crosses the 4->3 boundary: 4^3 x 3 per quad
       val want = (0 to 11).flatMap(b => g.descendants(Z4.pack(b, Seq.empty), 4)).toSet
       assert(want.size == 10 * 64 * 3 + 2)
-      assert(got(GridOps.gridCellIdsForExtent43H(spark, 4, 3)) == want)
+      assert(got(GridOps.gridCellIdsForExtent(spark, 4, None, g)) == want)
     }
   }
 
   test("hex extent ids: clip-pruned expansion == brute-force refine, incl. wrap box") {
     import spark.implicits._
-    import graft.spark.{Z3Functions => H3, Z4Functions => H4, Z43Functions => H43}
     // brute force: enumerate EVERY cell at the target res driver-side
     // through the pure kernel and apply the same center-or-vertex-in-box
     // refine — equality proves the levelwise margin pruning is LOSSLESS
@@ -968,28 +966,28 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     locally {
-      import graft.dggs.{Isea3HGrids, Z3}
-      val g = Isea3HGrids.default
+      import graft.dggs.Z3
+      val g = Grids.isea3h
       check("3H", 6,
         (0 to 11).flatMap(bse => Z3.descendants(Z3.pack(bse, Seq.empty), 6)),
         g.cellCenter, g.cellBoundary,
-        (a, c, d, e) => GridOps.gridCellIdsForExtent3H(spark, 6, Some((a, c, d, e))))
+        (a, c, d, e) => GridOps.gridCellIdsForExtent(spark, 6, Some((a, c, d, e)), g))
     }
     locally {
-      import graft.dggs.{Isea4HGrids, Z4}
-      val g = Isea4HGrids.default
+      import graft.dggs.Z4
+      val g = Grids.isea4h
       check("4H", 5,
         (0 to 11).flatMap(bse => Z4.descendants(Z4.pack(bse, Seq.empty), 5)),
         g.cellCenter, g.cellBoundary,
-        (a, c, d, e) => GridOps.gridCellIdsForExtent4H(spark, 5, Some((a, c, d, e))))
+        (a, c, d, e) => GridOps.gridCellIdsForExtent(spark, 5, Some((a, c, d, e)), g))
     }
     locally {
-      import graft.dggs.{Isea43HGrids, Z4}
-      val g = Isea43HGrids.default(3)
+      import graft.dggs.Z4
+      val g = Grids.isea43h(3)
       check("43H", 5,
         (0 to 11).flatMap(bse => g.descendants(Z4.pack(bse, Seq.empty), 5)),
         g.cellCenter, g.cellBoundary,
-        (a, c, d, e) => GridOps.gridCellIdsForExtent43H(spark, 5, 3, Some((a, c, d, e))))
+        (a, c, d, e) => GridOps.gridCellIdsForExtent(spark, 5, Some((a, c, d, e)), g))
     }
   }
 
@@ -1006,7 +1004,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sums.values.forall(_ == total), sums)
     // level-from-level equals direct aggregation at an interior level
     val direct = cells
-      .groupBy(F.z7String(F.z7AncestorAt(col("cell_id"), lit(2))).as("name"))
+      .groupBy(F.cellString(F.z7AncestorAt(col("cell_id"), lit(2))).as("name"))
       .agg(count(lit(1)).as("n")).as[(String, Long)].collect().toMap
     val lvl2 = pyr.where(col("res") === 2).select("name", "n")
       .as[(String, Long)].collect().toMap
@@ -1073,7 +1071,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nComp = compacted.count()
     assert(nComp < nFull, s"compaction must shrink the cover: $nComp >= $nFull")
     // the tropics interior is deep homogeneous — multiple levels merge
-    assert(compacted.select(F.z7Resolution(col("cell_id"))).distinct().count() > 1)
+    assert(compacted.select(F.resolution(col("cell_id"))).distinct().count() > 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "offset", "poly_id")
         .as[(String, Int, String)].collect().toSet
@@ -1491,11 +1489,13 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wrapped == halves,
       s"${(wrapped -- halves).size} extra, ${(halves -- wrapped).size} missing")
     assert(wrapped.nonEmpty)
-    val wrapped4T = ids(GridOps.gridCellIdsForExtent4T(spark, 5,
-      Some((175.0, -20.0, -175.0, -10.0))))
+    val wrapped4T = ids(GridOps.gridCellIdsForExtent(spark, 5,
+      Some((175.0, -20.0, -175.0, -10.0)), Grids.isea4t))
     val halves4T =
-      ids(GridOps.gridCellIdsForExtent4T(spark, 5, Some((175.0, -20.0, 180.0, -10.0)))) ++
-        ids(GridOps.gridCellIdsForExtent4T(spark, 5, Some((-180.0, -20.0, -175.0, -10.0))))
+      ids(GridOps.gridCellIdsForExtent(spark, 5,
+        Some((175.0, -20.0, 180.0, -10.0)), Grids.isea4t)) ++
+        ids(GridOps.gridCellIdsForExtent(spark, 5,
+          Some((-180.0, -20.0, -175.0, -10.0)), Grids.isea4t))
     assert(wrapped4T == halves4T)
     assert(wrapped4T.nonEmpty)
   }
@@ -1505,8 +1505,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // nested explode/UDF chain hits exponential plan-analysis time well
     // before res 12 — completing (quickly) IS the regression signal
     val t0 = System.nanoTime()
-    val n = GridOps.gridCellIdsForExtent4T(spark, 12,
-      Some((24.0, 58.0, 24.05, 58.05))).count()
+    val n = GridOps.gridCellIdsForExtent(spark, 12,
+      Some((24.0, 58.0, 24.05, 58.05)), Grids.isea4t).count()
     val wall = (System.nanoTime() - t0) / 1e9
     assert(n > 0)
     // generous bound: nominal is tens of seconds, the guarded regression
@@ -1855,7 +1855,7 @@ class CorpusStoreSpec extends org.scalatest.funsuite.AnyFunSuite {
       CorpusOps.interleavedDocs((0L until 20000L).toDF("doc_id")))
     // D4 path (T4.rangeAt is covered by Isea4TSpec; exercise the store
     // end-to-end with the diamond kernel)
-    val cells = GridOps.cellsForGeoPoints4D(geo, "lon", "lat", 6)
+    val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea4d)
       .select("doc_id", "offset", "cell_id")
     val dir = java.nio.file.Files.createTempDirectory("clustered4d").toString
     CorpusStore.writeClustered(cells, "cell_id", dir, 16)
@@ -1863,7 +1863,7 @@ class CorpusStoreSpec extends org.scalatest.funsuite.AnyFunSuite {
     val pruned = CorpusStore.readD4Range(spark, dir, "cell_id", parent, 6)
     val full = spark.read.parquet(dir)
     val expected = full.where(
-      graft.spark.D4Functions.d4AncestorAt(col("cell_id"), lit(2)) === parent)
+      F.ancestorAt(col("cell_id"), lit(2), Grids.isea4d) === parent)
     assert(pruned.count() == expected.count() && pruned.count() > 0)
     assert(pruned.except(expected).count() == 0)
     val touched = pruned.select(input_file_name()).distinct().count()

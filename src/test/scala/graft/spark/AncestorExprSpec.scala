@@ -60,22 +60,25 @@ class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
         val want = valid.map(refF(_, r))
         assert(got == want, s"$label ancestorAt($r)")
       }
-    check("z3", z3Cells, Z3Functions.z3AncestorAtExpr, Z3.ancestorAt, Z3.resolution)
-    check("z4", z4Cells, Z4Functions.z4AncestorAtExpr, Z4.ancestorAt, Z4.resolution)
-    check("z43", z4Cells, Z43Functions.z43AncestorAtExpr, Z4.ancestorAt, Z4.resolution)
-    check("t4", t4Cells, T4Functions.t4AncestorAtExpr, T4.ancestorAt, T4.resolution)
-    check("d4", d4Cells, D4Functions.d4AncestorAtExpr, D4.ancestorAt, D4.resolution)
+    def ancestorAt(k: graft.dggs.DggsKernel)
+        : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
+      DggsFunctions.ancestorAtExpr(_, _, k)
+    check("z3", z3Cells, ancestorAt(Grids.isea3h), Z3.ancestorAt, Z3.resolution)
+    check("z4", z4Cells, ancestorAt(Grids.isea4h), Z4.ancestorAt, Z4.resolution)
+    check("z43", z4Cells, ancestorAt(Grids.isea43h(3)), Z4.ancestorAt, Z4.resolution)
+    check("t4", t4Cells, ancestorAt(Grids.isea4t), T4.ancestorAt, T4.resolution)
+    check("d4", d4Cells, ancestorAt(Grids.isea4d), D4.ancestorAt, D4.resolution)
     check("z7", z7Cells, DggsFunctions.z7AncestorAtExpr, Z7.ancestorAt, Z7.resolution)
   }
 
   test("ancestor rollup key plans with no ScalaUDF (codegen bit math)") {
     val df = cellsDf(Seq(Z3.pack(5, Seq(1, 2, 0))))
-      .groupBy(Z3Functions.z3AncestorAtExpr(col("cell_id"), lit(2)).as("a"))
+      .groupBy(DggsFunctions.ancestorAtExpr(col("cell_id"), lit(2), Grids.isea3h).as("a"))
       .agg(count(lit(1)))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan.take(2000))
     val t4df = cellsDf(Seq(T4.pack(5, Seq(1, 2, 0))))
-      .groupBy(T4Functions.t4AncestorAtExpr(col("cell_id"), lit(2)).as("a"))
+      .groupBy(DggsFunctions.ancestorAtExpr(col("cell_id"), lit(2), Grids.isea4t).as("a"))
       .agg(count(lit(1)))
     val t4plan = t4df.queryExecution.executedPlan.toString
     assert(!t4plan.contains("ScalaUDF"), t4plan.take(2000))
