@@ -430,7 +430,7 @@ object BenchGen {
 
 /** Broadcast-vs-shuffle PIP join (north_rule axis, measured): the same
   * point-in-polygon join driven through both physical strategies of
-  * [[graft.ops.SpatialOps.pointInPolygonJoinDf]] over a deterministic
+  * [[graft.ops.SpatialOps.spatialJoin]] over a deterministic
   * world-wide box-polygon relation. Reports the distributed cover-build
   * wall separately (it is strategy-independent and cacheable), then the
   * join wall per strategy. At local scale the broadcast side wins, as
@@ -484,10 +484,10 @@ object BenchSpatialJoin {
 
     def leg(label: String, bc: Option[Boolean]): Unit = {
       // warmup on a small point slice (JIT + codegen), then timed
-      SpatialOps.pointInPolygonJoinCover(
+      SpatialOps.spatialJoin(
         pts.limit(20000), "lon", "lat", cover, res, bc).count()
       val t = System.nanoTime()
-      val n = SpatialOps.pointInPolygonJoinCover(pts, "lon", "lat", cover, res, bc)
+      val n = SpatialOps.spatialJoin(pts, "lon", "lat", cover, res, bc)
         .count()
       val wall = (System.nanoTime() - t) / 1e9
       println(f"""{"bench":"pip","strategy":"$label","cpus":$cpus,""" +
@@ -508,10 +508,10 @@ object BenchSpatialJoin {
     val nCompact = compact.count()
     val compactWall = (System.nanoTime() - t1) / 1e9
     def legC(label: String, bc: Option[Boolean]): Unit = {
-      SpatialOps.pointInPolygonJoinCompact(
+      SpatialOps.spatialJoin(
         pts.limit(20000), "lon", "lat", compact, res, bc).count()
       val t = System.nanoTime()
-      val n = SpatialOps.pointInPolygonJoinCompact(
+      val n = SpatialOps.spatialJoin(
         pts, "lon", "lat", compact, res, bc).count()
       val wall = (System.nanoTime() - t) / 1e9
       println(f"""{"bench":"pip","strategy":"$label","cpus":$cpus,""" +
@@ -539,10 +539,10 @@ object BenchSpatialJoin {
       val persisted = spark.read.parquet(coverDir.toString)
       val nPersist = persisted.count()
       def legP(label: String, bc: Option[Boolean]): Unit = {
-        SpatialOps.pointInPolygonJoinCompact(
+        SpatialOps.spatialJoin(
           pts.limit(20000), "lon", "lat", persisted, res, bc).count()
         val t = System.nanoTime()
-        val n = SpatialOps.pointInPolygonJoinCompact(
+        val n = SpatialOps.spatialJoin(
           pts, "lon", "lat", persisted, res, bc).count()
         val wall = (System.nanoTime() - t) / 1e9
         println(f"""{"bench":"pip","strategy":"$label","cpus":$cpus,""" +

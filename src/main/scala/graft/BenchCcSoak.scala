@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.ops.TextOps
 
 /** sf10 soak for the iterative-CC dedup family (round-9, the round-8
@@ -17,26 +16,6 @@ import graft.ops.TextOps
   */
 object BenchCcSoak {
 
-  private class Tally extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    val peakMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-      }
-    }
-    def snap(): (Long, Long, Long, Long) =
-      (read.get(), write.get(), memSpill.get(), diskSpill.get())
-  }
-
   def main(args: Array[String]): Unit = {
     val cpus = if (args.nonEmpty) args(0) else "32"
     val nDocs = if (args.length > 1) args(1).toLong else 500000L
@@ -47,7 +26,7 @@ object BenchCcSoak {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val tally = new Tally
+    val tally = new graft.obs.QueryMetrics
     spark.sparkContext.addSparkListener(tally)
 
     // lake-shape input, generation untimed (BenchSf1 protocol)
@@ -66,15 +45,7 @@ object BenchCcSoak {
       val t0 = System.nanoTime()
       val (rows, rounds) = op
       val wall = (System.nanoTime() - t0) / 1e9
-      var stable = 0
-      var last = tally.snap()
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val cur = tally.snap()
-        stable = if (cur == last) stable + 1 else 0
-        last = cur
-      }
+      tally.awaitStable()
       val (r1, w1, ms1, ds1) = tally.snap()
       println(f"""{"bench":"cc_soak","leg":"$name","cpus":$cpus,"docs":$nDocs,""" +
         f""""wall_sec":$wall%.2f,"rows":$rows,"cc_rounds":$rounds,""" +

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.ops.{MediaOps, TextOps, VectorOps}
 
 /** Dedup/ANN scale soak (round-2 verdict #2): the flagship got a 40M-point
@@ -67,21 +66,6 @@ object BenchDedupScaling {
         i => ((pmod(xxhash64(col("id"), i), lit(2000)) - 1000)
           .cast("double") / 1000.0).cast("float")).as("embedding"))
 
-  /** shuffle-byte tally across the timed window (the "per-stage shuffle
-    * bytes" evidence BASELINE.md's protocol asks for, summed per op)
-    */
-  private class ShuffleTally extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val cpus = if (args.nonEmpty) args(0) else "8"
     val nDocs = if (args.length > 1) args(1).toLong else 40000L
@@ -97,7 +81,10 @@ object BenchDedupScaling {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val tally = new ShuffleTally
+    // shuffle-byte tally across the timed window (the "per-stage
+    // shuffle bytes" evidence BASELINE.md's protocol asks for, summed
+    // per op)
+    val tally = new graft.obs.QueryMetrics
     spark.sparkContext.addSparkListener(tally)
 
     val results = scala.collection.mutable.LinkedHashMap[String, (Double, Long, Long, Long)]()
@@ -111,19 +98,7 @@ object BenchDedupScaling {
       val t0 = System.nanoTime()
       val n = op
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are delivered async: wait until the tally
-      // STABILIZES (two unchanged 200 ms windows, 5 s ceiling) before
-      // sampling — a fixed sleep can still race a backlogged bus and
-      // misattribute the trailing bytes to the next op's baseline
-      var stable = 0
-      var last = (tally.read.get(), tally.write.get())
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val cur = (tally.read.get(), tally.write.get())
-        stable = if (cur == last) stable + 1 else 0
-        last = cur
-      }
+      tally.awaitStable()
       results(name) = (wall, n, tally.read.get() - r0, tally.write.get() - w0)
       spark.catalog.clearCache()
     }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.ops.CorpusOps
 
 /** sf1 stress leg (round-7 verdict #6): the driver bench tops out at
@@ -81,31 +80,6 @@ object BenchSf1 {
       .withColumn("n_chars", length(col("text")).cast("long"))
   }
 
-  /** Per-task tally across a timed window: shuffle bytes, spill bytes,
-    * and the max per-task peak execution memory (the OOM early-warning —
-    * a task peaking near the executor share means the leg does NOT have
-    * 100×-headroom).
-    */
-  private class StressTally extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    val peakMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-      }
-    }
-    def snap(): (Long, Long, Long, Long) =
-      (read.get(), write.get(), memSpill.get(), diskSpill.get())
-  }
-
   def main(args: Array[String]): Unit = {
     val cpus = if (args.nonEmpty) args(0) else "32"
     val nDocs = if (args.length > 1) args(1).toLong else 50000L
@@ -116,7 +90,7 @@ object BenchSf1 {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val tally = new StressTally
+    val tally = new graft.obs.QueryMetrics
     spark.sparkContext.addSparkListener(tally)
 
     // materialize the sf1 corpus to parquet so every leg reads the lake
@@ -136,17 +110,7 @@ object BenchSf1 {
       val t0 = System.nanoTime()
       val rows = op
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async — wait for the tally to stabilize
-      // (two unchanged 200 ms windows, 5 s ceiling) before sampling
-      var stable = 0
-      var last = tally.snap()
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val cur = tally.snap()
-        stable = if (cur == last) stable + 1 else 0
-        last = cur
-      }
+      tally.awaitStable()
       val (r1, w1, ms1, ds1) = tally.snap()
       println(f"""{"bench":"sf1_stress","leg":"$name","cpus":$cpus,""" +
         f""""docs":$nDocs,"wall_sec":$wall%.2f,"rows":$rows,""" +

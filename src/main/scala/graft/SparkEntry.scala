@@ -747,19 +747,8 @@ object SparkEntry {
         .select(F.cellString(col("cell_id")).as("name"))
     }),
     "dggs_spatial_join" -> ((s, dir) => {
-      val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents")))
-      val polys = Seq(
-        ("estonia", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"),
-        ("oregon", "POLYGON ((-124.6 42.0, -116.5 42.0, -116.5 46.3, -124.6 46.3, -124.6 42.0))"),
-        ("tropics", "POLYGON ((-30.0 -23.4, 60.0 -23.4, 60.0 23.4, -30.0 23.4, -30.0 -23.4))"))
-      SpatialOps.pointInPolygonJoin(geo, "lon", "lat", polys, 4)
-        .select(col("doc_id"), col("offset"), col("poly_id"))
-    }),
-    "dggs_spatial_join_df" -> ((s, dir) => {
-      // the SHUFFLE path of the broadcast-vs-shuffle axis: same three
-      // polygons as dggs_spatial_join but as a DataFrame relation with
-      // the cover built distributed and the join forced off broadcast
-      // (shuffle-hash on cell_id) — one oracle pins both paths
+      // the BROADCAST path: a local polygon relation gets its cover
+      // built on the driver, and the small local cover is broadcast
       import s.implicits._
       val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents")))
       val polys = Seq(
@@ -767,7 +756,23 @@ object SparkEntry {
         ("oregon", "POLYGON ((-124.6 42.0, -116.5 42.0, -116.5 46.3, -124.6 46.3, -124.6 42.0))"),
         ("tropics", "POLYGON ((-30.0 -23.4, 60.0 -23.4, 60.0 23.4, -30.0 23.4, -30.0 -23.4))"))
         .toDF("poly_id", "wkt")
-      SpatialOps.pointInPolygonJoinDf(geo, "lon", "lat", polys, 4,
+      SpatialOps.spatialJoin(geo, "lon", "lat", polys, 4)
+        .select(col("doc_id"), col("offset"), col("poly_id"))
+    }),
+    "dggs_spatial_join_df" -> ((s, dir) => {
+      // the SHUFFLE path of the broadcast-vs-shuffle axis: same three
+      // polygons as dggs_spatial_join but as an RDD-backed (non-local)
+      // relation, one polygon per partition, so the cover is built
+      // distributed, and the join forced off broadcast (shuffle-hash on
+      // the spread cell key) — one oracle pins both paths
+      import s.implicits._
+      val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents")))
+      val polys = s.sparkContext.parallelize(Seq(
+        ("estonia", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"),
+        ("oregon", "POLYGON ((-124.6 42.0, -116.5 42.0, -116.5 46.3, -124.6 46.3, -124.6 42.0))"),
+        ("tropics", "POLYGON ((-30.0 -23.4, 60.0 -23.4, 60.0 23.4, -30.0 23.4, -30.0 -23.4))")), 3)
+        .toDF("poly_id", "wkt")
+      SpatialOps.spatialJoin(geo, "lon", "lat", polys, 4,
         broadcastCovers = Some(false))
         .select(col("doc_id"), col("offset"), col("poly_id"))
     }),
@@ -786,7 +791,7 @@ object SparkEntry {
         .toDF("poly_id", "wkt")
       val cover = GridOps.compactCells(
         SpatialOps.coverCellsDf(polys, 4), keyCols = Seq("poly_id", "wkt"))
-      SpatialOps.pointInPolygonJoinCompact(geo, "lon", "lat", cover, 4,
+      SpatialOps.spatialJoin(geo, "lon", "lat", cover, 4,
         broadcastCovers = Some(true))
         .select(col("doc_id"), col("offset"), col("poly_id"))
     }),
@@ -816,6 +821,7 @@ object SparkEntry {
       // numeric span payload; the oracle derives it identically). The
       // aggregation composes on the PIP join output, so only matching
       // rows reach the partial-aggregated groupBy
+      import s.implicits._
       val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents")))
       val polys = Seq(
         ("tropics", "POLYGON ((-30.0 -23.4, 60.0 -23.4, 60.0 23.4, -30.0 23.4, -30.0 -23.4))"),
@@ -823,9 +829,10 @@ object SparkEntry {
         ("band_eq_s", "POLYGON ((-179.9 -30.0, 179.9 -30.0, 179.9 0.0, -179.9 0.0, -179.9 -30.0))"),
         ("band_eq_n", "POLYGON ((-179.9 0.0, 179.9 0.0, 179.9 30.0, -179.9 30.0, -179.9 0.0))"),
         ("band_n", "POLYGON ((-179.9 30.0, 179.9 30.0, 179.9 60.0, -179.9 60.0, -179.9 30.0))"))
+        .toDF("poly_id", "wkt")
       val w = (substring(col("doc_id"), 5, 12).cast("long") * 8L
         + col("offset")) % 1000L
-      SpatialOps.pointInPolygonJoin(geo.withColumn("w", w), "lon", "lat", polys, 4)
+      SpatialOps.spatialJoin(geo.withColumn("w", w), "lon", "lat", polys, 4)
         .groupBy("poly_id")
         .agg(count(lit(1)).as("n_points"), sum(col("w")).as("w_sum"),
           min(col("w")).as("w_min"), max(col("w")).as("w_max"))

@@ -228,11 +228,8 @@ object GridOps {
     */
   def gridCellPolygonsForExtent(spark: SparkSession, res: Int,
                                 clip: Option[(Double, Double, Double, Double)] = None,
-                                lat0: Double = Grids.DefaultLat,
-                                lon0: Double = Grids.DefaultLon,
-                                az: Double = Grids.DefaultAz,
+                                grid: IGeo7 = Grids.default,
                                 densify: Int = 0): DataFrame = {
-    val grid = Grids.get(lat0, lon0, az)
     val boundary =
       if (densify <= 0) F.cellBoundary(col("cell_id"), grid)
       else F.cellBoundaryDensified(col("cell_id"), lit(densify), grid)
@@ -248,12 +245,10 @@ object GridOps {
   /** H2: centroids for extent. */
   def gridCellCentroidsForExtent(spark: SparkSession, res: Int,
                                  clip: Option[(Double, Double, Double, Double)] = None,
-                                 lat0: Double = Grids.DefaultLat,
-                                 lon0: Double = Grids.DefaultLon,
-                                 az: Double = Grids.DefaultAz): DataFrame =
-    gridCellIdsForExtent(spark, res, clip, Grids.get(lat0, lon0, az))
+                                 grid: IGeo7 = Grids.default): DataFrame =
+    gridCellIdsForExtent(spark, res, clip, grid)
       .withColumn("name", F.cellString(col("cell_id")))
-      .withColumn("center", F.cellCenter(col("cell_id"), Grids.get(lat0, lon0, az)))
+      .withColumn("center", F.cellCenter(col("cell_id"), grid))
 
   /** H3/H4 COARSE_CELLS mode: descendants of given parents at `res`
     * (the parent/child rollup primitive; reference
@@ -495,12 +490,10 @@ object GridOps {
 
   /** H3: polygons for explicit cell id list (z7 strings). */
   def gridCellPolygonsFromCellIds(cells: DataFrame, idCol: String,
-                                  lat0: Double = Grids.DefaultLat,
-                                  lon0: Double = Grids.DefaultLon,
-                                  az: Double = Grids.DefaultAz): DataFrame =
+                                  grid: IGeo7 = Grids.default): DataFrame =
     cells.withColumn("cell_id", F.cellFromString(col(idCol)))
-      .withColumn("boundary", F.cellBoundary(col("cell_id"), Grids.get(lat0, lon0, az)))
-      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), Grids.get(lat0, lon0, az)))
+      .withColumn("boundary", F.cellBoundary(col("cell_id"), grid))
+      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), grid))
 
   /** H6: point→cell assignment (the flagship op). Adds `cell_id` (int64)
     * + `name` (the kernel's string form, Z7_STRING by default) to any df
@@ -548,22 +541,17 @@ object GridOps {
     * a shuffle; the reference's own tests compare as sorted sets).
     */
   def cellsForGeoPointsPolygons(points: DataFrame, lonCol: String, latCol: String,
-                                res: Int,
-                                lat0: Double = Grids.DefaultLat,
-                                lon0: Double = Grids.DefaultLon,
-                                az: Double = Grids.DefaultAz): DataFrame =
-    cellsForGeoPoints(points, lonCol, latCol, res, Grids.get(lat0, lon0, az))
+                                res: Int, grid: IGeo7 = Grids.default): DataFrame =
+    cellsForGeoPoints(points, lonCol, latCol, res, grid)
       .withColumnRenamed("name", "zone")
-      .withColumn("boundary", F.cellBoundary(col("cell_id"), Grids.get(lat0, lon0, az)))
-      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), Grids.get(lat0, lon0, az)))
+      .withColumn("boundary", F.cellBoundary(col("cell_id"), grid))
+      .withColumn("wkt", F.cellBoundaryWkt(col("cell_id"), grid))
 
   /** H4: centroids for an explicit cell-id list (z7 strings). */
   def gridCellCentroidsFromCellIds(cells: DataFrame, idCol: String,
-                                   lat0: Double = Grids.DefaultLat,
-                                   lon0: Double = Grids.DefaultLon,
-                                   az: Double = Grids.DefaultAz): DataFrame =
+                                   grid: IGeo7 = Grids.default): DataFrame =
     cells.withColumn("cell_id", F.cellFromString(col(idCol)))
-      .withColumn("center", F.cellCenter(col("cell_id"), Grids.get(lat0, lon0, az)))
+      .withColumn("center", F.cellCenter(col("cell_id"), grid))
 
   /** O4 BIN_POINT_PRESENCE: per-cell presence bit-vector over classes
     * + number of classes present (dggrid_runner.py:1121-1202).

@@ -1,11 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.LongType
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.io.WKTReader
-import graft.dggs.{Sphere, Z7}
+import graft.dggs.{IGeo7, Sphere, Z7}
 import graft.spark.{DggsFunctions => F, Grids}
 
 /** Cell-indexed spatial joins and kNN (SURVEY.md §7 layer 5; the
@@ -17,7 +19,7 @@ import graft.spark.{DggsFunctions => F, Grids}
   * object is derived from the Z7 kernel (`coverCells*`, `F.z7Disk`,
   * `diskSafeKm`/KnnSafeRadiusSpec). Ids from the ISEA3H/4H/43H/4T/4D
   * kernels are NOT accepted — join those datasets by round-tripping
-  * through GEO (`DggsFunctions.cellCenter(cell, kernel)` → `pointInPolygonJoin*` /
+  * through GEO (`DggsFunctions.cellCenter(cell, kernel)` → `spatialJoin` /
   * `knnJoin` / `distanceJoin` on lon/lat), which is exact because the
   * joins here take raw coordinates, not foreign cell ids. Extending
   * the disk/safe-radius certificates to the other kernels requires a
@@ -25,9 +27,11 @@ import graft.spark.{DggsFunctions => F, Grids}
   *
   * Pattern (filter-refine): polygons → covering cells at a chosen res
   * (broadcast when the polygon side is small), points → cell id (narrow
-  * map), equi-join on the cell, exact JTS predicate refine. The shuffle
-  * key is the cell id; hot cells are handled by AQE skew-join plus the
-  * explicit salting helper below.
+  * map), equi-join on the cell, exact JTS predicate refine. The one
+  * point-in-polygon entry point is [[spatialJoin]]; it reads the cover
+  * source and the join shape from its polygon input. The shuffle key is
+  * the (spread) cell id; hot cells are handled by AQE skew-join plus
+  * the explicit salting helper below.
   *
   * Cache lifecycle (same contract as TextOps): knnJoin caches its query
   * and probe intermediates because multiple plan branches consume them
@@ -43,11 +47,8 @@ object SpatialOps {
     * refine against the exact cell boundary. Driver-side (used for dim
     * tables that get broadcast).
     */
-  def coverCells(wkt: String, res: Int,
-                 lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                 az: Double = Grids.DefaultAz): Seq[Long] = {
+  def coverCells(wkt: String, res: Int, grid: IGeo7 = Grids.default): Seq[Long] = {
     import scala.collection.parallel.CollectionConverters._
-    val grid = Grids.get(lat0, lon0, az)
     val gf = new GeometryFactory()
     val poly = new WKTReader(gf).read(wkt)
     val prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(poly)
@@ -94,14 +95,12 @@ object SpatialOps {
   /** Distributed covering cells: polygons(poly_id, wkt) → (poly_id, wkt,
     * cell_id) at `res`. The same levelwise expansion as `coverCells` but
     * as a DataFrame explode — scales to thousands of polygons / high-res
-    * covers where the driver-side Seq would bottleneck (round-1 verdict
-    * "pointInPolygonJoin builds polygon covers on the driver").
+    * covers where the driver-side Seq would bottleneck (round-1 verdict:
+    * the PIP join built its polygon covers on the driver).
     * Envelope pruning per level (lon margin 1/cos(lat)-scaled), exact
     * prepared-JTS intersects refine at the end.
     */
-  def coverCellsDf(polygons: DataFrame, res: Int,
-                   lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                   az: Double = Grids.DefaultAz): DataFrame = {
+  def coverCellsDf(polygons: DataFrame, res: Int, grid: IGeo7 = Grids.default): DataFrame = {
     val envUdf = udf { (wkt: String) => JtsCache.envelope(wkt) }
     val seed = polygons
       .withColumn("__env", envUdf(col("wkt"))
@@ -110,7 +109,7 @@ object SpatialOps {
     var df = seed
     for (k <- 1 to res) {
       val margin = math.toDegrees(0.6954709 / math.pow(7.0, k / 2.0)) * 2.0
-      val c = F.cellCenter(col("cell_id"), Grids.get(lat0, lon0, az))
+      val c = F.cellCenter(col("cell_id"), grid)
       val lonMargin = lit(margin) /
         cos(radians(least(lit(85.0), abs(c.getField("lat")))))
       df = df.select(col("poly_id"), col("wkt"), col("__env"),
@@ -129,7 +128,7 @@ object SpatialOps {
       JtsCache.intersectsRing(wkt,
         ring.map(r => (r.getDouble(0), r.getDouble(1))))
     }
-    df.where(refine(col("wkt"), F.cellBoundary(col("cell_id"), Grids.get(lat0, lon0, az))))
+    df.where(refine(col("wkt"), F.cellBoundary(col("cell_id"), grid)))
       .select("poly_id", "wkt", "cell_id")
   }
 
@@ -139,167 +138,120 @@ object SpatialOps {
     * geometry. Fully distributed (no driver-side cell materialization).
     */
   def gridCellIdsForWkt(spark: SparkSession, wkt: String, res: Int,
-                        lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                        az: Double = Grids.DefaultAz): DataFrame = {
+                        grid: IGeo7 = Grids.default): DataFrame = {
     import spark.implicits._
     val one = Seq(("clip", wkt)).toDF("poly_id", "wkt")
-    coverCellsDf(one, res, lat0, lon0, az).select("cell_id")
+    coverCellsDf(one, res, grid).select("cell_id")
   }
 
-  /** shared PIP plumbing: strategy hint for the cover side */
-  private def hintCovers(covers: DataFrame,
-                         broadcastCovers: Option[Boolean]): DataFrame =
-    broadcastCovers match {
-      case Some(true)  => broadcast(covers)
-      case Some(false) => covers.hint("shuffle_hash")
-      case None        => covers
-    }
-
-  /** shared PIP plumbing: exact JTS contains refine */
-  private[ops] lazy val pipRefine =
+  /** the PIP join's exact JTS contains refine */
+  private lazy val pipRefine =
     udf { (wkt: String, lon: Double, lat: Double) =>
       JtsCache.contains(wkt, lon, lat)
     }.withName("pipRefine")
 
-  /** shared PIP plumbing: `points.join(covers, Seq("cell_id"))` — same
-    * rows, same output columns in the same order — hashed on
-    * `F.z7SpreadKey(cell_id)` instead of the raw id, which collapses
-    * Spark's hash-relation slots (`Z7.spreadKey`). The spread sits in
-    * the join condition, not in a projected column: Catalyst then infers
-    * only `isnotnull(cell_id)`, which folds to a null test on the UDF's
-    * inputs, where an `isnotnull` on a projected key column would inline
-    * `cellForPoint` into a pushed-down `Filter` (PlanAuditSpec).
+  /** `points ⋈ covers` on `points(key) = covers.cell_id`, hashed on
+    * `F.z7SpreadKey` of both sides instead of the raw ids, which collapse
+    * Spark's hash-relation slots (`Z7.spreadKey`). Output: `cell_id`,
+    * the other point columns (minus `key`), then the cover columns minus
+    * `cell_id`. The spread sits in the join condition, not in a projected
+    * column: Catalyst then infers only `isnotnull(key)`, which for
+    * `key = cell_id` folds to a null test on the UDF's inputs, where an
+    * `isnotnull` on a projected key column would inline `cellForPoint`
+    * into a pushed-down `Filter` (PlanAuditSpec).
     */
-  private[ops] def joinOnCell(points: DataFrame, covers: DataFrame): DataFrame =
-    points.join(covers, F.z7SpreadKey(points("cell_id")) === F.z7SpreadKey(covers("cell_id")))
-      .select((points("cell_id") +: points.columns.filter(_ != "cell_id").map(points(_))) ++
-        covers.columns.filter(_ != "cell_id").map(covers(_)): _*)
+  private def joinOnCell(points: DataFrame, key: String, covers: DataFrame): DataFrame =
+    points.join(covers, F.z7SpreadKey(points(key)) === F.z7SpreadKey(covers("cell_id")))
+      .select((points("cell_id") +: points.columns.filter(c => c != "cell_id" && c != key)
+        .map(points(_))) ++ covers.columns.filter(_ != "cell_id").map(covers(_)): _*)
 
-  /** point-in-polygon join: points(lonCol, latCol, …) × polygons(idCol,
-    * wktCol) — polygon side assumed broadcastable (dim table). Returns
-    * point rows + matching polygon id. Equi-join on covering cell id +
-    * exact JTS contains refine.
-    */
-  def pointInPolygonJoin(points: DataFrame, lonCol: String, latCol: String,
-                         polygons: Seq[(String, String)], res: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val covers = polygons.flatMap { case (id, wkt) =>
-      coverCells(wkt, res).map(c => (id, wkt, c))
-    }.toDF("poly_id", "poly_wkt", "cell_id")
-    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res)
-    joinOnCell(pts, broadcast(covers))
-      .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
-      .drop("poly_wkt")
-  }
-
-  /** The DataFrame×DataFrame point-in-polygon join — the broadcast-VS-
-    * shuffle axis (north_rule): [[pointInPolygonJoin]] hard-codes the
-    * broadcast shape for a driver-side dim-table polygon list; this
-    * variant takes the polygon relation as a DataFrame (lake-resident,
-    * GeoJSON-sourced, …), builds its cell cover DISTRIBUTED
-    * ([[coverCellsDf]] — never on the driver), and picks the join
-    * strategy per `broadcastCovers`:
+  /** Point-in-polygon join: every (point row, polygon) pair whose polygon
+    * contains the point. Filter-refine: the polygons' Z7 cover and the
+    * points' res-`res` cells meet in an equi-join ([[joinOnCell]]), then
+    * an exact JTS contains refine. Output: `cell_id`, the point columns,
+    * `name`, then the polygon columns other than `wkt`/`cell_id`
+    * (`poly_id`, …).
     *
-    *  - `None` (default): no hint — Catalyst/AQE chooses from the cover
-    *    relation's runtime stats (small cover → broadcast, big → shuffle),
-    *    which is the right default on a cluster with AQE on.
+    * Every choice is read from `polygons`:
+    *  - `(poly_id, wkt)`: the cover is built here at `res`. A relation
+    *    whose rows are already on the driver (its optimized plan is a
+    *    local relation, e.g. a `Seq(...).toDF` dim table) gets the
+    *    parallel driver-side [[coverCells]] as a local relation; any
+    *    other relation (lake-resident, GeoJSON-sourced, …) gets the
+    *    distributed [[coverCellsDf]], never collected to the driver.
+    *  - `(poly_id, wkt, cell_id)`: a precomputed cover, uniform (e.g.
+    *    cached or lake-resident [[coverCellsDf]] output) or compacted
+    *    (`GridOps.compactCells(cover, keyCols = Seq("poly_id", "wkt"))`).
+    *    One metadata job reads its distinct resolutions (≤ 16 values); a
+    *    cover finer than `res` raises, an empty cover returns no rows.
+    *
+    * The join shape follows the cover's resolutions. A cover at `res`
+    * alone joins each point's own cell. A mixed-resolution (compacted)
+    * cover is matched in ONE corpus scan: each point explodes one
+    * ancestor per distinct cover resolution and a single equi-join on
+    * that ancestor matches every level at once (point fan-out = number
+    * of cover levels, typically 2–4). The rows are the same either way:
+    * a point is inside a compacted cell iff it is inside one of the
+    * res-`res` descendants that were merged away. Compaction shrinks a
+    * homogeneous-interior cover ~7× per merged level, which keeps
+    * big-region covers broadcastable far past the uniform cover's
+    * ceiling; building and compacting it in-query costs more than the
+    * join (round 9, 2000 polygons / 4M points at 32c: cover 5.1 s +
+    * compaction 1.7 s vs a 1.3–1.8 s join), so it pays as a persisted
+    * cover reused across joins (BenchSpatialJoin's persisted legs).
+    *
+    * `broadcastCovers` picks the physical strategy for the cover side:
+    *  - `None` (default): a cover built on the driver is broadcast (it
+    *    fit on the driver, and the stats of a small polygon table can
+    *    make Catalyst broadcast the POINT side instead); any other cover
+    *    gets no hint — Catalyst/AQE chooses from its stats (small cover
+    *    → broadcast, big → shuffle).
     *  - `Some(true)`: force-broadcast the cover (the dim-table case when
     *    stats mislead, e.g. a freshly-exploded cover with no estimate).
-    *  - `Some(false)`: force the shuffle path via a shuffle-hash hint —
-    *    both sides exchange on `cell_id` (high-cardinality, near-uniform
-    *    after the res-choice spreads polygons over many cells); no sort
-    *    of the (huge) point side, unlike SMJ. The million-polygon case.
+    *  - `Some(false)`: shuffle-hash hint — both sides exchange on the
+    *    spread cell key; no sort of the (huge) point side, unlike SMJ.
+    *    The million-polygon case.
     *
-    * Same equi-join + exact JTS refine semantics as the broadcast op —
-    * `dggs_spatial_join_df` pins both paths to ONE oracle. Skew note: a
-    * cover cell shared by many polygons concentrates its points' rows;
-    * if a profile shows such a hot cell, [[saltedJoin]] applies to the
-    * (points × covers) equi-key exactly as for any key join.
+    * Skew note: a cover cell shared by many polygons concentrates its
+    * points' rows; if a profile shows such a hot cell, [[saltedJoin]]
+    * applies to the (points × covers) equi-key as for any key join.
     */
-  def pointInPolygonJoinDf(points: DataFrame, lonCol: String, latCol: String,
-                           polygons: DataFrame, res: Int,
-                           broadcastCovers: Option[Boolean] = None,
-                           lat0: Double = Grids.DefaultLat,
-                           lon0: Double = Grids.DefaultLon,
-                           az: Double = Grids.DefaultAz): DataFrame =
-    pointInPolygonJoinCover(points, lonCol, latCol,
-      coverCellsDf(polygons, res, lat0, lon0, az), res, broadcastCovers,
-      lat0, lon0, az)
-
-  /** [[pointInPolygonJoinDf]] from a PRECOMPUTED cover relation
-    * (`(poly_id, wkt, cell_id)` — [[coverCellsDf]]'s output, typically
-    * cached or lake-resident: the cover is strategy-independent and a
-    * pipeline joining the same polygon set repeatedly should build it
-    * once). `res` must be the resolution the cover was built at (it
-    * keys the point-side cell assignment).
-    */
-  def pointInPolygonJoinCover(points: DataFrame, lonCol: String, latCol: String,
-                              covers: DataFrame, res: Int,
-                              broadcastCovers: Option[Boolean] = None,
-                              lat0: Double = Grids.DefaultLat,
-                              lon0: Double = Grids.DefaultLon,
-                              az: Double = Grids.DefaultAz): DataFrame = {
-    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res, Grids.get(lat0, lon0, az))
-    joinOnCell(pts, hintCovers(covers.withColumnRenamed("wkt", "poly_wkt"), broadcastCovers))
-      .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
-      .drop("poly_wkt")
-  }
-
-  /** [[pointInPolygonJoinCover]] against a COMPACTED cover — mixed-
-    * resolution cover cells as produced by
-    * `GridOps.compactCells(cover, keyCols = Seq("poly_id", "wkt"))`.
-    * Identical output rows to the uniform-res join (a point is inside
-    * a compacted cell iff it is inside one of the res-`res` descendants
-    * that were merged away) — spec-pinned equality, and the driver
-    * query shares the uniform-res query's oracle.
-    *
-    * Why: compaction shrinks a homogeneous-interior cover ~7× per
-    * merged level, keeping big-region covers broadcast-able far past
-    * the point the uniform-res cover would spill to a shuffle join.
-    *
-    * Scale shape: ONE corpus scan — the point side explodes one
-    * ancestor per DISTINCT cover resolution (collected once from the
-    * cover relation: metadata, ≤ 15 values) and a single equi-join on
-    * that ancestor matches every cover level at once; never one join
-    * (= one corpus scan) per level. Point fan-out = number of cover
-    * levels, typically 2–4.
-    *
-    * Crossover guidance (BenchSpatialJoin, incl. the persisted legs —
-    * round-6 verdict #4; figures re-measured round 9 after the
-    * single-pass compaction): building + compacting the cover IN-QUERY
-    * still costs more than the join itself (round 9, 2000 polygons /
-    * 4M points at 32c: cover build 5.1 s + compaction 1.7 s vs
-    * 1.3-1.8 s join), so compact ONLY pays one-shot when the join
-    * would otherwise be cover-bound (cover past the broadcast ceiling,
-    * or reused across ≥ a handful of in-session joins). The STEADY-STATE shape is the lake-resident cover:
-    * `coverCellsDf → compactCells → parquet` once per polygon-set
-    * change, every join leg reads the compact relation and pays join
-    * wall only — the same persisted-artifact economics as the dedup
-    * stack's pair/span/fingerprint tables.
-    */
-  def pointInPolygonJoinCompact(points: DataFrame, lonCol: String,
-                                latCol: String, covers: DataFrame, res: Int,
-                                broadcastCovers: Option[Boolean] = None,
-                                lat0: Double = Grids.DefaultLat,
-                                lon0: Double = Grids.DefaultLon,
-                                az: Double = Grids.DefaultAz): DataFrame = {
-    val resList = covers.select(F.resolution(col("cell_id")).as("r"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    require(resList.nonEmpty, "empty cover relation")
-    require(resList.last <= res,
+  def spatialJoin(points: DataFrame, lonCol: String, latCol: String,
+                  polygons: DataFrame, res: Int,
+                  broadcastCovers: Option[Boolean] = None,
+                  grid: IGeo7 = Grids.default): DataFrame = {
+    val precomputed = polygons.columns.contains("cell_id")
+    val onDriver = !precomputed &&
+      polygons.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val covers =
+      if (precomputed) polygons
+      else if (onDriver) {
+        val polys = polygons.select("poly_id", "wkt")
+        val rows = polys.collect().toSeq.flatMap { r =>
+          coverCells(r.getString(1), res, grid).map(c => Row(r.get(0), r.getString(1), c))
+        }
+        polys.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+          polys.schema.add("cell_id", LongType, nullable = false))
+      } else coverCellsDf(polygons, res, grid)
+    val resList: Seq[Int] =
+      if (!precomputed) Seq(res)
+      else covers.select(F.resolution(col("cell_id"), grid)).distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+    require(resList.forall(_ <= res),
       s"cover has res-${resList.last} cells finer than point res $res")
-    // the key is the SPREAD ancestor on both sides (Z7.spreadKey)
-    val hinted = hintCovers(
-      covers.withColumnRenamed("wkt", "poly_wkt")
-        .withColumn("__cov", F.z7SpreadKey(col("cell_id"))).drop("cell_id"),
-      broadcastCovers)
-    GridOps.cellsForGeoPoints(points, lonCol, latCol, res, Grids.get(lat0, lon0, az))
-      .withColumn("__cov", explode(array(resList.map(rr =>
-        F.z7SpreadKey(F.z7AncestorAtExpr(col("cell_id"), lit(rr)))).toIndexedSeq: _*)))
-      .join(hinted, Seq("__cov"))
-      .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
-      .drop("poly_wkt", "__cov")
+    val renamed = covers.withColumnRenamed("wkt", "poly_wkt")
+    val hinted = broadcastCovers.orElse(Option.when(onDriver)(true)) match {
+      case Some(true)  => broadcast(renamed)
+      case Some(false) => renamed.hint("shuffle_hash")
+      case None        => renamed
+    }
+    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res, grid)
+    val joined =
+      if (resList.forall(_ == res)) joinOnCell(pts, "cell_id", hinted)
+      else joinOnCell(pts.withColumn("__anc", explode(array(resList.map(r =>
+        F.z7AncestorAtExpr(col("cell_id"), lit(r))): _*))), "__anc", hinted)
+    joined.where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
+      .drop("poly_wkt")
   }
 
   /** POLYGON × POLYGON intersects join — the fourth indexed spatial
@@ -321,12 +273,10 @@ object SpatialOps {
     * join. Inputs: `(poly_id, wkt)` relations; output: (a_id, b_id).
     */
   def polygonIntersectsJoin(polysA: DataFrame, polysB: DataFrame, res: Int,
-                            lat0: Double = Grids.DefaultLat,
-                            lon0: Double = Grids.DefaultLon,
-                            az: Double = Grids.DefaultAz): DataFrame = {
-    val ca = coverCellsDf(polysA, res, lat0, lon0, az)
+                            grid: IGeo7 = Grids.default): DataFrame = {
+    val ca = coverCellsDf(polysA, res, grid)
       .select(col("poly_id").as("a_id"), col("cell_id"))
-    val cb = coverCellsDf(polysB, res, lat0, lon0, az)
+    val cb = coverCellsDf(polysB, res, grid)
       .select(col("poly_id").as("b_id"), col("cell_id"))
     val cand = ca.join(cb, F.z7SpreadKey(ca("cell_id")) === F.z7SpreadKey(cb("cell_id")))
       .select("a_id", "b_id").distinct()
@@ -765,10 +715,10 @@ object JtsCache {
           case ((plo, _), (lo, la)) => (plo + wrap180(lo - plo), la)
         }
         val poleLat = if (ring.map(_._2).sum >= 0.0) 90.0 else -90.0
-        val lon0 = unwrapped.head._1
-        val lonEnd = lon0 + (if (winding > 0) 360.0 else -360.0)
+        val lonStart = unwrapped.head._1
+        val lonEnd = lonStart + (if (winding > 0) 360.0 else -360.0)
         val capRing = unwrapped ++ Seq(
-          (lonEnd, unwrapped.head._2), (lonEnd, poleLat), (lon0, poleLat))
+          (lonEnd, unwrapped.head._2), (lonEnd, poleLat), (lonStart, poleLat))
         Seq(0.0, -360.0, 360.0).exists { dx =>
           prep.intersects(poly(capRing.map { case (lo, la) => (lo + dx, la) }))
         }

@@ -41,21 +41,19 @@ object StreamingOps {
 
   /** streaming ZONAL counts: a STATIC polygon-cover relation
     * (`SpatialOps.coverCellsDf` output, lake-resident — broadcast)
-    * joined against the point stream on the cell id (a stateless
-    * stream-static join), exact JTS refine, then watermarked windowed
-    * per-zone counts. Streaming zonal statistics — the per-region live
-    * dashboard shape; the batch twin is `dggs_zonal_stats`.
+    * joined against the point stream by `SpatialOps.spatialJoin` (a
+    * stateless stream-static join with the exact JTS refine), then
+    * watermarked windowed per-zone counts. Streaming zonal statistics —
+    * the per-region live dashboard shape; the batch twin is
+    * `dggs_zonal_stats`.
     */
   def zonalCountsWindowed(stream: DataFrame, tsCol: String, lonCol: String,
                           latCol: String, covers: DataFrame, res: Int,
-                          windowDur: String, watermarkDur: String): DataFrame = {
-    SpatialOps.joinOnCell(assignCells(stream, lonCol, latCol, res),
-        broadcast(covers.withColumnRenamed("wkt", "poly_wkt")))
-      .where(SpatialOps.pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
+                          windowDur: String, watermarkDur: String): DataFrame =
+    SpatialOps.spatialJoin(stream, lonCol, latCol, covers, res, Some(true))
       .withWatermark(tsCol, watermarkDur)
       .groupBy(window(col(tsCol), windowDur), col("poly_id"))
       .agg(count(lit(1)).as("n"))
-  }
 
   /** streaming per-cell, per-window DISTINCT-id estimates via the
     * native KMV sketch aggregate ([[graft.spark.SketchFunctions]]):

@@ -49,10 +49,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("flagship spatial join broadcasts the polygon-cover side") {
-    import org.apache.spark.sql.functions._
+    import spark.implicits._
     val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(spark, sfDir, "documents")))
     val polys = Seq(("e", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"))
-    val plan = SpatialOps.pointInPolygonJoin(geo, "lon", "lat", polys, 4)
+      .toDF("poly_id", "wkt")
+    val plan = SpatialOps.spatialJoin(geo, "lon", "lat", polys, 4)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     assert(!plan.contains("SortMergeJoin"))
@@ -92,13 +93,14 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(spark, sfDir, "documents")))
     val polys = Seq(("e", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"))
-    val cover = SpatialOps.coverCellsDf(polys.toDF("poly_id", "wkt"), 4)
+      .toDF("poly_id", "wkt")
+    val cover = SpatialOps.coverCellsDf(polys, 4)
     val joins = Seq(
-      "pointInPolygonJoin" -> SpatialOps.pointInPolygonJoin(geo, "lon", "lat", polys, 4),
-      "pointInPolygonJoinCover broadcast" ->
-        SpatialOps.pointInPolygonJoinCover(geo, "lon", "lat", cover, 4, Some(true)),
-      "pointInPolygonJoinCover shuffle" ->
-        SpatialOps.pointInPolygonJoinCover(geo, "lon", "lat", cover, 4, Some(false)))
+      "local polygons" -> SpatialOps.spatialJoin(geo, "lon", "lat", polys, 4),
+      "precomputed cover broadcast" ->
+        SpatialOps.spatialJoin(geo, "lon", "lat", cover, 4, Some(true)),
+      "precomputed cover shuffle" ->
+        SpatialOps.spatialJoin(geo, "lon", "lat", cover, 4, Some(false)))
     for ((name, df) <- joins) {
       val plan = df.queryExecution.executedPlan.toString
       // plan lines whose operator is a Filter (tree prefix and codegen
@@ -131,14 +133,33 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(spark, sfDir, "documents")))
     val polys = Seq(
       ("e", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"))
-      .toDF("poly_id", "wkt")
-    val shufPlan = SpatialOps.pointInPolygonJoinDf(geo, "lon", "lat", polys, 4,
+      .toDF("poly_id", "wkt").repartition(2)
+    val shufPlan = SpatialOps.spatialJoin(geo, "lon", "lat", polys, 4,
       broadcastCovers = Some(false)).queryExecution.executedPlan.toString
     assert(shufPlan.contains("ShuffledHashJoin"), shufPlan.take(2000))
     assert(!shufPlan.contains("BroadcastHashJoin"), shufPlan.take(2000))
-    val bcPlan = SpatialOps.pointInPolygonJoinDf(geo, "lon", "lat", polys, 4,
+    val bcPlan = SpatialOps.spatialJoin(geo, "lon", "lat", polys, 4,
       broadcastCovers = Some(true)).queryExecution.executedPlan.toString
     assert(bcPlan.contains("BroadcastHashJoin"), bcPlan.take(2000))
+  }
+
+  test("spatialJoin: a non-local polygon relation plans the distributed cover") {
+    import spark.implicits._
+    val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(spark, sfDir, "documents")))
+    val polys = Seq(
+      ("e", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"))
+      .toDF("poly_id", "wkt")
+    def plan(p: org.apache.spark.sql.DataFrame) = SpatialOps.spatialJoin(geo, "lon", "lat", p, 4)
+      .queryExecution.executedPlan.toString
+    val localCover = "LocalTableScan \\[poly_id#\\d+, poly_wkt#\\d+, cell_id#\\d+L\\]".r
+    // distributed: the levelwise cover explodes the children of cell_id
+    val distributed = plan(polys.repartition(2))
+    assert(distributed.contains("Generate explode(UDF(cell_id"), distributed.takeRight(3000))
+    assert(localCover.findFirstIn(distributed).isEmpty, distributed.takeRight(3000))
+    // local: the driver builds the cover, which plans as a local scan
+    val local = plan(polys)
+    assert(localCover.findFirstIn(local).nonEmpty, local.takeRight(3000))
+    assert(!local.contains("Generate explode(UDF(cell_id"), local.take(3000))
   }
 
   test("sampleMix plans with ZERO exchanges; packSequences with exactly one") {

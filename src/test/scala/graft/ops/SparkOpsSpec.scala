@@ -1058,13 +1058,13 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.catalog.clearCache()
   }
 
-  test("pointInPolygonJoinCompact == uniform-res cover join, fewer cover rows") {
+  test("spatialJoin: local, distributed, uniform, compacted covers give one row set") {
     import spark.implicits._
     val geo = CorpusOps.geoSpans(corpus(120))
-    val polys = Seq(
+    val polySeq = Seq(
       ("trop", "POLYGON ((-30.0 -23.4, 60.0 -23.4, 60.0 23.4, -30.0 23.4, -30.0 -23.4))"),
       ("est", "POLYGON ((20.2 57.0, 28.4 57.0, 28.4 60.0, 20.2 60.0, 20.2 57.0))"))
-      .toDF("poly_id", "wkt")
+    val polys = polySeq.toDF("poly_id", "wkt")
     val cover = SpatialOps.coverCellsDf(polys, 4).cache()
     val compacted = GridOps.compactCells(cover, keyCols = Seq("poly_id", "wkt"))
     val nFull = cover.count()
@@ -1075,13 +1075,27 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "offset", "poly_id")
         .as[(String, Int, String)].collect().toSet
-    val uniform = rows(SpatialOps.pointInPolygonJoinCover(geo, "lon", "lat", cover, 4))
-    val compact = rows(SpatialOps.pointInPolygonJoinCompact(geo, "lon", "lat", compacted, 4))
-    assert(uniform.nonEmpty)
-    assert(compact == uniform)
+    // brute force: every point against every polygon
+    val want = (for {
+      (d, o, lon, lat) <- geo.select("doc_id", "offset", "lon", "lat")
+        .as[(String, Int, Double, Double)].collect().toSeq
+      (id, wkt) <- polySeq if JtsCache.contains(wkt, lon, lat)
+    } yield (d, o, id)).toSet
+    assert(want.nonEmpty)
+    val inputs = Seq(
+      "local" -> polys,
+      "distributed" -> polys.repartition(2),
+      "uniform cover" -> cover,
+      "compacted cover" -> compacted)
+    for ((label, in) <- inputs; bc <- Seq(None, Some(true), Some(false)))
+      assert(rows(SpatialOps.spatialJoin(geo, "lon", "lat", in, 4, bc)) == want,
+        s"$label, broadcastCovers=$bc")
+    // an empty precomputed cover returns no rows
+    for (bc <- Seq(None, Some(true), Some(false)))
+      assert(SpatialOps.spatialJoin(geo, "lon", "lat", cover.limit(0), 4, bc).isEmpty)
     // cover finer than the point res raises loudly
     intercept[IllegalArgumentException] {
-      SpatialOps.pointInPolygonJoinCompact(geo, "lon", "lat", compacted, 3)
+      SpatialOps.spatialJoin(geo, "lon", "lat", compacted, 3)
     }
     spark.catalog.clearCache()
   }
