@@ -834,14 +834,17 @@ object BenchHexKernels {
     // reduction; >>> 40 is a shift) - a `pmod(id, 1000000007)` checksum
     // measured 5x SLOWER at 32 threads than at 8 because SMT siblings
     // serialize on the core's non-pipelined 64-bit divider, swamping
-    // the enumeration being measured
+    // the enumeration being measured. The warm-up runs the timed query
+    // itself: warmed at res 8 only, the res-15 reading was bimodal
+    // (0.8 s vs ~20 s)
     locally {
       def chk1 = sum(col("cell_id") % lit(97L))
       def chk2 = sum(shiftrightunsigned(col("cell_id"), 40))
-      GridOps.gridCellIdsForExtent(spark, 8, None, Grids.isea3h).agg(chk1).collect() // warmup
-      val t0 = System.nanoTime()
-      val r0 = GridOps.gridCellIdsForExtent(spark, 15, None, Grids.isea3h)
+      def run() = GridOps.gridCellIdsForExtent(spark, 15, None, Grids.isea3h)
         .agg(chk1.as("s1"), chk2.as("s2"), count(lit(1)).as("c")).collect()(0)
+      run() // warmup
+      val t0 = System.nanoTime()
+      val r0 = run()
       val wall = (System.nanoTime() - t0) / 1e9
       println(s"""{"bench":"hex_whole_earth","leg":"isea3h_res15","cpus":$cpus,""" +
         s""""wall_sec":$wall,"cells":${r0.getLong(2)},"cells_per_sec":${(r0.getLong(2) / wall).toLong},""" +

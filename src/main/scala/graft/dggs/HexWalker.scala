@@ -37,6 +37,9 @@ private[dggs] trait HexWalkerCore {
     */
   protected def spacingFrac(r: Int): Double
 
+  /** 1.5·spacingFrac(r), r = 0..20 (every hex lattice stops at res 20) */
+  private lazy val margins: Array[Double] = Array.tabulate(21)(r => 1.5 * spacingFrac(r))
+
   /** nearest res-r cell center to a sphere point: hex Voronoi in the
     * point's quad chart, with cross-quad candidates near boundaries.
     */
@@ -44,29 +47,24 @@ private[dggs] trait HexWalkerCore {
     val (q0, x0, y0) = quads.sphereToQuad(p)
     val (fa, fb) = chartToLattice(x0, y0, r)
     val v0 = hexRound(fa, fb)
-    val (cx, cy) = latticeToChart(v0, r)
-    val d0 = math.hypot(cx - x0, cy - y0)
     val (u, w) = quads.rhombusUV(x0, y0)
-    val margin = 1.5 * spacingFrac(r)
-    var best = (q0, v0, d0)
-    if (u < margin || w < margin || u > 1 - margin || w > 1 - margin) {
-      val cs = quads.corners(q0)
-      val edges = Seq((cs(0), cs(1)), (cs(0), cs(2)), (cs(1), cs(3)), (cs(2), cs(3)))
-        .map { case (a, b) => if (a < b) (a, b) else (b, a) }
-      for (e <- edges) {
-        val (nq, rot, t) = quads.edgeNeighbors((q0, e))
-        val nx = rot._1 * x0 - rot._2 * y0 + t._1
-        val ny = rot._1 * y0 + rot._2 * x0 + t._2
-        val (na, nb) = chartToLattice(nx, ny, r)
-        val nv = hexRound(na, nb)
-        val (ncx, ncy) = latticeToChart(nv, r)
-        val nd = math.hypot(ncx - nx, ncy - ny)
-        val (ncu, ncv) = quads.rhombusUV(ncx, ncy)
-        val in = ncu >= -1e-12 && ncu <= 1 + 1e-12 && ncv >= -1e-12 && ncv <= 1 + 1e-12
-        if (in && nd < best._3 - 1e-14) best = (nq, nv, nd)
-      }
+    val margin = margins(r)
+    if (u >= margin && w >= margin && u <= 1 - margin && w <= 1 - margin) return (q0, v0)
+    val (cx, cy) = latticeToChart(v0, r)
+    var bestQ = q0; var bestV = v0; var bestD = math.hypot(cx - x0, cy - y0)
+    var i = 4 * q0
+    while (i < 4 * q0 + 4) {
+      val nx = quads.crossX(i, x0, y0); val ny = quads.crossY(i, x0, y0)
+      val (na, nb) = chartToLattice(nx, ny, r)
+      val nv = hexRound(na, nb)
+      val (ncx, ncy) = latticeToChart(nv, r)
+      val nd = math.hypot(ncx - nx, ncy - ny)
+      val (ncu, ncv) = quads.rhombusUV(ncx, ncy)
+      val in = ncu >= -1e-12 && ncu <= 1 + 1e-12 && ncv >= -1e-12 && ncv <= 1 + 1e-12
+      if (in && nd < bestD - 1e-14) { bestQ = quads.nbrQuad(i); bestV = nv; bestD = nd }
+      i += 1
     }
-    (best._1, best._2)
+    (bestQ, bestV)
   }
 
   /** unfold an (possibly out-of-rhombus) chart point across quad edges
@@ -79,17 +77,14 @@ private[dggs] trait HexWalkerCore {
       val (u, v) = quads.rhombusUV(px, py)
       if (u >= -1e-12 && u <= 1 + 1e-12 && v >= -1e-12 && v <= 1 + 1e-12)
         return quads.quadToSphere(q, px, py)
-      val cs = quads.corners(q)
-      val e0 =
-        if (v < -1e-12) (cs(0), cs(1))
-        else if (u < -1e-12) (cs(0), cs(2))
-        else if (u > 1 + 1e-12) (cs(1), cs(3))
-        else (cs(2), cs(3))
-      val e = if (e0._1 < e0._2) e0 else (e0._2, e0._1)
-      val (nq, rot, t) = quads.edgeNeighbors((q, e))
-      val nx = rot._1 * px - rot._2 * py + t._1
-      val ny = rot._1 * py + rot._2 * px + t._2
-      q = nq; px = nx; py = ny
+      val k =
+        if (v < -1e-12) 0
+        else if (u < -1e-12) 1
+        else if (u > 1 + 1e-12) 2
+        else 3
+      val i = 4 * q + k
+      val nx = quads.crossX(i, px, py); val ny = quads.crossY(i, px, py)
+      q = quads.nbrQuad(i); px = nx; py = ny
       guard += 1
     }
     quads.quadToSphere(q, px, py)
@@ -120,20 +115,16 @@ private[dggs] trait HexWalker extends HexWalkerCore {
       val (i, j) = ijOfAt(v, res)
       val n = rhombusDenom(res)
       if (i >= 0 && i <= n && j >= 0 && j <= n) return (q, v)
-      val cs = quads.corners(q)
-      val e0 =
-        if (j < 0) (cs(0), cs(1))      // below O-A
-        else if (i < 0) (cs(0), cs(2)) // left of O-B
-        else if (i > n) (cs(1), cs(3)) // beyond A-C
-        else (cs(2), cs(3))            // beyond B-C
-      val e = if (e0._1 < e0._2) e0 else (e0._2, e0._1)
-      val (nq, rot, t) = quads.edgeNeighbors((q, e))
+      val k =
+        if (j < 0) 0      // below O-A
+        else if (i < 0) 1 // left of O-B
+        else if (i > n) 2 // beyond A-C
+        else 3            // beyond B-C
+      val ei = 4 * q + k
       val (x, y) = latticeToChart(v, res)
-      val nx = rot._1 * x - rot._2 * y + t._1
-      val ny = rot._1 * y + rot._2 * x + t._2
-      val (na, nb) = chartToLattice(nx, ny, res)
+      val (na, nb) = chartToLattice(quads.crossX(ei, x, y), quads.crossY(ei, x, y), res)
       v = hexRound(na, nb)
-      q = nq
+      q = quads.nbrQuad(ei)
       guard += 1
     }
     throw new IllegalStateException(
@@ -145,12 +136,10 @@ private[dggs] trait HexWalker extends HexWalkerCore {
     */
   private[dggs] final def foldQVToQuad(quad: Int, rep: Eis, res: Int,
                                        toQ: Int, edge: (Int, Int)): (Int, Eis) = {
-    val (nq, rot, t) = quads.edgeNeighbors((quad, edge))
-    require(nq == toQ, s"edge $edge of quad $quad leads to $nq, not $toQ")
+    val ei = 4 * quad + quads.edgeIndex(quad, edge)
+    require(quads.nbrQuad(ei) == toQ, s"edge $edge of quad $quad leads to ${quads.nbrQuad(ei)}, not $toQ")
     val (x, y) = latticeToChart(rep, res)
-    val nx = rot._1 * x - rot._2 * y + t._1
-    val ny = rot._1 * y + rot._2 * x + t._2
-    val (na, nb) = chartToLattice(nx, ny, res)
+    val (na, nb) = chartToLattice(quads.crossX(ei, x, y), quads.crossY(ei, x, y), res)
     (toQ, hexRound(na, nb))
   }
 }

@@ -175,12 +175,13 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
     shift.foreach { case ((v, q), s) => a(v)(q) = s }
     a
   }
-  /** unit (a,b) -> direction index; a,b ∈ {-1,0,1} */
-  @inline private def unitIdx(a: Long, b: Long): Int =
-    if (a == 1 && b == 0) 0 else if (a == 0 && b == 1) 1
-    else if (a == -1 && b == 1) 2 else if (a == -1 && b == 0) 3
-    else if (a == 0 && b == -1) 4 else if (a == 1 && b == -1) 5
-    else -2
+  /** digit of raw step code c (0 = no step, else unit index + 1) under
+    * shift sh, at 7·sh + c
+    */
+  private val relabel: Array[Int] = Array.tabulate(42) { i =>
+    val (sh, c) = (i / 7, i % 7)
+    if (c == 0) 0 else digitAtDirBase(((c - 1 - sh) % 6 + 6) % 6)
+  }
 
   // -------------------------------------------------------------------
   // Point -> cell
@@ -237,125 +238,95 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
         // the cell's label-home is across a quad edge (its ancestor sits
         // on a fan-cut edge): re-express the fix across each edge and
         // take the first clean walk
-        val alt = crossFixes(fix).iterator.flatMap(f2 => walk(f2).filter(valid))
+        val alt = Iterator.range(0, 4).flatMap(k => walk(crossFix(fix, k)).filter(valid))
         if (alt.hasNext) alt.next()
         else walk(fix).getOrElse(sys.error(s"walk failed for $fix"))
     }
   }
 
-  /** re-express a fix across each of the 4 quad edges (exact isometries
+  /** re-express a fix across edge k of its quad (an exact isometry
     * mapping lattice points to lattice points).
     */
-  private def crossFixes(fix: CellFix): Seq[CellFix] = {
-    val cs = quads.corners(fix.quad)
-    val edges = Seq((cs(0), cs(1)), (cs(0), cs(2)), (cs(1), cs(3)), (cs(2), cs(3)))
-      .map { case (a, b) => if (a < b) (a, b) else (b, a) }
+  private def crossFix(fix: CellFix, k: Int): CellFix = {
+    val i = 4 * fix.quad + k
     val (x, y) = latticeToChart(fix.v, fix.res)
-    edges.map { e =>
-      val (nq, rot, t) = quads.edgeNeighbors((fix.quad, e))
-      val nx = rot._1 * x - rot._2 * y + t._1
-      val ny = rot._1 * y + rot._2 * x + t._2
-      val (na, nb) = chartToLattice(nx, ny, fix.res)
-      CellFix(nq, hexRound(na, nb), fix.res)
-    }
+    val (na, nb) = chartToLattice(quads.crossX(i, x, y), quads.crossY(i, x, y), fix.res)
+    CellFix(quads.nbrQuad(i), hexRound(na, nb), fix.res)
   }
 
   /** point -> Z7 cell id */
   def cellForPoint(p: GeoRad, r: Int): Long = {
     val fix = fixForPoint(p, r)
     val fast = fastWalk(fix)
-    if (fast != -1L) return fast
-    // cut-edge / cross-quad-home case (~1/6 of cells: the walk's first
-    // nonzero digit came out 2, meaning the cell's label-home chart is
-    // across a quad edge): retry the PRIMITIVE walk on each re-expressed
-    // fix — same order and validity rule as digitsOf, measured ~3×
-    // cheaper than falling straight into the allocating general path
-    val cfs = crossFixes(fix)
-    var i = 0
-    while (i < cfs.length) {
-      val z = fastWalk(cfs(i))
+    if (fast != -1L) fast else cutEdgeWalk(fix)
+  }
+
+  /** the cut-edge / cross-quad-home case (~1/6 of cells: the walk's first
+    * nonzero digit came out 2, meaning the cell's label-home chart is
+    * across a quad edge): retry the primitive walk on each re-expressed
+    * fix — same order and validity rule as digitsOf — before the
+    * allocating general path.
+    */
+  private[graft] def cutEdgeWalk(fix: CellFix): Long = {
+    var k = 0
+    while (k < 4) {
+      val z = fastWalk(crossFix(fix, k))
       if (z != -1L) return z
-      i += 1
+      k += 1
     }
     val (vtx, digits) = digitsOf(fix)
     Z7.pack(baseOfVertex(vtx), digits.toSeq)
   }
 
-  /** allocation-free primitive walk covering the common case (ends at a
-    * quad corner, no cut-edge retry needed). Returns the packed Z7, or
-    * -1 to fall back to the general path. Identical arithmetic to
-    * digitsOf (sevenSplit inlined on primitive longs).
-    */
   /** diagnostic hook for tools.BenchKernel (fallback-rate measurement) */
   def fastWalkProbe(fix: CellFix): Long = fastWalk(fix)
 
+  /** allocation-free primitive walk covering the common case (ends at a
+    * quad corner, no cut-edge retry needed). Returns the packed Z7, or
+    * -1 to fall back to [[cutEdgeWalk]]. Same digits as digitsOf, in
+    * exact integer arithmetic: Z[ω] modulo the level factor f is Z/7
+    * with ω ≡ 3 (f = 3−ω, odd levels) or ω ≡ 5 (f = 2+ω, even levels),
+    * so a + 3b or a + 5b mod 7 names the step, and the parent is
+    * (v − step)·conj(f)/7, an exact division.
+    */
   private def fastWalk(fix: CellFix): Long = {
     val r = fix.res
     var va = fix.v.a; var vb = fix.v.b
-    var packed = 0L
+    var codes = 0L // per level k, at bits 3k: 0 = no step, else unit index + 1
+    val stepA = IGeo7.StepA; val stepB = IGeo7.StepB; val stepCode = IGeo7.StepCode
     var k = r
     while (k >= 1) {
-      val odd = (k & 1) == 1
-      val fa = if (odd) 3L else 2L
-      val fb = if (odd) -1L else 1L
-      // w = v * conj(f); conj(a,b) = (a+b, -b)
-      val ca = fa + fb; val cb = -fb
-      val wa = va * ca - vb * cb
-      val wb = va * cb + vb * ca + vb * cb
-      // parent = hexRound(wa/7, wb/7) — inline cube rounding
-      val x = wa / 7.0; val z = wb / 7.0; val y = -x - z
-      var rx = math.rint(x); var ry = math.rint(y); var rz = math.rint(z)
-      val dx = math.abs(rx - x); val dy = math.abs(ry - y); val dz = math.abs(rz - z)
-      if (dx > dy && dx > dz) rx = -ry - rz
-      else if (dy > dz) ry = -rx - rz
-      else rz = -rx - ry
-      val pa = rx.toLong; val pb = rz.toLong
-      val pfa = pa * fa - pb * fb
-      val pfb = pa * fb + pb * fa + pb * fb
-      val sa = va - pfa; val sb = vb - pfb
-      if (sa != 0 || sb != 0) {
-        val ui = unitIdx(sa, sb)
-        if (ui == -2) return -1L
-        // store the raw unit index (1..6) until the base vertex is known
-        packed |= (ui + 1).toLong << (60 - 3 * k)
-      }
+      val odd = k & 1
+      var t = ((va + (5 - 2 * odd) * vb) % 7).toInt
+      if (t < 0) t += 7
+      val i = 7 * odd + t
+      va -= stepA(i); vb -= stepB(i)
+      codes |= stepCode(i) << (3 * k)
+      // conj(3−ω) = 2+ω, conj(2+ω) = 3−ω
+      val ca = 3L - odd; val cb = 2L * odd - 1L
+      val pa = (va * ca - vb * cb) / 7
+      val pb = (va * cb + vb * ca + vb * cb) / 7
       va = pa; vb = pb
       k -= 1
     }
-    // res-0 position must be a quad corner
-    val corner =
-      if (va == 0 && vb == 0) 0
-      else if (va == 1 && vb == 0) 1
-      else if (va == 0 && vb == 1) 2
-      else if (va == 1 && vb == 1) 3
-      else return -1L
-    val vtx = quads.corners(fix.quad)(corner)
+    // res-0 position must be a quad corner: (0,0), (1,0), (0,1), (1,1)
+    if (((va | vb) & ~1L) != 0L) return -1L
+    val vtx = quads.corners(fix.quad)((va + 2 * vb).toInt)
     val sh = shiftArr(vtx)(fix.quad)
     if (sh < 0) return -1L
-    // relabel raw unit indices into digits; detect the cut-edge case
-    var out = baseOfVertex(vtx).toLong << 60
+    // relabel step codes into digits; pad digits beyond r are all ones
+    var out = (baseOfVertex(vtx).toLong << 60) | ((1L << (60 - 3 * r)) - 1L)
+    var fnz = 0
     var kk = 1
     while (kk <= r) {
-      val raw = ((packed >>> (60 - 3 * kk)) & 0x7L).toInt
-      val d =
-        if (raw == 0) 0
-        else digitAtDirBase((((raw - 1) - sh) % 6 + 6) % 6)
-      out |= (d.toLong << (60 - 3 * kk))
+      val d = relabel(7 * sh + ((codes >>> (3 * kk)) & 0x7L).toInt)
+      if (fnz == 0) fnz = d
+      out |= d.toLong << (60 - 3 * kk)
       kk += 1
     }
-    // pad digits beyond r
-    var kp = r + 1
-    while (kp <= 20) { out |= 0x7L << (60 - 3 * kp); kp += 1 }
-    // cut-edge cells (first nonzero digit 2) need the general retry
-    val fnzDigit = {
-      var i = 1; var d = 0
-      while (i <= r && d == 0) { d = ((out >>> (60 - 3 * i)) & 0x7L).toInt; i += 1 }
-      d
-    }
-    if (fnzDigit == 2) -1L else out
+    // cut-edge cells (first nonzero digit 2) need the retry
+    if (fnz == 2) -1L else out
   }
-
-
 
   // -------------------------------------------------------------------
   // Z7 -> geometry
@@ -520,6 +491,21 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
 
 object IGeo7 {
   import Sphere._
+
+  /** per residue class t at level parity o, at 7·o + t (odd levels
+    * ω ≡ 3, even levels ω ≡ 5 mod 7): f of the class's unit step
+    * index, 0 for the zero class
+    */
+  private def stepTable(f: Int => Long): Array[Long] = {
+    val out = new Array[Long](14)
+    for (o <- 0 to 1; u <- 0 until 6)
+      out(7 * o + (((Units(u).a + (5 - 2 * o) * Units(u).b) % 7 + 7) % 7).toInt) = f(u)
+    out
+  }
+  /** a and b of the step, and its walk code (unit index + 1) */
+  private[dggs] val StepA: Array[Long] = stepTable(Units(_).a)
+  private[dggs] val StepB: Array[Long] = stepTable(Units(_).b)
+  private[dggs] val StepCode: Array[Long] = stepTable(_ + 1L)
 
   /** densify a closed ring along great circles: `densify` extra vertices
     * per edge (the reference's geodetic_densify variant,

@@ -61,19 +61,4 @@ final class Icosahedron(vert0LatDeg: Double, vert0LonDeg: Double, azimuthDeg: Do
     val v = toVec(p)
     (0 until 20).sortBy(f => -faceCenterVecs(f).dot(v)).toArray
   }
-
-  /** hot path: index of the face center nearest to `p` (no allocation
-    * beyond the vector).
-    */
-  def nearestFace(p: GeoRad): Int = {
-    val v = toVec(p)
-    var best = 0; var bestDot = faceCenterVecs(0).dot(v)
-    var f = 1
-    while (f < 20) {
-      val d = faceCenterVecs(f).dot(v)
-      if (d > bestDot) { bestDot = d; best = f }
-      f += 1
-    }
-    best
-  }
 }

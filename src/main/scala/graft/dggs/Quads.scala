@@ -15,6 +15,8 @@ import Sphere._
   */
 final class QuadLayout(val ico: Icosahedron, val snyder: SnyderISEA) {
 
+  import QuadLayout.EdgeCorners
+
   val s: Double = snyder.rc * math.sqrt(3.0)
   val Ax: (Double, Double) = (s, 0.0)
   val Bx: (Double, Double) = (0.5 * s, s * math.sqrt(3.0) / 2.0)
@@ -43,10 +45,11 @@ final class QuadLayout(val ico: Icosahedron, val snyder: SnyderISEA) {
   }
 
   /** per-face similarity (rotation+translation, complex form) from the
-    * face-local Snyder frame into its quad chart: z ↦ rot·z + t.
+    * face-local Snyder frame into its quad chart: z ↦ rot·z + t, as
+    * (rx, ry, tx, ty) at 4·face.
     */
-  val faceToQuad: Array[(Double, Double, Double, Double)] = {
-    val arr = new Array[(Double, Double, Double, Double)](20)
+  private val faceToQuad: Array[Double] = {
+    val arr = new Array[Double](4 * 20)
     for (f <- 0 until 20) {
       val q = faceQuad(f)
       val cs = corners(q)
@@ -58,36 +61,59 @@ final class QuadLayout(val ico: Icosahedron, val snyder: SnyderISEA) {
       val chk = applyC(r, t, fp(2))
       val res = math.hypot(chk._1 - qp(2)._1, chk._2 - qp(2)._2)
       require(res < 1e-9 * s, s"face $f -> quad $q unfolding residual $res (mirrored?)")
-      arr(f) = (r._1, r._2, t._1, t._2)
+      Array(r._1, r._2, t._1, t._2).copyToArray(arr, 4 * f)
     }
     arr
   }
 
-  /** adjacent quad + chart transform across each of the 4 boundary edges
-    * (keyed by sorted vertex-id pair): (neighborQuad, rot, t).
+  /** sorted vertex-id pair of edge k of quad q; the edges of every quad
+    * are numbered (O,A), (O,B), (A,C), (B,C) for k = 0..3
     */
-  val edgeNeighbors: Map[(Int, (Int, Int)), (Int, (Double, Double), (Double, Double))] = {
+  def edgeVerts(q: Int, k: Int): (Int, Int) = {
+    val cs = corners(q)
+    val a = cs(EdgeCorners(2 * k)); val b = cs(EdgeCorners(2 * k + 1))
+    if (a < b) (a, b) else (b, a)
+  }
+
+  /** the k of edge `e` (a sorted vertex-id pair) of quad q */
+  def edgeIndex(q: Int, e: (Int, Int)): Int = {
+    val k = (0 until 4).indexWhere(edgeVerts(q, _) == e)
+    require(k >= 0, s"edge $e is not on quad $q")
+    k
+  }
+
+  /** the quad across edge k of quad q, at index 4q + k (quads are 1..10) */
+  val nbrQuad: Array[Int] = Array.tabulate(44) { i =>
+    if (i < 4) 0
+    else {
+      val e = edgeVerts(i / 4, i % 4)
+      (1 to 10).find(o => o != i / 4 && (0 until 4).exists(edgeVerts(o, _) == e)).get
+    }
+  }
+
+  /** chart similarity z ↦ rot·z + t across edge k of quad q, as
+    * (rx, ry, tx, ty) at 4·(4q + k)
+    */
+  private val nbrXf: Array[Double] = {
+    val a = new Array[Double](4 * 44)
     val cornerPos = (q: Int) => {
       val cs = corners(q)
       Map(cs(0) -> (0.0, 0.0), cs(1) -> Ax, cs(2) -> Bx, cs(3) -> Cx)
     }
-    val edgesOf = (q: Int) => {
-      val cs = corners(q)
-      Seq((cs(0), cs(1)), (cs(0), cs(2)), (cs(1), cs(3)), (cs(2), cs(3)))
-        .map { case (a, b) => if (a < b) (a, b) else (b, a) }
-    }
-    val byEdge = (1 to 10).flatMap(q => edgesOf(q).map(e => (e, q)))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    (for {
-      q <- 1 to 10
-      e <- edgesOf(q)
-      other <- byEdge(e).filter(_ != q)
-    } yield {
-      val pq = cornerPos(q); val po = cornerPos(other)
+    for (q <- 1 to 10; k <- 0 until 4) {
+      val e = edgeVerts(q, k)
+      val pq = cornerPos(q); val po = cornerPos(nbrQuad(4 * q + k))
       val (r, t) = solveSimilarity(pq(e._1), pq(e._2), po(e._1), po(e._2))
-      ((q, e), (other, r, t))
-    }).toMap
+      Array(r._1, r._2, t._1, t._2).copyToArray(a, 4 * (4 * q + k))
+    }
+    a
   }
+
+  /** chart x, y of (x, y) re-expressed across edge index i = 4q + k */
+  @inline def crossX(i: Int, x: Double, y: Double): Double =
+    nbrXf(4 * i) * x - nbrXf(4 * i + 1) * y + nbrXf(4 * i + 2)
+  @inline def crossY(i: Int, x: Double, y: Double): Double =
+    nbrXf(4 * i) * y + nbrXf(4 * i + 1) * x + nbrXf(4 * i + 3)
 
   /** vertex id -> quads sharing that corner */
   val vertexQuads: Map[Int, Seq[Int]] =
@@ -96,7 +122,8 @@ final class QuadLayout(val ico: Icosahedron, val snyder: SnyderISEA) {
 
   /** map a face-frame point into its quad chart */
   def toQuad(fp: snyder.FacePoint): (Int, Double, Double) = {
-    val (rx, ry, tx, ty) = faceToQuad(fp.face)
+    val o = 4 * fp.face
+    val rx = faceToQuad(o); val ry = faceToQuad(o + 1); val tx = faceToQuad(o + 2); val ty = faceToQuad(o + 3)
     val x = rx * fp.x - ry * fp.y + tx
     val y = rx * fp.y + ry * fp.x + ty
     (faceQuad(fp.face), x, y)
@@ -113,7 +140,8 @@ final class QuadLayout(val ico: Icosahedron, val snyder: SnyderISEA) {
 
   /** invert toQuad for a given face: quad chart -> face frame */
   def toFace(face: Int, x: Double, y: Double): snyder.FacePoint = {
-    val (rx, ry, tx, ty) = faceToQuad(face)
+    val o = 4 * face
+    val rx = faceToQuad(o); val ry = faceToQuad(o + 1); val tx = faceToQuad(o + 2); val ty = faceToQuad(o + 3)
     val n2 = rx * rx + ry * ry
     val dx = x - tx; val dy = y - ty
     snyder.FacePoint(face, (rx * dx + ry * dy) / n2, (rx * dy - ry * dx) / n2)
@@ -183,4 +211,9 @@ final class QuadLayout(val ico: Icosahedron, val snyder: SnyderISEA) {
   private def applyC(r: (Double, Double), t: (Double, Double),
                      p: (Double, Double)): (Double, Double) =
     (r._1 * p._1 - r._2 * p._2 + t._1, r._1 * p._2 + r._2 * p._1 + t._2)
+}
+
+object QuadLayout {
+  /** corner indices (0=O, 1=A, 2=B, 3=C) of edge k at 2k, 2k + 1 */
+  private val EdgeCorners: Array[Int] = Array(0, 1, 0, 2, 1, 3, 2, 3)
 }

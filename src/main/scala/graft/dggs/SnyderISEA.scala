@@ -1,6 +1,7 @@
 package graft.dggs
 
 import Sphere._
+import Lattice.Sqrt3Over2
 
 /** Snyder's 1992 equal-area projection for the icosahedron (ISEA),
   * implemented from the published equations ("An Equal-Area Map
@@ -20,6 +21,33 @@ import Sphere._
   *   rc = plane center→vertex distance with exact equal-area tiling:
   *        (3√3/4)·rc² = π/5  (20 plane faces tile the 4π sphere)
   *   R′ = rc / tan g.
+  *
+  * The forward runs in vector form: every point → cell call of every
+  * kernel goes through it, so it computes each quantity once and keeps
+  * the slow transcendental functions off the path. Per face it holds an
+  * orthonormal frame: the center c, the unit tangent u0 toward the
+  * reference vertex (plane +y) and u1 = u0 × c (plane +x). For the
+  * point's unit vector p:
+  *   - the only angle computed is the spherical excess ag, with one
+  *     atan2. The azimuth Az is kept as its cosine and sine, the
+  *     normalised tangent components (p·u0, p·u1); its 120° sector
+  *     comes from their signs; Az_F (Az reduced to the sector), the
+  *     Snyder azimuth Az′ and the plane angle α come from rotating by
+  *     multiples of 120° and normalising — no sin/cos call;
+  *   - eq. 6's H = acos(K) never becomes an angle either: e^{iH} =
+  *     K + i·√(1−K²) is multiplied into the excess's atan2. On JDK 17,
+  *     acos (~300 ns) and atan2 (~50 ns, a native call) cost far more
+  *     than sin/cos (~15 ns) or sqrt;
+  *   - sin(z/2) is half the chord |p − c|; sin(q/2) and the face
+  *     containment test come from cos q, q = the edge distance at Az_F.
+  * The face choice is the scalar test z − q ≤ 1e-12 of [[forwardSlow]]
+  * whenever the vector test is not clear by a wide margin, so cell ids
+  * do not depend on the rounding of the vector form.
+  *
+  * [[inverse]] keeps the scalar form, acos included: its outputs feed
+  * cell centers and boundaries that are floored to µdeg in frozen
+  * oracle values, and rounding H differently moved boundary
+  * coordinates by up to 3.6e-11 rad in a trial, enough to flip one.
   */
 final class SnyderISEA(val ico: Icosahedron) {
 
@@ -34,6 +62,23 @@ final class SnyderISEA(val ico: Icosahedron) {
   val rc: Double = math.sqrt(4.0 * math.Pi / (15.0 * math.sqrt(3.0)))
   val Rprime: Double = rc / tanG
   private val rc2 = rc * rc
+  private val tanG2 = tanG * tanG
+  private val sinG36cosg = sinG36 * cosg
+
+  /** per-face frame, 9 doubles per face: c, u0 (toward the reference
+    * vertex), u1 = u0 × c
+    */
+  private val frames: Array[Double] = {
+    val a = new Array[Double](20 * 9)
+    for (f <- 0 until 20) {
+      val c = ico.faceCenterVecs(f)
+      val v = toVec(ico.vertices(ico.faceVerts(f)(0)))
+      val u0 = (v - c * v.dot(c)).normalized
+      val u1 = u0.cross(c)
+      Array(c.x, c.y, c.z, u0.x, u0.y, u0.z, u1.x, u1.y, u1.z).copyToArray(a, 9 * f)
+    }
+    a
+  }
 
   /** Plane point on a face, face-local frame. */
   final case class FacePoint(face: Int, x: Double, y: Double)
@@ -44,80 +89,88 @@ final class SnyderISEA(val ico: Icosahedron) {
   @inline private def edgeDist(az: Double): Double =
     math.atan2(tanG, math.cos(az) + math.sin(az) * CotTheta)
 
-  /** Forward: point → (face, x, y). Fast path: the nearest face center's
-    * containment almost always passes; otherwise fall back to trying all
-    * faces nearest-first.
+  /** Forward: point → (face, x, y). The nearest face center's face
+    * holds the point unless it lies on a face edge; points within a
+    * hair of an edge go to [[forwardSlow]]. A pole is projected with
+    * lon = 0, so each pole has one image whatever its input longitude.
     */
-  def forward(p: GeoRad): FacePoint = {
-    val f0 = ico.nearestFace(p)
-    val z0 = distance(ico.faceCenters(f0), p)
-    if (z0 < g + 1e-9) {
-      var az = azimuth(ico.faceCenters(f0), p) - ico.faceAz0(f0)
-      while (az < 0) az += TwoPi
-      while (az >= TwoPi) az -= TwoPi
-      val rot = math.floor(az / Deg120).toInt
-      val azF = az - rot * Deg120
-      if (z0 - edgeDist(azF) <= 1e-12) return project(f0, azF, z0, rot)
+  def forward(p0: GeoRad): FacePoint = {
+    val p = if (math.abs(p0.lat) >= HalfPi) GeoRad(p0.lat, 0.0) else p0
+    val cl = math.cos(p.lat)
+    val px = cl * math.cos(p.lon); val py = cl * math.sin(p.lon); val pz = math.sin(p.lat)
+    val fr = frames
+    var f0 = 0; var bestDot = fr(0) * px + fr(1) * py + fr(2) * pz
+    var f = 1
+    while (f < 20) {
+      val o = 9 * f
+      val d = fr(o) * px + fr(o + 1) * py + fr(o + 2) * pz
+      if (d > bestDot) { bestDot = d; f0 = f }
+      f += 1
     }
-    forwardSlow(p)
+    val fp = onFace(f0, px, py, pz, clearOnly = true)
+    if (fp != null) fp else forwardSlow(p)
   }
 
+  /** Face-edge fallback: try all faces nearest-first with the scalar
+    * containment test z − q ≤ 1e-12, else take the least-violated face.
+    */
   private def forwardSlow(p: GeoRad): FacePoint = {
     val order = ico.facesByCloseness(p)
-    var i = 0
-    var best: FacePoint = null
-    var bestSlack = Double.MaxValue
-    while (i < order.length && best == null) {
-      val f = order(i)
-      val z = distance(ico.faceCenters(f), p)
-      if (z < g + 1e-9) {
-        val azRaw = azimuth(ico.faceCenters(f), p) - ico.faceAz0(f)
-        var az = azRaw
-        while (az < 0) az += TwoPi
-        while (az >= TwoPi) az -= TwoPi
-        val rot = math.floor(az / Deg120).toInt
-        val azF = az - rot * Deg120
-        val q = edgeDist(azF)
-        val slack = z - q
-        if (slack <= 1e-12) {
-          best = project(f, azF, z, rot)
-        } else if (slack < bestSlack) {
-          bestSlack = slack
-        }
-      }
-      i += 1
-    }
-    if (best == null) {
-      // numeric boundary: take the face with minimal slack
-      val f = order.minBy { f =>
-        val z = distance(ico.faceCenters(f), p)
-        var az = azimuth(ico.faceCenters(f), p) - ico.faceAz0(f)
-        while (az < 0) az += TwoPi
-        val azF = az - math.floor(az / Deg120) * Deg120
-        z - edgeDist(azF)
-      }
+    def slack(f: Int): Double = {
       val z = distance(ico.faceCenters(f), p)
       var az = azimuth(ico.faceCenters(f), p) - ico.faceAz0(f)
       while (az < 0) az += TwoPi
       while (az >= TwoPi) az -= TwoPi
-      val rot = math.floor(az / Deg120).toInt
-      best = project(f, az - rot * Deg120, z, rot)
+      z - edgeDist(az - math.floor(az / Deg120) * Deg120)
     }
-    best
+    val f = order.find(f => distance(ico.faceCenters(f), p) < g + 1e-9 && slack(f) <= 1e-12)
+      .getOrElse(order.minBy(slack)) // numeric boundary: the face with minimal slack
+    val v = toVec(p)
+    onFace(f, v.x, v.y, v.z, clearOnly = false)
   }
 
-  /** Snyder forward equations 5-9 for azF ∈ [0°,120°), z ≤ q(azF). */
-  private def project(f: Int, azF: Double, z: Double, rot: Int): FacePoint = {
-    if (z < 1e-15) return FacePoint(f, 0.0, 0.0)
-    val H = math.acos(math.sin(azF) * sinG36 * cosg - math.cos(azF) * cosG36)
-    val ag = azF + G + H - math.Pi // spherical excess of (center, v_ref, point-direction edge)
-    val azP = math.atan2(2.0 * ag, rc2 - 2.0 * ag * CotTheta)
-    val dP = Rprime * tanG / (math.cos(azP) + math.sin(azP) * CotTheta)
-    val q = edgeDist(azF)
-    val fScale = dP / (2.0 * Rprime * math.sin(q / 2.0))
-    val rho = 2.0 * Rprime * fScale * math.sin(z / 2.0)
-    val alpha = azP + rot * Deg120
-    FacePoint(f, rho * math.sin(alpha), rho * math.cos(alpha))
+  /** Snyder forward equations 5-9 on face f for the unit vector p. With
+    * `clearOnly`, returns null unless p is inside the face with a margin
+    * far above rounding: cos z ≥ cos q − 1e-13, i.e. z ≤ q + 3e-13
+    * (sin q ≥ 0.35 on the face), which the scalar test also accepts.
+    */
+  private def onFace(f: Int, px: Double, py: Double, pz: Double, clearOnly: Boolean): FacePoint = {
+    val fr = frames; val o = 9 * f
+    val dx = px - fr(o); val dy = py - fr(o + 1); val dz = pz - fr(o + 2)
+    val sinHalfZ = 0.5 * math.sqrt(dx * dx + dy * dy + dz * dz)
+    val a = px * fr(o + 3) + py * fr(o + 4) + pz * fr(o + 5)
+    val b = px * fr(o + 6) + py * fr(o + 7) + pz * fr(o + 8)
+    val h = math.sqrt(a * a + b * b) // sin z
+    if (h < 1e-15) return FacePoint(f, 0.0, 0.0) // the face center
+    // rot = the 120° sector of Az: sin Az ≥ 0 > sin(Az − 120°) → 0,
+    // sin(Az − 120°) ≥ 0 > sin(Az − 240°) → 1, else 2
+    val s1 = -0.5 * b - Sqrt3Over2 * a
+    val rot = if (b >= 0 && s1 < 0) 0 else if (s1 >= 0 && Sqrt3Over2 * a - 0.5 * b < 0) 1 else 2
+    // (cos, sin) of Az_F = Az − rot·120°
+    val cr = RotCos(rot); val sr = RotSin(rot)
+    val cosF = (a * cr + b * sr) / h
+    val sinF = (b * cr - a * sr) / h
+    // q = edgeDist(Az_F) = atan2(tan g, D)
+    val dq = cosF + sinF * CotTheta
+    val cosQ = dq / math.sqrt(dq * dq + tanG2)
+    if (clearOnly && px * fr(o) + py * fr(o + 1) + pz * fr(o + 2) < cosQ - 1e-13) return null
+    // eq 6: H = acos(K); the excess ag = Az_F + H − (π − G) is the
+    // argument of e^{i·Az_F} · (K + i·sin H) · e^{−i(π − G)}
+    val k = sinF * sinG36cosg - cosF * cosG36
+    val sinH = math.sqrt(1.0 - k * k)
+    val x1 = cosF * k - sinF * sinH; val y1 = sinF * k + cosF * sinH
+    val ag = math.atan2(-x1 * sinG36 - y1 * cosG36, y1 * sinG36 - x1 * cosG36)
+    // Az' = atan2(2·ag, rc² − 2·ag·cot θ), kept as its sine and cosine
+    val t1 = 2.0 * ag; val t2 = rc2 - 2.0 * ag * CotTheta
+    val tn = math.sqrt(t1 * t1 + t2 * t2)
+    val sinP = t1 / tn; val cosP = t2 / tn
+    val dP = Rprime * tanG / (cosP + sinP * CotTheta)
+    val sinHalfQ = math.sqrt(0.5 * (1.0 - cosQ))
+    val rho = dP * sinHalfZ / sinHalfQ
+    // α = Az' + rot·120°
+    val sinA = sinP * cr + cosP * sr
+    val cosA = cosP * cr - sinP * sr
+    FacePoint(f, rho * sinA, rho * cosA)
   }
 
   /** Inverse: (face, x, y) → sphere. Newton iteration on Az
@@ -166,4 +219,8 @@ object SnyderISEA {
   val CotTheta: Double = 1.0 / math.tan(Theta) // √3
   val Deg120: Double = 2.0 * math.Pi / 3.0
   val TwoPi: Double = 2.0 * math.Pi
+  val HalfPi: Double = math.Pi / 2.0
+  /** cos/sin of rot·120°, rot = 0, 1, 2 */
+  private val RotCos: Array[Double] = Array(1.0, -0.5, -0.5)
+  private val RotSin: Array[Double] = Array(0.0, Sqrt3Over2, -Sqrt3Over2)
 }

@@ -45,13 +45,16 @@ object DggsFunctions {
   /** (lon°, lat°) → int64 cell id at resolution `res`.
     *
     * Deliberately a Scala UDF, NOT the native `CellForPointExpr`:
-    * measured head-to-head the UDF already runs at raw-kernel speed
-    * (the projection math dominates, boxing is noise), and Catalyst
-    * treats UDFs as expensive — it will not inline them into multiple
-    * consuming expressions, whereas the native expression got
+    * Catalyst treats UDFs as expensive — it will not inline them into
+    * multiple consuming expressions, whereas the native expression got
     * re-evaluated per reference in the flagship plan (a measured 35%
-    * regression). `cellForPointExpr` remains available for
-    * single-reference pipelines. Plans print it as `cellForPoint(...)`.
+    * regression). When that was measured, the UDF ran at raw-kernel
+    * speed because the scalar projection made up most of the cost; the
+    * vector-form projection cut the kernel by about 3× (plans/r13), so
+    * the wrapper's boxing and row handling are no longer a small share —
+    * perfbench's `spark.cell_for_point.wrapper_eff` reads it.
+    * `cellForPointExpr` remains available for single-reference
+    * pipelines. Plans print it as `cellForPoint(...)`.
     *
     * Two traps when the result keys a hash join:
     *  - slot collapse: a coarse id ends in all-ones pad bits, so Spark's

@@ -1,10 +1,15 @@
 package graft.tools
 
 import graft.dggs._
+import graft.spark.Grids
 import Sphere._
 
-/** Pure-kernel microbenchmark (no Spark): phase breakdown of the
-  * point→cell hot path so optimization is measured, not guessed.
+/** Pure-kernel microbenchmark (no Spark; layer 0 of the flagship):
+  * phase breakdown of the point→cell hot path so optimization is
+  * measured, not guessed. Phases: the Snyder forward, the quad chart,
+  * the Z7 nearest-center fix, the Z7 digit walk on precomputed fixes,
+  * the cut-edge retry timed on the points that take it, and
+  * `cellForPoint` of all six kernels. Single-threaded.
   * Usage: runMain graft.tools.BenchKernel [nPoints] [res]
   */
 object BenchKernel {
@@ -16,13 +21,12 @@ object BenchKernel {
       GeoRad.fromDeg(-90.0 + ((i * 6271L) % 180000L) / 1000.0,
         -180.0 + ((i * 9973L) % 360000L) / 1000.0)
     }
-    def time(label: String, reps: Int = 1)(f: => Long): Unit = {
+    def time(label: String, count: Int = n)(f: => Long): Unit = {
       f // warmup
       val t0 = System.nanoTime()
-      var acc = 0L
-      for (_ <- 0 until reps) acc ^= f
+      val acc = f
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"$label%-22s ${reps * n / dt / 1e6}%8.3f M/s  (acc=$acc)")
+      println(f"$label%-22s ${count / dt / 1e6}%8.3f M/s  (acc=$acc)")
     }
     time("snyder.forward") {
       var acc = 0L; var i = 0
@@ -39,31 +43,25 @@ object BenchKernel {
       while (i < n) { acc ^= g.fixForPoint(pts(i), res).v.a; i += 1 }
       acc
     }
-    time("cellForPoint") {
+    val fixes = pts.map(g.fixForPoint(_, res))
+    time("z7.fastWalk") {
       var acc = 0L; var i = 0
-      while (i < n) { acc ^= g.cellForPoint(pts(i), res); i += 1 }
+      while (i < n) { acc ^= g.fastWalkProbe(fixes(i)); i += 1 }
       acc
     }
-    // fallback-rate diagnostic: how often the primitive walk rejects
-    locally {
-      var nFall = 0; var i = 0
-      while (i < n) {
-        val fix = g.fixForPoint(pts(i), res)
-        if (g.fastWalkProbe(fix) == -1L) nFall += 1
-        i += 1
-      }
-      println(f"[info] fastWalk fallback rate: ${100.0 * nFall / n}%.2f%%")
-    }
-    // T4/D4 for comparison
-    val t4 = new Isea4T(); val d4 = new Isea4D()
-    time("t4.cellForPoint") {
+    // the cut-edge retry, on the fixes whose primitive walk rejects
+    val cut = fixes.filter(g.fastWalkProbe(_) == -1L)
+    println(f"[info] fastWalk fallback rate: ${100.0 * cut.length / n}%.2f%%")
+    if (cut.nonEmpty) time("z7.cutEdgeWalk", cut.length) {
       var acc = 0L; var i = 0
-      while (i < n) { acc ^= t4.cellForPoint(pts(i), res); i += 1 }
+      while (i < cut.length) { acc ^= g.cutEdgeWalk(cut(i)); i += 1 }
       acc
     }
-    time("d4.cellForPoint") {
+    val kernels: Seq[(String, DggsKernel)] = Seq("z7" -> g, "3h" -> Grids.isea3h,
+      "4h" -> Grids.isea4h, "43h" -> Grids.isea43h(3), "t4" -> Grids.isea4t, "d4" -> Grids.isea4d)
+    for ((name, k) <- kernels) time(s"$name.cellForPoint") {
       var acc = 0L; var i = 0
-      while (i < n) { acc ^= d4.cellForPoint(pts(i), res); i += 1 }
+      while (i < n) { acc ^= k.cellForPoint(pts(i), res); i += 1 }
       acc
     }
   }

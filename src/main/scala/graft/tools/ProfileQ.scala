@@ -1,11 +1,11 @@
 package graft.tools
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import graft.obs.QueryMetrics
 import org.apache.spark.sql.SparkSession
 
-/** Per-job profile of a SparkEntry query: attaches a listener and
-  * prints every job's wall, stage count and task count plus the
-  * end-to-end wall — the measurement companion for cutting job/stage
-  * overheads (guide §1: measure first).
+/** Per-job profile of a SparkEntry query: attaches a logging
+  * [[QueryMetrics]] and prints every job's wall, every stage's wall,
+  * run time and task count, plus the end-to-end wall — the measurement
+  * companion for cutting job/stage overheads (guide §1: measure first).
   *
   *   sbt "runMain graft.tools.ProfileQ <query> [sfDir] [cpus]"
   */
@@ -21,38 +21,14 @@ object ProfileQ {
     // warm rep (JIT + codegen)
     graft.SparkEntry.queries(name)(spark, dir).count()
     spark.catalog.clearCache()
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val lines = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    var stages = 0
-    var tasks = 0
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.put(js.jobId, (System.nanoTime(),
-          Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobs.get(je.jobId)).foreach { case (t0, desc) =>
-          lines.add(f"JOB ${je.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $desc")
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages += 1; tasks += sc.stageInfo.numTasks
-        val si = sc.stageInfo
-        val wall = (for (a <- si.completionTime; b <- si.submissionTime)
-          yield (a - b) / 1e3).getOrElse(-1.0)
-        val run = si.taskMetrics.executorRunTime / 1e3
-        lines.add(f"STAGE ${si.stageId}%3d wall=$wall%6.3f run=$run%7.3f " +
-          f"tasks=${si.numTasks}%3d  ${si.name.take(90)}")
-        if (run > 0.5)
-          lines.add("  DETAILS " + si.details.linesIterator
-            .filterNot(_.contains("org.apache.spark")).take(4).mkString(" <- "))
-      }
-    })
+    val m = new QueryMetrics(logEvents = true)
+    spark.sparkContext.addSparkListener(m)
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, dir).count()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500)
-    lines.forEach(l => println(l))
-    println(f"TOTAL $name wall=$wall%.3f s jobs=${jobs.size} stages=$stages tasks=$tasks")
+    m.awaitStable()
+    m.events.forEach(l => println(l))
+    println(f"TOTAL $name wall=$wall%.3f s jobs=${m.jobs.get} stages=${m.stages.get} tasks=${m.tasks.get}")
     spark.stop()
   }
 }

@@ -346,4 +346,21 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val scan = plan.linesIterator.find(_.contains("FileScan parquet")).getOrElse("")
     assert(scan.contains("doc_id") && !scan.contains("text"), scan)
   }
+
+  test("QueryMetrics counts jobs, stages and tasks and logs one line each") {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.TestBusHook.waitUntilEmpty(sc)
+    val m = new graft.obs.QueryMetrics(logEvents = true)
+    sc.addSparkListener(m)
+    try {
+      // one job: a 4-task map stage and a 4-task reduce stage
+      sc.parallelize(1 to 100, 4).map(x => (x % 3, x)).reduceByKey(_ + _, 4).count()
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(sc)
+      assert((m.jobs.get, m.stages.get, m.tasks.get) == ((1L, 2L, 8L)))
+      assert(m.write.get > 0 && m.read.get > 0)
+      val lines = m.events.toArray.map(_.toString)
+      assert(lines.count(_.startsWith("JOB ")) == 1 && lines.count(_.startsWith("STAGE ")) == 2,
+        lines.mkString("\n"))
+    } finally sc.removeSparkListener(m)
+  }
 }
