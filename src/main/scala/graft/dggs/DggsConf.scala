@@ -30,26 +30,30 @@ final case class DggsConf(
       (projection == "ISEA" && topology == "TRIANGLE" && aperture == 4) ||
       (projection == "ISEA" && topology == "DIAMOND" && aperture == 4)
 
+  /** this preset's kernel at this orientation, from the per-JVM cache */
+  private def kernel(kind: String, n4: Int = 0): DggsKernel =
+    DggsKernel(KernelSpec(kind, n4, vert0LatDeg, vert0LonDeg, azimuthDeg))
+
   def grid: IGeo7 = {
     require(projection == "ISEA" && topology == "HEXAGON" && aperture == 7,
       s"aperture-7 hex kernel not applicable to $dggsType (ISEA3H has its own " +
         s"kernel via `hexGrid3`, ISEA4T via `triangleGrid`; stats tables are " +
         "available for all presets)")
-    new IGeo7(vert0LatDeg, vert0LonDeg, azimuthDeg)
+    kernel("IGEO7").asInstanceOf[IGeo7]
   }
 
   /** the aperture-3 hexagon kernel (ISEA3H) */
   def hexGrid3: Isea3H = {
     require(projection == "ISEA" && topology == "HEXAGON" && aperture == 3,
       s"aperture-3 hex kernel not implemented for $dggsType (ISEA3H only)")
-    new Isea3H(vert0LatDeg, vert0LonDeg, azimuthDeg)
+    kernel("ISEA3H").asInstanceOf[Isea3H]
   }
 
   /** the aperture-4 hexagon kernel (ISEA4H) */
   def hexGrid4: Isea4H = {
     require(projection == "ISEA" && topology == "HEXAGON" && aperture == 4,
       s"aperture-4 hex kernel not implemented for $dggsType (ISEA4H only)")
-    new Isea4H(vert0LatDeg, vert0LonDeg, azimuthDeg)
+    kernel("ISEA4H").asInstanceOf[Isea4H]
   }
 
   /** the MIXED-aperture hex kernel (ISEA43H): `n4` leading aperture-4
@@ -64,21 +68,21 @@ final case class DggsConf(
   def hexGridMixed(n4: Int): Isea43H = {
     require(projection == "ISEA" && topology == "HEXAGON" && aperture == 43,
       s"mixed-aperture hex kernel not applicable to $dggsType (ISEA43H only)")
-    new Isea43H(n4, vert0LatDeg, vert0LonDeg, azimuthDeg)
+    kernel("ISEA43H", n4).asInstanceOf[Isea43H]
   }
 
   /** the aperture-4 triangle kernel (ISEA4T) */
   def triangleGrid: Isea4T = {
     require(projection == "ISEA" && topology == "TRIANGLE" && aperture == 4,
       s"triangle kernel not implemented for $dggsType (ISEA4T only)")
-    new Isea4T(vert0LatDeg, vert0LonDeg, azimuthDeg)
+    kernel("ISEA4T").asInstanceOf[Isea4T]
   }
 
   /** the aperture-4 diamond kernel (ISEA4D) */
   def diamondGrid: Isea4D = {
     require(projection == "ISEA" && topology == "DIAMOND" && aperture == 4,
       s"diamond kernel not implemented for $dggsType (ISEA4D only)")
-    new Isea4D(vert0LatDeg, vert0LonDeg, azimuthDeg)
+    kernel("ISEA4D").asInstanceOf[Isea4D]
   }
 }
 

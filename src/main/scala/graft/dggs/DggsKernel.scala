@@ -21,6 +21,10 @@ import Sphere.GeoRad
   *  - [[pentagonsLoseAChild]]: the IGEO7 pentagons (all-zero digit
   *    paths) have no digit-2 child, so their families have 6 cells.
   *
+  * ISEA3H, ISEA4H and ISEA43H are one class, [[HexKernel]] (an aperture
+  * sequence over one [[SlotCodec]]), which also carries their Q2DI,
+  * ZORDER, ZORDER_STRING and INTERLEAVE address forms.
+  *
   * Kernels are immutable and thread-safe after construction. A kernel is
   * serialized as its [[KernelSpec]] and resolves to the receiving JVM's
   * cached instance ([[DggsKernel.apply]]), so a UDF closure may capture a
@@ -59,21 +63,6 @@ trait DggsKernel extends Serializable {
   def pentagonsLoseAChild: Boolean = false
 
   protected final def writeReplace(): AnyRef = new DggsKernel.Shipped(spec)
-}
-
-/** The ZORDER / ZORDER_STRING / Q2DI / INTERLEAVE address forms of the
-  * hexagon kernels with aperture 3 and 4 (the reference defines them for
-  * those grids only, dggrid_runner.py:125). Q2DI is (quad, i, j), caps
-  * (0|11, 0, 0); INTERLEAVE is output-only and equals ZORDER_STRING.
-  */
-trait HexAddressing extends DggsKernel {
-  def toQ2di(z: Long): (Int, Long, Long)
-  def fromQ2di(base: Int, i: Long, j: Long, r: Int): Long
-  def toZorder(z: Long): Long
-  def fromZorder(zo: Long): Long
-  def toZorderString(z: Long): String
-  def fromZorderString(sx: String): Long
-  def toInterleave(z: Long): String = toZorderString(z)
 }
 
 /** What identifies a kernel instance. `kind` is the preset name (IGEO7,

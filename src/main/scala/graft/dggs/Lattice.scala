@@ -26,18 +26,6 @@ object Lattice {
     def norm: Long = a * a + a * b + b * b
     /** complex conjugate: conj(ω) = 1 − ω */
     def conj: Eis = Eis(a + b, -b)
-    /** exact division (caller guarantees divisibility) */
-    def divExact(o: Eis): Eis = {
-      val num = this * o.conj
-      val n = o.norm
-      require(num.a % n == 0 && num.b % n == 0, s"$this not divisible by $o")
-      Eis(num.a / n, num.b / n)
-    }
-    def isDivisibleBy(o: Eis): Boolean = {
-      val num = this * o.conj
-      val n = o.norm
-      num.a % n == 0 && num.b % n == 0
-    }
     /** real embedding with basis (1, ω): x = a + b/2, y = b·√3/2 */
     def toXY: (Double, Double) = (a + 0.5 * b, b * Sqrt3Over2)
   }

@@ -24,7 +24,12 @@ object Z7 {
 
   val MaxRes = 20
 
-  /** Pack base cell + digits; remaining positions padded with 7. */
+  /** Pack base cell + digits; remaining positions padded with 7. A
+    * supplied digit must be 0-6: the pad 7 in a real position (e.g. the
+    * string "0570") would build an id whose resolution disagrees with
+    * its bits, so ancestorAt, rangeMin/rangeMax and parent would not
+    * describe the cell.
+    */
   def pack(base: Int, digits: Seq[Int]): Long = {
     require(base >= 0 && base <= 11, s"base cell $base out of range")
     require(digits.length <= MaxRes, s"too many digits (${digits.length})")
@@ -32,7 +37,7 @@ object Z7 {
     var i = 0
     while (i < MaxRes) {
       val d = if (i < digits.length) digits(i) else 7
-      require(d >= 0 && d <= 7, s"digit $d out of range")
+      require(d >= 0 && (d <= 6 || i >= digits.length), s"digit $d out of range at position ${i + 1}")
       v |= d.toLong << (57 - 3 * i)
       i += 1
     }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dggs.{DggsKernel, HexAddressing, IGeo7, Isea4T, Sphere, T4, Z7}
+import graft.dggs.{DggsKernel, HexKernel, IGeo7, Isea4T, Sphere, T4, Z7}
 import graft.spark.{DggsFunctions => F, Grids}
 
 /** The dggrid4py-equivalent high-level API (SURVEY.md §2.2), re-expressed
@@ -125,7 +125,7 @@ object GridOps {
     // kernels — the Isea3HSpec drift test documents the seam exception):
     // whole-earth is the exact rank bijection, clipped extents are
     // SAMPLE-ASSIGN-REFINE
-    case h: HexAddressing => clip match {
+    case h: HexKernel => clip match {
       case None => hexWholeEarth(spark, res, h.slotBits, h.radixAt)
       case Some(box) =>
         val perQuad = (1 to res).map(h.radixAt(_).toDouble).product
@@ -733,7 +733,7 @@ object GridOps {
                        res: Int, kernel: DggsKernel = Grids.default): DataFrame = {
     val out = kernel match {
       case g: IGeo7 => z7Address(col(idCol), from, to, res, g)
-      case h: HexAddressing => hexAddress(col(idCol), from, to, res, h)
+      case h: HexKernel => hexAddress(col(idCol), from, to, res, h)
       case k => throw new IllegalArgumentException(
         s"addressTransform: no address forms for ${k.spec.kind}")
     }
@@ -741,7 +741,7 @@ object GridOps {
   }
 
   private def hexAddress(c: Column, from: String, to: String, res: Int,
-                         h: HexAddressing): Column = {
+                         h: HexKernel): Column = {
     val idForm = h.idName
     val asId: Column = from match {
       case `idForm` => c

@@ -2,7 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.dggs.{DggsKernel, HexAddressing, IGeo7, Isea3H, Isea43H, Isea4D, Isea4H, Isea4T,
+import graft.dggs.{DggsKernel, HexKernel, IGeo7, Isea3H, Isea43H, Isea4D, Isea4H, Isea4T,
   KernelSpec, Sphere, Z7}
 import Sphere.GeoRad
 
@@ -187,17 +187,17 @@ object DggsFunctions {
       .mkString("POLYGON ((", ", ", "))")
 
   // ---- ZORDER / ZORDER_STRING / Q2DI over the aperture-3/4 hex grids ----
-  def toZorder(cell: Column, kernel: HexAddressing): Column =
+  def toZorder(cell: Column, kernel: HexKernel): Column =
     udf((z: Long) => kernel.toZorder(z)).apply(cell)
-  def fromZorder(zo: Column, kernel: HexAddressing): Column =
+  def fromZorder(zo: Column, kernel: HexKernel): Column =
     udf((z: Long) => kernel.fromZorder(z)).apply(zo)
-  def toZorderString(cell: Column, kernel: HexAddressing): Column =
+  def toZorderString(cell: Column, kernel: HexKernel): Column =
     udf((z: Long) => kernel.toZorderString(z)).apply(cell)
-  def fromZorderString(sx: Column, kernel: HexAddressing): Column =
+  def fromZorderString(sx: Column, kernel: HexKernel): Column =
     udf((x: String) => kernel.fromZorderString(x)).apply(sx)
-  def toQ2di(cell: Column, kernel: HexAddressing): Column =
+  def toQ2di(cell: Column, kernel: HexKernel): Column =
     udf((z: Long) => kernel.toQ2di(z)).apply(cell).cast("struct<q:int,i:bigint,j:bigint>")
-  def fromQ2di(q: Column, i: Column, j: Column, res: Column, kernel: HexAddressing): Column =
+  def fromQ2di(q: Column, i: Column, j: Column, res: Column, kernel: HexKernel): Column =
     udf((qq: Int, ii: Long, jj: Long, r: Int) => kernel.fromQ2di(qq, ii, jj, r)).apply(q, i, j, res)
 
   /** cell as a GeoJSON Feature string (sink parity: the reference's

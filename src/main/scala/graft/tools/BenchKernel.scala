@@ -8,8 +8,10 @@ import Sphere._
   * phase breakdown of the point→cell hot path so optimization is
   * measured, not guessed. Phases: the Snyder forward, the quad chart,
   * the Z7 nearest-center fix, the Z7 digit walk on precomputed fixes,
-  * the cut-edge retry timed on the points that take it, and
-  * `cellForPoint` of all six kernels. Single-threaded.
+  * the cut-edge retry timed on the points that take it, and for each of
+  * the six kernels `cellForPoint` and then `cellCenter` + `cellBoundary`
+  * (`cellGeometry`, on the first 20k ids that `cellForPoint` produced).
+  * Single-threaded.
   * Usage: runMain graft.tools.BenchKernel [nPoints] [res]
   */
 object BenchKernel {
@@ -26,7 +28,7 @@ object BenchKernel {
       val t0 = System.nanoTime()
       val acc = f
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"$label%-22s ${count / dt / 1e6}%8.3f M/s  (acc=$acc)")
+      println(f"$label%-22s ${count / dt / 1e6}%9.4f M/s  (acc=$acc)")
     }
     time("snyder.forward") {
       var acc = 0L; var i = 0
@@ -59,10 +61,23 @@ object BenchKernel {
     }
     val kernels: Seq[(String, DggsKernel)] = Seq("z7" -> g, "3h" -> Grids.isea3h,
       "4h" -> Grids.isea4h, "43h" -> Grids.isea43h(3), "t4" -> Grids.isea4t, "d4" -> Grids.isea4d)
-    for ((name, k) <- kernels) time(s"$name.cellForPoint") {
-      var acc = 0L; var i = 0
-      while (i < n) { acc ^= k.cellForPoint(pts(i), res); i += 1 }
-      acc
+    for ((name, k) <- kernels) {
+      time(s"$name.cellForPoint") {
+        var acc = 0L; var i = 0
+        while (i < n) { acc ^= k.cellForPoint(pts(i), res); i += 1 }
+        acc
+      }
+      // the inverse direction on the ids the forward phase produced
+      val ids = Array.tabulate(math.min(n, 20000))(i => k.cellForPoint(pts(i), res))
+      time(s"$name.cellGeometry", ids.length) {
+        var acc = 0L; var i = 0
+        while (i < ids.length) {
+          acc ^= java.lang.Double.doubleToRawLongBits(k.cellCenter(ids(i)).lat)
+          acc += k.cellBoundary(ids(i)).length
+          i += 1
+        }
+        acc
+      }
     }
   }
 }

@@ -58,14 +58,14 @@ object FreezeFixtures {
       // need their own frozen column, not a substr
       val t6 = graft.dggs.T4.toT4String(t4g.cellForPoint(p, 6))
       val d6 = graft.dggs.D4.toD4String(d4g.cellForPoint(p, 6))
-      val h6 = graft.dggs.Z3.toZ3String(h3g.cellForPoint(p, 6))
+      val h6 = graft.dggs.Z3.toCellString(h3g.cellForPoint(p, 6))
       // f6 = ISEA4H res-6 Z4_STRING ('f' = four-hex; Z4 paths are
       // prefix-hierarchical, so index-space ancestors are substrs —
       // the same contract as h6)
-      val f6 = graft.dggs.Z4.toZ4String(h4g.cellForPoint(p, 6))
+      val f6 = graft.dggs.Z4.toCellString(h4g.cellForPoint(p, 6))
       // m6 = ISEA43H (mixed_aperture_level 3) res-6 digit string in the
       // shared Z4 layout — prefix-hierarchical like h6/f6
-      val m6 = graft.dggs.Z4.toZ4String(h43g.cellForPoint(p, 6))
+      val m6 = graft.dggs.Z4.toCellString(h43g.cellForPoint(p, 6))
       s"  ($lonM, $latM, '${cs(0)}', '${cs(1)}', '${cs(2)}', '${cs(3)}', $seq4, '$t6', '$d6', '$h6', '$f6', '$m6')"
     }
 
@@ -103,11 +103,11 @@ object FreezeFixtures {
         s"  ('$n', ${math.floor(c.lonDeg * 1e6).toLong}, " +
           s"${math.floor(c.latDeg * 1e6).toLong}, ${boundary(z).length})"
       }
-    val geom3hRows = geomRows(extent3hNames, graft.dggs.Z3.fromZ3String,
+    val geom3hRows = geomRows(extent3hNames, graft.dggs.Z3.fromCellString,
       h3g.cellCenter, h3g.cellBoundary)
-    val geom4hRows = geomRows(extent4hNames, graft.dggs.Z4.fromZ4String,
+    val geom4hRows = geomRows(extent4hNames, graft.dggs.Z4.fromCellString,
       h4g.cellCenter, h4g.cellBoundary)
-    val geom43hRows = geomRows(extent43hNames, graft.dggs.Z4.fromZ4String,
+    val geom43hRows = geomRows(extent43hNames, graft.dggs.Z4.fromCellString,
       h43g.cellCenter, h43g.cellBoundary)
 
     // antimeridian-crossing box (Fiji-ish): frozen as the UNION of its

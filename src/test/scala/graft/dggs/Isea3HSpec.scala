@@ -6,7 +6,7 @@ import Sphere._
 
 /** ISEA3H kernel + Z3 codec properties. No DGGRID golden ISEA3H ids
   * exist in the reference tests (ids are engine-canonical, documented in
-  * Isea3H's scaladoc); these properties pin the construction instead:
+  * HexKernel's scaladoc); these properties pin the construction instead:
   * exact partition (10·3^r + 2 distinct cells with distinct centers),
   * center→cell and point→cell round-trips, the EXACT integer nesting
   * relation (aperture-3 children sit on their parent's boundary — the
@@ -30,31 +30,31 @@ class Isea3HSpec extends AnyFunSuite {
     assert(Z3.baseCell(id) == 7)
     assert(Z3.resolution(id) == 4)
     assert(Z3.digits(id) == Seq(0, 2, 1, 1))
-    assert(Z3.toZ3String(id) == "070211")
-    assert(Z3.fromZ3String("070211") == id)
+    assert(Z3.toCellString(id) == "070211")
+    assert(Z3.fromCellString("070211") == id)
     assert(Z3.fromHex(Z3.toHex(id)) == id)
     assert(Z3.parent(id) == Z3.pack(7, Seq(0, 2, 1)))
     assert(Z3.ancestorAt(id, 2) == Z3.pack(7, Seq(0, 2)))
     assert(Z3.ancestorAt(id, 0) == Z3.pack(7, Seq.empty))
-    val kids = Z3.children(id)
+    val kids = g.children(id)
     assert(kids.size == 3 && kids.distinct.size == 3)
     assert(kids.forall(k => Z3.parent(k) == id))
     assert(kids.map(Z3.digit(_, 5)).sorted == Seq(0, 1, 2))
     // caps: only the center child
     val cap = Z3.pack(0, Seq(0, 0))
-    assert(Z3.children(cap) == Seq(Z3.pack(0, Seq(0, 0, 0))))
+    assert(g.children(cap) == Seq(Z3.pack(0, Seq(0, 0, 0))))
     // contiguous descendant ranges, disjoint across siblings
     val p = Z3.pack(3, Seq(2, 1))
-    val ds = Z3.descendants(p, 6)
+    val ds = g.descendants(p, 6)
     assert(ds.size == 81 && ds.distinct.size == 81)
     assert(ds.forall(d => d >= Z3.rangeMin(p) && d <= Z3.rangeMax(p)))
-    val ranges = Z3.children(p).map(c => (Z3.rangeMin(c), Z3.rangeMax(c))).sortBy(_._1)
+    val ranges = g.children(p).map(c => (Z3.rangeMin(c), Z3.rangeMax(c))).sortBy(_._1)
     ranges.sliding(2).foreach { case Seq(a, b) => assert(a._2 < b._1); case _ => }
     // malformed addresses raise LOUDLY instead of building corrupt ids
     // (round-8 review): the pad digit '3' in a real position, and an
     // out-of-radix ZORDER_STRING char that would otherwise alias a
     // different valid cell
-    intercept[IllegalArgumentException](Z3.fromZ3String("0530"))
+    intercept[IllegalArgumentException](Z3.fromCellString("0530"))
     intercept[IllegalArgumentException](Z3.pack(5, Seq(3, 0)))
     intercept[IllegalArgumentException](g.fromZorderString("05031x".take(6)))
     intercept[IllegalArgumentException](g.fromZorderString("050533"))
@@ -69,14 +69,14 @@ class Isea3HSpec extends AnyFunSuite {
       val cs = ids.map(g.cellCenter)
       for (a <- cs.indices; b <- (a + 1) until cs.size)
         assert(distance(cs(a), cs(b)) > 1e-9,
-          s"coincident centers ${Z3.toZ3String(ids(a))} / ${Z3.toZ3String(ids(b))}")
+          s"coincident centers ${Z3.toCellString(ids(a))} / ${Z3.toCellString(ids(b))}")
     }
   }
 
   test("center→cell round-trip for every cell at res 0..4") {
     for (r <- 0 to 4) {
       allIds(r).foreach { id =>
-        assert(g.cellForPoint(g.cellCenter(id), r) == id, Z3.toZ3String(id))
+        assert(g.cellForPoint(g.cellCenter(id), r) == id, Z3.toCellString(id))
       }
     }
   }
@@ -115,14 +115,14 @@ class Isea3HSpec extends AnyFunSuite {
           if (Z3.isPentagon(par)) {
             if (g.ownedCornerIdx(Z3.baseCell(id)) == 3) (np, np) else (0L, 0L)
           } else { val t = g.ownedIJ(par); (t._2, t._3) }
-        val expect = g.fromIJ(pi, pj, r - 1) * g.levelFactor3(r) +
-          g.stepFor(Z3.digit(id, r))
+        val expect = g.fromIJ(pi, pj, r - 1) * g.levelFactor(r) +
+          g.stepFor(r, Z3.digit(id, r))
         if (expect != g.fromIJ(ci, cj, r)) {
           seam += 1
           // every seam exception involves a quad-boundary class
           val onB = ci == 0 || cj == 0 || ci == n || cj == n ||
             pi == 0 || pj == 0 || pi == np || pj == np
-          assert(onB, s"interior seam at ${Z3.toZ3String(id)}")
+          assert(onB, s"interior seam at ${Z3.toCellString(id)}")
         }
       }
       // the seam fraction shrinks like the boundary/area ratio
@@ -135,7 +135,7 @@ class Isea3HSpec extends AnyFunSuite {
     val r = 4
     allQuadIds(r).foreach { id =>
       val d = distance(g.cellCenter(id), g.cellCenter(Z3.parent(id)))
-      if (Z3.digit(id, r) == 0) assert(d < 1e-12, Z3.toZ3String(id))
+      if (Z3.digit(id, r) == 0) assert(d < 1e-12, Z3.toCellString(id))
     }
     // non-center, non-seam children: geodesic distance ≈ the child lattice
     // unit (the parent hexagon's circumradius — i.e. ON its boundary)
@@ -174,7 +174,7 @@ class Isea3HSpec extends AnyFunSuite {
   test("ZORDER / ZORDER_STRING / Q2DI / INTERLEAVE round-trips") {
     val ids = allIds(4)
     ids.foreach { id =>
-      assert(g.fromZorder(g.toZorder(id)) == id, Z3.toZ3String(id))
+      assert(g.fromZorder(g.toZorder(id)) == id, Z3.toCellString(id))
       assert(g.fromZorderString(g.toZorderString(id)) == id)
       assert(g.toInterleave(id) == g.toZorderString(id))
       val (b, i, j) = g.toQ2di(id)
@@ -183,6 +183,17 @@ class Isea3HSpec extends AnyFunSuite {
     // ZORDER caps at res 17 like DGGRID's int64 forms cap by bit budget
     val deep = Z3.pack(5, Seq.fill(18)(1))
     assertThrows[IllegalArgumentException](g.toZorder(deep))
+  }
+
+  test("ZORDER_STRING has no bit budget: round-trips at res 18 and 20") {
+    val pts = Seq(GeoRad.fromDeg(44.0, -122.0), GeoRad.fromDeg(-33.9, 151.2),
+      GeoRad.fromDeg(71.3, 3.7))
+    for (r <- Seq(18, 20); p <- pts) {
+      val id = g.cellForPoint(p, r)
+      val sx = g.toZorderString(id)
+      assert(sx.length == 2 + 2 * r)
+      assert(g.fromZorderString(sx) == id, sx)
+    }
   }
 
   test("hex boundary has 6 vertices, pentagon 5; boundary encloses the center") {

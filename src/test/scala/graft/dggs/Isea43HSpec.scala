@@ -17,13 +17,13 @@ class Isea43HSpec extends AnyFunSuite {
 
   private val gm = Grids.isea43h(2) // mixed: 4,4,3,3,...
   private val g0 = Grids.isea43h(0) // pure aperture 3
-  private val gp = Grids.isea43h(Z4.MaxRes) // pure aperture 4
+  private val gp = Grids.isea43h(Z4.maxRes) // pure aperture 4
 
   /** enumerate all quad ids at res r for mixed level n4 */
   private def allQuadIds(g: Isea43H, r: Int): Seq[Long] = {
     def paths(k: Int): Seq[List[Int]] =
       if (k == 0) Seq(Nil)
-      else paths(k - 1).flatMap(p => (0 until g.apertureAt(k)).map(d => p :+ d))
+      else paths(k - 1).flatMap(p => (0 until g.radixAt(k)).map(d => p :+ d))
     (1 to 10).flatMap(q => paths(r).map(p => Z4.pack(q, p)))
   }
   private def allIds(g: Isea43H, r: Int): Seq[Long] =
@@ -41,14 +41,14 @@ class Isea43HSpec extends AnyFunSuite {
     // every res-3 cell: same center, same digit string
     allIds(g0, 3).foreach { id =>
       val z3 = Z3.pack(Z4.baseCell(id), Z4.digits(id))
-      assert(Z4.toZ4String(id).drop(2) == Z3.toZ3String(z3).drop(2))
+      assert(Z4.toCellString(id).drop(2) == Z3.toCellString(z3).drop(2))
       assert(distance(g0.cellCenter(id), h3.cellCenter(z3)) < 1e-12,
-        Z4.toZ4String(id))
+        Z4.toCellString(id))
     }
     // random point assignment at res 6 agrees digit-for-digit
     randomPoints(300, 43001).foreach { p =>
-      val a = Z4.toZ4String(g0.cellForPoint(p, 6))
-      val b = Z3.toZ3String(h3.cellForPoint(p, 6))
+      val a = Z4.toCellString(g0.cellForPoint(p, 6))
+      val b = Z3.toCellString(h3.cellForPoint(p, 6))
       assert(a == b, s"point $p: mixed(0)=$a isea3h=$b")
     }
     // ZORDER_STRING collapses to the aperture-3 convention
@@ -65,7 +65,7 @@ class Isea43HSpec extends AnyFunSuite {
   test("PURE EQUIVALENCE n4>=res: int64 ids match Isea4H exactly (enumeration + points)") {
     val h4 = Grids.isea4h
     allIds(gp, 3).foreach { id =>
-      assert(distance(gp.cellCenter(id), h4.cellCenter(id)) < 1e-12, Z4.toZ4String(id))
+      assert(distance(gp.cellCenter(id), h4.cellCenter(id)) < 1e-12, Z4.toCellString(id))
     }
     randomPoints(300, 43003).foreach { p =>
       assert(gp.cellForPoint(p, 6) == h4.cellForPoint(p, 6))
@@ -89,7 +89,7 @@ class Isea43HSpec extends AnyFunSuite {
         val cs = ids.map(gm.cellCenter)
         for (a <- cs.indices; b <- (a + 1) until cs.size)
           assert(distance(cs(a), cs(b)) > 1e-9,
-            s"coincident centers ${Z4.toZ4String(ids(a))} / ${Z4.toZ4String(ids(b))}")
+            s"coincident centers ${Z4.toCellString(ids(a))} / ${Z4.toCellString(ids(b))}")
       }
     }
   }
@@ -97,7 +97,7 @@ class Isea43HSpec extends AnyFunSuite {
   test("center→cell round-trip for every cell at res 0..4 (n4=2, crosses the aperture boundary)") {
     for (r <- 0 to 4) {
       allIds(gm, r).foreach { id =>
-        assert(gm.cellForPoint(gm.cellCenter(id), r) == id, Z4.toZ4String(id))
+        assert(gm.cellForPoint(gm.cellCenter(id), r) == id, Z4.toCellString(id))
       }
     }
   }
@@ -152,7 +152,7 @@ class Isea43HSpec extends AnyFunSuite {
           seam += 1
           val onB = ci == 0 || cj == 0 || ci == n || cj == n ||
             pi == 0 || pj == 0 || pi == np || pj == np
-          assert(onB, s"interior seam at ${Z4.toZ4String(id)}")
+          assert(onB, s"interior seam at ${Z4.toCellString(id)}")
         }
       }
       assert(seam <= 2 * 10 * (4 * n) + 40, s"res $r: $seam seams")
@@ -162,7 +162,7 @@ class Isea43HSpec extends AnyFunSuite {
   test("ZORDER / ZORDER_STRING / Q2DI round-trips at a mixed res; radix check") {
     val ids = allIds(gm, 4)
     ids.foreach { id =>
-      assert(gm.fromZorder(gm.toZorder(id)) == id, Z4.toZ4String(id))
+      assert(gm.fromZorder(gm.toZorder(id)) == id, Z4.toCellString(id))
       assert(gm.fromZorderString(gm.toZorderString(id)) == id)
       assert(gm.toInterleave(id) == gm.toZorderString(id))
       val (b, i, j) = gm.toQ2di(id)

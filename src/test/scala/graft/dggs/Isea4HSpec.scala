@@ -6,7 +6,7 @@ import Sphere._
 
 /** ISEA4H kernel + Z4 codec properties. No DGGRID golden ISEA4H ids
   * exist in the reference tests (ids are engine-canonical, documented in
-  * Isea4H's scaladoc); these properties pin the construction instead:
+  * HexKernel's scaladoc); these properties pin the construction instead:
   * exact partition (10·4^r + 2 distinct cells with distinct centers),
   * center→cell and point→cell round-trips, the EXACT integer nesting
   * relation (all four aperture-4 children sit INSIDE the closed parent
@@ -31,30 +31,30 @@ class Isea4HSpec extends AnyFunSuite {
     assert(Z4.baseCell(id) == 7)
     assert(Z4.resolution(id) == 4)
     assert(Z4.digits(id) == Seq(0, 3, 1, 2))
-    assert(Z4.toZ4String(id) == "070312")
-    assert(Z4.fromZ4String("070312") == id)
+    assert(Z4.toCellString(id) == "070312")
+    assert(Z4.fromCellString("070312") == id)
     assert(Z4.fromHex(Z4.toHex(id)) == id)
     assert(Z4.parent(id) == Z4.pack(7, Seq(0, 3, 1)))
     assert(Z4.ancestorAt(id, 2) == Z4.pack(7, Seq(0, 3)))
     assert(Z4.ancestorAt(id, 0) == Z4.pack(7, Seq.empty))
-    val kids = Z4.children(id)
+    val kids = g.children(id)
     assert(kids.size == 4 && kids.distinct.size == 4)
     assert(kids.forall(k => Z4.parent(k) == id))
     assert(kids.map(Z4.digit(_, 5)).sorted == Seq(0, 1, 2, 3))
     // caps: only the center child
     val cap = Z4.pack(0, Seq(0, 0))
-    assert(Z4.children(cap) == Seq(Z4.pack(0, Seq(0, 0, 0))))
+    assert(g.children(cap) == Seq(Z4.pack(0, Seq(0, 0, 0))))
     // contiguous descendant ranges, disjoint across siblings
     val p = Z4.pack(3, Seq(2, 1))
-    val ds = Z4.descendants(p, 6)
+    val ds = g.descendants(p, 6)
     assert(ds.size == 256 && ds.distinct.size == 256)
     assert(ds.forall(d => d >= Z4.rangeMin(p) && d <= Z4.rangeMax(p)))
-    val ranges = Z4.children(p).map(c => (Z4.rangeMin(c), Z4.rangeMax(c))).sortBy(_._1)
+    val ranges = g.children(p).map(c => (Z4.rangeMin(c), Z4.rangeMax(c))).sortBy(_._1)
     ranges.sliding(2).foreach { case Seq(a, b) => assert(a._2 < b._1); case _ => }
     // malformed addresses raise LOUDLY (round-8 review): pad digit '7'
     // in a real position, and the non-binary ZORDER_STRING char that
     // used to alias a different valid cell ("050013" ≠ "050111")
-    intercept[IllegalArgumentException](Z4.fromZ4String("0570"))
+    intercept[IllegalArgumentException](Z4.fromCellString("0570"))
     intercept[IllegalArgumentException](Z4.pack(5, Seq(7, 0)))
     intercept[IllegalArgumentException](g.fromZorderString("050013"))
   }
@@ -68,14 +68,14 @@ class Isea4HSpec extends AnyFunSuite {
       val cs = ids.map(g.cellCenter)
       for (a <- cs.indices; b <- (a + 1) until cs.size)
         assert(distance(cs(a), cs(b)) > 1e-9,
-          s"coincident centers ${Z4.toZ4String(ids(a))} / ${Z4.toZ4String(ids(b))}")
+          s"coincident centers ${Z4.toCellString(ids(a))} / ${Z4.toCellString(ids(b))}")
     }
   }
 
   test("center→cell round-trip for every cell at res 0..3") {
     for (r <- 0 to 3) {
       allIds(r).foreach { id =>
-        assert(g.cellForPoint(g.cellCenter(id), r) == id, Z4.toZ4String(id))
+        assert(g.cellForPoint(g.cellCenter(id), r) == id, Z4.toCellString(id))
       }
     }
   }
@@ -114,13 +114,13 @@ class Isea4HSpec extends AnyFunSuite {
           if (Z4.isPentagon(par)) {
             if (g.ownedCornerIdx(Z4.baseCell(id)) == 3) (np, np) else (0L, 0L)
           } else { val t = g.ownedIJ(par); (t._2, t._3) }
-        val expect = g.fromIJ(pi, pj) * g.Two + g.stepFor(Z4.digit(id, r))
-        if (expect != g.fromIJ(ci, cj)) {
+        val expect = g.fromIJ(pi, pj, r - 1) * g.levelFactor(r) + g.stepFor(r, Z4.digit(id, r))
+        if (expect != g.fromIJ(ci, cj, r)) {
           seam += 1
           // every seam exception involves a quad-boundary class
           val onB = ci == 0 || cj == 0 || ci == n || cj == n ||
             pi == 0 || pj == 0 || pi == np || pj == np
-          assert(onB, s"interior seam at ${Z4.toZ4String(id)}")
+          assert(onB, s"interior seam at ${Z4.toCellString(id)}")
         }
       }
       // the seam fraction shrinks like the boundary/area ratio
@@ -149,12 +149,12 @@ class Isea4HSpec extends AnyFunSuite {
       }
       if (interior) {
         val d = distance(g.cellCenter(id), g.cellCenter(par))
-        if (Z4.digit(id, r) == 0) assert(d < 1e-12, Z4.toZ4String(id))
+        if (Z4.digit(id, r) == 0) assert(d < 1e-12, Z4.toCellString(id))
         else {
           // one child unit away, within 30% (projection distortion)
-          assert(d > 0.7 * childUnit && d < 1.3 * childUnit, Z4.toZ4String(id))
+          assert(d > 0.7 * childUnit && d < 1.3 * childUnit, Z4.toCellString(id))
           // strictly inside the parent circumradius 2/√3 ≈ 1.155
-          assert(d < 1.155 * childUnit * 1.3, Z4.toZ4String(id))
+          assert(d < 1.155 * childUnit * 1.3, Z4.toCellString(id))
         }
       }
     }
@@ -175,7 +175,7 @@ class Isea4HSpec extends AnyFunSuite {
   test("ZORDER / ZORDER_STRING / Q2DI / INTERLEAVE round-trips") {
     val ids = allIds(3) ++ allQuadIds(4)
     ids.foreach { id =>
-      assert(g.fromZorder(g.toZorder(id)) == id, Z4.toZ4String(id))
+      assert(g.fromZorder(g.toZorder(id)) == id, Z4.toCellString(id))
       assert(g.fromZorderString(g.toZorderString(id)) == id)
       assert(g.toInterleave(id) == g.toZorderString(id))
       val (b, i, j) = g.toQ2di(id)

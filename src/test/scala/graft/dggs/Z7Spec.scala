@@ -36,6 +36,12 @@ class Z7Spec extends AnyFunSuite {
     }
   }
 
+  test("a supplied pad digit 7 raises instead of building a mislabelled id") {
+    intercept[IllegalArgumentException](Z7.fromZ7String("0570"))
+    intercept[IllegalArgumentException](Z7.pack(5, Seq(7, 0)))
+    assert(Z7.resolution(Z7.fromZ7String("056")) == 1)
+  }
+
   test("hex round-trip") {
     forAllCells() { z => assert(Z7.fromHex(Z7.toHex(z)) == z) }
   }
@@ -150,5 +156,15 @@ class DggsConfSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(DggsConf.resolutionForIntercellDistance(63.0) == 5)
     assert(DggsConf.resolutionForIntercellDistance(62.0) == 6)
     assert(DggsConf("IGEO7", 5).grid.isInstanceOf[IGeo7])
+  }
+  test("preset kernels come from the per-JVM kernel cache") {
+    import graft.spark.Grids
+    assert(DggsConf("ISEA3H", 5).hexGrid3 eq Grids.isea3h)
+    assert(DggsConf("ISEA4H", 5).hexGrid4 eq Grids.isea4h)
+    assert(DggsConf("ISEA43H", 5).hexGridMixed(3) eq Grids.isea43h(3))
+    assert(DggsConf("ISEA4T", 5).triangleGrid eq Grids.isea4t)
+    assert(DggsConf("ISEA4D", 5).diamondGrid eq Grids.isea4d)
+    assert(DggsConf("IGEO7", 5).grid eq Grids.default)
+    intercept[IllegalArgumentException](DggsConf("ISEA43H", 5).hexGridMixed(21))
   }
 }

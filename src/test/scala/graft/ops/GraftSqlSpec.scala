@@ -95,7 +95,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       "z3_cell" -> (() => {
         // SQL path == column/kernel path (the frozen-mapping anchor)
         assert(one("z3_string(z3_cell(24.7D, 59.4D, 6))") ==
-          graft.dggs.Z3.toZ3String(graft.spark.Grids.isea3h
+          graft.dggs.Z3.toCellString(graft.spark.Grids.isea3h
             .cellForPoint(graft.dggs.Sphere.GeoRad.fromDeg(59.4, 24.7), 6)))
       }),
       "z3_string" -> (() =>
@@ -105,7 +105,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
           one("substr(z3_string(z3_cell(24.7D, 59.4D, 6)), 1, 4)"))),
       "z4_cell" -> (() => {
         assert(one("z4_string(z4_cell(24.7D, 59.4D, 6))") ==
-          graft.dggs.Z4.toZ4String(graft.spark.Grids.isea4h
+          graft.dggs.Z4.toCellString(graft.spark.Grids.isea4h
             .cellForPoint(graft.dggs.Sphere.GeoRad.fromDeg(59.4, 24.7), 6)))
       }),
       "z4_string" -> (() =>
@@ -117,7 +117,7 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
         // mixed level 3 in the shared Z4 layout; n4 = res reproduces the
         // pure aperture-4 id (the Isea43H pure-equivalence contract)
         assert(one("z4_string(z43_cell(24.7D, 59.4D, 6, 3))") ==
-          graft.dggs.Z4.toZ4String(graft.spark.Grids.isea43h(3)
+          graft.dggs.Z4.toCellString(graft.spark.Grids.isea43h(3)
             .cellForPoint(graft.dggs.Sphere.GeoRad.fromDeg(59.4, 24.7), 6)))
         assert(one("z43_cell(24.7D, 59.4D, 6, 6)") ==
           one("z4_cell(24.7D, 59.4D, 6)"))
@@ -292,6 +292,15 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(registered == GraftSql.functionNames.toSet,
       s"declared-but-not-registered: ${GraftSql.functionNames.toSet -- registered}; " +
         s"registered-but-not-declared: ${registered -- GraftSql.functionNames.toSet}")
+  }
+
+  test("z7_from_string raises on the pad digit 7 in a real position") {
+    GraftSql.register(spark)
+    val e = intercept[Exception](spark.sql("SELECT z7_from_string('0570') AS v").collect())
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
+      .mkString(" | ")
+    assert(msgs.contains("digit 7 out of range"), msgs)
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)

@@ -906,13 +906,13 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.select(col("cell_id")).as[Long].collect().toSet
     locally {
       import graft.dggs.Z3
-      val want = (0 to 11).flatMap(b => Z3.descendants(Z3.pack(b, Seq.empty), 4)).toSet
+      val want = (0 to 11).flatMap(b => Grids.isea3h.descendants(Z3.pack(b, Seq.empty), 4)).toSet
       assert(want.size == 10 * 81 + 2)
       assert(got(GridOps.gridCellIdsForExtent(spark, 4, None, Grids.isea3h)) == want)
     }
     locally {
       import graft.dggs.Z4
-      val want = (0 to 11).flatMap(b => Z4.descendants(Z4.pack(b, Seq.empty), 4)).toSet
+      val want = (0 to 11).flatMap(b => Grids.isea4h.descendants(Z4.pack(b, Seq.empty), 4)).toSet
       assert(want.size == 10 * 256 + 2)
       assert(got(GridOps.gridCellIdsForExtent(spark, 4, None, Grids.isea4h)) == want)
     }
@@ -969,7 +969,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       import graft.dggs.Z3
       val g = Grids.isea3h
       check("3H", 6,
-        (0 to 11).flatMap(bse => Z3.descendants(Z3.pack(bse, Seq.empty), 6)),
+        (0 to 11).flatMap(bse => g.descendants(Z3.pack(bse, Seq.empty), 6)),
         g.cellCenter, g.cellBoundary,
         (a, c, d, e) => GridOps.gridCellIdsForExtent(spark, 6, Some((a, c, d, e)), g))
     }
@@ -977,7 +977,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       import graft.dggs.Z4
       val g = Grids.isea4h
       check("4H", 5,
-        (0 to 11).flatMap(bse => Z4.descendants(Z4.pack(bse, Seq.empty), 5)),
+        (0 to 11).flatMap(bse => g.descendants(Z4.pack(bse, Seq.empty), 5)),
         g.cellCenter, g.cellBoundary,
         (a, c, d, e) => GridOps.gridCellIdsForExtent(spark, 5, Some((a, c, d, e)), g))
     }
