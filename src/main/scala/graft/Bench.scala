@@ -63,14 +63,29 @@ object Bench {
     val perCell = geo
       .select(col("lon"), col("lat"),
         F.cellForPoint(col("lon"), col("lat"), lit(res)).as("cell_id"))
-      .withColumn("key4", F.z7SpreadKey(F.z7AncestorAtExpr(col("cell_id"), lit(joinRes))))
+      .withColumn("key4", F.z7SpreadKey(F.ancestorAt(col("cell_id"), lit(joinRes))))
       .join(broadcast(coverDf), Seq("key4"), "left")
-      .groupBy(F.z7AncestorAtExpr(col("cell_id"), lit(3)).as("cell3"))
+      .groupBy(F.ancestorAt(col("cell_id"), lit(3)).as("cell3"))
       .agg(sum(hits(col("wkts"), col("lon"), col("lat"))).as("hits"))
     val totals = perCell.agg(count(lit(1)), coalesce(sum("hits"), lit(0L))).head()
     val rows = totals.getLong(0) + totals.getLong(1)
     (rows, rows)
   }
+
+  /** the quiet-band file: `{"<sf>": {"<query>": seconds, …}, …}` */
+  private[graft] def parseBands(txt: String): Map[String, Map[String, Double]] =
+    raw""""([^"]+)"\s*:\s*\{([^}]*)\}""".r.findAllMatchIn(txt).map { sf =>
+      sf.group(1) -> raw""""([^"]+)"\s*:\s*([0-9.Ee+-]+)""".r.findAllMatchIn(sf.group(2))
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }.toMap
+
+  /** inverse of [[parseBands]]: keys sorted, seconds to 4 decimals */
+  private[graft] def renderBands(bands: Map[String, Map[String, Double]]): String =
+    bands.toSeq.sortBy(_._1).map { case (sf, qs) =>
+      qs.toSeq.sortBy(_._1).map { case (k, v) =>
+        "    \"" + k + "\": " + BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+      }.mkString("  \"" + sf + "\": {\n", ",\n", "\n  }")
+    }.mkString("{\n", ",\n", "\n}\n")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -88,33 +103,40 @@ object Bench {
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // ---- bench self-adjudication (round-6 verdict #2) ----
-    // BENCH/quiet_band.json holds each query's quietest controlled
-    // best-of-2 reading (updated only on controlled runs via
+    // BENCH/quiet_band.json holds, per scale factor (the sf directory's
+    // name, e.g. "sf0.1"), each query's quietest controlled best-of-2
+    // reading (updated only on controlled runs via
     // SPARK_GRAFT_UPDATE_BAND=1, never by the driver one-shot). At
     // runtime a best-of-2 reading > 3× its band value earns the query a
     // THIRD cold repetition; if even the best of three stays past 3×,
     // the query is flagged in "suspect" — so a contention spike that
     // needed manual adjudication in 3 of the last 4 rounds now
     // adjudicates itself inside the run, and a clean run flags nothing.
+    // A run at a scale factor with no band entry is not adjudicated:
+    // another sf's readings are no floor for this one.
     val bandPath = sys.env.getOrElse("SPARK_GRAFT_BAND", "BENCH/quiet_band.json")
-    val band: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(bandPath)), "UTF-8")
-      // keys are validated against the query registry (+ the two named
-      // whole-pipeline legs) so pointing SPARK_GRAFT_BAND at an arbitrary
-      // JSON with numeric fields cannot absorb unrelated keys into the
-      // adjudication map (round-7 ADVICE)
-      val known = SparkEntry.queries.keySet ++
-        Set("flagship_assign_join_rollup", "raster_to_cells_full")
-      raw""""([^"]+)"\s*:\s*([0-9.Ee+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter { case (k, _) => known.contains(k) }.toMap
+    val sfKey = java.nio.file.Paths.get(sfDir).getFileName.toString
+    // every sf entry of the band file: sf -> (query -> seconds)
+    val bands: Map[String, Map[String, Double]] = try {
+      parseBands(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(bandPath)), "UTF-8"))
     } catch {
       // a missing band file AND a malformed one both degrade to "no
       // adjudication" — a corrupt value must not take down the gate
       // metric the band exists to protect
       case scala.util.control.NonFatal(_) => Map.empty
     }
+    // keys are validated against the query registry (+ the two named
+    // whole-pipeline legs) so pointing SPARK_GRAFT_BAND at an arbitrary
+    // JSON with numeric fields cannot absorb unrelated keys into the
+    // adjudication map (round-7 ADVICE)
+    val known = SparkEntry.queries.keySet ++
+      Set("flagship_assign_join_rollup", "raster_to_cells_full")
+    val band: Map[String, Double] =
+      bands.getOrElse(sfKey, Map.empty).filter { case (k, _) => known.contains(k) }
+    if (!bands.contains(sfKey))
+      System.err.println(s"[bench] WARNING: $bandPath has no $sfKey entry; " +
+        "suspect adjudication is off for this run")
     val suspects = scala.collection.mutable.ArrayBuffer[String]()
     // untimed JIT/codegen warmup so the first timed query isn't cold
     try SparkEntry.queries("q1_agg")(spark, sfDir).count()
@@ -208,20 +230,13 @@ object Bench {
       s""""flagship_cells_per_sec":${(nGeo / wall).toLong}}"""
     // controlled-run band refresh (never the driver one-shot): keep the
     // QUIETEST observed best-of-2 per query — the floor the 3× threshold
-    // interprets. A missing band file is seeded whole.
+    // interprets. Only this run's sf entry changes; a missing entry (or
+    // band file) is seeded whole.
     if (sys.env.get("SPARK_GRAFT_UPDATE_BAND").contains("1")) {
-      val merged = (band.keySet ++ results.keySet).toSeq.sorted.map { k =>
-        val v = (band.get(k), results.get(k)) match {
-          case (Some(o), Some(n)) => math.min(o, n)
-          case (None, Some(n)) => n
-          case (Some(o), None) => o
-          case _ => 0.0
-        }
-        "  \"" + k + "\": " +
-          BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-      }
+      val merged = (band.keySet ++ results.keySet)
+        .map(k => k -> (band.get(k) ++ results.get(k)).min).toMap
       java.nio.file.Files.write(java.nio.file.Paths.get(bandPath),
-        merged.mkString("{\n", ",\n", "\n}\n").getBytes("UTF-8"))
+        renderBands(bands + (sfKey -> merged)).getBytes("UTF-8"))
     }
     // full per-query JSON goes to the file for humans/the judge; STDOUT
     // gets one COMPACT final line (≤200 bytes, 3-decimal rounding). The
@@ -369,7 +384,7 @@ object BenchPyramid {
     }
     leg("naive_per_level") {
       (0 to res).map { r =>
-        cells.groupBy(F.z7AncestorAtExpr(col("cell_id"), lit(r)).as("c"))
+        cells.groupBy(F.ancestorAt(col("cell_id"), lit(r)).as("c"))
           .agg(count(lit(1)).as("n")).count()
       }.sum
     }
@@ -727,7 +742,7 @@ object BenchStore {
         f""""file_mb":${fileMb(touched)}}""")
     }
     leg("full_scan") { spark.read.parquet(dir) }
-    val parent = graft.dggs.Z7.fromZ7String("023")
+    val parent = graft.dggs.Z7.fromCellString("023")
     leg("region_range") {
       graft.ops.CorpusStore.readCellRange(spark, dir, "cell_id", parent)
     }

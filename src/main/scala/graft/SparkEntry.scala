@@ -620,7 +620,7 @@ object SparkEntry {
     "dggs_parent_rollup" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6)
-        .groupBy(F.cellString(F.z7AncestorAtExpr(col("cell_id"), lit(3))).as("name3"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(3))).as("name3"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_pyramid" -> ((s, dir) => {
@@ -643,7 +643,7 @@ object SparkEntry {
       // construction, so the key is unique)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 3)
-        .withColumn("name1", F.cellString(F.z7AncestorAtExpr(col("cell_id"), lit(1))))
+        .withColumn("name1", F.cellString(F.ancestorAt(col("cell_id"), lit(1))))
       TextOps.sampleCapPerKey(cells, col("name1"),
           substring(col("doc_id"), 5, 12).cast("long") * 8 + col("offset"), 4)
         .select(col("doc_id"), col("offset"), col("name1"),
@@ -679,7 +679,7 @@ object SparkEntry {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       import graft.spark.SketchFunctions
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 5)
-        .groupBy(F.cellString(F.z7AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2))).as("name2"))
         .agg(SketchFunctions.kmvDistinct(col("doc_id"), 32).as("kmv_est"),
           countDistinct(col("doc_id")).as("n_exact"))
     }),
@@ -928,7 +928,7 @@ object SparkEntry {
       val g = Grids.isea4t
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_4t_children" -> ((s, _) => {
@@ -954,7 +954,7 @@ object SparkEntry {
       val g = Grids.isea4d
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
 
@@ -974,7 +974,7 @@ object SparkEntry {
       // substr over the frozen res-6 column is the exact semantics
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_3h_children" -> ((s, _) => {
@@ -1068,7 +1068,7 @@ object SparkEntry {
       // frozen res-6 column is the exact semantics
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_4h_children" -> ((s, _) => {
@@ -1151,7 +1151,7 @@ object SparkEntry {
       // the frozen res-6 digits and the res-2 ancestor
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAtExpr(col("cell_id"), lit(2), g), g).as("name2"))
+        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
         .agg(count(lit(1)).as("n"))
     }),
     "dggs_43h_children" -> ((s, _) => {

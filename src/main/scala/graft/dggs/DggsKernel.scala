@@ -8,12 +8,16 @@ import Sphere.GeoRad
   * mixed_aperture_level); here the kernel value is that parameter, and
   * the Spark and operator layers route on it instead of forking per grid.
   *
-  * Besides geometry, hierarchy and the string codec, a kernel states the
-  * id-layout facts the native Column forms are built from:
-  *  - [[slotBits]]: the hex layouts put the base in the top nibble and
-  *    pad unused digit slots with all-ones bits (Z7/Z4/Z43: 3-bit slots,
-  *    Z3: 2-bit); 0 marks the Quat2 layout of T4/D4 (explicit res field
-  *    at bit 48, zero-padded 2-bit digits — Quat2Codec);
+  * The hierarchy methods are the only readers of hierarchy from id bits:
+  * the Spark Column forms of `resolution`, `parent` and `ancestorAt` are
+  * direct calls into them. Besides geometry, hierarchy and the string
+  * codec, a kernel states the id-layout facts the operator layer's
+  * closed forms use (whole-earth enumeration, compaction subtree sizes):
+  *  - [[slotBits]]: the hex layouts ([[SlotCodec]]: Z7, Z3, Z4) put the
+  *    base in the top nibble and pad unused digit slots with all-ones
+  *    bits (Z7/Z4/Z43: 3-bit slots, Z3: 2-bit); 0 marks the Quat2 layout
+  *    of T4/D4 (explicit res field at bit 48, zero-padded 2-bit digits —
+  *    Quat2Codec);
   *  - [[radixAt]]: the children per quad cell at a level, i.e. the
   *    aperture there (ISEA43H switches from 4 to 3 after level `n4`);
   *  - [[capBases]]: the ISEA3H/4H/43H polar caps 0 and 11 own only their
@@ -27,9 +31,9 @@ import Sphere.GeoRad
   *
   * Kernels are immutable and thread-safe after construction. A kernel is
   * serialized as its [[KernelSpec]] and resolves to the receiving JVM's
-  * cached instance ([[DggsKernel.apply]]), so a UDF closure may capture a
-  * kernel directly: each task ships a few bytes, and every executor
-  * builds the quad charts and shift tables once.
+  * cached instance ([[DggsKernel.apply]]), so a UDF closure or a plan
+  * literal may hold a kernel directly: each task ships a few bytes, and
+  * every executor builds the quad charts and shift tables once.
   */
 trait DggsKernel extends Serializable {
   /** kind, ISEA43H aperture-4 level count and orientation: the cache key */
@@ -61,6 +65,9 @@ trait DggsKernel extends Serializable {
   def radixAt(level: Int): Int
   def capBases: Seq[Int] = Nil
   def pentagonsLoseAChild: Boolean = false
+
+  /** stable across JVMs, so a plan that holds the kernel prints the same */
+  override def toString: String = spec.toString
 
   protected final def writeReplace(): AnyRef = new DggsKernel.Shipped(spec)
 }

@@ -44,13 +44,13 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
   def ancestorAt(z: Long, r: Int): Long = Z7.ancestorAt(z, r)
   def children(z: Long): Seq[Long] = Z7.children(z)
   def descendants(z: Long, toRes: Int): Seq[Long] = Z7.descendants(z, toRes)
-  def toCellString(z: Long): String = Z7.toZ7String(z)
-  def fromCellString(s: String): Long = Z7.fromZ7String(s)
-  def slotBits: Int = 3
-  def radixAt(level: Int): Int = 7
+  def toCellString(z: Long): String = Z7.toCellString(z)
+  def fromCellString(s: String): Long = Z7.fromCellString(s)
+  def slotBits: Int = Z7.slotBits
+  def radixAt(level: Int): Int = Z7.radix
   override def pentagonsLoseAChild: Boolean = true
 
-  val maxRes: Int = Z7.MaxRes
+  val maxRes: Int = Z7.maxRes
   private val factorEis: Array[Eis] = {
     val arr = new Array[Eis](maxRes + 1)
     var f = Eis(1, 0)

@@ -1,27 +1,30 @@
 package graft.dggs
 
-/** Hierarchical int64 id codec of the aperture-3/4 hexagon grids: a base
-  * cell and one fixed-width digit slot per resolution, unused slots
-  * padded with all-ones bits. [[Z3]] (ISEA3H) and [[Z4]] (ISEA4H, and
-  * ISEA43H, whose aperture-3 levels use digits 0-2 of the same slots)
-  * are its two instances.
+/** Hierarchical int64 id codec of the hexagon grids: a base cell and
+  * one fixed-width digit slot per resolution, unused slots padded with
+  * all-ones bits. Its three instances are [[Z7]] (IGEO7, the reference's
+  * own layout, igeo7.py:16-122), [[Z3]] (ISEA3H) and [[Z4]] (ISEA4H, and
+  * ISEA43H, whose aperture-3 levels use digits 0-2 of the same slots).
+  * This is the one place that reads hierarchy (resolution, parent,
+  * ancestors) from the id bits of these grids; the Spark Column forms
+  * call it through the kernel.
   *
   * The reference exposes Z3 / Z3_STRING for ISEA3H
   * (dggrid_runner.py:131-134, HIERNDX v8 :174-184) and the ZORDER /
   * ZORDER_STRING / INTERLEAVE forms for the aperture-3, 4 and mixed hex
   * grids (:124, :134), but publishes no golden ids for any of them and
-  * defines no "Z4". So — like SEQNUM and the T4/D4 codecs — the digit
-  * convention is ENGINE-CANONICAL: bijective, hierarchical, documented,
-  * and pinned by property tests (Isea3HSpec, Isea4HSpec), not by DGGRID
-  * bit parity. The DGGRID-named forms are address transforms over it
-  * ([[HexKernel]]).
+  * defines no "Z4". So — like SEQNUM and the T4/D4 codecs — the Z3/Z4
+  * digit convention is ENGINE-CANONICAL: bijective, hierarchical,
+  * documented, and pinned by property tests (Isea3HSpec, Isea4HSpec),
+  * not by DGGRID bit parity. The DGGRID-named forms are address
+  * transforms over it ([[HexKernel]]).
   *
-  * Layout (Z7's layout family, igeo7.py:16-122):
-  *   - 4 MSBs = base cell 0-11: 0 = icosahedron vertex v0 (the quad
-  *     layout's cap), 1-10 = the ten rhombic quads, 11 = vertex v11;
-  *   - then `maxRes` slots of `slotBits` bits (Z3: 30 × 2, Z4: 20 × 3),
-  *     each a digit below `radix`; the all-ones slot value is the
-  *     "beyond resolution" pad;
+  * Layout:
+  *   - 4 MSBs = base cell 0-11 (Z3/Z4: 0 = icosahedron vertex v0, the
+  *     quad layout's cap, 1-10 = the ten rhombic quads, 11 = vertex v11);
+  *   - then `maxRes` slots of `slotBits` bits (Z7: 20 × 3, Z3: 30 × 2,
+  *     Z4: 20 × 3), each a digit below `radix`; the all-ones slot value
+  *     is the "beyond resolution" pad;
   *   - the string form is the zero-padded 2-digit base + one char per
   *     digit; resolution = number of non-pad digits, parent = drop the
   *     last digit.
@@ -29,7 +32,7 @@ package graft.dggs
   * Because the pad is all-ones, every descendant of a resolution-r cell
   * shares its leading 4 + slotBits·r bits: descendants form ONE
   * contiguous int64 range [rangeMin, rangeMax], so COARSE_CELLS and
-  * subtree pruning are min/max range predicates (as for Z7; SURVEY.md §4).
+  * subtree pruning are min/max range predicates (SURVEY.md §4).
   */
 class SlotCodec(val slotBits: Int, val maxRes: Int, val radix: Int, val name: String)
     extends Serializable {
@@ -68,12 +71,14 @@ class SlotCodec(val slotBits: Int, val maxRes: Int, val radix: Int, val name: St
   /** Digit at level `i` (1-based: level 1 is the first digit). */
   @inline final def digit(z: Long, i: Int): Int = ((z >>> shiftAt(i)) & pad).toInt
 
-  /** Resolution = number of leading non-pad digits. */
-  final def resolution(z: Long): Int = {
-    var r = 0
-    while (r < maxRes && digit(z, r + 1) != pad) r += 1
-    r
-  }
+  /** Resolution = number of non-pad digits, read from the trailing
+    * all-ones run: the pads are whole slots and the last real digit is
+    * not all-ones, so the run spans the pads plus fewer than `slotBits`
+    * bits. Capped at 60 because at res 0 a base nibble ending in 1-bits
+    * extends the run.
+    */
+  final def resolution(z: Long): Int =
+    maxRes - math.min(java.lang.Long.numberOfTrailingZeros(~z), 60) / slotBits
 
   final def digits(z: Long): Seq[Int] = (1 to resolution(z)).map(digit(z, _))
 

@@ -36,7 +36,7 @@ object CorpusStore {
   /** same by Z7 string prefix */
   def readCellPrefix(spark: SparkSession, dir: String, cellCol: String,
                      prefix: String): DataFrame =
-    readCellRange(spark, dir, cellCol, Z7.fromZ7String(prefix))
+    readCellRange(spark, dir, cellCol, Z7.fromCellString(prefix))
 
   /** T4/D4 variants: triangle and diamond ids carry the resolution in
     * their high bits, so the descendant range is per-target-resolution

@@ -314,32 +314,7 @@ object GridOps {
         val base = (cell: Column) => shiftrightunsigned(cell, 60).bitwiseAND(lit(0xFL))
         (cell, r) => when(base(cell).isin(kernel.capBases: _*), lit(1L)).otherwise(quadSize(r))
       } else (_, r) => quadSize(r)
-    val (resOf, ancestorAt): (Column => Column, (Column, Int) => Column) =
-      if (kernel.slotBits > 0)
-        (F.resolution(_, kernel), hexAncestorAt(kernel.slotBits))
-      else // res rides the Quat2 layout's explicit high-bits field — native
-        (c => shiftrightunsigned(c, 48).bitwiseAND(lit(31L)).cast("int"), quat2AncestorAt)
-    compactCellsOnePass(cells, cellCol, keyCols, resOf, ancestorAt, sizeOf, maxRes)
-  }
-
-  /** native ancestor-at-k for the hex codecs (base<<60, `slotBits` per
-    * digit, all-ones pad): pad every level deeper than the PLAN-TIME
-    * level k — identical to Z7/Z3/Z4.ancestorAt.
-    */
-  private def hexAncestorAt(slotBits: Int)(cell: Column, k: Int): Column = {
-    val keepBits = 60 - slotBits * k
-    if (keepBits <= 0) cell else cell.bitwiseOR(lit((1L << keepBits) - 1L))
-  }
-
-  /** native ancestor-at-k for the Quat2 (T4/D4) layout: explicit res
-    * field in the high bits, zero-padded digits — Quat2Codec.ancestorAt.
-    */
-  private def quat2AncestorAt(cell: Column, k: Int): Column = {
-    val mask = if (k == 0) 0L
-      else ~((1L << (48 - 2 * k)) - 1L) & ((1L << 48) - 1L)
-    shiftleft(shiftrightunsigned(cell, 48).bitwiseAND(lit(~31L))
-        .bitwiseOR(lit(k.toLong)), 48)
-      .bitwiseOR(cell.bitwiseAND(lit(mask)))
+    compactCellsOnePass(cells, cellCol, keyCols, sizeOf, kernel)
   }
 
   /** Single-pass compaction engine shared by every grid codec (round 9 —
@@ -360,19 +335,18 @@ object GridOps {
     * not complete (input cells are complete leaves of this lattice, so
     * untouched scatter cells emerge unchanged).
     *
-    * Plan shape: distinct → posexplode of the ≤ res+1 ancestors (with
-    * the parent riding along, so maximality needs no second ancestor
-    * computation) → ONE partial-aggregated sum keyed on (keys, ancestor)
-    * → completeness filter → one self-anti-join on the parent key. No
-    * driver iteration, no per-round caches; the ancestor bit math is
-    * native (codegen) for every codec.
+    * Plan shape: distinct → explode of the ≤ res+1 levels, each with
+    * its ancestor and that ancestor's parent (so maximality needs no
+    * second ancestor pass) → ONE partial-aggregated sum keyed on (keys,
+    * ancestor) → completeness filter → one self-anti-join on the parent
+    * key. No
+    * driver iteration, no per-round caches; the resolution and ancestor
+    * reads are native calls into the kernel for every codec.
     */
   private def compactCellsOnePass(cells: DataFrame, cellCol: String,
                                   keyCols: Seq[String],
-                                  resOf: Column => Column,
-                                  ancestorAt: (Column, Int) => Column,
                                   sizeOf: (Column, Column) => Column,
-                                  maxRes: Int): DataFrame = {
+                                  kernel: DggsKernel): DataFrame = {
     // keyCols: compact independently per key group (e.g. per poly_id for
     // a multi-polygon cover relation) — completeness then requires all
     // siblings within ONE group, and extra per-group columns that are
@@ -380,20 +354,17 @@ object GridOps {
     // in keyCols unchanged
     val keys = keyCols.map(col)
     val dist = cells.select(keys :+ col(cellCol).as("cell_id"): _*).distinct()
-      .withColumn("__r", resOf(col("cell_id")))
+      .withColumn("__r", F.resolution(col("cell_id"), kernel))
       .withColumn("__size", sizeOf(col("cell_id"), col("__r")))
-    val ancs = (0 to maxRes).map(k => ancestorAt(col("cell_id"), k))
-    // ancestors at levels 0..__r as (level, ancestor, its parent)
-    // structs; levels deeper than __r are sliced away before the explode
-    val pairArr = array((0 to maxRes).map { k =>
-      struct(ancs(k).as("a"),
-        (if (k == 0) lit(null).cast("long") else ancs(k - 1)).as("p"))
-    }: _*)
+    // one row per level 0..__r: the ancestor there and its parent, two
+    // kernel calls per row (the parent call only runs above level 0)
     val anc = dist
-      .select(keys ++ Seq(col("__size"),
-        posexplode(slice(pairArr, lit(1), col("__r") + lit(1)))): _*)
-      .select(keys ++ Seq(col("pos").as("__k"), col("col.a").as("__a"),
-        col("col.p").as("__p"), col("__size")): _*)
+      .select(keys ++ Seq(col("cell_id"), col("__size"),
+        explode(sequence(lit(0), col("__r"))).as("__k")): _*)
+      .select(keys ++ Seq(col("__k"),
+        F.ancestorAt(col("cell_id"), col("__k"), kernel).as("__a"),
+        when(col("__k") > 0, F.ancestorAt(col("cell_id"), col("__k") - 1, kernel)).as("__p"),
+        col("__size")): _*)
     // __k and __p are functionally dependent on __a — they ride the
     // group key so no second pass re-derives them
     val complete = anc
@@ -410,7 +381,7 @@ object GridOps {
     * shape): per-cell counts (or `weightCol` sums) at EVERY resolution
     * from the input cells' resolution down to `minRes`, in ONE corpus
     * scan and ONE shuffle: each cell explodes to its (ancestor, res)
-    * pairs via the codegen ancestor expression and the hash aggregate's
+    * pairs via the native ancestor call and the hash aggregate's
     * map-side combine collapses them to ≤ 8/7 × the finest level's
     * distinct cells BEFORE the exchange — the geometric-series total a
     * level-from-level rollup would reach, without its per-level job
@@ -436,17 +407,10 @@ object GridOps {
     val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
     val (rMax, checked) = res match {
       case Some(r0) =>
-        require(r0 >= 0 && r0 <= Z7.MaxRes, s"bad res $r0")
-        // inline uniformity enforcement — no extra pass, and pure
-        // native bit math (a cell is at exactly res r0 ⟺ digit r0 is
-        // a real digit and digit r0+1 is the 7-pad): two shifts + two
-        // compares per row, codegen, no UDF (a resolution-UDF check
-        // here cost a measured 25% of the whole pyramid wall)
-        def digitIsPad(i: Int) =
-          shiftrightunsigned(col(cellCol), 60 - 3 * i)
-            .bitwiseAND(lit(7L)) === lit(7L)
-        val ok = (if (r0 == 0) lit(true) else !digitIsPad(r0)) &&
-          (if (r0 >= Z7.MaxRes) lit(true) else digitIsPad(r0 + 1))
+        require(r0 >= 0 && r0 <= Z7.maxRes, s"bad res $r0")
+        // inline uniformity enforcement: no extra pass, the check rides
+        // the main scan as a per-row raise
+        val ok = F.resolution(col(cellCol)) === r0
         (r0, when(ok, col(cellCol))
           .otherwise(raise_error(concat(
             lit(s"cellPyramid: expected uniform res $r0, cell "),
@@ -467,8 +431,7 @@ object GridOps {
     // single-long group key; res is recoverable from the padded id, so
     // it is derived POST-agg on the pyramid-sized output; the checked
     // cell is projected ONCE so the raise test doesn't repeat per level
-    val levels = (minRes to rMax).map(r =>
-      F.z7AncestorAtExpr(col("__c"), lit(r)))
+    val levels = (minRes to rMax).map(r => F.ancestorAt(col("__c"), lit(r)))
     cells
       .withColumn("__c", checked)
       .select(explode(array(levels: _*)).as("cell_id"), w.as("__w"))

@@ -249,7 +249,7 @@ object SpatialOps {
     val joined =
       if (resList.forall(_ == res)) joinOnCell(pts, "cell_id", hinted)
       else joinOnCell(pts.withColumn("__anc", explode(array(resList.map(r =>
-        F.z7AncestorAtExpr(col("cell_id"), lit(r))): _*))), "__anc", hinted)
+        F.ancestorAt(col("cell_id"), lit(r))): _*))), "__anc", hinted)
     joined.where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt")
   }

@@ -28,8 +28,8 @@ object StreamingOps {
       .groupBy(window(col(tsCol), windowDur), col("cell_id"))
       .agg(count(lit(1)).as("n"), avg(col(latCol)).as("lat_mean"))
 
-  /** streaming parent rollup at a coarser resolution (pure bit math on
-    * the assigned cell — no second projection).
+  /** streaming parent rollup at a coarser resolution (one native
+    * ancestor call on the assigned cell — no second projection).
     */
   def rollup(assigned: DataFrame, tsCol: String, toRes: Int,
              windowDur: String, watermarkDur: String): DataFrame =

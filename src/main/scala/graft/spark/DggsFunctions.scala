@@ -1,7 +1,11 @@
 package graft.spark
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExprBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, ObjectType}
 import graft.dggs.{DggsKernel, HexKernel, IGeo7, Isea3H, Isea43H, Isea4D, Isea4H, Isea4T,
   KernelSpec, Sphere, Z7}
 import Sphere.GeoRad
@@ -36,25 +40,26 @@ object Grids {
 /** Column-level DGGS functions (SURVEY.md §7 layer 3). Scalar cell math
   * is a narrow map — no shuffle; Catalyst prunes/pushes around it.
   * Every kernel function takes the kernel as its last argument (IGEO7 by
-  * default); the UDF closures capture the kernel, which ships as its
-  * [[graft.dggs.KernelSpec]] and resolves to each executor's cached
-  * instance.
+  * default). The hierarchy reads (`resolution`, `parent`, `ancestorAt`)
+  * are one native call each into the kernel's own scalar method, so they
+  * are bit-identical to it and raise where it raises; the rest are UDFs.
+  * Either way the kernel ships as its [[graft.dggs.KernelSpec]] and
+  * resolves to each executor's cached instance.
   */
 object DggsFunctions {
 
   /** (lon°, lat°) → int64 cell id at resolution `res`.
     *
-    * Deliberately a Scala UDF, NOT the native `CellForPointExpr`:
-    * Catalyst treats UDFs as expensive — it will not inline them into
-    * multiple consuming expressions, whereas the native expression got
-    * re-evaluated per reference in the flagship plan (a measured 35%
-    * regression). When that was measured, the UDF ran at raw-kernel
+    * Deliberately a Scala UDF, not a native expression: Catalyst treats
+    * UDFs as expensive — it will not inline them into multiple consuming
+    * expressions, whereas a native twin got re-evaluated per reference
+    * in the flagship plan (a measured 35% regression; it was later
+    * deleted unused). When that was measured, the UDF ran at raw-kernel
     * speed because the scalar projection made up most of the cost; the
     * vector-form projection cut the kernel by about 3× (plans/r13), so
     * the wrapper's boxing and row handling are no longer a small share —
-    * perfbench's `spark.cell_for_point.wrapper_eff` reads it.
-    * `cellForPointExpr` remains available for single-reference
-    * pipelines. Plans print it as `cellForPoint(...)`.
+    * perfbench's `spark.cell_for_point.wrapper_eff` reads it. Plans
+    * print it as `cellForPoint(...)`.
     *
     * Two traps when the result keys a hash join:
     *  - slot collapse: a coarse id ends in all-ones pad bits, so Spark's
@@ -63,8 +68,8 @@ object DggsFunctions {
     *    id instead (measured 1.24 s → 0.21 s for 1M cached points
     *    against a 2,559-cell cover; plans/r10).
     *  - inferred filter: an INNER join on a projected key column
-    *    derived from this one through null-intolerant native
-    *    expressions (ancestor, spread) makes Catalyst infer
+    *    derived from this one through native expressions
+    *    (ancestor, spread) makes Catalyst infer
     *    `isnotnull(key)` and push it below the projection, inlining
     *    this UDF again inside a `Filter`. Either write the key
     *    expression into the join condition (`SpatialOps.joinOnCell`:
@@ -80,70 +85,33 @@ object DggsFunctions {
     f(lon, lat, res)
   }
 
-  /** native codegen variant of the IGEO7 assignment (no boxing; see
-    * cellForPoint scaladoc for when NOT to use it).
-    */
-  def cellForPointExpr(lon: Column, lat: Column, res: Column,
-                       lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
-                       az: Double = Grids.DefaultAz): Column = {
-    import org.apache.spark.sql.graft.{CellForPointExpr, ExprBridge}
-    ExprBridge.column(CellForPointExpr(
-      expression(lon), expression(lat), expression(res.cast("int")), lat0, lon0, az))
-  }
-
-  private def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.graft.ExprBridge.expression(c)
-
-  /** `1L << bits` with a COLUMN shift count (the Scala `shiftleft`
-    * wrapper only takes an Int literal) — native codegen, used by the
-    * hex/Quat2 ancestor expressions below.
-    */
-  private def shiftLeftC(v: Column, bits: Column): Column =
-    org.apache.spark.sql.graft.ExprBridge.column(
-      org.apache.spark.sql.catalyst.expressions.ShiftLeft(expression(v), expression(bits)))
-
   /** cell id → the kernel's string form (Z7_STRING, Z3_STRING, …) */
   def cellString(cell: Column, kernel: DggsKernel = Grids.default): Column =
     udf((z: Long) => kernel.toCellString(z)).apply(cell)
   def cellFromString(s: Column, kernel: DggsKernel = Grids.default): Column =
     udf((x: String) => kernel.fromCellString(x)).apply(s)
 
-  /** parent cell at res-1 (error on res 0) */
+  /** parent cell at res-1 (raises on res 0) */
   def parent(cell: Column, kernel: DggsKernel = Grids.default): Column =
-    udf((z: Long) => kernel.parent(z)).apply(cell)
+    kernelCall(kernel, "parent", LongType, cell.cast("long"))
 
-  /** ancestor at resolution r, with the codec's validity raise */
+  /** ancestor at resolution r (raises unless 0 ≤ r ≤ the cell's res) */
   def ancestorAt(cell: Column, r: Column, kernel: DggsKernel = Grids.default): Column =
-    udf((z: Long, rr: Int) => kernel.ancestorAt(z, rr)).withName("ancestorAt").apply(cell, r)
+    kernelCall(kernel, "ancestorAt", LongType, cell.cast("long"), r.cast("int"))
   def z7AncestorAt(cell: Column, r: Column): Column = ancestorAt(cell, r)
 
-  /** native codegen ancestor-at from the kernel's id layout: r above the
-    * cell's res is a no-op and there is no validity raise (callers
-    * needing the loud contract use [[ancestorAt]]).
-    */
-  def ancestorAtExpr(cell: Column, r: Column, kernel: DggsKernel = Grids.default): Column =
-    kernel match {
-      case _: IGeo7 => z7AncestorAtExpr(cell, r)
-      case k if k.slotBits > 0 =>
-        // base<<60 / all-ones-pad hex layouts: pad every level deeper than r
-        cell.bitwiseOR(
-          shiftLeftC(lit(1L), lit(60) - lit(k.slotBits) * r.cast("int")) - lit(1L))
-      case _ =>
-        // Quat2 (T4/D4): explicit res field in the high bits, zero-padded
-        // digits (Quat2Codec.ancestorAt)
-        val ri = r.cast("int")
-        val digitMask = when(ri === 0, lit(0L)).otherwise(
-          shiftLeftC(lit(1L), lit(48)) - shiftLeftC(lit(1L), lit(48) - lit(2) * ri))
-        shiftleft(shiftrightunsigned(cell, 48).bitwiseAND(lit(~31L))
-            .bitwiseOR(ri.cast("long")), 48)
-          .bitwiseOR(cell.bitwiseAND(digitMask))
-    }
+  def resolution(cell: Column, kernel: DggsKernel = Grids.default): Column =
+    kernelCall(kernel, "resolution", IntegerType, cell.cast("long"))
 
-  /** native codegen variant of the IGEO7 ancestor (inline bit math). */
-  def z7AncestorAtExpr(cell: Column, r: Column): Column = {
-    import org.apache.spark.sql.graft.{Z7AncestorExpr, ExprBridge}
-    ExprBridge.column(Z7AncestorExpr(expression(cell), expression(r.cast("int"))))
-  }
+  /** `kernel.<method>(args)` as one native expression: codegen emits a
+    * direct call on the kernel, which rides the generated class's
+    * references (shipped as its KernelSpec). Same result and same raise
+    * as the scalar method, with no ScalaUDF boxing.
+    */
+  private def kernelCall(kernel: DggsKernel, method: String, dataType: DataType,
+                         args: Column*): Column =
+    ExprBridge.column(Invoke(Literal(kernel, ObjectType(classOf[DggsKernel])), method,
+      dataType, args.map(ExprBridge.expression), returnNullable = false))
 
   /** [[graft.dggs.Z7.spreadKey]] as native bit math (shift + xor: no
     * multiply, which ANSI mode would raise on overflow). Join on this,
@@ -152,9 +120,6 @@ object DggsFunctions {
     */
   def z7SpreadKey(cell: Column): Column =
     cell.bitwiseXOR(shiftrightunsigned(cell, 32))
-
-  def resolution(cell: Column, kernel: DggsKernel = Grids.default): Column =
-    udf((z: Long) => kernel.resolution(z)).apply(cell)
 
   /** immediate children — explode for children-of-parent (COARSE_CELLS)
     * expansion.
@@ -209,7 +174,7 @@ object DggsFunctions {
       val ring = grid.cellBoundary(z)
       val coords = (ring :+ ring.head)
         .map(g => f"[${g.lonDeg}%.12f,${g.latDeg}%.12f]").mkString(",")
-      s"""{"type":"Feature","properties":{"name":"${Z7.toZ7String(z)}"},""" +
+      s"""{"type":"Feature","properties":{"name":"${Z7.toCellString(z)}"},""" +
         s""""geometry":{"type":"Polygon","coordinates":[[$coords]]}}"""
     }.apply(cell)
 
@@ -227,7 +192,7 @@ object DggsFunctions {
       val ring = grid.cellBoundary(z)
       val coords = (ring :+ ring.head)
         .map(g => f"${g.lonDeg}%.12f,${g.latDeg}%.12f,0").mkString(" ")
-      s"<Placemark><name>${Z7.toZ7String(z)}</name><Polygon>" +
+      s"<Placemark><name>${Z7.toCellString(z)}</name><Polygon>" +
         "<outerBoundaryIs><LinearRing><coordinates>" + coords +
         "</coordinates></LinearRing></outerBoundaryIs></Polygon></Placemark>"
     }.apply(cell)

@@ -49,7 +49,7 @@ object GraftSql {
     r.register("z43_cell", (lon: Double, lat: Double, res: Int, n4: Int) =>
       Grids.isea43h(n4).cellForPoint(GeoRad.fromDeg(lat, lon), res))
     // Z7 / ISEA7H
-    r.register("z7_from_string", (s: String) => Z7.fromZ7String(s))
+    r.register("z7_from_string", (s: String) => Z7.fromCellString(s))
     r.register("z7_parent", (z: Long) => Z7.parent(z))
     r.register("z7_resolution", (z: Long) => Z7.resolution(z))
     r.register("z7_is_pentagon", (z: Long) => Z7.isPentagon(z))

@@ -48,7 +48,7 @@ object FreezeFixtures {
     val h43g = Grids.isea43h(3)
     val mapRows = geo.map { case (lonM, latM, lon, lat) =>
       val p = GeoRad.fromDeg(lat, lon)
-      val cs = (3 to 6).map(r => Z7.toZ7String(g.cellForPoint(p, r)))
+      val cs = (3 to 6).map(r => Z7.toCellString(g.cellForPoint(p, r)))
       val seq4 = Seqnum.toSeqnum(g.cellForPoint(p, 4))
       // T4/D4 res-6 strings: both nest exactly, so substr gives every
       // coarser resolution (Isea4TSpec / Isea4DSpec nesting tests).
@@ -149,7 +149,7 @@ object FreezeFixtures {
       ("north", "POLYGON ((-180 88, 180 88, 180 90, -180 90, -180 88))"),
       ("south", "POLYGON ((-180 -90, 180 -90, 180 -88, -180 -88, -180 -90))"))
     val polarRows = polarBoxes.flatMap { case (pid, w) =>
-      graft.ops.SpatialOps.coverCells(w, 3).map(Z7.toZ7String).sorted
+      graft.ops.SpatialOps.coverCells(w, 3).map(Z7.toCellString).sorted
         .map(n => s"  ('$pid', '$n')")
     }
 
@@ -158,7 +158,7 @@ object FreezeFixtures {
     val rasterRows = for (r <- 0 until 32; c <- 0 until 32) yield {
       val lon = rAff.a + (c + 0.5) * rAff.b + (r + 0.5) * rAff.c
       val lat = rAff.d + (c + 0.5) * rAff.e + (r + 0.5) * rAff.f
-      val cell = Z7.toZ7String(g.cellForPoint(GeoRad.fromDeg(lat, lon), rRes))
+      val cell = Z7.toCellString(g.cellForPoint(GeoRad.fromDeg(lat, lon), rRes))
       s"  ($r, $c, '$cell')"
     }
 

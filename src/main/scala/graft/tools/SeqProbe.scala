@@ -46,7 +46,7 @@ object SeqProbe {
       val k = zone - 2 - ((zone - 2) / 16807) * 16807
       val q = (zone - 2) / 16807 + 1
       println(s"zone=$zone dggridQ=$q k=$k i49=${k / 49},${k % 49} i343=${k / 343},${k % 343} " +
-        s"engine: quad=${fix.quad} a=${fix.v.a} b=${fix.v.b} z7=${Z7.toZ7String(z)}")
+        s"engine: quad=${fix.quad} a=${fix.v.a} b=${fix.v.b} z7=${Z7.toCellString(z)}")
     }
     // engine quad corner extents at res 5 for reference
     println("factor5 = " + (0 to 5).map(r => g.cornerEis(3, r)).mkString(" | "))

@@ -1,89 +1,15 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, TernaryExpression, BinaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types._
-import graft.dggs.Sphere.GeoRad
-import graft.spark.Grids
 
-/** Native Catalyst expressions for the hot cell math (SURVEY.md §4
-  * "codegen" item): whole-stage-codegen emits direct static calls on
-  * primitive doubles/longs — no UDF boxing, no row serialization. Placed
-  * under org.apache.spark.sql to use the private[sql] Column↔Expression
-  * bridge (the pattern in SNIPPETS.md [2]/[3]).
+/** The private[sql] Column↔Expression bridge (the pattern in SNIPPETS.md
+  * [2]/[3]), placed under org.apache.spark.sql so graft can build native
+  * Catalyst expressions (`DggsFunctions`' direct kernel calls,
+  * `KmvSketchAgg`, GridOps' integral divide) as Columns.
   */
 object ExprBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-}
-
-/** static entry points referenced from generated Java */
-object KernelCalls {
-  def cellForPoint(lon: Double, lat: Double, res: Int,
-                   lat0: Double, lon0: Double, az: Double): Long =
-    Grids.get(lat0, lon0, az).cellForPoint(GeoRad.fromDeg(lat, lon), res)
-}
-
-/** (lon, lat, res) → Z7 int64, codegen'd to one static call. */
-case class CellForPointExpr(first: Expression, second: Expression, third: Expression,
-                            lat0: Double, lon0: Double, az: Double)
-  extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cell_for_point"
-
-  override protected def nullSafeEval(lon: Any, lat: Any, res: Any): Any =
-    KernelCalls.cellForPoint(lon.asInstanceOf[Double], lat.asInstanceOf[Double],
-      res.asInstanceOf[Int], lat0, lon0, az)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat, res) =>
-      s"org.apache.spark.sql.graft.KernelCalls.cellForPoint($lon, $lat, $res, " +
-        s"${lat0}D, ${lon0}D, ${az}D)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** ancestor at resolution r: pure bit math, fully inlined in codegen
-  * (sets all digit bits below r — Z7.ancestorAt).
-  */
-case class Z7AncestorExpr(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "z7_ancestor_at"
-
-  override protected def nullSafeEval(cell: Any, r: Any): Any = {
-    val rr = r.asInstanceOf[Int]
-    cell.asInstanceOf[Long] | ((1L << (60 - 3 * rr)) - 1L)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (cell, r) => s"($cell | ((1L << (60 - 3 * $r)) - 1L))")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** descendant range bounds: inlined bit math (Z7.rangeMin/rangeMax). */
-case class Z7RangeMinExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(cell: Any): Any =
-    graft.dggs.Z7.rangeMin(cell.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, cell => s"graft.dggs.Z7.rangeMin($cell)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

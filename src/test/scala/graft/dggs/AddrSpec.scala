@@ -19,7 +19,7 @@ class AddrSpec extends AnyFunSuite {
     cellsAt(3).foreach { z =>
       val (q, x, y) = Addr.z7ToQ2dd(g, z)
       assert(q >= 1 && q <= 10)
-      assert(Addr.q2ddToZ7(g, q, x, y, 3) == z, Z7.toZ7String(z))
+      assert(Addr.q2ddToZ7(g, q, x, y, 3) == z, Z7.toCellString(z))
     }
   }
 
@@ -28,7 +28,7 @@ class AddrSpec extends AnyFunSuite {
       val (t, x, y) = Addr.z7ToProjtri(g, z)
       assert(t >= 0 && t < 20)
       assert(math.hypot(x, y) <= g.snyder.rc + 1e-12)
-      assert(Addr.projtriToZ7(g, t, x, y, 3) == z, Z7.toZ7String(z))
+      assert(Addr.projtriToZ7(g, t, x, y, 3) == z, Z7.toCellString(z))
     }
   }
 
@@ -36,8 +36,8 @@ class AddrSpec extends AnyFunSuite {
     val seen = scala.collection.mutable.HashSet[(Double, Double)]()
     cellsAt(3).foreach { z =>
       val (px, py) = Addr.z7ToPlane(g, z)
-      assert(seen.add((px, py)), s"PLANE collision at ${Z7.toZ7String(z)}")
-      assert(Addr.planeToZ7(g, px, py, 3) == z, Z7.toZ7String(z))
+      assert(seen.add((px, py)), s"PLANE collision at ${Z7.toCellString(z)}")
+      assert(Addr.planeToZ7(g, px, py, 3) == z, Z7.toCellString(z))
     }
   }
 
@@ -45,9 +45,9 @@ class AddrSpec extends AnyFunSuite {
     cellsAt(3).foreach { z =>
       val (v, t, x, y) = Addr.z7ToVertex2dd(g, z)
       assert(v >= 0 && v <= 11)
-      assert(v == g.vertexOfBase(Z7.baseCell(z)), Z7.toZ7String(z))
+      assert(v == g.vertexOfBase(Z7.baseCell(z)), Z7.toCellString(z))
       assert(t >= 0 && t < 20)
-      assert(Addr.vertex2ddToZ7(g, t, x, y, 3) == z, Z7.toZ7String(z))
+      assert(Addr.vertex2ddToZ7(g, t, x, y, 3) == z, Z7.toCellString(z))
     }
   }
 

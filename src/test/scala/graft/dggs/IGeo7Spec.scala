@@ -73,7 +73,7 @@ class IGeo7Spec extends AnyFunSuite {
       (-123.32, 42.44), (-122.77, 45.38), (-122.64, 45.37), (-122.62, 45.44),
       (-121.17, 45.60), (-122.86, 45.15), (-123.36, 43.22))
     val mine = cities.map { case (lo, la) =>
-      Z7.toZ7String(testGrid.cellForPoint(GeoRad.fromDeg(la, lo), 4))
+      Z7.toCellString(testGrid.cellForPoint(GeoRad.fromDeg(la, lo), 4))
     }.toSet
     assert(mine == Set("021114", "021116", "014626"))
   }
@@ -133,7 +133,7 @@ class IGeo7DeepSpec extends org.scalatest.funsuite.AnyFunSuite {
           val ds = Z7.childDigits(z)
           z = Z7.child(z, ds(rnd.nextInt(ds.length)))
         }
-        assert(g.cellForPoint(g.cellCenter(z), res) == z, Z7.toZ7String(z))
+        assert(g.cellForPoint(g.cellCenter(z), res) == z, Z7.toCellString(z))
         i += 1
       }
     }

@@ -67,15 +67,15 @@ class KernelPropertySpec extends AnyFunSuite {
       assert(d1.contains(z) && d2.contains(z))
       // disk1 = cell + ring1; hexagons have 6 neighbours, pentagons 5
       val expect1 = if (Z7.isPentagon(z)) 6 else 7
-      assert(d1.length == expect1, Z7.toZ7String(z))
+      assert(d1.length == expect1, Z7.toCellString(z))
       assert(d1.toSet.subsetOf(d2.toSet))
       // interior hexagons: 1 + 6 + 12 = 19; pentagon-adjacent regions
       // shrink by the fan cells, never grow
-      assert(d2.length <= 19 && d2.length >= 16, s"${Z7.toZ7String(z)}: ${d2.length}")
+      assert(d2.length <= 19 && d2.length >= 16, s"${Z7.toCellString(z)}: ${d2.length}")
       // reciprocity of the k-disk relation (symmetric adjacency)
       for (w <- d2)
         assert(hex.disk(w, 2).contains(z),
-          s"${Z7.toZ7String(z)} in disk2(${Z7.toZ7String(w)})")
+          s"${Z7.toCellString(z)} in disk2(${Z7.toCellString(w)})")
     }
   }
 
@@ -83,7 +83,7 @@ class KernelPropertySpec extends AnyFunSuite {
     cases(2).foreach { case (lon, lat, r0) =>
       val r = math.min(r0, 6)
       val z = hex.cellForPoint(GeoRad.fromDeg(lat, lon), r)
-      assert(hex.cellForPoint(hex.cellCenter(z), r) == z, Z7.toZ7String(z))
+      assert(hex.cellForPoint(hex.cellCenter(z), r) == z, Z7.toCellString(z))
     }
   }
 
@@ -94,7 +94,7 @@ class KernelPropertySpec extends AnyFunSuite {
       val r = rnd.nextInt(16)
       val digits = Seq.fill(r)(rnd.nextInt(7))
       val z = Z7.pack(base, digits)
-      assert(Z7.fromZ7String(Z7.toZ7String(z)) == z)
+      assert(Z7.fromCellString(Z7.toCellString(z)) == z)
       assert(Z7.rangeMin(z) <= z && z <= Z7.rangeMax(z))
     }
   }

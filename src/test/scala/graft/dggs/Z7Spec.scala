@@ -19,10 +19,10 @@ class Z7Spec extends AnyFunSuite {
   test("reference fixture: 0042aad3ffffffff decodes like igeo7.py") {
     val z = Z7.fromHex("0042aad3ffffffff")
     assert(Z7.baseCell(z) == 0)
-    assert(Z7.toZ7String(z) == "00010252551") // base 00 + digits
+    assert(Z7.toCellString(z) == "00010252551") // base 00 + digits
     assert(Z7.resolution(z) == 9)
     // parent/local pos semantics (igeo7.py:98-122)
-    assert(Z7.toZ7String(Z7.parent(z)) == "0001025255")
+    assert(Z7.toCellString(Z7.parent(z)) == "0001025255")
     assert(Z7.localPos(z) == 1)
     assert(!Z7.isCenter(z))
     assert(Z7.toHex(z) == "0042aad3ffffffff")
@@ -30,16 +30,36 @@ class Z7Spec extends AnyFunSuite {
 
   test("string round-trip and resolution = len-2") {
     forAllCells() { z =>
-      val s = Z7.toZ7String(z)
-      assert(Z7.fromZ7String(s) == z)
+      val s = Z7.toCellString(z)
+      assert(Z7.fromCellString(s) == z)
       assert(Z7.resolution(z) == s.length - 2)
     }
   }
 
   test("a supplied pad digit 7 raises instead of building a mislabelled id") {
-    intercept[IllegalArgumentException](Z7.fromZ7String("0570"))
+    intercept[IllegalArgumentException](Z7.fromCellString("0570"))
     intercept[IllegalArgumentException](Z7.pack(5, Seq(7, 0)))
-    assert(Z7.resolution(Z7.fromZ7String("056")) == 1)
+    assert(Z7.resolution(Z7.fromCellString("056")) == 1)
+  }
+
+  test("SlotCodec.resolution (trailing pad run) == the digit-loop form on Z7, Z3, Z4") {
+    def loopRes(c: SlotCodec, z: Long): Int = {
+      val pad = (1 << c.slotBits) - 1
+      var r = 0
+      while (r < c.maxRes && c.digit(z, r + 1) != pad) r += 1
+      r
+    }
+    val rnd = new scala.util.Random(8)
+    for (c <- Seq[SlotCodec](Z7, Z3, Z4); base <- 0 until 12; r <- 0 to c.maxRes) {
+      // random digits, plus all-top digits (the longest run of 1-bits a
+      // real digit can end in) and all-zero digits
+      val paths = Seq(Seq.fill(r)(rnd.nextInt(c.radix)), Seq.fill(r)(rnd.nextInt(c.radix)),
+        Seq.fill(r)(c.radix - 1), Seq.fill(r)(0))
+      for (ds <- paths) {
+        val z = c.pack(base, ds)
+        assert(c.resolution(z) == r && loopRes(c, z) == r, f"${c.name} $z%016x")
+      }
+    }
   }
 
   test("hex round-trip") {
@@ -87,9 +107,9 @@ class Z7Spec extends AnyFunSuite {
   }
 
   test("ancestorAt walks up to any resolution") {
-    val z = Z7.fromZ7String("00010252551")
-    assert(Z7.toZ7String(Z7.ancestorAt(z, 4)) == "000102")
-    assert(Z7.toZ7String(Z7.ancestorAt(z, 0)) == "00")
+    val z = Z7.fromCellString("00010252551")
+    assert(Z7.toCellString(Z7.ancestorAt(z, 4)) == "000102")
+    assert(Z7.toCellString(Z7.ancestorAt(z, 0)) == "00")
   }
 }
 

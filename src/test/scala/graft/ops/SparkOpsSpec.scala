@@ -1387,7 +1387,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cellGeoJson emits a closed-ring GeoJSON feature with the Z7 name") {
     import spark.implicits._
-    val z = graft.dggs.Z7.fromZ7String("00123")
+    val z = graft.dggs.Z7.fromCellString("00123")
     val s = Seq(z).toDF("cell_id")
       .select(graft.spark.DggsFunctions.cellGeoJson(col("cell_id")))
       .as[String].head()
@@ -1403,7 +1403,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = GridOps.addressTransform(cells, "name", "Z7_STRING", "AIGEN", 3)
       .select("out_addr").as[String].head()
     val lines = s.split("\n")
-    val z = graft.dggs.Z7.fromZ7String("00123")
+    val z = graft.dggs.Z7.fromCellString("00123")
     assert(lines.head == z.toString) // numeric id line
     assert(lines.last == "END")
     val verts = lines.drop(1).dropRight(1)
@@ -1580,8 +1580,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rings = all.map(z => z -> g.ring1(z).toSet).toMap
     for ((z, ring) <- rings) {
       val expect = if (Z7.isPentagon(z)) 5 else 6
-      assert(ring.size == expect, s"${Z7.toZ7String(z)} ring size ${ring.size}")
-      for (n <- ring) assert(rings(n).contains(z), s"no reciprocity ${Z7.toZ7String(z)}")
+      assert(ring.size == expect, s"${Z7.toCellString(z)} ring size ${ring.size}")
+      for (n <- ring) assert(rings(n).contains(z), s"no reciprocity ${Z7.toCellString(z)}")
     }
   }
 
@@ -1623,7 +1623,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // we assert the structural contract (3 occupied cells, presence "1")
     val testGrid = Grids.get(58.282525588538994675786, 11.20, 0.0)
     val goldenCells = cities.collect().map(r =>
-      Z7.toZ7String(testGrid.cellForPoint(
+      Z7.toCellString(testGrid.cellForPoint(
         Sphere.GeoRad.fromDeg(r.getDouble(1), r.getDouble(0)), 4))).toSet
     assert(goldenCells == Set("021114", "021116", "014626"))
     assert(out.forall { case (_, pres, nc) => pres == "1" && nc == 1L })
@@ -1845,7 +1845,7 @@ class CorpusStoreSpec extends org.scalatest.funsuite.AnyFunSuite {
       .select("doc_id", "offset", "cell_id")
     val dir = java.nio.file.Files.createTempDirectory("clustered").toString
     CorpusStore.writeClustered(cells, "cell_id", dir, 16)
-    val parent = graft.dggs.Z7.fromZ7String("023") // res-1 region
+    val parent = graft.dggs.Z7.fromCellString("023") // res-1 region
     val pruned = CorpusStore.readCellRange(spark, dir, "cell_id", parent)
     val full = spark.read.parquet(dir)
     val expected = full.where(

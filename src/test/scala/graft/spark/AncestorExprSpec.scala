@@ -1,15 +1,16 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.dggs.{Z3, Z4, Z7, T4, D4}
+import graft.dggs.{DggsKernel, Z3, Z4, Z7, T4, D4}
 
-/** The round-9 native ancestor expressions must agree bit-for-bit with
-  * the codec functions they replace in the hot rollup paths, and must
-  * plan without any ScalaUDF (verdict #6: promote the hex rollup key
-  * derivation to codegen).
+/** The Column hierarchy reads (`ancestorAt`, `parent`, `resolution`) are
+  * native calls into the kernel's own scalar methods: on every kernel
+  * they must agree bit for bit with those methods, raise where the
+  * methods raise, and plan without any ScalaUDF.
   */
 class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSession.builder()
@@ -17,27 +18,28 @@ class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false").getOrCreate()
   override def afterAll(): Unit = spark.stop()
 
-  private def cellsDf(ids: Seq[Long]) = {
-    val s = spark
-    import s.implicits._
-    ids.toDF("cell_id")
+  /** `local`: a LocalRelation, which the optimizer folds (interpreted
+    * eval); otherwise an RDD scan, which runs whole-stage codegen
+    */
+  private def cellsDf(ids: Seq[java.lang.Long], local: Boolean = false): DataFrame = {
+    val schema = StructType(Seq(StructField("cell_id", LongType)))
+    val rows = ids.map(org.apache.spark.sql.Row(_))
+    if (local) spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    else spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
   }
 
-  test("hex/quat2 ancestorAtExpr == codec ancestorAt over sampled cells") {
+  /** the six kernels (ISEA43H at n4 = 3, IGEO7 also at a non-default
+    * orientation) with 200 seeded cells each at res 0..8
+    */
+  private lazy val kernelCells: Seq[(String, DggsKernel, Seq[Long])] = {
     val rnd = new scala.util.Random(7)
-    // Z3: random digit paths on quad + cap bases at res 0..8
-    val z3Cells = (0 until 200).map { _ =>
+    def hexCells(pack: (Int, Seq[Int]) => Long, radix: Int) = (0 until 200).map { _ =>
       val base = rnd.nextInt(12)
       val res = rnd.nextInt(9)
-      val digits = Seq.fill(res)(if (base == 0 || base == 11) 0 else rnd.nextInt(3))
-      Z3.pack(base, digits)
+      pack(base, Seq.fill(res)(if (base == 0 || base == 11) 0 else rnd.nextInt(radix)))
     }
-    val z4Cells = (0 until 200).map { _ =>
-      val base = rnd.nextInt(12)
-      val res = rnd.nextInt(9)
-      val digits = Seq.fill(res)(if (base == 0 || base == 11) 0 else rnd.nextInt(4))
-      Z4.pack(base, digits)
-    }
+    val z3Cells = hexCells(Z3.pack, 3)
+    val z4Cells = hexCells(Z4.pack, 4)
     val t4Cells = (0 until 200).map { _ =>
       T4.pack(rnd.nextInt(20), Seq.fill(rnd.nextInt(9))(rnd.nextInt(4)))
     }
@@ -47,41 +49,78 @@ class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     val z7Cells = (0 until 200).map { _ =>
       Z7.pack(rnd.nextInt(12), Seq.fill(rnd.nextInt(9))(rnd.nextInt(7)))
     }
-    def check(label: String, cells: Seq[Long],
-              exprF: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-                org.apache.spark.sql.Column,
-              refF: (Long, Int) => Long,
-              resOf: Long => Int): Unit =
-      for (r <- 0 to 8) {
-        val valid = cells.filter(resOf(_) >= r)
-        val got = cellsDf(valid)
-          .select(exprF(col("cell_id"), lit(r)).as("a"))
-          .collect().map(_.getLong(0)).toSeq
-        val want = valid.map(refF(_, r))
-        assert(got == want, s"$label ancestorAt($r)")
+    Seq(("z3", Grids.isea3h, z3Cells), ("z4", Grids.isea4h, z4Cells),
+      ("z43", Grids.isea43h(3), z4Cells), ("t4", Grids.isea4t, t4Cells),
+      ("d4", Grids.isea4d, d4Cells), ("z7", Grids.default, z7Cells),
+      ("z7 tilted", Grids.get(10.0, 20.0, 5.0), z7Cells))
+  }
+
+  test("hex/quat2 ancestorAtExpr == codec ancestorAt over sampled cells") {
+    // resolution, parent and the ancestors at 0..8 in one projection; the
+    // raising calls are guarded by the cell's res, and a null cell is a
+    // null in every column
+    for ((label, k, cells) <- kernelCells; local <- Seq(false, true)) {
+      val c = col("cell_id")
+      val res = DggsFunctions.resolution(c, k)
+      val cols = Seq(c, res, when(res > 0, DggsFunctions.parent(c, k))) ++
+        (0 to 8).map(r => when(res >= r, DggsFunctions.ancestorAt(c, lit(r), k)))
+      val rows = cellsDf(cells.map(Long.box) :+ null, local).select(cols: _*).collect()
+      assert(rows.length == cells.size + 1)
+      for (row <- rows) {
+        if (row.isNullAt(0)) assert((1 until row.length).forall(row.isNullAt), label)
+        else {
+          val z = row.getLong(0)
+          val r = k.resolution(z)
+          assert(row.getInt(1) == r, f"$label resolution $z%016x")
+          if (r > 0) assert(row.getLong(2) == k.parent(z), f"$label parent $z%016x")
+          else assert(row.isNullAt(2))
+          for (a <- 0 to 8) {
+            if (a <= r) assert(row.getLong(3 + a) == k.ancestorAt(z, a),
+              f"$label ancestorAt($a) $z%016x")
+            else assert(row.isNullAt(3 + a))
+          }
+        }
       }
-    def ancestorAt(k: graft.dggs.DggsKernel)
-        : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
-      DggsFunctions.ancestorAtExpr(_, _, k)
-    check("z3", z3Cells, ancestorAt(Grids.isea3h), Z3.ancestorAt, Z3.resolution)
-    check("z4", z4Cells, ancestorAt(Grids.isea4h), Z4.ancestorAt, Z4.resolution)
-    check("z43", z4Cells, ancestorAt(Grids.isea43h(3)), Z4.ancestorAt, Z4.resolution)
-    check("t4", t4Cells, ancestorAt(Grids.isea4t), T4.ancestorAt, T4.resolution)
-    check("d4", d4Cells, ancestorAt(Grids.isea4d), D4.ancestorAt, D4.resolution)
-    check("z7", z7Cells, DggsFunctions.z7AncestorAtExpr, Z7.ancestorAt, Z7.resolution)
+    }
   }
 
   test("ancestor rollup key plans with no ScalaUDF (codegen bit math)") {
-    val df = cellsDf(Seq(Z3.pack(5, Seq(1, 2, 0))))
-      .groupBy(DggsFunctions.ancestorAtExpr(col("cell_id"), lit(2), Grids.isea3h).as("a"))
-      .agg(count(lit(1)))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("ScalaUDF"), plan.take(2000))
-    val t4df = cellsDf(Seq(T4.pack(5, Seq(1, 2, 0))))
-      .groupBy(DggsFunctions.ancestorAtExpr(col("cell_id"), lit(2), Grids.isea4t).as("a"))
-      .agg(count(lit(1)))
-    val t4plan = t4df.queryExecution.executedPlan.toString
-    assert(!t4plan.contains("ScalaUDF"), t4plan.take(2000))
+    for ((label, k, cells) <- kernelCells) {
+      val df = cellsDf(cells.filter(k.resolution(_) >= 3).map(Long.box))
+        .groupBy(DggsFunctions.ancestorAt(col("cell_id"), lit(2), k).as("a"),
+          DggsFunctions.parent(col("cell_id"), k).as("p"),
+          DggsFunctions.resolution(col("cell_id"), k).as("r"))
+        .agg(count(lit(1)))
+      assert(df.collect().nonEmpty) // AQE settles the final plan on execution
+      val plan = df.queryExecution.executedPlan
+      assert(!plan.toString.contains("ScalaUDF"), s"$label: ${plan.toString.take(2000)}")
+      // the generated Java calls the kernel's methods directly
+      val code = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+        .map(_._2).mkString("\n")
+      for (m <- Seq(".ancestorAt(", ".parent(", ".resolution("))
+        assert(code.contains(m), s"$label: no direct $m call in the generated code")
+    }
+  }
+
+  test("ancestorAt / parent Columns raise like the scalars on every kernel") {
+    def rootMessage(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in $t"))
+    def raises(df: DataFrame)(scalar: => Any): Unit = {
+      val want = intercept[IllegalArgumentException](scalar).getMessage
+      assert(rootMessage(intercept[Exception](df.collect())) == want)
+    }
+    for ((_, k, cells) <- kernelCells; local <- Seq(false, true)) {
+      val z = cells.find(k.resolution(_) == 3).get
+      val root = cells.find(k.resolution(_) == 0).get
+      val one = cellsDf(Seq(Long.box(z)), local)
+      for (r <- Seq(-1, 4))
+        raises(one.select(DggsFunctions.ancestorAt(col("cell_id"), lit(r), k)))(
+          k.ancestorAt(z, r))
+      raises(cellsDf(Seq(Long.box(root)), local)
+        .select(DggsFunctions.parent(col("cell_id"), k)))(k.parent(root))
+    }
   }
 
   test("z7SpreadKey: Column form == Z7.spreadKey; round-trips at res 0..15") {
@@ -99,7 +138,7 @@ class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((0 to 15).forall(r => cells.exists(Z7.resolution(_) == r)))
     assert(cells.forall(z => Z7.spreadKey(Z7.spreadKey(z)) == z), "Scala round-trip")
     assert(cells.map(Z7.spreadKey).distinct.size == cells.size, "injective on the sample")
-    val rows = cellsDf(cells)
+    val rows = cellsDf(cells.map(Long.box), local = true)
       .select(col("cell_id"), DggsFunctions.z7SpreadKey(col("cell_id")).as("k"),
         DggsFunctions.z7SpreadKey(DggsFunctions.z7SpreadKey(col("cell_id"))).as("back"))
       .collect()
