@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import graft.dggs.Z7
 import graft.ops.{CorpusOps, GridOps, JtsCache, SpatialOps}
 import graft.spark.{DggsFunctions => F, Grids}
@@ -38,25 +39,33 @@ object Bench {
     geo
   }
 
-  /** the timed flagship, ONE pass over the points: res-`res` cell
-    * assignment (narrow map, evaluated once), a LEFT broadcast join of
-    * the spread res-4 ancestor (`F.z7SpreadKey`) against the polygon
-    * cover grouped per key (one row per cover cell: its polygons' WKTs),
-    * then one `groupBy` on the res-3 ancestor that sums the JTS contains
-    * hits. Result rows = rollup cells + refined (point, polygon) pairs,
-    * as for a rollup plus an inner PIP join. LEFT, not inner: an inner
-    * join's inferred `isnotnull(key4)` filter would evaluate
-    * `cellForPoint` a second time (`DggsFunctions.cellForPoint`).
+  /** the timed flagship, ONE pass over the points and one action:
+    * res-`res` cell assignment (narrow map, evaluated once), a LEFT
+    * broadcast join of the spread res-4 ancestor (`F.z7SpreadKey`)
+    * against the polygon cover grouped per cell (one row per cover cell:
+    * its polygons' WKTs), then one `groupBy` on the res-3 ancestor that
+    * sums the JTS contains hits. The per-cell sums (at most 10·7³ + 2 =
+    * 3,432 rows) are collected and totalled on the driver. Result rows =
+    * rollup cells + refined (point, polygon) pairs, as for a rollup plus
+    * an inner PIP join. LEFT, not inner: an inner join's inferred
+    * `isnotnull(key4)` filter would evaluate `cellForPoint` a second
+    * time (`DggsFunctions.cellForPoint`).
+    *
+    * The driver-side part is kept small, since every repetition pays it
+    * before any task runs: the cover is grouped on raw cell ids and only
+    * then spread (a Scala map keyed on spread ids puts every res-4 key in
+    * one hash bucket: `Z7.spreadKey`), and the cover relation is built
+    * from rows against a fixed schema, with no encoder derived per call.
     * Returns (resultRows, resultRows); callers take the geo point count
     * from the untimed input materialization.
     */
   def flagship(spark: SparkSession, geo: DataFrame, res: Int): (Long, Long) = {
-    import spark.implicits._
     val joinRes = 4
-    val coverDf = FlagshipPolys
+    val cover = FlagshipPolys
       .flatMap { case (_, wkt) => SpatialOps.coverCells(wkt, joinRes).map(c => (c, wkt)) }
-      .groupMap(c => Z7.spreadKey(c._1))(_._2).toSeq
-      .toDF("key4", "wkts")
+      .groupMap(_._1)(_._2)
+      .map { case (cell, wkts) => Row(Z7.spreadKey(cell), wkts) }
+    val coverDf = spark.createDataFrame(java.util.Arrays.asList(cover.toSeq: _*), CoverSchema)
     val hits = udf { (wkts: Seq[String], lon: Double, lat: Double) =>
       if (wkts == null) 0L else wkts.count(JtsCache.contains(_, lon, lat)).toLong
     }.withName("pipHits")
@@ -67,10 +76,15 @@ object Bench {
       .join(broadcast(coverDf), Seq("key4"), "left")
       .groupBy(F.ancestorAt(col("cell_id"), lit(3)).as("cell3"))
       .agg(sum(hits(col("wkts"), col("lon"), col("lat"))).as("hits"))
-    val totals = perCell.agg(count(lit(1)), coalesce(sum("hits"), lit(0L))).head()
-    val rows = totals.getLong(0) + totals.getLong(1)
+      .select("hits").collect()
+    val rows = perCell.length + perCell.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
     (rows, rows)
   }
+
+  /** the flagship cover relation: spread res-4 key, its polygons' WKTs */
+  private val CoverSchema = StructType(Seq(
+    StructField("key4", LongType, nullable = false),
+    StructField("wkts", ArrayType(StringType))))
 
   /** the quiet-band file: `{"<sf>": {"<query>": seconds, …}, …}` */
   private[graft] def parseBands(txt: String): Map[String, Map[String, Double]] =

@@ -10,8 +10,9 @@ import Sphere.GeoRad
   *
   * The hierarchy methods are the only readers of hierarchy from id bits:
   * the Spark Column forms of `resolution`, `parent` and `ancestorAt` are
-  * direct calls into them. Besides geometry, hierarchy and the string
-  * codec, a kernel states the id-layout facts the operator layer's
+  * direct calls into them, as the Column `cellForPoint` is into the
+  * degree overload of `cellForPoint`. Besides geometry, hierarchy and
+  * the string codec, a kernel states the id-layout facts the operator layer's
   * closed forms use (whole-earth enumeration, compaction subtree sizes):
   *  - [[slotBits]]: the hex layouts ([[SlotCodec]]: Z7, Z3, Z4) put the
   *    base in the top nibble and pad unused digit slots with all-ones
@@ -46,6 +47,11 @@ trait DggsKernel extends Serializable {
   def maxRes: Int
 
   def cellForPoint(p: GeoRad, r: Int): Long
+  /** the same cell from degrees, with primitive arguments only: the
+    * method the Spark Column form calls directly
+    */
+  final def cellForPoint(lonDeg: Double, latDeg: Double, r: Int): Long =
+    cellForPoint(GeoRad.fromDeg(latDeg, lonDeg), r)
   def cellCenter(z: Long): GeoRad
   /** boundary ring, not closed (hexagons 6, pentagons 5, triangles 3,
     * diamonds 4 vertices)

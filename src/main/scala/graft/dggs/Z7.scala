@@ -49,6 +49,14 @@ object Z7 extends SlotCodec(slotBits = 3, maxRes = 20, radix = 7, name = "Z7") {
     * slot and each probe walks the whole cluster. Folding the high half
     * (base + leading digits) into the low half spreads them. Spark's
     * `DggsFunctions.z7SpreadKey` is the same function as a Column.
+    *
+    * The spread is for Spark's hash relation only. On the JVM it undoes
+    * itself: a `Long`'s `##`/`hashCode` is `(int)(v ^ v >>> 32)`, so the
+    * hash of a spread key is `low32(z)`, the id's pad bits, which are
+    * all ones through res 9. A driver-side Scala/Java map keyed on
+    * spread ids chains every such key in one bucket (O(n²) `equals`);
+    * key driver-side maps on the raw ids, whose JVM hash already mixes
+    * the high half in, and spread afterwards.
     */
   def spreadKey(z: Long): Long = z ^ (z >>> 32)
 }

@@ -16,6 +16,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * With `logEvents`, [[events]] also collects one line per finished job
   * (wall, description) and stage (wall, executor run time, tasks, name,
   * and the user call site of stages running over 0.5 s).
+  *
+  * [[driverOnlySeconds]] reads the time of a window in which no task
+  * ran: planning, driver-side builds, scheduling and result handling.
   */
 class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
   val read = new AtomicLong
@@ -28,8 +31,11 @@ class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
   val tasks = new AtomicLong
   val events = new ConcurrentLinkedQueue[String]
   private val jobStarts = new ConcurrentHashMap[Int, (Long, String)]
+  /** (launch, finish) wall-clock ms of every finished task */
+  private val taskSpans = new ConcurrentLinkedQueue[(Long, Long)]
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+    taskSpans.add((te.taskInfo.launchTime, te.taskInfo.finishTime))
     val m = te.taskMetrics
     if (m != null) {
       read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
@@ -65,6 +71,24 @@ class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
         events.add("  DETAILS " + si.details.linesIterator
           .filterNot(_.contains("org.apache.spark")).take(4).mkString(" <- "))
     }
+  }
+
+  /** seconds of the window [fromMs, toMs] (`System.currentTimeMillis`)
+    * that no finished task's launch→finish span covers: the window's
+    * wall minus the union of the task spans inside it. Read it after
+    * [[awaitStable]], so that every task of the window has been seen.
+    */
+  def driverOnlySeconds(fromMs: Long, toMs: Long): Double = {
+    val spans = taskSpans.toArray(Array.empty[(Long, Long)])
+      .map { case (s, e) => (math.max(s, fromMs), math.min(e, toMs)) }
+      .filter { case (s, e) => e > s }.sortBy(_._1)
+    var busy = 0L
+    var end = fromMs
+    for ((s, e) <- spans if e > end) {
+      busy += e - math.max(s, end)
+      end = e
+    }
+    (math.max(0L, toMs - fromMs) - busy) / 1e3
   }
 
   /** (shuffle read, shuffle write, memory spill, disk spill) bytes */

@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Expression, If, IsNull, KnownNotNull, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExprBridge
@@ -40,26 +40,30 @@ object Grids {
 /** Column-level DGGS functions (SURVEY.md §7 layer 3). Scalar cell math
   * is a narrow map — no shuffle; Catalyst prunes/pushes around it.
   * Every kernel function takes the kernel as its last argument (IGEO7 by
-  * default). The hierarchy reads (`resolution`, `parent`, `ancestorAt`)
-  * are one native call each into the kernel's own scalar method, so they
-  * are bit-identical to it and raise where it raises; the rest are UDFs.
+  * default). The point assignment (`cellForPoint`) and the hierarchy
+  * reads (`resolution`, `parent`, `ancestorAt`) are one native call each
+  * into the kernel's own scalar method, so they are bit-identical to it
+  * and raise where it raises; the rest are UDFs.
   * Either way the kernel ships as its [[graft.dggs.KernelSpec]] and
   * resolves to each executor's cached instance.
   */
 object DggsFunctions {
 
-  /** (lon°, lat°) → int64 cell id at resolution `res`.
+  /** (lon°, lat°) → int64 cell id at resolution `res`: one native call
+    * into the kernel's degree overload of `cellForPoint` (plans print
+    * `invoke(KernelSpec(…).cellForPoint(lon, lat, 9))`), the same value
+    * as the scalar method with no ScalaUDF boxing.
     *
-    * Deliberately a Scala UDF, not a native expression: Catalyst treats
-    * UDFs as expensive — it will not inline them into multiple consuming
-    * expressions, whereas a native twin got re-evaluated per reference
-    * in the flagship plan (a measured 35% regression; it was later
-    * deleted unused). When that was measured, the UDF ran at raw-kernel
-    * speed because the scalar projection made up most of the cost; the
-    * vector-form projection cut the kernel by about 3× (plans/r13), so
-    * the wrapper's boxing and row handling are no longer a small share —
-    * perfbench's `spark.cell_for_point.wrapper_eff` reads it. Plans
-    * print it as `cellForPoint(...)`.
+    * The call sits under an explicit null guard, `if (isnull(lon) ||
+    * isnull(lat) || isnull(res)) null else call(knownnotnull(…)×3)`,
+    * which is the shape Spark's `HandleNullInputsForUDF` gives a UDF with
+    * primitive parameters. A null input gives a null cell; and since the
+    * call itself is not nullable, an `isnotnull(cell)` that Catalyst
+    * infers below a join folds to null tests on the inputs alone. A bare
+    * null-propagating call is nullable, so the inferred filter would
+    * evaluate the kernel a second time inside a `Filter` (PlanAuditSpec).
+    * Being a non-cheap expression, the call is not inlined into several
+    * consumers of the column either.
     *
     * Two traps when the result keys a hash join:
     *  - slot collapse: a coarse id ends in all-ones pad bits, so Spark's
@@ -71,7 +75,7 @@ object DggsFunctions {
     *    derived from this one through native expressions
     *    (ancestor, spread) makes Catalyst infer
     *    `isnotnull(key)` and push it below the projection, inlining
-    *    this UDF again inside a `Filter`. Either write the key
+    *    this call again inside a `Filter`. Either write the key
     *    expression into the join condition (`SpatialOps.joinOnCell`:
     *    only `isnotnull(cell)` is inferred, which folds to a null test
     *    on lon/lat) or use a LEFT join (`Bench.flagship`). PlanAuditSpec
@@ -79,10 +83,12 @@ object DggsFunctions {
     */
   def cellForPoint(lon: Column, lat: Column, res: Column,
                    kernel: DggsKernel = Grids.default): Column = {
-    val f = udf { (lo: Double, la: Double, r: Int) =>
-      kernel.cellForPoint(GeoRad.fromDeg(la, lo), r)
-    }.withName("cellForPoint")
-    f(lon, lat, res)
+    val args = Seq(lon.cast("double"), lat.cast("double"), res.cast("int"))
+      .map(ExprBridge.expression)
+    val call = Invoke(kernelLiteral(kernel), "cellForPoint", LongType,
+      args.map(KnownNotNull(_)), propagateNull = false, returnNullable = false)
+    ExprBridge.column(If(args.map(IsNull(_): Expression).reduce(Or(_, _)),
+      Literal(null, LongType), call))
   }
 
   /** cell id → the kernel's string form (Z7_STRING, Z3_STRING, …) */
@@ -110,13 +116,19 @@ object DggsFunctions {
     */
   private def kernelCall(kernel: DggsKernel, method: String, dataType: DataType,
                          args: Column*): Column =
-    ExprBridge.column(Invoke(Literal(kernel, ObjectType(classOf[DggsKernel])), method,
+    ExprBridge.column(Invoke(kernelLiteral(kernel), method,
       dataType, args.map(ExprBridge.expression), returnNullable = false))
+
+  private def kernelLiteral(kernel: DggsKernel): Literal =
+    Literal(kernel, ObjectType(classOf[DggsKernel]))
 
   /** [[graft.dggs.Z7.spreadKey]] as native bit math (shift + xor: no
     * multiply, which ANSI mode would raise on overflow). Join on this,
     * not on the raw id, wherever Spark builds a long-keyed hash relation
-    * over cell ids (broadcast or shuffled hash join).
+    * over cell ids (broadcast or shuffled hash join). For that relation
+    * only: the JVM hash of a spread key is the id's all-ones low half
+    * (see [[graft.dggs.Z7.spreadKey]]), so driver-side maps key on raw
+    * ids.
     */
   def z7SpreadKey(cell: Column): Column =
     cell.bitwiseXOR(shiftrightunsigned(cell, 32))

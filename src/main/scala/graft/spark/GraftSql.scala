@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
-import graft.dggs.{Addr, Authalic, DggsKernel, Sphere, Z7}
-import Sphere.GeoRad
+import graft.dggs.{Addr, Authalic, DggsKernel, Z7}
+import graft.spark.{DggsFunctions => F}
 
 /** SQL-name registration: makes the DGGS surface usable from
   * `spark.sql(...)` (and thence JDBC/thrift clients) without touching the
@@ -32,26 +32,31 @@ object GraftSql {
     "haversine_km", "wkt_contains_point", "z7_family_size", "kmv_distinct")
 
   def register(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.graft.AggRegistrar.{intLiteral, registerNative}
     val r = spark.udf
     // the <id>_cell / <id>_string / <id>_ancestor trio of every kernel
-    // (z7_, t4_, d4_, z3_, z4_); the closures capture the kernel, which
-    // ships as its spec and resolves to the executor's cached instance
+    // (z7_, t4_, d4_, z3_, z4_). `_cell` and `_ancestor` are the Column
+    // forms themselves (one direct kernel call each); the `_string`
+    // closure captures the kernel, which ships as its spec and resolves
+    // to the executor's cached instance
     for (k <- Seq[DggsKernel](Grids.default, Grids.isea4t, Grids.isea4d,
                               Grids.isea3h, Grids.isea4h)) {
       val p = k.idName.toLowerCase
-      r.register(s"${p}_cell", (lon: Double, lat: Double, res: Int) =>
-        k.cellForPoint(GeoRad.fromDeg(lat, lon), res))
+      registerNative(spark, s"${p}_cell", 3)(a => F.cellForPoint(a(0), a(1), a(2), k))
       r.register(s"${p}_string", (z: Long) => k.toCellString(z))
-      r.register(s"${p}_ancestor", (z: Long, res: Int) => k.ancestorAt(z, res))
+      registerNative(spark, s"${p}_ancestor", 2)(a => F.ancestorAt(a(0), a(1), k))
     }
     // z43_cell takes the mixed_aperture_level as an argument (a grid
-    // CONFIG the reference passes the same way)
-    r.register("z43_cell", (lon: Double, lat: Double, res: Int, n4: Int) =>
-      Grids.isea43h(n4).cellForPoint(GeoRad.fromDeg(lat, lon), res))
+    // CONFIG the reference passes the same way): an integer literal,
+    // since it picks the kernel the call is made on
+    registerNative(spark, "z43_cell", 4) { a =>
+      F.cellForPoint(a(0), a(1), a(2),
+        Grids.isea43h(intLiteral("z43_cell", "the aperture-4 level count n4", a(3))))
+    }
     // Z7 / ISEA7H
     r.register("z7_from_string", (s: String) => Z7.fromCellString(s))
-    r.register("z7_parent", (z: Long) => Z7.parent(z))
-    r.register("z7_resolution", (z: Long) => Z7.resolution(z))
+    registerNative(spark, "z7_parent", 1)(a => F.parent(a(0)))
+    registerNative(spark, "z7_resolution", 1)(a => F.resolution(a(0)))
     r.register("z7_is_pentagon", (z: Long) => Z7.isPentagon(z))
     r.register("z7_children", (z: Long) => Z7.children(z))
     r.register("z7_ring1", (z: Long) => Grids.default.ring1(z).toSeq)

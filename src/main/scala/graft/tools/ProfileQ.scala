@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-job profile of a SparkEntry query: attaches a logging
   * [[QueryMetrics]] and prints every job's wall, every stage's wall,
-  * run time and task count, plus the end-to-end wall — the measurement
-  * companion for cutting job/stage overheads (guide §1: measure first).
+  * run time and task count, plus the end-to-end wall and the part of it
+  * in which no task ran (driver-only: planning, driver-side builds,
+  * scheduling) — the measurement companion for cutting job/stage
+  * overheads.
   *
   *   sbt "runMain graft.tools.ProfileQ <query> [sfDir] [cpus]"
   */
@@ -23,12 +25,16 @@ object ProfileQ {
     spark.catalog.clearCache()
     val m = new QueryMetrics(logEvents = true)
     spark.sparkContext.addSparkListener(m)
+    val w0 = System.currentTimeMillis()
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, dir).count()
     val wall = (System.nanoTime() - t0) / 1e9
+    val w1 = System.currentTimeMillis()
     m.awaitStable()
     m.events.forEach(l => println(l))
-    println(f"TOTAL $name wall=$wall%.3f s jobs=${m.jobs.get} stages=${m.stages.get} tasks=${m.tasks.get}")
+    val driverOnly = m.driverOnlySeconds(w0, w1)
+    println(f"TOTAL $name wall=$wall%.3f s driver_only=$driverOnly%.3f s " +
+      s"jobs=${m.jobs.get} stages=${m.stages.get} tasks=${m.tasks.get}")
     spark.stop()
   }
 }

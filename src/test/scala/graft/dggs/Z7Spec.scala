@@ -111,6 +111,21 @@ class Z7Spec extends AnyFunSuite {
     assert(Z7.toCellString(Z7.ancestorAt(z, 4)) == "000102")
     assert(Z7.toCellString(Z7.ancestorAt(z, 0)) == "00")
   }
+
+  test("spreadKey is for Spark's hash relation: its JVM hash is low32(z); raw res-4 ids hash apart") {
+    // every cell of res 0..9 ends in at least 33 all-ones pad bits, so
+    // the JVM hash of its spread key is -1 for all of them
+    val rnd = new scala.util.Random(5)
+    for (r <- 0 to 12; _ <- 0 until 50) {
+      val z = Z7.pack(rnd.nextInt(12), Seq.fill(r)(rnd.nextInt(7)))
+      assert(Z7.spreadKey(z).## == z.toInt, f"$z%016x")
+      if (r <= 9) assert(Z7.spreadKey(z).## == -1, f"$z%016x")
+    }
+    // whereas the raw ids of all res-4 cells have distinct JVM hashes
+    val res4 = (0 until 12).flatMap(b => Z7.descendants(Z7.pack(b, Seq.empty), 4))
+    assert(res4.size == 10 * 2401 + 2)
+    assert(res4.map(_.##).distinct.size == res4.size)
+  }
 }
 
 /** Authalic latitude series: roundtrip + known characteristics. */

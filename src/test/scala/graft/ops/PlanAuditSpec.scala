@@ -15,7 +15,8 @@ import org.scalatest.BeforeAndAfterAll
   *    in round 4 (now a broadcast-queries mapPartitions scan);
   *  - the flagship point-in-polygon join broadcasts its cover side;
   *  - `Bench.flagship` and the PIP joins evaluate `cellForPoint` once,
-  *    never inside a pushed-down `Filter`.
+  *    never inside a pushed-down `Filter`, and every driver query
+  *    evaluates it as often as its former ScalaUDF form did.
   */
 class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -362,5 +363,67 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(lines.count(_.startsWith("JOB ")) == 1 && lines.count(_.startsWith("STAGE ")) == 2,
         lines.mkString("\n"))
     } finally sc.removeSparkListener(m)
+  }
+
+  test("QueryMetrics driver-only time lies between 0 and the window's wall") {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.TestBusHook.waitUntilEmpty(sc)
+    val m = new graft.obs.QueryMetrics
+    sc.addSparkListener(m)
+    try {
+      val w0 = System.currentTimeMillis()
+      // driver-only time before, between and after two jobs
+      Thread.sleep(50)
+      sc.parallelize(1 to 1000, 4).map(x => (x % 7, x)).reduceByKey(_ + _, 4).count()
+      Thread.sleep(50)
+      sc.parallelize(1 to 1000, 4).map(_ * 2).sum()
+      val w1 = System.currentTimeMillis()
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(sc)
+      val wall = (w1 - w0) / 1e3
+      val driverOnly = m.driverOnlySeconds(w0, w1)
+      assert(driverOnly >= 0.1 && driverOnly <= wall, s"driver-only $driverOnly s of $wall s")
+      // an empty window has no driver-only time; a window before any
+      // task is all driver-only
+      assert(m.driverOnlySeconds(w0, w0) == 0.0)
+      assert(m.driverOnlySeconds(w0 - 1000, w0) == 1.0)
+    } finally sc.removeSparkListener(m)
+  }
+
+  /** `cellForPoint(` occurrences in each driver query's executed plan at
+    * sf0.001, recorded from the ScalaUDF form (plans/r16/README.md);
+    * every query not listed reads 0
+    */
+  private val udfCellForPointCounts: Map[String, Int] = Map(
+    "dggs_3h_addr_transform" -> 1, "dggs_3h_cell_assign" -> 1, "dggs_3h_cell_geom" -> 1,
+    "dggs_3h_extent_ids" -> 1, "dggs_3h_parent_rollup" -> 1,
+    "dggs_43h_addr_transform" -> 1, "dggs_43h_cell_assign" -> 1, "dggs_43h_cell_geom" -> 1,
+    "dggs_43h_extent_ids" -> 1, "dggs_43h_parent_rollup" -> 1,
+    "dggs_4d_cell_assign" -> 1, "dggs_4d_parent_rollup" -> 1,
+    "dggs_4h_addr_transform" -> 1, "dggs_4h_cell_assign" -> 1, "dggs_4h_cell_geom" -> 1,
+    "dggs_4h_extent_ids" -> 1, "dggs_4h_parent_rollup" -> 1,
+    "dggs_4t_cell_assign" -> 1, "dggs_4t_parent_rollup" -> 1,
+    "dggs_addr_transform" -> 1, "dggs_bin_values" -> 1, "dggs_bin_values_all" -> 13,
+    "dggs_cap_per_cell" -> 1, "dggs_cell_assign" -> 1, "dggs_distance_join" -> 2,
+    "dggs_distinct_docs" -> 1, "dggs_knn" -> 5, "dggs_parent_rollup" -> 1,
+    "dggs_presence" -> 1, "dggs_pyramid" -> 1, "dggs_spatial_join" -> 1,
+    "dggs_spatial_join_compact" -> 1, "dggs_spatial_join_df" -> 1,
+    "dggs_zonal_stats" -> 1, "raster_to_cells" -> 1)
+
+  test("every driver query evaluates the native cellForPoint as often as the UDF form did") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    assert(udfCellForPointCounts.keySet.subsetOf(graft.SparkEntry.queries.keySet))
+    val drift = scala.collection.mutable.ArrayBuffer[String]()
+    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
+         if name != "dggs_checkpoint_rollup" && name != "stream_dedup_ingest") {
+      val qe = fn(spark, sfDir).queryExecution
+      val n = "cellForPoint\\(".r.findAllIn(qe.executedPlan.toString).size
+      val was = udfCellForPointCounts.getOrElse(name, 0)
+      if (n != was) drift += s"$name: $n, was $was"
+      val udfs = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case u: ScalaUDF => u.udfName.getOrElse("")
+      }))
+      if (udfs.contains("cellForPoint")) drift += s"$name: ScalaUDF cellForPoint"
+    }
+    assert(drift.isEmpty, drift.mkString("; "))
   }
 }
