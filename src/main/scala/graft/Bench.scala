@@ -66,20 +66,24 @@ object Bench {
       .groupMap(_._1)(_._2)
       .map { case (cell, wkts) => Row(Z7.spreadKey(cell), wkts) }
     val coverDf = spark.createDataFrame(java.util.Arrays.asList(cover.toSeq: _*), CoverSchema)
-    val hits = udf { (wkts: Seq[String], lon: Double, lat: Double) =>
-      if (wkts == null) 0L else wkts.count(JtsCache.contains(_, lon, lat)).toLong
-    }.withName("pipHits")
     val perCell = geo
       .select(col("lon"), col("lat"),
         F.cellForPoint(col("lon"), col("lat"), lit(res)).as("cell_id"))
       .withColumn("key4", F.z7SpreadKey(F.ancestorAt(col("cell_id"), lit(joinRes))))
       .join(broadcast(coverDf), Seq("key4"), "left")
       .groupBy(F.ancestorAt(col("cell_id"), lit(3)).as("cell3"))
-      .agg(sum(hits(col("wkts"), col("lon"), col("lat"))).as("hits"))
+      .agg(sum(PipHits(col("wkts"), col("lon"), col("lat"))).as("hits"))
       .select("hits").collect()
     val rows = perCell.length + perCell.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
     (rows, rows)
   }
+
+  /** polygons of `wkts` (null: none) containing (lon, lat). Built once:
+    * a typed `udf { … }` derives its encoders on every call.
+    */
+  private val PipHits = udf { (wkts: Seq[String], lon: Double, lat: Double) =>
+    if (wkts == null) 0L else wkts.count(JtsCache.contains(_, lon, lat)).toLong
+  }.withName("pipHits")
 
   /** the flagship cover relation: spread res-4 key, its polygons' WKTs */
   private val CoverSchema = StructType(Seq(

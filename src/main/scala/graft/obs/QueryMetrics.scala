@@ -18,7 +18,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * and the user call site of stages running over 0.5 s).
   *
   * [[driverOnlySeconds]] reads the time of a window in which no task
-  * ran: planning, driver-side builds, scheduling and result handling.
+  * ran: planning, driver-side builds, scheduling and result handling;
+  * [[jobsInGroup]] counts the jobs started under one job group.
   */
 class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
   val read = new AtomicLong
@@ -33,6 +34,8 @@ class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
   private val jobStarts = new ConcurrentHashMap[Int, (Long, String)]
   /** (launch, finish) wall-clock ms of every finished task */
   private val taskSpans = new ConcurrentLinkedQueue[(Long, Long)]
+  /** job group id (`SparkContext.setJobGroup`) of every started job */
+  private val jobGroups = new ConcurrentLinkedQueue[String]
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     taskSpans.add((te.taskInfo.launchTime, te.taskInfo.finishTime))
@@ -46,9 +49,11 @@ class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
     }
   }
 
-  override def onJobStart(js: SparkListenerJobStart): Unit =
-    if (logEvents) jobStarts.put(js.jobId, (System.nanoTime(),
-      Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")))
+  override def onJobStart(js: SparkListenerJobStart): Unit = {
+    def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+    jobGroups.add(prop("spark.jobGroup.id"))
+    if (logEvents) jobStarts.put(js.jobId, (System.nanoTime(), prop("spark.job.description")))
+  }
 
   override def onJobEnd(je: SparkListenerJobEnd): Unit = {
     jobs.incrementAndGet()
@@ -90,6 +95,10 @@ class QueryMetrics(logEvents: Boolean = false) extends SparkListener {
     }
     (math.max(0L, toMs - fromMs) - busy) / 1e3
   }
+
+  /** jobs started under job group `group`; read it after [[awaitStable]] */
+  def jobsInGroup(group: String): Int =
+    jobGroups.toArray(Array.empty[String]).count(_ == group)
 
   /** (shuffle read, shuffle write, memory spill, disk spill) bytes */
   def snap(): (Long, Long, Long, Long) =

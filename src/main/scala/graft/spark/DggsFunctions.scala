@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, If, IsNull, KnownN
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExprBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, ObjectType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, ObjectType}
 import graft.dggs.{DggsKernel, HexKernel, IGeo7, Isea3H, Isea43H, Isea4D, Isea4H, Isea4T,
   KernelSpec, Sphere, Z7}
 import Sphere.GeoRad
@@ -83,7 +83,7 @@ object DggsFunctions {
     */
   def cellForPoint(lon: Column, lat: Column, res: Column,
                    kernel: DggsKernel = Grids.default): Column = {
-    val args = Seq(lon.cast("double"), lat.cast("double"), res.cast("int"))
+    val args = Seq(lon.cast(DoubleType), lat.cast(DoubleType), res.cast(IntegerType))
       .map(ExprBridge.expression)
     val call = Invoke(kernelLiteral(kernel), "cellForPoint", LongType,
       args.map(KnownNotNull(_)), propagateNull = false, returnNullable = false)
@@ -99,15 +99,15 @@ object DggsFunctions {
 
   /** parent cell at res-1 (raises on res 0) */
   def parent(cell: Column, kernel: DggsKernel = Grids.default): Column =
-    kernelCall(kernel, "parent", LongType, cell.cast("long"))
+    kernelCall(kernel, "parent", LongType, cell.cast(LongType))
 
   /** ancestor at resolution r (raises unless 0 ≤ r ≤ the cell's res) */
   def ancestorAt(cell: Column, r: Column, kernel: DggsKernel = Grids.default): Column =
-    kernelCall(kernel, "ancestorAt", LongType, cell.cast("long"), r.cast("int"))
+    kernelCall(kernel, "ancestorAt", LongType, cell.cast(LongType), r.cast(IntegerType))
   def z7AncestorAt(cell: Column, r: Column): Column = ancestorAt(cell, r)
 
   def resolution(cell: Column, kernel: DggsKernel = Grids.default): Column =
-    kernelCall(kernel, "resolution", IntegerType, cell.cast("long"))
+    kernelCall(kernel, "resolution", IntegerType, cell.cast(LongType))
 
   /** `kernel.<method>(args)` as one native expression: codegen emits a
     * direct call on the kernel, which rides the generated class's
