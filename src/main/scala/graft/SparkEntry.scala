@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops._
+import graft.dggs.DggsKernel
 import graft.spark.{DggsFunctions => F, Grids}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -17,16 +18,6 @@ object SparkEntry {
 
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
-  /** the `dggs_*_stats` projection: resolutions 0..15 of
-    * [[GridOps.gridStatsTable]] with lower-case names and CLS rounded to
-    * 6 decimals
-    */
-  private def gridStats(s: SparkSession, aperture: Int = 7, topology: String = "HEXAGON",
-                        mixedN4: Int = 3): DataFrame =
-    GridOps.gridStatsTable(s, 15, aperture, topology, mixedN4)
-      .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-        col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-
   /** geoSpans RESTRICTED to the frozen fixture's key set (round-6
     * verdict #1): every query whose oracle inner-joins
     * `OracleFixtures.geoCellCte` consumes THIS relation, so the Spark
@@ -39,47 +30,32 @@ object SparkEntry {
     FixtureKeys.restrictGeo(
       CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents"))))
 
-  /** Session-memoized stage-1 pair artifact for the clean pipeline
-    * (round-7 verdict #4): [[TextOps.cleanCorpusPairs]] materialized to
-    * a temp parquet ONCE per corpus dir and read back by every later
-    * invocation — the lake shape a production pipeline runs (the pair
-    * table is computed once per corpus snapshot and consumed by each
-    * downstream composition via [[TextOps.precomputedPairSource]]).
-    * First touch pays the build; repeat runs measure the production
-    * read path. Dirs are deleted on JVM exit (never left in /tmp).
+  /** Session-memoized lake artifacts, built ONCE per (artifact, corpus
+    * dir) into `<tmpdir>/<name>.parquet` and read back by every later
+    * invocation through [[Tables.tbl]] (so a read starts no
+    * schema-inference job) — the lake shape a production pipeline runs:
+    *  - `clean_pairs`, the stage-1 pair table of the clean pipeline
+    *    (round-7 verdict #4): [[TextOps.cleanCorpusPairs]], computed once
+    *    per corpus snapshot and consumed by each downstream composition
+    *    via [[TextOps.precomputedPairSource]];
+    *  - `stream_prints`, the corpus-fingerprint snapshot of the streaming
+    *    ingest gate query ([[TextOps.dedupIncremental]]'s own contract
+    *    calls it "a lake-resident snapshot"; a production ingest never
+    *    rebuilds it per trigger).
+    * First touch pays the build; repeat runs measure the production read
+    * path. Dirs are deleted on JVM exit (never left in /tmp).
     */
-  private val cleanPairsDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cleanPairsLake(s: SparkSession, dir: String): DataFrame = {
-    val path = cleanPairsDirs.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_clean_pairs")
+  private val lakeDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private def sessionLake(s: SparkSession, name: String, dir: String)(
+      build: => DataFrame): DataFrame = {
+    val tmp = lakeDirs.computeIfAbsent((name, dir), _ => {
+      val out = java.nio.file.Files.createTempDirectory(s"graft_$name")
       sys.addShutdownHook(graft.tools.Fs.deleteRecursively(out))
-      TextOps.cleanCorpusPairs(Tables.tbl(s, dir, "documents"))
-        .write.mode("overwrite").parquet(out.toString)
+      build.write.mode("overwrite").parquet(s"$out/$name.parquet")
       out.toString
     })
-    s.read.parquet(path)
-  }
-
-  /** Session-memoized corpus-fingerprint snapshot for the streaming
-    * ingest gate query — [[TextOps.corpusFingerprints]] over the 500-id
-    * gate corpus, persisted once per dir ([[TextOps.dedupIncremental]]'s
-    * own contract calls this relation "a lake-resident snapshot"; a
-    * production ingest never rebuilds it per trigger). Same lifecycle
-    * as [[cleanPairsLake]].
-    */
-  private val streamPrintsDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamPrintsLake(s: SparkSession, dir: String,
-                               corpus: DataFrame): DataFrame = {
-    val path = streamPrintsDirs.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_stream_prints")
-      sys.addShutdownHook(graft.tools.Fs.deleteRecursively(out))
-      TextOps.corpusFingerprints(corpus)
-        .write.mode("overwrite").parquet(out.toString)
-      out.toString
-    })
-    s.read.parquet(path)
+    Tables.tbl(s, tmp, name)
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
@@ -89,7 +65,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("dggs_cell_assign")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, Query] = Map[String, Query](
     // ---- relational anchors (harness sanity + shuffle/agg shapes) ----
     "q1_agg" -> ((s, dir) => {
       Tables.tbl(s, dir, "lineitem")
@@ -209,10 +185,10 @@ object SparkEntry {
       // the corpus snapshot is a LAKE ARTIFACT by dedupIncremental's own
       // contract ("a lake-resident corpusFingerprints snapshot") — built
       // once per corpus dir and read back on later invocations, exactly
-      // like cleanPairsLake; the warm path then measures ingest, not
+      // like clean_pairs; the warm path then measures ingest, not
       // snapshot (re)builds
       val prints = new java.util.concurrent.atomic.AtomicReference(
-        streamPrintsLake(s, dir, corpus).cache())
+        sessionLake(s, "stream_prints", dir)(TextOps.corpusFingerprints(corpus)).cache())
       prints.get().count()
       val q = mem.toDF().toDF("doc_id", "text").writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -294,7 +270,8 @@ object SparkEntry {
       val docs = Tables.tbl(s, dir, "documents")
       val digest = CorpusOps.spanSequenceDigest(CorpusOps.interleavedDocs(docs))
       TextOps.cleanCorpus(docs,
-          pairSource = TextOps.precomputedPairSource(cleanPairsLake(s, dir)))
+          pairSource = TextOps.precomputedPairSource(
+            sessionLake(s, "clean_pairs", dir)(TextOps.cleanCorpusPairs(docs))))
         .select(format_string("doc-%012d", col("doc_id")).as("doc_id"))
         .join(digest, "doc_id")
         .select(col("doc_id"), col("n_spans"), col("seq_md5"))
@@ -606,23 +583,8 @@ object SparkEntry {
         .select(col("name"), col("value_mean"), col("value_count"))
     }),
 
-    // ---- DGGS operators (cell math not SQL-expressible: stats has a
-    // closed-form oracle; the rest are rows-only checks here and golden
-    // DGGRID-parity checks in the ScalaTest suite) ----
-    "dggs_stats" -> ((s, _) => {
-      gridStats(s)
-    }),
-    "dggs_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 5)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_parent_rollup" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6)
-        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(3))).as("name3"))
-        .agg(count(lit(1)).as("n"))
-    }),
+    // ---- Z7-only DGGS operators (the per-kernel gates are the
+    // `kernelGates` rows below) ----
     "dggs_pyramid" -> ((s, dir) => {
       // full zoom pyramid res 6 → 0, each level aggregated from the
       // level below (never from the points again); the oracle
@@ -795,26 +757,6 @@ object SparkEntry {
         broadcastCovers = Some(true))
         .select(col("doc_id"), col("offset"), col("poly_id"))
     }),
-    "dggs_4t_compact" -> ((s, _) => {
-      val g = Grids.isea4t
-      // compaction on the aperture-4 TRIANGLE grid (family size 4, no
-      // pentagon case): the full res-3 cover under base "05" cascades to
-      // the base cell; res-6 descendants of "172031" minus one leaf
-      // compact 3 of 4 res-5 families and keep the punctured family's 3
-      // survivors; a 2-cell scatter passes through
-      import s.implicits._
-      val full = Seq("05").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
-          .as("cell_id"))
-      val punct = Seq("172031").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(6), g))
-          .as("cell_id"))
-        .where(F.cellString(col("cell_id"), g) =!= "17203111")
-      val scatter = Seq("0311", "0322").toDF("n")
-        .select(F.cellFromString(col("n"), g).as("cell_id"))
-      GridOps.compactCells(full.unionByName(punct).unionByName(scatter), kernel = g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
     "dggs_zonal_stats" -> ((s, dir) => {
       // ZONAL STATISTICS: per-polygon aggregates of a per-span weight
       // (derived deterministically from the row key — the corpus has no
@@ -915,311 +857,6 @@ object SparkEntry {
         .groupBy("cell2").agg(sum("n").as("n"))
         .select(F.cellString(col("cell2")).as("name2"), col("n"))
     }),
-    // ---- ISEA4T (aperture-4 triangle kernel) ----
-    "dggs_4t_stats" -> ((s, _) => {
-      gridStats(s, 4, "TRIANGLE")
-    }),
-    "dggs_4t_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 5, Grids.isea4t)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_4t_parent_rollup" -> ((s, dir) => {
-      val g = Grids.isea4t
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_4t_children" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea4t
-      val parents = Seq(("05", 4), ("172031", 8)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
-        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
-    }),
-
-    // ---- ISEA4D (aperture-4 diamond kernel) ----
-    "dggs_4d_stats" -> ((s, _) => {
-      gridStats(s, 4, "DIAMOND")
-    }),
-    "dggs_4d_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 5, Grids.isea4d)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_4d_parent_rollup" -> ((s, dir) => {
-      val g = Grids.isea4d
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- ISEA3H (aperture-3 hexagon kernel, round 8) ----
-    "dggs_3h_stats" -> ((s, _) => {
-      gridStats(s, 3, "HEXAGON")
-    }),
-    "dggs_3h_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea3h)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_3h_parent_rollup" -> ((s, dir) => {
-      val g = Grids.isea3h
-      // index-space rollup: Z3 paths are prefix-hierarchical even though
-      // aperture-3 hexagons don't nest geometrically, so the oracle's
-      // substr over the frozen res-6 column is the exact semantics
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_3h_children" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea3h
-      // a quad subtree, a deep quad subtree, and a cap subtree (caps
-      // have exactly one child per level — the engine contract)
-      val parents = Seq(("05", 2), ("070210", 8), ("00", 3)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
-        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_3h_addr_transform" -> ((s, dir) => {
-      val g = Grids.isea3h
-      // hop chain Z3_STRING → ZORDER → Q2DI → Z3 → Z3_STRING: the middle
-      // hops exercise the bit-interleaved and (quad,i,j) frames both
-      // directions end-to-end; the round-trip identity keeps the frozen
-      // h6 oracle valid (the VERTEX2DD pattern of dggs_addr_transform)
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform(cells, "name", "Z3_STRING", "ZORDER", 6, g)
-        .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform(zo, "zo", "ZORDER", "Q2DI", 6, g)
-        .withColumnRenamed("out_addr", "qij")
-      val z3 = GridOps.addressTransform(qij, "qij", "Q2DI", "Z3", 6, g)
-        .withColumnRenamed("out_addr", "z3")
-      GridOps.addressTransform(z3, "z3", "Z3", "Z3_STRING", 6, g)
-        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
-    }),
-    "dggs_3h_compact" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea3h
-      // compaction on the aperture-3 hex INDEX hierarchy (family size 3
-      // on quad bases, 1 on the caps): the full res-3 cover under quad
-      // base "05" cascades to the base cell; res-6 descendants of
-      // "072012" minus one leaf compact 2 of 3 res-5 families and keep
-      // the punctured family's 2 survivors; a lone cap descendant
-      // ("000000") cascades through the family-1 cap rule to "00"; a
-      // 2-cell scatter passes through
-      val full = Seq("05").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
-          .as("cell_id"))
-      val punct = Seq("072012").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(6), g))
-          .as("cell_id"))
-        .where(F.cellString(col("cell_id"), g) =!= "07201211")
-      val capAndScatter = Seq("000000", "0311", "0322").toDF("n")
-        .select(F.cellFromString(col("n"), g).as("cell_id"))
-      GridOps.compactCells(full.unionByName(punct).unionByName(capAndScatter), kernel = g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_3h_extent_ids" -> ((s, _) => {
-      val g = Grids.isea3h
-      // clipped hex extent via sample-assign-refine (levelwise pruning
-      // is unsound on the hex index hierarchies — seam re-homing; the
-      // exactness property vs brute force is SparkOpsSpec "hex extent
-      // ids", the frozen fixture pins regression)
-      GridOps.gridCellIdsForExtent(s, 8, Some((20.2, 57.0, 28.4, 60.0)), g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_3h_cell_geom" -> ((s, _) => {
-      val g = Grids.isea3h
-      // H1/H2 analog on the hex grid: centroid (µdeg floor) + vertex
-      // count per extent cell via the SPARK column path; the oracle is
-      // frozen from the DRIVER-side pure kernel — the two paths
-      // cross-check (the polar_cover pattern)
-      val c = F.cellCenter(col("cell_id"), g)
-      GridOps.gridCellIdsForExtent(s, 8, Some((20.2, 57.0, 28.4, 60.0)), g)
-        .select(F.cellString(col("cell_id"), g).as("name"),
-          floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
-          floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
-    }),
-
-    // ---- ISEA4H (aperture-4 hexagon kernel, round 8) ----
-    "dggs_4h_stats" -> ((s, _) => {
-      gridStats(s, 4, "HEXAGON")
-    }),
-    "dggs_4h_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea4h)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_4h_parent_rollup" -> ((s, dir) => {
-      val g = Grids.isea4h
-      // index-space rollup: Z4 paths are prefix-hierarchical (aperture-4
-      // hexagons don't nest geometrically either, though all 4 child
-      // centers sit inside the parent), so the oracle's substr over the
-      // frozen res-6 column is the exact semantics
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_4h_children" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea4h
-      // a quad subtree, a deep quad subtree, and a cap subtree (caps
-      // have exactly one child per level — the engine contract)
-      val parents = Seq(("05", 2), ("070310", 8), ("00", 3)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
-        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_4h_addr_transform" -> ((s, dir) => {
-      val g = Grids.isea4h
-      // hop chain Z4_STRING → ZORDER → Q2DI → Z4 → Z4_STRING: the middle
-      // hops exercise the bit-interleaved and (quad,i,j) frames both
-      // directions end-to-end; the round-trip identity keeps the frozen
-      // f6 oracle valid (the 3H/VERTEX2DD pattern)
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform(cells, "name", "Z4_STRING", "ZORDER", 6, g)
-        .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform(zo, "zo", "ZORDER", "Q2DI", 6, g)
-        .withColumnRenamed("out_addr", "qij")
-      val z4 = GridOps.addressTransform(qij, "qij", "Q2DI", "Z4", 6, g)
-        .withColumnRenamed("out_addr", "z4")
-      GridOps.addressTransform(z4, "z4", "Z4", "Z4_STRING", 6, g)
-        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
-    }),
-    "dggs_4h_compact" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea4h
-      // the 3H compact scenario on the aperture-4 hierarchy (family 4 on
-      // quad bases, 1 on the caps) — this time the cap chain runs under
-      // base 11 so both caps are covered across the two hex compact
-      // queries
-      val full = Seq("05").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
-          .as("cell_id"))
-      val punct = Seq("072013").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(6), g))
-          .as("cell_id"))
-        .where(F.cellString(col("cell_id"), g) =!= "07201311")
-      val capAndScatter = Seq("110000", "0311", "0322").toDF("n")
-        .select(F.cellFromString(col("n"), g).as("cell_id"))
-      GridOps.compactCells(full.unionByName(punct).unionByName(capAndScatter), kernel = g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_4h_extent_ids" -> ((s, _) => {
-      val g = Grids.isea4h
-      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_4h_cell_geom" -> ((s, _) => {
-      val g = Grids.isea4h
-      val c = F.cellCenter(col("cell_id"), g)
-      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
-        .select(F.cellString(col("cell_id"), g).as("name"),
-          floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
-          floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
-    }),
-
-    // ---- ISEA43H (MIXED-aperture hexagon kernel, round 8; gate config
-    // mixed_aperture_level = 3: levels 1-3 aperture 4, 4+ aperture 3) ----
-    "dggs_43h_stats" -> ((s, _) => {
-      gridStats(s, 43, "HEXAGON", mixedN4 = 3)
-    }),
-    "dggs_43h_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, Grids.isea43h(3))
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_43h_parent_rollup" -> ((s, dir) => {
-      val g = Grids.isea43h(3)
-      // rollup to res 2 — INSIDE the aperture-4 prefix of the gate
-      // config, so the substr oracle crosses the 4→3 boundary between
-      // the frozen res-6 digits and the res-2 ancestor
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(2), g), g).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_43h_children" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea43h(3)
-      // "0531" res-2 → res-4 CROSSES the aperture boundary (level 3 is
-      // aperture 4: digits 0-3; level 4 is aperture 3: digits 0-2), plus
-      // a cap subtree (one child per level)
-      val parents = Seq(("0531", 4), ("00", 3)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
-        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_43h_addr_transform" -> ((s, dir) => {
-      val g = Grids.isea43h(3)
-      // hop chain Z43_STRING → ZORDER_STRING → Q2DI → Z43 → Z43_STRING:
-      // the middle hops exercise the mixed-radix interleave and the
-      // reduced (quad,i,j) frame both directions end-to-end; the
-      // round-trip identity keeps the frozen m6 oracle valid
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 6, g)
-        .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform(cells, "name", "Z43_STRING", "ZORDER_STRING", 6, g)
-        .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform(zo, "zo", "ZORDER_STRING", "Q2DI", 6, g)
-        .withColumnRenamed("out_addr", "qij")
-      val z43 = GridOps.addressTransform(qij, "qij", "Q2DI", "Z43", 6, g)
-        .withColumnRenamed("out_addr", "z43")
-      GridOps.addressTransform(z43, "z43", "Z43", "Z43_STRING", 6, g)
-        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
-    }),
-    "dggs_43h_extent_ids" -> ((s, _) => {
-      val g = Grids.isea43h(3)
-      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
-    "dggs_43h_cell_geom" -> ((s, _) => {
-      val g = Grids.isea43h(3)
-      val c = F.cellCenter(col("cell_id"), g)
-      GridOps.gridCellIdsForExtent(s, 6, Some((20.2, 57.0, 28.4, 60.0)), g)
-        .select(F.cellString(col("cell_id"), g).as("name"),
-          floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
-          floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
-    }),
-    "dggs_43h_compact" -> ((s, _) => {
-      import s.implicits._
-      val g = Grids.isea43h(3)
-      // mixed-aperture compaction ACROSS the 4→3 boundary (n4=3): the
-      // full res-3 cover under "05" compacts through three aperture-4
-      // levels; the res-4 descendants of "0720" minus one leaf compact
-      // 3 of 4 level-4 families (each family size 3 — level 4 is
-      // aperture 3) but the level-3 family of 4 stays incomplete; cap
-      // chain + scatter as in the pure-aperture queries
-      val full = Seq("05").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(3), g))
-          .as("cell_id"))
-      val punct = Seq("0720").toDF("p")
-        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(4), g))
-          .as("cell_id"))
-        .where(F.cellString(col("cell_id"), g) =!= "072032")
-      val capAndScatter = Seq("00000", "0311", "0322").toDF("n")
-        .select(F.cellFromString(col("n"), g).as("cell_id"))
-      GridOps.compactCells(full.unionByName(punct).unionByName(capAndScatter), kernel = g)
-        .select(F.cellString(col("cell_id"), g).as("name"))
-    }),
-
     "dggs_addr_transform" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 4)
@@ -1232,7 +869,159 @@ object SparkEntry {
       GridOps.addressTransform(v2, "v2dd", "VERTEX2DD", "SEQNUM", 4)
         .select(col("doc_id"), col("offset"), col("name"), col("out_addr").as("seqnum"))
     })
-  )
+  ) ++ kernelGates.flatMap(gateQueries)
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** Compaction scenario: every res-`fullRes` descendant of `full`, the
+    * res-`punctRes` descendants of `punct` minus `hole` (its family stays
+    * incomplete), and `extra` cells (scatter, cap chains)
+    */
+  private case class CompactCase(full: String, fullRes: Int, punct: String, punctRes: Int,
+                                 hole: String, extra: Seq[String])
+
+  /** One kernel's gate queries `<name>_{stats, cell_assign, parent_rollup,
+    * children, compact, addr_transform, extent_ids, cell_geom}`; a member
+    * whose field is empty is left out. Only literals:
+    *  - Spark side: `grid` (the Grids accessor, called when a query is
+    *    built), `aperture`/`topology` of the stats table, `assignRes`,
+    *    `rollupRes` (the ancestor of the res-6 cells), the `children`
+    *    seeds (parent, to-res), `compact`, `zorder` (the ZORDER form of the
+    *    address hop chain `<id>_STRING → zorder → Q2DI → <id> → <id>_STRING`
+    *    at `assignRes`), `extent` (res, then its two frozen oracles) for
+    *    the extent ids and cell geometry over [[gateBox]].
+    *  - oracle side, never the kernel: the frozen res-6 fixture column
+    *    `fx`, the SQL of the frozen assignment `assignFx`, the stats cell
+    *    count `base` · radix product + `plus`, the per-level digit radix
+    *    (4 on levels 1..`n4`, `radix` after; a complete family has one
+    *    child per digit) and the `caps` (bases with one child per level).
+    */
+  private case class KernelGates(
+      name: String, grid: () => DggsKernel, aperture: Int, topology: String,
+      assignRes: Int, rollupRes: Int, fx: String, assignFx: String,
+      radix: Int, base: Int = 10, plus: Int = 2, n4: Int = 0,
+      caps: Seq[String] = Seq("00", "11"), children: Seq[(String, Int)] = Nil,
+      compact: Option[CompactCase] = None, zorder: Option[String] = None,
+      extent: Option[(Int, String, String)] = None)
+
+  private val kernelGates = Seq(
+    // Z7 cells do not nest, so the res-5 assignment has its own frozen column
+    KernelGates("dggs", () => Grids.default, 7, "HEXAGON", 5, 3, "c6", "c5",
+      radix = 7, caps = Nil),
+    // T4 nests exactly, so the res-5 assignment is a prefix of the frozen t6
+    KernelGates("dggs_4t", () => Grids.isea4t, 4, "TRIANGLE", 5, 2, "t6", "substr(t6, 1, 7)",
+      radix = 4, base = 20, plus = 0, caps = Nil,
+      children = Seq("05" -> 4, "172031" -> 8),
+      compact = Some(CompactCase("05", 3, "172031", 6, "17203111", Seq("0311", "0322")))),
+    // D4 nests exactly, like T4
+    KernelGates("dggs_4d", () => Grids.isea4d, 4, "DIAMOND", 5, 2, "d6", "substr(d6, 1, 7)",
+      radix = 4, plus = 0, caps = Nil),
+    // hex ids are prefix-hierarchical in index space, so ancestors are substrs
+    // although the cells do not nest; hex extents use sample-assign-refine,
+    // as levelwise pruning is unsound where cells re-home across quad seams
+    KernelGates("dggs_3h", () => Grids.isea3h, 3, "HEXAGON", 6, 2, "h6", "h6", radix = 3,
+      children = Seq("05" -> 2, "070210" -> 8, "00" -> 3),
+      compact = Some(CompactCase("05", 3, "072012", 6, "07201211",
+        Seq("000000", "0311", "0322"))),
+      zorder = Some("ZORDER"),
+      extent = Some((8, OracleFixtures.extent3hSql, OracleFixtures.geom3hSql))),
+    // the 4H cap chain runs under base 11, so the hex compactions cover both caps
+    KernelGates("dggs_4h", () => Grids.isea4h, 4, "HEXAGON", 6, 2, "f6", "f6", radix = 4,
+      children = Seq("05" -> 2, "070310" -> 8, "00" -> 3),
+      compact = Some(CompactCase("05", 3, "072013", 6, "07201311",
+        Seq("110000", "0311", "0322"))),
+      zorder = Some("ZORDER"),
+      extent = Some((6, OracleFixtures.extent4hSql, OracleFixtures.geom4hSql))),
+    // 43H at mixed_aperture_level 3: the res-2 rollup, the "0531" children
+    // and the "0720" compaction cross the 4→3 aperture boundary; its hop
+    // chain runs through the mixed-radix ZORDER_STRING
+    KernelGates("dggs_43h", () => Grids.isea43h(3), 43, "HEXAGON", 6, 2, "m6", "m6",
+      radix = 3, n4 = 3,
+      children = Seq("0531" -> 4, "00" -> 3),
+      compact = Some(CompactCase("05", 3, "0720", 4, "072032", Seq("00000", "0311", "0322"))),
+      zorder = Some("ZORDER_STRING"),
+      extent = Some((6, OracleFixtures.extent43hSql, OracleFixtures.geom43hSql))))
+
+  /** the extent gates' clip box (Estonia) */
+  private val gateBox = Some((20.2, 57.0, 28.4, 60.0))
+
+  /** the Spark side of one [[KernelGates]] row */
+  private def gateQueries(k: KernelGates): Seq[(String, Query)] = {
+    def cells(s: SparkSession, dir: String, res: Int, g: DggsKernel) =
+      GridOps.cellsForGeoPoints(fixtureGeoSpans(s, dir), "lon", "lat", res, g)
+    def names(df: DataFrame, g: DggsKernel) =
+      df.select(F.cellString(col("cell_id"), g).as("name"))
+    def descendants(s: SparkSession, cell: String, res: Int, g: DggsKernel) = {
+      import s.implicits._
+      Seq(cell).toDF("p")
+        .select(explode(F.descendantsAt(F.cellFromString(col("p"), g), lit(res), g))
+          .as("cell_id"))
+    }
+    val n = k.name
+    Seq[(String, Query)](
+      // resolutions 0..15 with lower-case names and CLS rounded to 6 decimals
+      s"${n}_stats" -> ((s, _) =>
+        GridOps.gridStatsTable(s, 15, k.aperture, k.topology, k.n4)
+          .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
+            col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))),
+      s"${n}_cell_assign" -> ((s, dir) =>
+        cells(s, dir, k.assignRes, k.grid()).select(col("doc_id"), col("offset"), col("name"))),
+      s"${n}_parent_rollup" -> { (s, dir) =>
+        val g = k.grid()
+        cells(s, dir, 6, g)
+          .groupBy(F.cellString(F.ancestorAt(col("cell_id"), lit(k.rollupRes), g), g)
+            .as(s"name${k.rollupRes}"))
+          .agg(count(lit(1)).as("n"))
+      }) ++
+    (if (k.children.isEmpty) Nil else Seq[(String, Query)](s"${n}_children" -> { (s, _) =>
+      import s.implicits._
+      val g = k.grid()
+      k.children.toDF("parent", "to_res")
+        .withColumn("cell_id",
+          explode(F.descendantsAt(F.cellFromString(col("parent"), g), col("to_res"), g)))
+        .select(col("parent"), F.cellString(col("cell_id"), g).as("name"))
+    })) ++
+    k.compact.map(c => s"${n}_compact" -> ({ (s, _) =>
+      import s.implicits._
+      val g = k.grid()
+      val punct = descendants(s, c.punct, c.punctRes, g)
+        .where(F.cellString(col("cell_id"), g) =!= c.hole)
+      val extra = c.extra.toDF("n").select(F.cellFromString(col("n"), g).as("cell_id"))
+      names(GridOps.compactCells(
+        descendants(s, c.full, c.fullRes, g).unionByName(punct).unionByName(extra),
+        kernel = g), g)
+    }: Query)) ++
+    k.zorder.map(zo => s"${n}_addr_transform" -> ({ (s, dir) =>
+      val g = k.grid()
+      val (id, res) = (g.idName, k.assignRes)
+      val hop0 = cells(s, dir, res, g).select(col("doc_id"), col("offset"), col("name"))
+      val hop1 = GridOps.addressTransform(hop0, "name", s"${id}_STRING", zo, res, g)
+        .withColumnRenamed("out_addr", "zo")
+      val hop2 = GridOps.addressTransform(hop1, "zo", zo, "Q2DI", res, g)
+        .withColumnRenamed("out_addr", "qij")
+      val hop3 = GridOps.addressTransform(hop2, "qij", "Q2DI", id, res, g)
+        .withColumnRenamed("out_addr", id.toLowerCase)
+      GridOps.addressTransform(hop3, id.toLowerCase, id, s"${id}_STRING", res, g)
+        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
+    }: Query)) ++
+    k.extent.toSeq.flatMap { case (res, _, _) => Seq[(String, Query)](
+      s"${n}_extent_ids" -> { (s, _) =>
+        val g = k.grid()
+        names(GridOps.gridCellIdsForExtent(s, res, gateBox, g), g)
+      },
+      // the frozen oracle comes from the driver-side kernel, so it
+      // cross-checks this Spark column path
+      s"${n}_cell_geom" -> { (s, _) =>
+        val g = k.grid()
+        val c = F.cellCenter(col("cell_id"), g)
+        GridOps.gridCellIdsForExtent(s, res, gateBox, g)
+          .select(F.cellString(col("cell_id"), g).as("name"),
+            floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
+            floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
+            size(F.cellBoundary(col("cell_id"), g)).cast("long").as("n_vertices"))
+      })
+    }
+  }
 
   // ---------------------------------------------------------------------
   // DuckDB oracle SQL. Shared CTE fragments keep the two sides aligned.
@@ -1789,18 +1578,9 @@ object SparkEntry {
          |  FROM p)
          |WHERE rnk <= 3""".stripMargin,
     // ---- DGGS oracles over the frozen kernel mapping (geoCellsCte) ----
-    "dggs_cell_assign" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", c5 AS name FROM gc""".stripMargin,
     "dggs_addr_transform" ->
       s"""WITH $geoCellsCte
          |SELECT doc_id, "offset", c4 AS name, seq4 AS seqnum FROM gc""".stripMargin,
-    "dggs_parent_rollup" ->
-      // Z7 ancestry IS string-prefix truncation: res-3 ancestor of a res-6
-      // cell = first 2+3 chars — the rollup itself is genuine SQL
-      s"""WITH $geoCellsCte
-         |SELECT substr(c6, 1, 5) AS name3, count(*) AS n
-         |FROM gc GROUP BY 1""".stripMargin,
     "dggs_pyramid" ->
       // every level aggregated DIRECTLY from the frozen point→cell
       // fixture (Z7 ancestry = prefix truncation; res r name = r+2
@@ -1891,80 +1671,21 @@ object SparkEntry {
     "dggs_coarse_children" ->
       // Z7 descendants of a non-pentagon parent = every digit string over
       // {0..6} appended to the parent — pure enumeration, genuine SQL
-      """WITH d AS (SELECT CAST(unnest(generate_series(0, 6)) AS VARCHAR) AS x)
-        |SELECT '023' AS parent, '023' || d1.x || d2.x || d3.x || d4.x AS name
-        |FROM d d1, d d2, d d3, d d4
-        |UNION ALL
-        |SELECT '000125023' AS parent, '000125023' || d1.x || d2.x AS name
-        |FROM d d1, d d2""".stripMargin,
-    "dggs_compact" ->
-      // GENERIC compaction recomputed on names (res = len-2; pentagon ⟺
-      // digits after the 2-char base all '0' → family size 6 else 7),
-      // unrolled bottom-up res 3→1 — one (group, filter, rewrite) block
-      // per level, exactly the engine's round structure
-      """WITH d AS (SELECT CAST(unnest(generate_series(0, 6)) AS VARCHAR) AS x),
-        |full3 AS (SELECT p.p || d1.x || d2.x AS name
-        |          FROM (VALUES ('023'), ('045')) p(p), d d1, d d2
-        |          WHERE p.p || d1.x || d2.x <> '04511'),
-        |c0 AS (SELECT name FROM full3
-        |       UNION ALL
-        |       SELECT name FROM (VALUES ('001'),('003'),('004'),('005'),
-        |         ('006'),('0000'),('0001'),('0003'),('0004'),('0005'),
-        |         ('0006'),('06612'),('06646'),('06600')) t(name)),
-        |g3 AS (SELECT substr(name, 1, 4) AS p, count(*) AS n
-        |       FROM c0 WHERE len(name) = 5 GROUP BY 1),
-        |f3 AS (SELECT p FROM g3 WHERE n = CASE
-        |         WHEN regexp_full_match(substr(p, 3), '0*') THEN 6 ELSE 7 END),
-        |c1 AS (SELECT name FROM c0 WHERE len(name) <> 5
-        |       UNION ALL
-        |       SELECT name FROM c0 WHERE len(name) = 5
-        |         AND substr(name, 1, 4) NOT IN (SELECT p FROM f3)
-        |       UNION ALL SELECT p FROM f3),
-        |g2 AS (SELECT substr(name, 1, 3) AS p, count(*) AS n
-        |       FROM c1 WHERE len(name) = 4 GROUP BY 1),
-        |f2 AS (SELECT p FROM g2 WHERE n = CASE
-        |         WHEN regexp_full_match(substr(p, 3), '0*') THEN 6 ELSE 7 END),
-        |c2 AS (SELECT name FROM c1 WHERE len(name) <> 4
-        |       UNION ALL
-        |       SELECT name FROM c1 WHERE len(name) = 4
-        |         AND substr(name, 1, 3) NOT IN (SELECT p FROM f2)
-        |       UNION ALL SELECT p FROM f2),
-        |g1 AS (SELECT substr(name, 1, 2) AS p, count(*) AS n
-        |       FROM c2 WHERE len(name) = 3 GROUP BY 1),
-        |f1 AS (SELECT p FROM g1 WHERE n = CASE
-        |         WHEN regexp_full_match(substr(p, 3), '0*') THEN 6 ELSE 7 END),
-        |c3 AS (SELECT name FROM c2 WHERE len(name) <> 3
-        |       UNION ALL
-        |       SELECT name FROM c2 WHERE len(name) = 3
-        |         AND substr(name, 1, 2) NOT IN (SELECT p FROM f1)
-        |       UNION ALL SELECT p FROM f1)
-        |SELECT name FROM c3""".stripMargin,
-    // ---- ISEA4T oracles: frozen t6 column (T4 nests exactly, so every
-    // coarser name is a substr — the nesting is proven in Isea4TSpec) ----
-    "dggs_4t_stats" ->
-      """SELECT r AS resolution,
-        |       CAST(20 * power(4, r) AS BIGINT) AS cells,
-        |       4 * pi() * 6371.00718091847 * 6371.00718091847
-        |         / (20.0 * power(4, r)) AS area_km2,
-        |       round(2 * 6371.00718091847 * acos(1 -
-        |         (4 * pi() * 6371.00718091847 * 6371.00718091847
-        |            / (20.0 * power(4, r)))
-        |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
-        |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
-    "dggs_4t_cell_assign" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", substr(t6, 1, 7) AS name FROM gc""".stripMargin,
-    "dggs_4t_parent_rollup" ->
-      s"""WITH $geoCellsCte
-         |SELECT substr(t6, 1, 4) AS name2, count(*) AS n
-         |FROM gc GROUP BY 1""".stripMargin,
-    "dggs_4t_children" ->
-      """WITH d AS (SELECT CAST(unnest(generate_series(0, 3)) AS VARCHAR) AS x)
-        |SELECT '05' AS parent, '05' || d1.x || d2.x || d3.x || d4.x AS name
-        |FROM d d1, d d2, d d3, d d4
-        |UNION ALL
-        |SELECT '172031' AS parent, '172031' || d1.x || d2.x || d3.x || d4.x AS name
-        |FROM d d1, d d2, d d3, d d4""".stripMargin,
+      childrenSql(Seq("023" -> 5, "000125023" -> 9), _ => 7),
+    "dggs_compact" -> {
+      // the Z7 scenario on names: a complete family has 7 children, or 6
+      // under a pentagon (digits after the 2-char base all '0')
+      val c0 =
+        s"""SELECT name FROM (${descendantsSql("023", 3, _ => 7)}
+           |    UNION ALL ${descendantsSql("045", 3, _ => 7)}) t
+           |  WHERE name <> '04511'
+           |  UNION ALL
+           |  SELECT name FROM (VALUES ('001'),('003'),('004'),('005'),
+           |    ('006'),('0000'),('0001'),('0003'),('0004'),('0005'),
+           |    ('0006'),('06612'),('06646'),('06600')) t(name)""".stripMargin
+      compactSql(Seq(7), c0, 3,
+        _ => "CASE WHEN regexp_full_match(substr(p, 3), '0*') THEN 6 ELSE 7 END")
+    },
     "emb_near_dup" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, $lshBucketSqlExpr AS bucket FROM e),
@@ -2007,215 +1728,6 @@ object SparkEntry {
         |              ORDER BY cos DESC, neighbor ASC) AS BIGINT) AS rnk
         |  FROM p)
         |WHERE rnk <= 3""".stripMargin,
-    // ---- ISEA4D oracles (frozen d6 column; D4 nests exactly) ----
-    "dggs_4d_stats" ->
-      """SELECT r AS resolution,
-        |       CAST(10 * power(4, r) AS BIGINT) AS cells,
-        |       4 * pi() * 6371.00718091847 * 6371.00718091847
-        |         / (10.0 * power(4, r)) AS area_km2,
-        |       round(2 * 6371.00718091847 * acos(1 -
-        |         (4 * pi() * 6371.00718091847 * 6371.00718091847
-        |            / (10.0 * power(4, r)))
-        |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
-        |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
-    "dggs_4d_cell_assign" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", substr(d6, 1, 7) AS name FROM gc""".stripMargin,
-    "dggs_4d_parent_rollup" ->
-      s"""WITH $geoCellsCte
-         |SELECT substr(d6, 1, 4) AS name2, count(*) AS n
-         |FROM gc GROUP BY 1""".stripMargin,
-    // ---- ISEA3H oracles: frozen h6 column (round 8). Z3 paths are
-    // prefix-hierarchical (index space), so ancestors are substrs; the
-    // assignment itself is the frozen kernel map, like Z7/T4/D4 ----
-    "dggs_3h_stats" ->
-      """SELECT r AS resolution,
-        |       CAST(10 * power(3, r) + 2 AS BIGINT) AS cells,
-        |       4 * pi() * 6371.00718091847 * 6371.00718091847
-        |         / (10.0 * power(3, r)) AS area_km2,
-        |       round(2 * 6371.00718091847 * acos(1 -
-        |         (4 * pi() * 6371.00718091847 * 6371.00718091847
-        |            / (10.0 * power(3, r)))
-        |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
-        |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
-    "dggs_3h_cell_assign" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", h6 AS name FROM gc""".stripMargin,
-    "dggs_3h_parent_rollup" ->
-      s"""WITH $geoCellsCte
-         |SELECT substr(h6, 1, 4) AS name2, count(*) AS n
-         |FROM gc GROUP BY 1""".stripMargin,
-    "dggs_3h_children" ->
-      """WITH d AS (SELECT CAST(unnest(generate_series(0, 2)) AS VARCHAR) AS x)
-        |SELECT '05' AS parent, '05' || d1.x || d2.x AS name
-        |FROM d d1, d d2
-        |UNION ALL
-        |SELECT '070210' AS parent, '070210' || d1.x || d2.x || d3.x || d4.x AS name
-        |FROM d d1, d d2, d d3, d d4
-        |UNION ALL
-        |SELECT '00' AS parent, '00000' AS name""".stripMargin,
-    "dggs_3h_addr_transform" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", h6 AS name FROM gc""".stripMargin,
-    "dggs_3h_compact" -> {
-      // GENERIC aperture-3 hex compaction recomputed on names (Z3 nests
-      // by string prefix; res = len−2; family size 3 on quad bases, 1 on
-      // the caps 00/11) — the 4T mechanical per-level SQL with the
-      // cap-aware family-size CASE
-      val rounds = (6 to 1 by -1).zipWithIndex.map { case (r, i) =>
-        val (prev, cur) = (s"c$i", s"c${i + 1}")
-        val ln = r + 2
-        s"""g$i AS (SELECT substr(name, 1, ${ln - 1}) AS p, count(*) AS n
-           |       FROM $prev WHERE len(name) = $ln GROUP BY 1),
-           |f$i AS (SELECT p FROM g$i WHERE n =
-           |       CASE WHEN substr(p, 1, 2) IN ('00', '11') THEN 1 ELSE 3 END),
-           |$cur AS (SELECT name FROM $prev WHERE len(name) <> $ln
-           |       UNION ALL
-           |       SELECT name FROM $prev WHERE len(name) = $ln
-           |         AND substr(name, 1, ${ln - 1}) NOT IN (SELECT p FROM f$i)
-           |       UNION ALL SELECT p FROM f$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d AS (SELECT CAST(unnest(generate_series(0, 2)) AS VARCHAR) AS x),
-         |c0 AS (
-         |  SELECT '05' || d1.x || d2.x || d3.x AS name FROM d d1, d d2, d d3
-         |  UNION ALL
-         |  SELECT name FROM (
-         |    SELECT '072012' || d1.x || d2.x AS name FROM d d1, d d2) t
-         |  WHERE name <> '07201211'
-         |  UNION ALL
-         |  SELECT name FROM (VALUES ('000000'), ('0311'), ('0322')) v(name)),
-         |$rounds
-         |SELECT name FROM c6""".stripMargin
-    },
-    "dggs_3h_extent_ids" -> OracleFixtures.extent3hSql,
-    "dggs_3h_cell_geom" -> OracleFixtures.geom3hSql,
-    // ---- ISEA4H oracles: frozen f6 column (round 8). Z4 paths are
-    // prefix-hierarchical (index space), so ancestors are substrs; the
-    // assignment itself is the frozen kernel map, like Z7/T4/D4/Z3 ----
-    "dggs_4h_stats" ->
-      """SELECT r AS resolution,
-        |       CAST(10 * power(4, r) + 2 AS BIGINT) AS cells,
-        |       4 * pi() * 6371.00718091847 * 6371.00718091847
-        |         / (10.0 * power(4, r)) AS area_km2,
-        |       round(2 * 6371.00718091847 * acos(1 -
-        |         (4 * pi() * 6371.00718091847 * 6371.00718091847
-        |            / (10.0 * power(4, r)))
-        |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
-        |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
-    "dggs_4h_cell_assign" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", f6 AS name FROM gc""".stripMargin,
-    "dggs_4h_parent_rollup" ->
-      s"""WITH $geoCellsCte
-         |SELECT substr(f6, 1, 4) AS name2, count(*) AS n
-         |FROM gc GROUP BY 1""".stripMargin,
-    "dggs_4h_children" ->
-      """WITH d AS (SELECT CAST(unnest(generate_series(0, 3)) AS VARCHAR) AS x)
-        |SELECT '05' AS parent, '05' || d1.x || d2.x AS name
-        |FROM d d1, d d2
-        |UNION ALL
-        |SELECT '070310' AS parent, '070310' || d1.x || d2.x || d3.x || d4.x AS name
-        |FROM d d1, d d2, d d3, d d4
-        |UNION ALL
-        |SELECT '00' AS parent, '00000' AS name""".stripMargin,
-    "dggs_4h_addr_transform" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", f6 AS name FROM gc""".stripMargin,
-    "dggs_4h_compact" -> {
-      // the 3H mechanical compaction SQL with digits 0-3 and quad family
-      // size 4 (caps still 1); cap chain under base 11
-      val rounds = (6 to 1 by -1).zipWithIndex.map { case (r, i) =>
-        val (prev, cur) = (s"c$i", s"c${i + 1}")
-        val ln = r + 2
-        s"""g$i AS (SELECT substr(name, 1, ${ln - 1}) AS p, count(*) AS n
-           |       FROM $prev WHERE len(name) = $ln GROUP BY 1),
-           |f$i AS (SELECT p FROM g$i WHERE n =
-           |       CASE WHEN substr(p, 1, 2) IN ('00', '11') THEN 1 ELSE 4 END),
-           |$cur AS (SELECT name FROM $prev WHERE len(name) <> $ln
-           |       UNION ALL
-           |       SELECT name FROM $prev WHERE len(name) = $ln
-           |         AND substr(name, 1, ${ln - 1}) NOT IN (SELECT p FROM f$i)
-           |       UNION ALL SELECT p FROM f$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d AS (SELECT CAST(unnest(generate_series(0, 3)) AS VARCHAR) AS x),
-         |c0 AS (
-         |  SELECT '05' || d1.x || d2.x || d3.x AS name FROM d d1, d d2, d d3
-         |  UNION ALL
-         |  SELECT name FROM (
-         |    SELECT '072013' || d1.x || d2.x AS name FROM d d1, d d2) t
-         |  WHERE name <> '07201311'
-         |  UNION ALL
-         |  SELECT name FROM (VALUES ('110000'), ('0311'), ('0322')) v(name)),
-         |$rounds
-         |SELECT name FROM c6""".stripMargin
-    },
-    "dggs_4h_extent_ids" -> OracleFixtures.extent4hSql,
-    "dggs_4h_cell_geom" -> OracleFixtures.geom4hSql,
-    // ---- ISEA43H oracles: frozen m6 column (round 8, mixed level 3).
-    // The packed digit paths are prefix-hierarchical regardless of the
-    // per-level aperture, so ancestors are substrs ----
-    "dggs_43h_stats" ->
-      """SELECT r AS resolution,
-        |       CAST(10 * power(4, least(r, 3)) * power(3, greatest(r - 3, 0))
-        |            + 2 AS BIGINT) AS cells,
-        |       4 * pi() * 6371.00718091847 * 6371.00718091847
-        |         / (10.0 * power(4, least(r, 3)) * power(3, greatest(r - 3, 0)))
-        |         AS area_km2,
-        |       round(2 * 6371.00718091847 * acos(1 -
-        |         (4 * pi() * 6371.00718091847 * 6371.00718091847
-        |            / (10.0 * power(4, least(r, 3)) * power(3, greatest(r - 3, 0))))
-        |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
-        |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
-    "dggs_43h_cell_assign" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", m6 AS name FROM gc""".stripMargin,
-    "dggs_43h_parent_rollup" ->
-      s"""WITH $geoCellsCte
-         |SELECT substr(m6, 1, 4) AS name2, count(*) AS n
-         |FROM gc GROUP BY 1""".stripMargin,
-    "dggs_43h_children" ->
-      """WITH d4 AS (SELECT CAST(unnest(generate_series(0, 3)) AS VARCHAR) AS x),
-        |     d3 AS (SELECT CAST(unnest(generate_series(0, 2)) AS VARCHAR) AS x)
-        |SELECT '0531' AS parent, '0531' || a.x || b.x AS name
-        |FROM d4 a, d3 b
-        |UNION ALL
-        |SELECT '00' AS parent, '00000' AS name""".stripMargin,
-    "dggs_43h_addr_transform" ->
-      s"""WITH $geoCellsCte
-         |SELECT doc_id, "offset", m6 AS name FROM gc""".stripMargin,
-    "dggs_43h_extent_ids" -> OracleFixtures.extent43hSql,
-    "dggs_43h_cell_geom" -> OracleFixtures.geom43hSql,
-    "dggs_43h_compact" -> {
-      // mixed-aperture mechanical compaction SQL: per-round family size
-      // follows the aperture at the CHILD level (4 through level n4=3,
-      // 3 after), caps stay 1
-      val rounds = (4 to 1 by -1).zipWithIndex.map { case (r, i) =>
-        val (prev, cur) = (s"c$i", s"c${i + 1}")
-        val ln = r + 2
-        val fam = if (r <= 3) 4 else 3
-        s"""g$i AS (SELECT substr(name, 1, ${ln - 1}) AS p, count(*) AS n
-           |       FROM $prev WHERE len(name) = $ln GROUP BY 1),
-           |f$i AS (SELECT p FROM g$i WHERE n =
-           |       CASE WHEN substr(p, 1, 2) IN ('00', '11') THEN 1 ELSE $fam END),
-           |$cur AS (SELECT name FROM $prev WHERE len(name) <> $ln
-           |       UNION ALL
-           |       SELECT name FROM $prev WHERE len(name) = $ln
-           |         AND substr(name, 1, ${ln - 1}) NOT IN (SELECT p FROM f$i)
-           |       UNION ALL SELECT p FROM f$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d4 AS (SELECT CAST(unnest(generate_series(0, 3)) AS VARCHAR) AS x),
-         |d3 AS (SELECT CAST(unnest(generate_series(0, 2)) AS VARCHAR) AS x),
-         |c0 AS (
-         |  SELECT '05' || a.x || b.x || c.x AS name FROM d4 a, d4 b, d4 c
-         |  UNION ALL
-         |  SELECT name FROM (
-         |    SELECT '0720' || a.x || b.x AS name FROM d4 a, d3 b) t
-         |  WHERE name <> '072032'
-         |  UNION ALL
-         |  SELECT name FROM (VALUES ('00000'), ('0311'), ('0322')) v(name)),
-         |$rounds
-         |SELECT name FROM c4""".stripMargin
-    },
     "dggs_knn" ->
       s"""WITH $geoCte,
          |q AS (SELECT doc_id AS q_doc, "offset" AS q_offset, lon AS q_lon, lat AS q_lat
@@ -2260,35 +1772,6 @@ object SparkEntry {
     // two physical strategies (broadcast vs shuffle-hash on cell_id)
     "dggs_spatial_join_df" -> spatialJoinOracle,
     "dggs_spatial_join_compact" -> spatialJoinOracle,
-    "dggs_4t_compact" -> {
-      // GENERIC 4T compaction recomputed on names (T4 nests by string
-      // prefix; res = len−2; family size always 4) — one
-      // (group, filter, rewrite) block per level, generated for rounds
-      // 6→1 so the SQL stays mechanical and exhaustive
-      val rounds = (6 to 1 by -1).zipWithIndex.map { case (r, i) =>
-        val (prev, cur) = (s"c$i", s"c${i + 1}")
-        val ln = r + 2
-        s"""g$i AS (SELECT substr(name, 1, ${ln - 1}) AS p, count(*) AS n
-           |       FROM $prev WHERE len(name) = $ln GROUP BY 1),
-           |f$i AS (SELECT p FROM g$i WHERE n = 4),
-           |$cur AS (SELECT name FROM $prev WHERE len(name) <> $ln
-           |       UNION ALL
-           |       SELECT name FROM $prev WHERE len(name) = $ln
-           |         AND substr(name, 1, ${ln - 1}) NOT IN (SELECT p FROM f$i)
-           |       UNION ALL SELECT p FROM f$i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH d AS (SELECT CAST(unnest(generate_series(0, 3)) AS VARCHAR) AS x),
-         |c0 AS (
-         |  SELECT '05' || d1.x || d2.x || d3.x AS name FROM d d1, d d2, d d3
-         |  UNION ALL
-         |  SELECT name FROM (
-         |    SELECT '172031' || d1.x || d2.x AS name FROM d d1, d d2) t
-         |  WHERE name <> '17203111'
-         |  UNION ALL
-         |  SELECT name FROM (VALUES ('0311'), ('0322')) v(name)),
-         |$rounds
-         |SELECT name FROM c6""".stripMargin
-    },
     "dggs_zonal_stats" ->
       // same open-boundary box predicate as the PIP oracle, same row-key
       // weight derivation; sums cast back from DuckDB's HUGEINT
@@ -3158,16 +2641,6 @@ object SparkEntry {
          |       CAST(count(*) AS BIGINT) AS value_count
          |FROM px JOIN rcells USING (r, c)
          |GROUP BY cell""".stripMargin,
-    "dggs_stats" ->
-      """SELECT r AS resolution,
-        |       CAST(10 * power(7, r) + 2 AS BIGINT) AS cells,
-        |       4 * pi() * 6371.00718091847 * 6371.00718091847
-        |         / (10.0 * power(7, r)) AS area_km2,
-        |       round(2 * 6371.00718091847 * acos(1 -
-        |         (4 * pi() * 6371.00718091847 * 6371.00718091847
-        |            / (10.0 * power(7, r)))
-        |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
-        |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
     "corpus_geo_spans" ->
       s"""WITH $corpusCte
          |SELECT printf('doc-%012d', i) AS doc_id, CAST(off AS INT) AS offset,
@@ -3176,5 +2649,111 @@ object SparkEntry {
          |  (i*9973 + off*7919) % 360000 - 180000 AS lon_mdeg,
          |  (i*6271 + off*4409) % 180000 - 90000  AS lat_mdeg
          |FROM spans WHERE kind = 'geo'""".stripMargin
-  )
+  ) ++ kernelGates.flatMap(gateOracles)
+
+  /** one `d<r>(x)` digit table per radix: the digit strings 0..r−1 */
+  private def digitTables(radices: Seq[Int]): String = radices.distinct.map(r =>
+    s"d$r AS (SELECT CAST(unnest(generate_series(0, ${r - 1})) AS VARCHAR) AS x)")
+    .mkString(",\n")
+
+  /** every res-`to` descendant name of `cell` (name = 2-char base + one
+    * digit per level; level l takes its digit from `d<radixAt(l)>`); a
+    * cap base has one child per level, digit 0
+    */
+  private def descendantsSql(cell: String, to: Int, radixAt: Int => Int,
+                             caps: Seq[String] = Nil): String = {
+    val levels = cell.length - 1 to to
+    if (caps.contains(cell.take(2))) s"SELECT '$cell${"0" * levels.size}' AS name"
+    else levels.map(l => s" || a$l.x").mkString(s"SELECT '$cell'", "", " AS name FROM ") +
+      levels.map(l => s"d${radixAt(l)} a$l").mkString(", ")
+  }
+
+  /** (parent, name) of every res-`to` descendant of each `(parent, to)` seed */
+  private def childrenSql(seeds: Seq[(String, Int)], radixAt: Int => Int,
+                          caps: Seq[String] = Nil): String = {
+    val radices = seeds.flatMap { case (p, r) => (p.length - 1 to r).map(radixAt) }
+    seeds.map { case (p, r) =>
+      s"SELECT '$p' AS parent, name FROM (${descendantsSql(p, r, radixAt, caps)})"
+    }.mkString(s"WITH ${digitTables(radices)}\n", "\nUNION ALL\n", "")
+  }
+
+  /** compaction recomputed on names, bottom-up from res `top` to 1: per
+    * round, group the res-r names by their parent prefix and replace every
+    * family whose size is `family(r)` (SQL over the parent `p`) by the
+    * parent — exactly the engine's round structure
+    */
+  private def compactSql(radices: Seq[Int], c0: String, top: Int,
+                         family: Int => String): String = {
+    val rounds = (top to 1 by -1).zipWithIndex.map { case (r, i) =>
+      val (prev, cur, ln) = (s"c$i", s"c${i + 1}", r + 2)
+      s"""g$i AS (SELECT substr(name, 1, ${ln - 1}) AS p, count(*) AS n
+         |       FROM $prev WHERE len(name) = $ln GROUP BY 1),
+         |f$i AS (SELECT p FROM g$i WHERE n = ${family(r)}),
+         |$cur AS (SELECT name FROM $prev WHERE len(name) <> $ln
+         |       UNION ALL
+         |       SELECT name FROM $prev WHERE len(name) = $ln
+         |         AND substr(name, 1, ${ln - 1}) NOT IN (SELECT p FROM f$i)
+         |       UNION ALL SELECT p FROM f$i)""".stripMargin
+    }
+    s"""WITH ${digitTables(radices)},
+       |c0 AS (
+       |  $c0),
+       |${rounds.mkString(",\n")}
+       |SELECT name FROM c$top""".stripMargin
+  }
+
+  /** the DuckDB side of one [[KernelGates]] row, from its oracle literals
+    * only: the frozen fixture, radices, caps and scenarios
+    */
+  private def gateOracles(k: KernelGates): Seq[(String, String)] = {
+    def radixAt(level: Int) = if (level <= k.n4) 4 else k.radix
+    val radices = (if (k.n4 > 0) Seq(4) else Nil) :+ k.radix
+    def desc(cell: String, to: Int) = descendantsSql(cell, to, radixAt, k.caps)
+    // cells (and area) at res r: base · radix product (+ plus)
+    val prod = if (k.n4 == 0) s"power(${k.radix}, r)"
+      else s"power(4, least(r, ${k.n4})) * power(${k.radix}, greatest(r - ${k.n4}, 0))"
+    val plus = if (k.plus == 0) "" else s" + ${k.plus}"
+    val assign = s"""WITH $geoCellsCte
+                    |SELECT doc_id, "offset", ${k.assignFx} AS name FROM gc""".stripMargin
+    val n = k.name
+    Seq(
+      s"${n}_stats" ->
+        s"""SELECT r AS resolution,
+           |       CAST(${k.base} * $prod$plus AS BIGINT) AS cells,
+           |       4 * pi() * 6371.00718091847 * 6371.00718091847
+           |         / (${k.base}.0 * $prod) AS area_km2,
+           |       round(2 * 6371.00718091847 * acos(1 -
+           |         (4 * pi() * 6371.00718091847 * 6371.00718091847
+           |            / (${k.base}.0 * $prod))
+           |         / (2 * pi() * 6371.00718091847 * 6371.00718091847)), 6) AS cls_km
+           |FROM (SELECT unnest(generate_series(0, 15)) AS r)""".stripMargin,
+      s"${n}_cell_assign" -> assign,
+      // ancestry in index space is string-prefix truncation
+      s"${n}_parent_rollup" ->
+        s"""WITH $geoCellsCte
+           |SELECT substr(${k.fx}, 1, ${k.rollupRes + 2}) AS name${k.rollupRes}, count(*) AS n
+           |FROM gc GROUP BY 1""".stripMargin) ++
+    (if (k.children.isEmpty) Nil
+     else Seq(s"${n}_children" -> childrenSql(k.children, radixAt, k.caps))) ++
+    k.compact.map { c =>
+      val c0 =
+        s"""${desc(c.full, c.fullRes)}
+           |  UNION ALL
+           |  SELECT name FROM (${desc(c.punct, c.punctRes)}) t WHERE name <> '${c.hole}'
+           |  UNION ALL
+           |  SELECT name FROM (VALUES ${c.extra.map(e => s"('$e')").mkString(", ")}) v(name)"""
+          .stripMargin
+      val caps = k.caps.map(b => s"'$b'").mkString(", ")
+      def family(r: Int) =
+        if (k.caps.isEmpty) s"${radixAt(r)}"
+        else s"CASE WHEN substr(p, 1, 2) IN ($caps) THEN 1 ELSE ${radixAt(r)} END"
+      s"${n}_compact" -> compactSql(radices, c0,
+        (c.fullRes +: c.punctRes +: c.extra.map(_.length - 2)).max, family)
+    } ++
+    // the hop chain is a round-trip, so the frozen assignment is its oracle
+    k.zorder.map(_ => s"${n}_addr_transform" -> assign) ++
+    k.extent.toSeq.flatMap { case (_, ids, geom) =>
+      Seq(s"${n}_extent_ids" -> ids, s"${n}_cell_geom" -> geom)
+    }
+  }
 }

@@ -784,7 +784,7 @@ object GridOps {
       case "PROJTRI" => A.z7ToProjtri(asZ7)
       case "PLANE" => A.z7ToPlane(asZ7)
       case "VERTEX2DD" => A.z7ToVertex2dd(asZ7)
-      case "AIGEN" => F.cellAigen(asZ7)
+      case "AIGEN" => F.cellAigen(asZ7, g)
       case "INTERLEAVE" | "Z3" | "Z3_STRING" | "ZORDER" | "ZORDER_STRING" =>
         // parity with the reference's own constraint: these exist only
         // for aperture-3/4 hex grids (dggrid_runner.py:125, 121-236) —

@@ -67,11 +67,7 @@ object GraftSql {
     r.register("z7_from_seqnum", (n: Long, res: Int) => Seqnum.toZ7(n, res))
     r.register("z7_center_lon", (z: Long) => Grids.default.cellCenter(z).lonDeg)
     r.register("z7_center_lat", (z: Long) => Grids.default.cellCenter(z).latDeg)
-    r.register("z7_boundary_wkt", (z: Long) => {
-      val ring = Grids.default.cellBoundary(z)
-      (ring :+ ring.head).map(g => f"${g.lonDeg}%.12f ${g.latDeg}%.12f")
-        .mkString("POLYGON ((", ", ", "))")
-    })
+    registerNative(spark, "z7_boundary_wkt", 1)(a => F.cellBoundaryWkt(a(0)))
     // coordinate conversions
     r.register("to_authalic_lat", (lat: Double) => Authalic.toAuthalicDeg(lat))
     r.register("to_geodetic_lat", (lat: Double) => Authalic.toGeodeticDeg(lat))

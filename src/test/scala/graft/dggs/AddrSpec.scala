@@ -70,6 +70,30 @@ class AddrSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("unsupported input"))
   }
 
+  test("AIGEN output follows the grid's orientation") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    import spark.implicits._
+    val turned = Grids.get(10.0, 20.0, 5.0)
+    val z = turned.cellForPoint(24.7, 59.4, 3)
+    val aigen = graft.ops.GridOps.addressTransform(Seq(z).toDF("z"), "z", "Z7", "AIGEN", 3, turned)
+      .select("out_addr").head().getString(0).split("\n")
+    assert(aigen.head == z.toString && aigen.last == "END")
+    val verts = aigen.slice(1, aigen.length - 1).toSeq.map { line =>
+      val Array(lon, lat) = line.split(" ").map(_.toDouble)
+      (lon, lat)
+    }
+    def closed(k: IGeo7) = {
+      val ring = k.cellBoundary(z).toSeq
+      (ring :+ ring.head).map(v => (v.lonDeg, v.latDeg))
+    }
+    def near(a: Seq[(Double, Double)], b: Seq[(Double, Double)]) = a.length == b.length &&
+      a.zip(b).forall { case ((x1, y1), (x2, y2)) =>
+        math.abs(x1 - x2) < 1e-9 && math.abs(y1 - y2) < 1e-9 }
+    assert(near(verts, closed(turned)), verts)
+    assert(!near(verts, closed(Grids.default)))
+  }
+
   test("3H transform: full Z3/ZORDER/Q2DI round-trips; INTERLEAVE output-only") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()

@@ -75,6 +75,14 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       "z7_boundary_wkt" -> (() => {
         val w = one(s"z7_boundary_wkt($z)").asInstanceOf[String]
         assert(w.startsWith("POLYGON ((") && w.split(",").length == 7) // closed hex ring
+        // the SQL name is the Column form: the same WKT for a hexagon and a pentagon
+        for (c <- Seq(z, graft.dggs.Z7.fromCellString("00000"))) {
+          val viaColumn = spark.range(1)
+            .select(graft.spark.DggsFunctions.cellBoundaryWkt(
+              org.apache.spark.sql.functions.lit(c)))
+            .head().getString(0)
+          assert(one(s"z7_boundary_wkt($c)") == viaColumn, c)
+        }
       }),
       "t4_cell" -> (() =>
         assert(one("t4_string(t4_cell(24.7D, 59.4D, 4))")

@@ -2,8 +2,10 @@
 """Local replica of the driver's correctness gate: for each query result
 parquet written by graft.Verify, run the oracle SQL in DuckDB over the
 same sf directory and compare (schema-insensitive to column order: columns
-sorted by name, rows sorted, exact value equality)."""
-import json, sys, glob, os
+sorted by name, rows sorted, exact value equality). Each OK line ends with
+the md5 of that sorted result set (as CSV), so two runs' outputs can be
+checked for identical results with a plain `diff`."""
+import hashlib, json, sys, glob, os
 import duckdb
 import pandas as pd
 
@@ -42,7 +44,8 @@ for name, sql in sorted(oracle.items()):
         continue
     try:
         pd.testing.assert_frame_equal(a, b, check_dtype=True, check_exact=True)
-        ok.append((name, len(a)))
+        ok.append((name, len(a),
+                   hashlib.md5(a.to_csv(index=False).encode()).hexdigest()))
     except AssertionError as e:
         bad.append((name, str(e).splitlines()[0] + " (first diff)"))
         # show a few diffs
@@ -51,8 +54,8 @@ for name, sql in sorted(oracle.items()):
                 m = a[c] != b[c]
                 print(f"  [{name}] col {c}: {m.sum()} diffs; "
                       f"spark={a[c][m].head(3).tolist()} duck={b[c][m].head(3).tolist()}")
-for n, r in ok:
-    print(f"OK   {n} ({r} rows)")
+for n, r, h in ok:
+    print(f"OK   {n} ({r} rows) md5={h}")
 for n, msg in bad:
     print(f"FAIL {n}: {msg}")
 print(f"\n{len(ok)}/{len(ok)+len(bad)} queries match")
