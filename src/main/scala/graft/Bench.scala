@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
-import graft.dggs.Z7
-import graft.ops.{CorpusOps, GridOps, JtsCache, SpatialOps}
+import graft.ops.{CorpusOps, CoverIndex, GridOps, SpatialOps}
 import graft.spark.{DggsFunctions => F, Grids}
 
 /** Driver-contract benchmark: runs every SparkEntry query on
@@ -39,56 +37,36 @@ object Bench {
     geo
   }
 
-  /** the timed flagship, ONE pass over the points and one action:
-    * res-`res` cell assignment (narrow map, evaluated once), a LEFT
-    * broadcast join of the spread res-4 ancestor (`F.z7SpreadKey`)
-    * against the polygon cover grouped per cell (one row per cover cell:
-    * its polygons' WKTs), then one `groupBy` on the res-3 ancestor that
-    * sums the JTS contains hits. The per-cell sums (at most 10·7³ + 2 =
-    * 3,432 rows) are collected and totalled on the driver. Result rows =
-    * rollup cells + refined (point, polygon) pairs, as for a rollup plus
-    * an inner PIP join. LEFT, not inner: an inner join's inferred
-    * `isnotnull(key4)` filter would evaluate `cellForPoint` a second
-    * time (`DggsFunctions.cellForPoint`).
+  /** the timed flagship, ONE pass over the points and one action, with
+    * no join: res-`res` cell assignment (narrow map, evaluated once), then
+    * one `groupBy` on the dense res-3 key (`F.ancestorKey`) that sums each
+    * point's JTS contains hits over the polygons whose res-4 cover holds
+    * its cell. The cover ships inside the projection as a per-task cell
+    * index ([[graft.ops.CoverIndex]], built per call from
+    * `SpatialOps.coverCells`), so the rollup's is the plan's only
+    * exchange and each repetition runs 2 Spark jobs (the map stage and
+    * the result stage). The per-cell sums (at most 10·7³ + 2 = 3,432
+    * rows) are collected and totalled on the driver. Result rows = rollup
+    * cells + refined (point, polygon) pairs, as for a rollup plus an
+    * inner PIP join.
     *
-    * The driver-side part is kept small, since every repetition pays it
-    * before any task runs: the cover is grouped on raw cell ids and only
-    * then spread (a Scala map keyed on spread ids puts every res-4 key in
-    * one hash bucket: `Z7.spreadKey`), and the cover relation is built
-    * from rows against a fixed schema, with no encoder derived per call.
-    * Returns (resultRows, resultRows); callers take the geo point count
-    * from the untimed input materialization.
+    * The dense key, `z >>> 51` for a res-3 Z7 id, keeps every group in
+    * Spark's codegen fast aggregate map, which buckets on the key's low
+    * bits: the raw id's all-ones pad bits send every group to the slower
+    * `BytesToBytesMap`. Returns (resultRows, resultRows); callers take the
+    * geo point count from the untimed input materialization.
     */
   def flagship(spark: SparkSession, geo: DataFrame, res: Int): (Long, Long) = {
-    val joinRes = 4
-    val cover = FlagshipPolys
-      .flatMap { case (_, wkt) => SpatialOps.coverCells(wkt, joinRes).map(c => (c, wkt)) }
-      .groupMap(_._1)(_._2)
-      .map { case (cell, wkts) => Row(Z7.spreadKey(cell), wkts) }
-    val coverDf = spark.createDataFrame(java.util.Arrays.asList(cover.toSeq: _*), CoverSchema)
+    val index = CoverIndex(FlagshipPolys.map(_._2), 4)
     val perCell = geo
       .select(col("lon"), col("lat"),
         F.cellForPoint(col("lon"), col("lat"), lit(res)).as("cell_id"))
-      .withColumn("key4", F.z7SpreadKey(F.ancestorAt(col("cell_id"), lit(joinRes))))
-      .join(broadcast(coverDf), Seq("key4"), "left")
-      .groupBy(F.ancestorAt(col("cell_id"), lit(3)).as("cell3"))
-      .agg(sum(PipHits(col("wkts"), col("lon"), col("lat"))).as("hits"))
+      .groupBy(F.ancestorKey(col("cell_id"), lit(3)).as("cell3"))
+      .agg(sum(index.hitsColumn(col("cell_id"), col("lon"), col("lat"))).as("hits"))
       .select("hits").collect()
     val rows = perCell.length + perCell.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
     (rows, rows)
   }
-
-  /** polygons of `wkts` (null: none) containing (lon, lat). Built once:
-    * a typed `udf { … }` derives its encoders on every call.
-    */
-  private val PipHits = udf { (wkts: Seq[String], lon: Double, lat: Double) =>
-    if (wkts == null) 0L else wkts.count(JtsCache.contains(_, lon, lat)).toLong
-  }.withName("pipHits")
-
-  /** the flagship cover relation: spread res-4 key, its polygons' WKTs */
-  private val CoverSchema = StructType(Seq(
-    StructField("key4", LongType, nullable = false),
-    StructField("wkts", ArrayType(StringType))))
 
   /** the quiet-band file: `{"<sf>": {"<query>": seconds, …}, …}` */
   private[graft] def parseBands(txt: String): Map[String, Map[String, Double]] =

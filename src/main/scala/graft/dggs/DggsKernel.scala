@@ -61,6 +61,15 @@ trait DggsKernel extends Serializable {
   def resolution(z: Long): Int
   def parent(z: Long): Long
   def ancestorAt(z: Long, r: Int): Long
+  /** a dense grouping key of the res-`r` ancestor: the id's base and
+    * its first `r` digits, right-aligned (Z7 at r = 3: `z >>> 51`).
+    * Injective on res-`r` ancestors and raises like [[ancestorAt]]. Group
+    * on this, not on the ancestor id, in a Spark aggregate: a coarse hex
+    * id ends in all-ones pad bits, and the codegen fast aggregate map
+    * picks its bucket from the low bits of the key, so every coarse id
+    * falls back to the slower `BytesToBytesMap`.
+    */
+  def ancestorKey(z: Long, r: Int): Long
   def children(z: Long): Seq[Long]
   def descendants(z: Long, toRes: Int): Seq[Long]
 

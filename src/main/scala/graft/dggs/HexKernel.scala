@@ -90,6 +90,7 @@ sealed abstract class HexKernel(val spec: KernelSpec, val idName: String, val n4
   def resolution(z: Long): Int = codec.resolution(z)
   def parent(z: Long): Long = codec.parent(z)
   def ancestorAt(z: Long, r: Int): Long = codec.ancestorAt(z, r)
+  def ancestorKey(z: Long, r: Int): Long = codec.ancestorKey(z, r)
   def toCellString(z: Long): String = codec.toCellString(z)
   def fromCellString(s: String): Long = codec.fromCellString(s)
 

@@ -42,6 +42,7 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
   def resolution(z: Long): Int = Z7.resolution(z)
   def parent(z: Long): Long = Z7.parent(z)
   def ancestorAt(z: Long, r: Int): Long = Z7.ancestorAt(z, r)
+  def ancestorKey(z: Long, r: Int): Long = Z7.ancestorKey(z, r)
   def children(z: Long): Seq[Long] = Z7.children(z)
   def descendants(z: Long, toRes: Int): Seq[Long] = Z7.descendants(z, toRes)
   def toCellString(z: Long): String = Z7.toCellString(z)

@@ -64,6 +64,7 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
   def resolution(z: Long): Int = D4.resolution(z)
   def parent(z: Long): Long = D4.parent(z)
   def ancestorAt(z: Long, r: Int): Long = D4.ancestorAt(z, r)
+  def ancestorKey(z: Long, r: Int): Long = D4.ancestorKey(z, r)
   def children(z: Long): Seq[Long] = D4.children(z)
   def descendants(z: Long, toRes: Int): Seq[Long] = D4.descendants(z, toRes)
   def toCellString(z: Long): String = D4.toD4String(z)

@@ -49,6 +49,7 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
   def resolution(z: Long): Int = T4.resolution(z)
   def parent(z: Long): Long = T4.parent(z)
   def ancestorAt(z: Long, r: Int): Long = T4.ancestorAt(z, r)
+  def ancestorKey(z: Long, r: Int): Long = T4.ancestorKey(z, r)
   def children(z: Long): Seq[Long] = T4.children(z)
   def descendants(z: Long, toRes: Int): Seq[Long] = T4.descendants(z, toRes)
   def toCellString(z: Long): String = T4.toT4String(z)

@@ -42,6 +42,15 @@ private[dggs] abstract class Quat2Codec(baseLo: Int, baseHi: Int, baseLabel: Str
     ((baseOf(id).toLong * 32 + r) << 48) | (id & mask)
   }
 
+  /** the res-`r` ancestor's base and `r` digits as one dense key,
+    * `base << 2r | digits`, with the res field dropped
+    */
+  def ancestorKey(id: Long, r: Int): Long = {
+    val res = resolution(id)
+    require(r >= 0 && r <= res, s"ancestor res $r of res-$res cell")
+    (baseOf(id).toLong << (2 * r)) | ((id & ((1L << 48) - 1)) >>> (48 - 2 * r))
+  }
+
   def children(id: Long): Seq[Long] = {
     val r = resolution(id)
     require(r < MaxRes, s"res $r at max")

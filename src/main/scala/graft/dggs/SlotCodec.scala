@@ -113,6 +113,15 @@ class SlotCodec(val slotBits: Int, val maxRes: Int, val radix: Int, val name: St
     z | ((1L << shiftAt(r)) - 1)
   }
 
+  /** the res-`r` ancestor's base + `r` digits, right-aligned (the pad
+    * bits shifted out): a dense key, injective on res-`r` ancestors
+    * ([[DggsKernel.ancestorKey]])
+    */
+  final def ancestorKey(z: Long, r: Int): Long = {
+    require(r >= 0 && r <= resolution(z), s"bad ancestor res $r")
+    z >>> shiftAt(r)
+  }
+
   /** Pentagon ⇔ every digit is 0 (the 12 vertex cells: bases 0/11 at
     * every depth, plus each quad's owned-corner cell — the all-zero-path
     * rule of Z7 / igeo7_ext.py:92-99).
@@ -137,6 +146,9 @@ class SlotCodec(val slotBits: Int, val maxRes: Int, val radix: Int, val name: St
     */
   final def rangeMin(z: Long): Long = z & ~((1L << shiftAt(resolution(z))) - 1)
   final def rangeMax(z: Long): Long = ancestorAt(z, resolution(z))
+
+  /** the codec's name: stable across JVMs, so a plan that holds it prints the same */
+  override def toString: String = name
 }
 
 /** the ISEA3H id: 30 two-bit slots, digits 0-2, pad 3 */

@@ -57,6 +57,12 @@ object Z7 extends SlotCodec(slotBits = 3, maxRes = 20, radix = 7, name = "Z7") {
     * spread ids chains every such key in one bucket (O(n²) `equals`);
     * key driver-side maps on the raw ids, whose JVM hash already mixes
     * the high half in, and spread afterwards.
+    *
+    * Nor is it a grouping key for a Spark aggregate. The codegen fast
+    * aggregate map also buckets on the key's low bits, and at res 3 the
+    * spread leaves the id's low 19 bits zero (the pad ones cancel), so a
+    * rollup on spread ids still falls back to `BytesToBytesMap`. Group on
+    * [[ancestorKey]] (`z >>> 51` at res 3) instead.
     */
   def spreadKey(z: Long): Long = z ^ (z >>> 32)
 }

@@ -30,7 +30,7 @@ object CorpusStore {
     */
   def readCellRange(spark: SparkSession, dir: String, cellCol: String,
                     parent: Long): DataFrame =
-    spark.read.parquet(dir)
+    Tables.read(spark, dir)
       .where(col(cellCol) >= Z7.rangeMin(parent) && col(cellCol) <= Z7.rangeMax(parent))
 
   /** same by Z7 string prefix */
@@ -45,12 +45,12 @@ object CorpusStore {
   def readT4Range(spark: SparkSession, dir: String, cellCol: String,
                   parent: Long, storedRes: Int): DataFrame = {
     val (lo, hi) = graft.dggs.T4.rangeAt(parent, storedRes)
-    spark.read.parquet(dir).where(col(cellCol) >= lo && col(cellCol) <= hi)
+    Tables.read(spark, dir).where(col(cellCol) >= lo && col(cellCol) <= hi)
   }
 
   def readD4Range(spark: SparkSession, dir: String, cellCol: String,
                   parent: Long, storedRes: Int): DataFrame = {
     val (lo, hi) = graft.dggs.D4.rangeAt(parent, storedRes)
-    spark.read.parquet(dir).where(col(cellCol) >= lo && col(cellCol) <= hi)
+    Tables.read(spark, dir).where(col(cellCol) >= lo && col(cellCol) <= hi)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.io.WKTReader
 import graft.dggs.{IGeo7, Sphere, Z7}
@@ -75,13 +75,14 @@ object SpatialOps {
       (z, grid.cellCenter(z))
     }
     // per-level pruning and the final ring refine run PARALLEL on the
-    // driver (round 9): cellCenter/cellBoundary run the ~100 µs
-    // iterative inverse projection, and a world-spanning polygon keeps
-    // tens of thousands of candidates live per level — measured ~3 s
-    // single-threaded for the 5 zonal world bands at res 4. The kernel
-    // is immutable/thread-safe (Grids scaladoc) and JTS prepared
-    // geometry is already shared across executor task threads by the
-    // refine UDFs. `.seq` restores deterministic output order.
+    // driver (round 9): a cellCenter is one inverse projection (about
+    // 5 µs) and a cellBoundary six (about 25 µs), and a world-spanning
+    // polygon keeps tens of thousands of candidates live per level —
+    // measured ~3 s single-threaded for the 5 zonal world bands at
+    // res 4. The kernel is immutable/thread-safe (Grids scaladoc) and
+    // JTS prepared geometry is already shared across executor task
+    // threads by the refine UDFs. `.seq` restores deterministic output
+    // order.
     for (k <- 1 to res) {
       val margin = coverMargin(k)
       cells = cells.par.flatMap { case (parent, _) =>
@@ -677,14 +678,14 @@ object JtsCache {
   @transient private lazy val cache =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.locationtech.jts.geom.prep.PreparedGeometry]()
-  @transient private lazy val gf = new GeometryFactory()
+  @transient private[ops] lazy val gf = new GeometryFactory()
   // WKTReader keeps parse state — per-thread instance instead of a
   // per-call allocation (the round-3 minhash analysis measured
   // allocation rate as this box's 32-thread scaling ceiling)
   @transient private lazy val reader =
     ThreadLocal.withInitial[WKTReader](() => new WKTReader(gf))
 
-  private def prepared(wkt: String) = {
+  private[ops] def prepared(wkt: String): org.locationtech.jts.geom.prep.PreparedGeometry = {
     // bound the cache: reads must stay lock-free (this is called per ROW
     // in the refine UDFs), so the eviction policy is the cheapest safe
     // one — drop everything when full and let the working set rebuild.
@@ -767,5 +768,74 @@ object JtsCache {
         prep.intersects(poly(east)) || prep.intersects(poly(west))
       }
     } else prep.intersects(poly(ring))
+  }
+}
+
+/** A few polygons' res-`res` Z7 covers ([[SpatialOps.coverCells]]) as a
+  * cell index that rides inside a projection, so a point-in-polygon count
+  * needs no join. [[hits]] takes a point and its cell (at `res` or finer)
+  * and counts the polygons that JTS-contain the point among those whose
+  * cover holds the cell's res-`res` ancestor: the rows a cover equi-join
+  * plus a `JtsCache.contains` refine give, per point.
+  *
+  * The Column form, [[hitsColumn]], is one native call on the index held
+  * as a plan literal (as `DggsFunctions.cellForPoint` holds its kernel):
+  * no exchange, no join and no boxing per row. Each task deserializes its
+  * own copy with the plan and looks each polygon up in [[JtsCache]] once,
+  * on first use, so a polygon is parsed and prepared once per JVM.
+  *
+  * Compact: the cover cells sorted (binary search), and per cell a run of
+  * polygon indices. A 3-polygon res-4 cover is about 2,500 cells, some
+  * 40 KB.
+  */
+final class CoverIndex private (res: Int, wkts: Array[String], cells: Array[Long],
+                                starts: Array[Int], polys: Array[Int]) extends Serializable {
+
+  @transient private lazy val prepared = wkts.map(JtsCache.prepared)
+
+  /** polygons containing (lon, lat) among those covering `cell`'s res-`res`
+    * ancestor (raises, as `Z7.ancestorAt` does, for a cell coarser than `res`)
+    */
+  def hits(cell: Long, lon: Double, lat: Double): Long = {
+    val i = java.util.Arrays.binarySearch(cells, Z7.ancestorAt(cell, res))
+    if (i < 0) 0L
+    else {
+      val pt = JtsCache.gf.createPoint(new Coordinate(lon, lat))
+      val ps = prepared
+      var n = 0L
+      var j = starts(i)
+      while (j < starts(i + 1)) {
+        if (ps(polys(j)).contains(pt)) n += 1
+        j += 1
+      }
+      n
+    }
+  }
+
+  /** [[hits]] as a Column: null when any input is null */
+  def hitsColumn(cell: Column, lon: Column, lat: Column): Column =
+    F.objectCall(this, classOf[CoverIndex], "hits", LongType,
+      cell.cast(LongType), lon.cast(DoubleType), lat.cast(DoubleType))
+
+  /** what a plan that holds the index prints */
+  override def toString: String =
+    s"CoverIndex(res=$res, polygons=${wkts.length}, cells=${cells.length})"
+}
+
+object CoverIndex {
+  /** the index of `wkts`' covers at `res` */
+  def apply(wkts: Seq[String], res: Int): CoverIndex = {
+    val pairs = wkts.zipWithIndex
+      .flatMap { case (w, p) => SpatialOps.coverCells(w, res).map(c => (c, p)) }
+      .sorted.toArray
+    val cells = Array.newBuilder[Long]
+    val starts = Array.newBuilder[Int]
+    var i = 0
+    while (i < pairs.length) {
+      if (i == 0 || pairs(i)._1 != pairs(i - 1)._1) { cells += pairs(i)._1; starts += i }
+      i += 1
+    }
+    starts += pairs.length
+    new CoverIndex(res, wkts.toArray, cells.result(), starts.result(), pairs.map(_._2))
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Schema memo: `spark.read.parquet` infers the schema on every read, and
   * the inference is a Spark job even for one file (Spark merges footers
-  * in parallel regardless of the file count). [[tbl]] infers a table's
+  * in parallel regardless of the file count). [[tbl]] (and [[read]], its
+  * form for any table path, e.g. a `CorpusStore` directory) infers a table's
   * schema once, with that same public reader, and hands it to later reads
   * as `spark.read.schema(s).parquet(path)`, which start no job.
   *
@@ -29,8 +30,13 @@ import org.apache.spark.sql.types.StructType
   *    reader raises (or expands) it at the same call, as before.
   */
 object Tables {
-  def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet")
+
+  /** the Parquet table at `path` (a file or a directory), its schema
+    * memoized as for [[tbl]]
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
     leafFiles(spark, path) match {
       case None => spark.read.parquet(path)
       case Some((qualified, files)) =>
@@ -45,7 +51,6 @@ object Tables {
           }
         spark.read.schema(schema).parquet(path)
     }
-  }
 
   private type FileId = (String, Long, Long)
 

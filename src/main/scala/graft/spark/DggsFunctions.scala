@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExprBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, ObjectType}
 import graft.dggs.{DggsKernel, HexKernel, IGeo7, Isea3H, Isea43H, Isea4D, Isea4H, Isea4T,
-  KernelSpec, Sphere, Z7}
+  KernelSpec, SlotCodec, Sphere, Z7}
 import Sphere.GeoRad
 
 /** The default-orientation kernels. Instances come from the one per-JVM
@@ -41,7 +41,8 @@ object Grids {
   * is a narrow map — no shuffle; Catalyst prunes/pushes around it.
   * Every kernel function takes the kernel as its last argument (IGEO7 by
   * default). The point assignment (`cellForPoint`) and the hierarchy
-  * reads (`resolution`, `parent`, `ancestorAt`) are one native call each
+  * reads (`resolution`, `parent`, `ancestorAt`, `ancestorKey`, the Z7
+  * descendant range) are one native call each
   * into the kernel's own scalar method, so they are bit-identical to it
   * and raise where it raises; the rest are UDFs.
   * Either way the kernel ships as its [[graft.dggs.KernelSpec]] and
@@ -106,6 +107,13 @@ object DggsFunctions {
     kernelCall(kernel, "ancestorAt", LongType, cell.cast(LongType), r.cast(IntegerType))
   def z7AncestorAt(cell: Column, r: Column): Column = ancestorAt(cell, r)
 
+  /** the dense key of the res-r ancestor ([[graft.dggs.DggsKernel.ancestorKey]]):
+    * group on this, not on [[ancestorAt]], when rolling up to a coarse
+    * resolution. One direct kernel call; raises as [[ancestorAt]] does.
+    */
+  def ancestorKey(cell: Column, r: Column, kernel: DggsKernel = Grids.default): Column =
+    kernelCall(kernel, "ancestorKey", LongType, cell.cast(LongType), r.cast(IntegerType))
+
   def resolution(cell: Column, kernel: DggsKernel = Grids.default): Column =
     kernelCall(kernel, "resolution", IntegerType, cell.cast(LongType))
 
@@ -116,7 +124,15 @@ object DggsFunctions {
     */
   private def kernelCall(kernel: DggsKernel, method: String, dataType: DataType,
                          args: Column*): Column =
-    ExprBridge.column(Invoke(kernelLiteral(kernel), method,
+    objectCall(kernel, classOf[DggsKernel], method, dataType, args: _*)
+
+  /** `obj.<method>(args)` as one non-nullable native call on `obj` held as
+    * an `ObjectType` literal of class `cls`: a null input gives null,
+    * and the method's raise is the expression's raise
+    */
+  private[graft] def objectCall(obj: AnyRef, cls: Class[_], method: String,
+                                dataType: DataType, args: Column*): Column =
+    ExprBridge.column(Invoke(Literal(obj, ObjectType(cls)), method,
       dataType, args.map(ExprBridge.expression), returnNullable = false))
 
   private def kernelLiteral(kernel: DggsKernel): Literal =
@@ -129,9 +145,22 @@ object DggsFunctions {
     * only: the JVM hash of a spread key is the id's all-ones low half
     * (see [[graft.dggs.Z7.spreadKey]]), so driver-side maps key on raw
     * ids.
+    *
+    * Not a grouping key either: Spark's codegen fast aggregate map picks
+    * its bucket from the key's low bits, and at res 3 the spread keeps
+    * the id's low 19 bits zero (the pad ones cancel), so a rollup on it
+    * still falls back to `BytesToBytesMap`. Group on [[ancestorKey]].
     */
   def z7SpreadKey(cell: Column): Column =
     cell.bitwiseXOR(shiftrightunsigned(cell, 32))
+
+  /** [[graft.dggs.SlotCodec.rangeMin]] / `rangeMax` of a Z7 id: the
+    * contiguous id range of its descendants, one direct call each
+    */
+  def z7RangeMin(cell: Column): Column =
+    objectCall(Z7, classOf[SlotCodec], "rangeMin", LongType, cell.cast(LongType))
+  def z7RangeMax(cell: Column): Column =
+    objectCall(Z7, classOf[SlotCodec], "rangeMax", LongType, cell.cast(LongType))
 
   /** immediate children — explode for children-of-parent (COARSE_CELLS)
     * expansion.

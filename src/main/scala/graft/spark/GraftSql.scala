@@ -61,8 +61,8 @@ object GraftSql {
     r.register("z7_children", (z: Long) => Z7.children(z))
     r.register("z7_ring1", (z: Long) => Grids.default.ring1(z).toSeq)
     r.register("z7_disk", (z: Long, k: Int) => Grids.default.disk(z, k).toSeq)
-    r.register("z7_range_min", (z: Long) => Z7.rangeMin(z))
-    r.register("z7_range_max", (z: Long) => Z7.rangeMax(z))
+    registerNative(spark, "z7_range_min", 1)(a => F.z7RangeMin(a(0)))
+    registerNative(spark, "z7_range_max", 1)(a => F.z7RangeMax(a(0)))
     r.register("z7_seqnum", (z: Long) => Seqnum.toSeqnum(z))
     r.register("z7_from_seqnum", (n: Long, res: Int) => Seqnum.toZ7(n, res))
     r.register("z7_center_lon", (z: Long) => Grids.default.cellCenter(z).lonDeg)

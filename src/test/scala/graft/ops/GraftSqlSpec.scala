@@ -302,6 +302,25 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"registered-but-not-declared: ${registered -- GraftSql.functionNames.toSet}")
   }
 
+  test("z7_range_min / z7_range_max: SQL == Column == scalar") {
+    import graft.dggs.Z7
+    import graft.spark.DggsFunctions
+    import org.apache.spark.sql.functions.lit
+    GraftSql.register(spark)
+    val hexagon = Z7.fromCellString("0512346")
+    val pentagon = Z7.fromCellString("00000")
+    val root = Z7.fromCellString("07")
+    for (z <- Seq(hexagon, pentagon, root)) {
+      val sql = spark.sql(s"SELECT z7_range_min($z), z7_range_max($z)").head()
+      val column = spark.range(1)
+        .select(DggsFunctions.z7RangeMin(lit(z)), DggsFunctions.z7RangeMax(lit(z))).head()
+      assert(sql.getLong(0) == Z7.rangeMin(z) && sql.getLong(1) == Z7.rangeMax(z), z)
+      assert(column.getLong(0) == Z7.rangeMin(z) && column.getLong(1) == Z7.rangeMax(z), z)
+    }
+    val plan = spark.sql(s"SELECT z7_range_min($hexagon)").queryExecution.analyzed.toString
+    assert(!plan.contains("ScalaUDF") && plan.contains("rangeMin"), plan)
+  }
+
   test("z7_from_string raises on the pad digit 7 in a real position") {
     GraftSql.register(spark)
     val e = intercept[Exception](spark.sql("SELECT z7_from_string('0570') AS v").collect())

@@ -13,7 +13,8 @@ import org.scalatest.BeforeAndAfterAll
   *    pattern: dggs_knn (escalation fallback — broadcast of the
   *    provably-rare incomplete queries); emb_cosine_topk left the list
   *    in round 4 (now a broadcast-queries mapPartitions scan);
-  *  - the flagship point-in-polygon join broadcasts its cover side;
+  *  - the PIP join broadcasts its cover side, and `Bench.flagship`
+  *    plans no join at all;
   *  - `Bench.flagship` and the PIP joins evaluate `cellForPoint` once,
   *    never inside a pushed-down `Filter`, and every driver query
   *    evaluates it as often as its former ScalaUDF form did.
@@ -60,7 +61,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("SortMergeJoin"))
   }
 
-  test("Bench.flagship: one pass, cellForPoint evaluated once, cover broadcast") {
+  test("Bench.flagship: one pass, cellForPoint evaluated once, no join") {
     val geo = graft.Bench.flagshipInput(spark, 2000)
     val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -85,7 +86,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // final plan only
     val plan = plans.iterator.next().split("== Initial Plan ==").head
     assert("cellForPoint\\(".r.findAllIn(plan).size == 1, plan.take(4000))
-    assert(plan.contains("BroadcastExchange") && plan.contains("BroadcastHashJoin"),
+    // the cover rides in the projection: no join, no broadcast, and the
+    // rollup's hash partitioning is the only exchange
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan.take(4000))
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("Exchange hashpartitioning"),
       plan.take(4000))
     assert(!plan.contains("SortMergeJoin"), plan.take(4000))
   }

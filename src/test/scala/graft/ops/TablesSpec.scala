@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** `Tables.tbl`'s schema memo: a memoized read gives what the plain
   * reader gives, a rewritten table is inferred again, and a read of an
-  * unchanged table starts no Spark job.
+  * unchanged table (or `CorpusStore` directory) starts no Spark job.
   */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -80,6 +80,20 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobsOf("plain")(spark.read.parquet(s"$dir/u.parquet")) >= 1)
     assert(jobsOf("first")(Tables.tbl(spark, dir, "u")) >= 1)
     assert(jobsOf("second")(Tables.tbl(spark, dir, "u")) == 0)
+  }
+
+  test("a second readCellRange of an unchanged store starts no Spark job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = s"$tmp/store"
+    val cells = Seq("0123", "0124", "0561", "0655").map(graft.dggs.Z7.fromCellString)
+    CorpusStore.writeClustered(cells.toDF("cell_id"), "cell_id", dir, 2)
+    val parent = graft.dggs.Z7.fromCellString("012")
+    assert(jobsOf("store first")(CorpusStore.readCellRange(spark, dir, "cell_id", parent)) >= 1)
+    assert(jobsOf("store second")(CorpusStore.readCellRange(spark, dir, "cell_id", parent)) == 0)
+    val got = CorpusStore.readCellRange(spark, dir, "cell_id", parent).as[Long].collect().sorted
+    assert(got.toSeq == cells.take(2).sorted)
+    assert(spark.read.parquet(dir).where(col("cell_id") === cells(2)).count() == 1)
   }
 
   test("a missing table still raises at the tbl call") {

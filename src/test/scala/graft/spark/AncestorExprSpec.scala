@@ -7,10 +7,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dggs.{DggsKernel, Z3, Z4, Z7, T4, D4}
 
-/** The Column hierarchy reads (`ancestorAt`, `parent`, `resolution`) are
-  * native calls into the kernel's own scalar methods: on every kernel
-  * they must agree bit for bit with those methods, raise where the
-  * methods raise, and plan without any ScalaUDF.
+/** The Column hierarchy reads (`ancestorAt`, `ancestorKey`, `parent`,
+  * `resolution`) are native calls into the kernel's own scalar methods:
+  * on every kernel they must agree bit for bit with those methods, raise
+  * where the methods raise, and plan without any ScalaUDF.
   */
 class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSession.builder()
@@ -120,6 +120,68 @@ class AncestorExprSpec extends AnyFunSuite with BeforeAndAfterAll {
           k.ancestorAt(z, r))
       raises(cellsDf(Seq(Long.box(root)), local)
         .select(DggsFunctions.parent(col("cell_id"), k)))(k.parent(root))
+    }
+  }
+
+  test("ancestorKey: Column == scalar, injective on res-r ancestors, groups as ancestorAt") {
+    for ((label, k, cells) <- kernelCells; local <- Seq(false, true)) {
+      val c = col("cell_id")
+      val res = DggsFunctions.resolution(c, k)
+      val cols = c +: (0 to 3).flatMap(r => Seq(
+        when(res >= r, DggsFunctions.ancestorKey(c, lit(r), k)),
+        when(res >= r, DggsFunctions.ancestorAt(c, lit(r), k))))
+      val rows = cellsDf(cells.map(Long.box), local).select(cols: _*).collect()
+      assert(rows.length == cells.size)
+      for (row <- rows; r <- 0 to 3) {
+        val z = row.getLong(0)
+        if (r <= k.resolution(z)) {
+          assert(row.getLong(1 + 2 * r) == k.ancestorKey(z, r), f"$label ancestorKey($r) $z%016x")
+          assert(row.getLong(2 + 2 * r) == k.ancestorAt(z, r), f"$label ancestorAt($r) $z%016x")
+        } else assert(row.isNullAt(1 + 2 * r) && row.isNullAt(2 + 2 * r))
+      }
+      for (r <- 0 to 3) {
+        // one key per ancestor and one ancestor per key
+        val pairs = rows.filterNot(_.isNullAt(1 + 2 * r))
+          .map(row => (row.getLong(1 + 2 * r), row.getLong(2 + 2 * r))).distinct
+        assert(pairs.map(_._1).distinct.length == pairs.length, s"$label res $r: key not injective")
+        assert(pairs.map(_._2).distinct.length == pairs.length, s"$label res $r")
+      }
+      // the aggregate: the same groups, with the same counts, either way
+      val deep = cellsDf(cells.filter(k.resolution(_) >= 3).map(Long.box), local)
+      val byKey = deep.groupBy(DggsFunctions.ancestorKey(c, lit(3), k).as("g"))
+        .agg(count(lit(1)).as("n"), min(DggsFunctions.ancestorAt(c, lit(3), k)).as("lo"),
+          max(DggsFunctions.ancestorAt(c, lit(3), k)).as("hi"))
+      val keyed = byKey.collect()
+      assert(keyed.forall(g => g.getLong(2) == g.getLong(3)),
+        s"$label: a key group spans ancestors")
+      val byAnc = deep.groupBy(DggsFunctions.ancestorAt(c, lit(3), k).as("a")).count().collect()
+        .map(g => (g.getLong(0), g.getLong(1))).sorted.toSeq
+      assert(keyed.map(g => (g.getLong(2), g.getLong(1))).sorted.toSeq == byAnc, label)
+      if (!local) {
+        val plan = byKey.queryExecution.executedPlan
+        assert(!plan.toString.contains("ScalaUDF"), s"$label: ${plan.toString.take(2000)}")
+        val code = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+          .map(_._2).mkString("\n")
+        assert(code.contains(".ancestorKey("), s"$label: no direct .ancestorKey( call")
+      }
+    }
+  }
+
+  test("ancestorKey Column raises like ancestorAt on every kernel") {
+    def rootMessage(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in $t"))
+    for ((label, k, cells) <- kernelCells; local <- Seq(false, true)) {
+      val z = cells.find(k.resolution(_) == 3).get
+      val one = cellsDf(Seq(Long.box(z)), local)
+      for (r <- Seq(-1, 4)) {
+        val want = intercept[IllegalArgumentException](k.ancestorAt(z, r)).getMessage
+        assert(intercept[IllegalArgumentException](k.ancestorKey(z, r)).getMessage == want, label)
+        val e = intercept[Exception](
+          one.select(DggsFunctions.ancestorKey(col("cell_id"), lit(r), k)).collect())
+        assert(rootMessage(e) == want, label)
+      }
     }
   }
 
