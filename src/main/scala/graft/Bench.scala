@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanUtils
 import graft.ops.{CorpusOps, CoverIndex, GridOps, SpatialOps}
 import graft.spark.{DggsFunctions => F, Grids}
 
@@ -11,7 +13,7 @@ import graft.spark.{DggsFunctions => F, Grids}
   *
   * The flagship (BASELINE.json metric): interleaved corpus → span
   * geometry extraction → ISEA7H cell assignment → parent rollup →
-  * cell-indexed spatial join. See BenchScaling for the N-vs-4N
+  * cell-indexed point-in-polygon count. See BenchScaling for the N-vs-4N
   * parallelism protocol (BASELINE.md).
   */
 object Bench {
@@ -37,35 +39,73 @@ object Bench {
     geo
   }
 
-  /** the timed flagship, ONE pass over the points and one action, with
-    * no join: res-`res` cell assignment (narrow map, evaluated once), then
-    * one `groupBy` on the dense res-3 key (`F.ancestorKey`) that sums each
-    * point's JTS contains hits over the polygons whose res-4 cover holds
-    * its cell. The cover ships inside the projection as a per-task cell
-    * index ([[graft.ops.CoverIndex]], built per call from
-    * `SpatialOps.coverCells`), so the rollup's is the plan's only
-    * exchange and each repetition runs 2 Spark jobs (the map stage and
-    * the result stage). The per-cell sums (at most 10·7³ + 2 = 3,432
-    * rows) are collected and totalled on the driver. Result rows = rollup
-    * cells + refined (point, polygon) pairs, as for a rollup plus an
+  /** the timed flagship, ONE pass over the points, one action and one
+    * Spark job, with no join and no exchange: res-`res` cell assignment
+    * (narrow map, evaluated once), then per point its dense res-3 key
+    * (`F.ancestorKey`) and its JTS contains hits over the polygons whose
+    * res-4 cover holds its cell. The cover ships inside the projection as
+    * a per-task cell index ([[graft.ops.CoverIndex]], built once per JVM
+    * from `SpatialOps.coverCells` and memoized), and the res-3 rollup
+    * finishes inside the map stage: each task folds its rows into a
+    * [[Rollup3]] partial and the driver merges one partial per task.
+    * Result rows = rollup cells (a null key is its own cell, as under
+    * `groupBy`) + refined (point, polygon) pairs, as for a rollup plus an
     * inner PIP join.
     *
-    * The dense key, `z >>> 51` for a res-3 Z7 id, keeps every group in
-    * Spark's codegen fast aggregate map, which buckets on the key's low
-    * bits: the raw id's all-ones pad bits send every group to the slower
-    * `BytesToBytesMap`. Returns (resultRows, resultRows); callers take the
-    * geo point count from the untimed input materialization.
+    * A Z7 res-3 dense key is `z >>> 51`, below 2^13, so a partial is a
+    * 1-KB bit set; a task holds at most 10·7³ + 2 = 3,432 of its keys.
+    * Returns (resultRows, resultRows); callers take the geo point count
+    * from the untimed input materialization.
     */
   def flagship(spark: SparkSession, geo: DataFrame, res: Int): (Long, Long) = {
     val index = CoverIndex(FlagshipPolys.map(_._2), 4)
-    val perCell = geo
+    val keyed = geo
       .select(col("lon"), col("lat"),
         F.cellForPoint(col("lon"), col("lat"), lit(res)).as("cell_id"))
-      .groupBy(F.ancestorKey(col("cell_id"), lit(3)).as("cell3"))
-      .agg(sum(index.hitsColumn(col("cell_id"), col("lon"), col("lat"))).as("hits"))
-      .select("hits").collect()
-    val rows = perCell.length + perCell.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
+      .select(F.ancestorKey(col("cell_id"), lit(3)).as("cell3"),
+        index.hitsColumn(col("cell_id"), col("lon"), col("lat")).as("hits"))
+    val rows = Rollup3.merge(PlanUtils.foldPartitions(keyed)(Rollup3.fold)).rows
     (rows, rows)
+  }
+
+  /** One task's share of the flagship's res-3 rollup: the dense keys it
+    * saw (a bit each), whether it saw a null key, and its hits total.
+    */
+  private[graft] final case class Rollup3(keys: Array[Long], nullKey: Boolean, hits: Long) {
+    /** distinct keys (the null key counted once) plus hits */
+    def rows: Long =
+      keys.iterator.map(w => java.lang.Long.bitCount(w).toLong).sum +
+        (if (nullKey) 1L else 0L) + hits
+  }
+
+  private[graft] object Rollup3 {
+    /** dense res-3 Z7 keys are 13 bits */
+    val KeyBits: Int = 1 << 13
+
+    /** folds (key, hits) rows, read in place: a null hits adds nothing,
+      * as `sum` skips it
+      */
+    def fold(rows: Iterator[InternalRow]): Rollup3 = {
+      val keys = new Array[Long](KeyBits / 64)
+      var nullKey = false
+      var hits = 0L
+      while (rows.hasNext) {
+        val r = rows.next()
+        if (r.isNullAt(0)) nullKey = true
+        else {
+          val k = r.getLong(0)
+          keys((k >>> 6).toInt) |= 1L << k
+        }
+        if (!r.isNullAt(1)) hits += r.getLong(1)
+      }
+      Rollup3(keys, nullKey, hits)
+    }
+
+    def merge(parts: Array[Rollup3]): Rollup3 = {
+      val keys = new Array[Long](KeyBits / 64)
+      for (p <- parts; i <- keys.indices) keys(i) |= p.keys(i)
+      Rollup3(keys, parts.exists(_.nullKey), parts.map(_.hits).sum)
+    }
   }
 
   /** the quiet-band file: `{"<sf>": {"<query>": seconds, …}, …}` */
@@ -261,10 +301,19 @@ object Bench {
 }
 
 /** N-vs-4N scaling protocol (BASELINE.md): same flagship job, same
-  * input, two parallelism levels. Run via tools/bench_scaling.sh; the
-  * efficiency target is throughput(32) / (4 × throughput(8)) ≥ 0.8.
+  * input, two parallelism levels; the efficiency target is
+  * throughput(4N) / (4 × throughput(N)) ≥ 0.8.
+  *
+  *   sbt "runMain graft.BenchScaling <cpus> [docs] [res]"
+  *
+  * Prints one JSON line. `wall_sec`/`cells_per_sec` time the first
+  * (cold) repetition on the input; `warm_wall_sec`/`warm_cells_per_sec`
+  * are the median of the `WarmReps` repetitions that follow it in the
+  * same JVM.
   */
 object BenchScaling {
+  val WarmReps = 5
+
   def main(args: Array[String]): Unit = {
     val cpus = if (args.nonEmpty) args(0) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val nDocs = if (args.length > 1) args(1).toLong else 2000000L
@@ -283,8 +332,16 @@ object BenchScaling {
     val t0 = System.nanoTime()
     val (_, rows) = Bench.flagship(spark, geo, res)
     val wall = (System.nanoTime() - t0) / 1e9
+    val warm = (0 until WarmReps).map { _ =>
+      val t = System.nanoTime()
+      Bench.flagship(spark, geo, res)
+      (System.nanoTime() - t) / 1e9
+    }.sorted
+    val warmWall = warm(WarmReps / 2)
     println(s"""{"bench":"scaling","cpus":$cpus,"docs":$nDocs,"geo_points":$nGeo,""" +
-      s""""res":$res,"wall_sec":$wall,"cells_per_sec":${(nGeo / wall).toLong},"rows":$rows}""")
+      s""""res":$res,"wall_sec":$wall,"cells_per_sec":${(nGeo / wall).toLong},"rows":$rows,""" +
+      s""""warm_reps":$WarmReps,"warm_wall_sec":$warmWall,""" +
+      s""""warm_cells_per_sec":${(nGeo / warmWall).toLong}}""")
     spark.stop()
   }
 }

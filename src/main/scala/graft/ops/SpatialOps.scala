@@ -786,7 +786,8 @@ object JtsCache {
   *
   * Compact: the cover cells sorted (binary search), and per cell a run of
   * polygon indices. A 3-polygon res-4 cover is about 2,500 cells, some
-  * 40 KB.
+  * 40 KB. `CoverIndex(wkts, res)` builds it once per JVM (memoized), so a
+  * query over constant polygons pays the cover build once, not per call.
   */
 final class CoverIndex private (res: Int, wkts: Array[String], cells: Array[Long],
                                 starts: Array[Int], polys: Array[Int]) extends Serializable {
@@ -823,8 +824,26 @@ final class CoverIndex private (res: Int, wkts: Array[String], cells: Array[Long
 }
 
 object CoverIndex {
-  /** the index of `wkts`' covers at `res` */
+  /** memo entries kept before the memo is cleared whole */
+  private[ops] val MemoEntries = 64
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[(Seq[String], Int), CoverIndex]()
+
+  /** the index of `wkts`' covers at `res`. A cover is a pure function of
+    * its polygons and resolution, so the index is memoized per JVM: a
+    * repeated call with the same polygons returns the same instance. The
+    * memo is bounded as [[JtsCache]] bounds its cache: it is cleared
+    * whole when full.
+    */
   def apply(wkts: Seq[String], res: Int): CoverIndex = {
+    if (memo.size() >= MemoEntries) memo.clear()
+    memo.computeIfAbsent((wkts.toVector, res), k => build(k._1, k._2))
+  }
+
+  /** entries in the memo now */
+  private[ops] def memoSize: Int = memo.size()
+
+  private def build(wkts: Seq[String], res: Int): CoverIndex = {
     val pairs = wkts.zipWithIndex
       .flatMap { case (w, p) => SpatialOps.coverCells(w, res).map(c => (c, p)) }
       .sorted.toArray

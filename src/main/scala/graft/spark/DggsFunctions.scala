@@ -79,8 +79,8 @@ object DggsFunctions {
     *    this call again inside a `Filter`. Either write the key
     *    expression into the join condition (`SpatialOps.joinOnCell`:
     *    only `isnotnull(cell)` is inferred, which folds to a null test
-    *    on lon/lat) or use a LEFT join (`Bench.flagship`). PlanAuditSpec
-    *    checks both.
+    *    on lon/lat) or use a LEFT join, which infers no filter on its
+    *    preserved side. PlanAuditSpec checks the PIP joins.
     */
   def cellForPoint(lon: Column, lat: Column, res: Column,
                    kernel: DggsKernel = Grids.default): Column = {

@@ -1,16 +1,37 @@
 package org.apache.spark.sql.graft
 
+import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic.Dataset
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Logical-plan utilities needing the `private[sql]` surface (same
   * placement rationale as [[ExprBridge]]).
   */
 object PlanUtils {
+
+  /** Runs `df` as ONE action that folds each partition's rows with `fold`
+    * inside the partition's own task and returns the per-partition
+    * results to the driver: an aggregate whose partials are small finishes
+    * in the map stage, with no exchange, no re-plan and no result stage.
+    *
+    * `fold` sees the plan's `InternalRow`s (whole-stage codegen output,
+    * one reused row): it must read each value in place and keep no row.
+    * The action runs as a SQL execution named "collect", as
+    * `Dataset.collect` does, so `QueryExecutionListener`s and job groups
+    * see exactly one action.
+    */
+  def foldPartitions[T: ClassTag](df: DataFrame)(
+      fold: Iterator[InternalRow] => T): Array[T] = {
+    val qe = df.asInstanceOf[Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.toRdd.mapPartitions(rows => Iterator.single(fold(rows))).collect()
+    }
+  }
 
   /** Wrap `df` as a LogicalRDD leaf — the lineage-truncation step of the
     * iterative CC algorithms (graft.ops.TextOps) — PRESERVING the

@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graft.TestBusHook
 import graft.dggs.Z7
 import graft.dggs.Sphere.GeoRad
+import graft.obs.QueryMetrics
 import graft.ops.{CorpusOps, JtsCache}
 import graft.spark.Grids
 
@@ -13,6 +17,7 @@ import graft.spark.Grids
   * point-in-polygon join into one pass; its row count must still equal
   * the unfused answer, computed here on the driver: distinct res-3
   * ancestors plus a brute-force containment count over every polygon.
+  * The pass is one Spark job: the rollup finishes inside the map stage.
   */
 class BenchFlagshipSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkSession.builder()
@@ -39,6 +44,35 @@ class BenchFlagshipSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (rows, rows2) = Bench.flagship(spark, geo, 9)
       assert(rows == cells3 + hits, s"flagship $rows vs $cells3 cells + $hits hits")
       assert(rows2 == rows)
+    } finally geo.unpersist()
+  }
+
+  test("the rollup partials count groups as groupBy does, a null key included") {
+    def rows(kv: (java.lang.Long, java.lang.Long)*) =
+      kv.iterator.map { case (k, h) => new GenericInternalRow(Array[Any](k, h)): InternalRow }
+    val a = Bench.Rollup3.fold(rows((5L, 1L), (5L, null), (8191L, 2L), (null, 3L)))
+    val b = Bench.Rollup3.fold(rows((5L, 0L), (0L, null), (null, null)))
+    val empty = Bench.Rollup3.fold(Iterator.empty)
+    // keys {0, 5, 8191} and the null key; hits 1 + 2 + 3 (nulls skipped)
+    assert(Bench.Rollup3.merge(Array(a, b, empty)).rows == 4 + 6)
+    assert(Bench.Rollup3.merge(Array(b)).rows == 3)
+    assert(Bench.Rollup3.merge(Array(empty)).rows == 0)
+  }
+
+  test("one flagship call starts exactly one Spark job") {
+    val geo = Bench.flagshipInput(spark, 2000)
+    val sc = spark.sparkContext
+    val m = new QueryMetrics
+    try {
+      Bench.flagship(spark, geo, 9) // plans and caches outside the window
+      TestBusHook.waitUntilEmpty(sc)
+      sc.addSparkListener(m)
+      try {
+        sc.setJobGroup("flagship-once", "flagship-once")
+        try Bench.flagship(spark, geo, 9) finally sc.clearJobGroup()
+        TestBusHook.waitUntilEmpty(sc)
+        assert(m.jobsInGroup("flagship-once") == 1, m.jobsInGroup("flagship-once"))
+      } finally sc.removeSparkListener(m)
     } finally geo.unpersist()
   }
 }

@@ -86,4 +86,24 @@ class CoverIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a cell coarser than the index raises, as the ancestor does
       intercept[IllegalArgumentException](index.hits(Z7.pack(3, Seq(1, 2)), 0.0, 0.0))
     }
+
+  test("the index is memoized per (polygons, res), within the memo's bound") {
+    val wkts = polygons.map(_._1)
+    val index = CoverIndex(wkts, 4)
+    // an equal polygon list of another collection type is the same key
+    assert(CoverIndex(wkts.toList, 4) eq index)
+    assert(CoverIndex(wkts.toVector, 4) eq index)
+    assert(!(CoverIndex(wkts, 5) eq index))
+    assert(!(CoverIndex(wkts.take(2), 4) eq index))
+    assert(CoverIndex(wkts.take(2), 4).toString.contains("polygons=2"))
+    // more distinct keys than the bound: the memo never holds more
+    for (i <- 0 to CoverIndex.MemoEntries + 8) {
+      CoverIndex(Seq(box(i, 0, i + 1, 1)), 1)
+      assert(CoverIndex.memoSize <= CoverIndex.MemoEntries, i)
+    }
+    // a key evicted by the clear is rebuilt, equal to the first build
+    val again = CoverIndex(wkts, 4)
+    assert(again.toString == index.toString)
+    assert(CoverIndex(wkts, 4) eq again)
+  }
 }

@@ -14,7 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   *    provably-rare incomplete queries); emb_cosine_topk left the list
   *    in round 4 (now a broadcast-queries mapPartitions scan);
   *  - the PIP join broadcasts its cover side, and `Bench.flagship`
-  *    plans no join at all;
+  *    plans no join and no exchange at all;
   *  - `Bench.flagship` and the PIP joins evaluate `cellForPoint` once,
   *    never inside a pushed-down `Filter`, and every driver query
   *    evaluates it as often as its former ScalaUDF form did.
@@ -86,12 +86,10 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // final plan only
     val plan = plans.iterator.next().split("== Initial Plan ==").head
     assert("cellForPoint\\(".r.findAllIn(plan).size == 1, plan.take(4000))
-    // the cover rides in the projection: no join, no broadcast, and the
-    // rollup's hash partitioning is the only exchange
+    // the cover rides in the projection and the rollup finishes in the
+    // map stage: no join, no broadcast and no exchange at all
     assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan.take(4000))
-    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
-    assert(exchanges.size == 1 && exchanges.head.contains("Exchange hashpartitioning"),
-      plan.take(4000))
+    assert(!plan.contains("Exchange"), plan.take(4000))
     assert(!plan.contains("SortMergeJoin"), plan.take(4000))
   }
 
